@@ -12,7 +12,13 @@ Four families (BASELINE.json north star: first-class pipeline components):
 * SimHash          — 64-bit sign-random-projection fingerprint; Hamming-ball
                      candidate retrieval via 16-bit chunk banding.
 
-All hashing is xxhash64 (JVM-side, seeded, deterministic). No Python UDFs.
+Shingle hashes are xxhash64 (JVM-side, seeded) by default, or an
+engine-portable 60-bit md5 hash (``hash_fn="md5"``, the oracle-checked
+mode); both are deterministic. MinHash/SimHash signatures run as Arrow
+pandas_udf kernels (operators/_arrow_kernels.py) under the default
+``SIGNATURE_ENGINE = "arrow"``; in md5 mode one fused kernel builds the
+shingles, hashes them and takes the minima. Exact dedup and candidate
+generation stay JVM built-ins.
 """
 
 from __future__ import annotations

@@ -8,12 +8,14 @@ helpers for all I/O.
 
 from __future__ import annotations
 
+import json
 import os
-from typing import Dict, Optional
+from typing import Optional
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 TESTDATA_TABLES = (
     "region",
@@ -76,22 +78,118 @@ def get_spark(app_name: str = "ffn-polars-spark", cpus: Optional[int] = None) ->
         # UI off by default (test startup cost); bench.py turns it on via the
         # env knob to read per-stage metrics from the UI REST API
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # PySpark 4 records the Python call site of every Column call (a
+        # stack walk and ~6 JVM round trips each) for the `== DataFrame ==`
+        # block of error messages. Off, building the tick benchmark's
+        # queries takes 2208 round trips instead of 6096 (docs/tuning.md).
+        # A static conf, so configure() cannot set it on a session built
+        # elsewhere.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )
     return configure(session)
 
 
-def load_testdata(spark: SparkSession, sf_dir: str) -> Dict[str, DataFrame]:
-    """All driver-generated parquet tables from one scale-factor directory."""
-    return {
-        name: spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        for name in TESTDATA_TABLES
-        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet"))
-    }
+# Names Spark's file listing skips (InMemoryFileIndex.shouldFilterOutPathName);
+# the parquet summary files it keeps would take over inference.
+def _hidden(name: str) -> bool:
+    if name.startswith(("_metadata", "_common_metadata")):
+        return False
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _single_data_file(path: str) -> Optional[str]:
+    """The one local file ``spark.read.parquet(path)`` infers its schema
+    from: ``path`` itself, or the only visible entry of a directory."""
+    if os.path.isfile(path):
+        return path
+    if not os.path.isdir(path):
+        return None
+    visible = [e for e in os.scandir(path) if not _hidden(e.name)]
+    if len(visible) == 1 and visible[0].is_file():
+        return visible[0].path
+    return None
+
+
+def _footer_bytes(file: str) -> Optional[bytes]:
+    """The thrift FileMetaData at the tail of a parquet file (layout:
+    ``... footer | footer length (4 bytes LE) | PAR1``), or None when the
+    tail is not a plaintext parquet footer."""
+    with open(file, "rb") as f:
+        size = f.seek(0, os.SEEK_END)
+        if size < 12:
+            return None
+        f.seek(size - 8)
+        tail = f.read(8)
+        n = int.from_bytes(tail[:4], "little")
+        if tail[4:] != b"PAR1" or n > size - 12:
+            return None
+        f.seek(size - 8 - n)
+        return f.read(n)
+
+
+def footer_schema(spark: SparkSession, path: str) -> Optional[StructType]:
+    """``spark.read.parquet(path).schema`` without the inference job.
+
+    Inference reads one footer inside a Spark job. For a local file, or a
+    directory holding exactly one visible data file, this reads that footer
+    on the driver and converts it with the routine inference runs on each
+    footer (``ParquetFileFormat.readSchemaFromFooter`` with a
+    ``ParquetToSparkSchemaConverter`` over the session conf). The Spark
+    schema a Spark writer stores in the footer, and every parquet-to-Spark
+    type rule (``nanosAsLong``, TIMESTAMP_NTZ inference, decimals), stay
+    Spark's. Returns None for anything else: remote or glob paths,
+    multi-file or partitioned directories, summary files, non-parquet or
+    encrypted files, sessions without a JVM gateway. Callers then fall back
+    to inference, which raises its own error where the path is unusable.
+    Nothing is cached: every call reads the footer.
+    """
+    jvm = getattr(spark, "_jvm", None)
+    if jvm is None:
+        return None
+    try:
+        file = _single_data_file(path)
+        raw = _footer_bytes(file) if file else None
+    except OSError:
+        return None
+    if raw is None:
+        return None
+    try:
+        converter = getattr(
+            jvm, "org.apache.parquet.format.converter.ParquetMetadataConverter"
+        )
+        meta = converter().readParquetMetadata(
+            getattr(jvm, "java.io.ByteArrayInputStream")(raw),
+            converter.SKIP_ROW_GROUPS,
+        )
+        footer = getattr(jvm, "org.apache.parquet.hadoop.Footer")(
+            getattr(jvm, "org.apache.hadoop.fs.Path")(file), meta
+        )
+        parquet = "org.apache.spark.sql.execution.datasources.parquet."
+        to_spark = getattr(jvm, parquet + "ParquetToSparkSchemaConverter")(
+            spark._jsparkSession.sessionState().conf()
+        )
+        jschema = getattr(jvm, parquet + "ParquetFileFormat").readSchemaFromFooter(
+            footer, to_spark
+        )
+    except Py4JJavaError:
+        return None
+    # the relation reads every data column as nullable
+    return StructType.fromJson(json.loads(jschema.asNullable().json()))
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    """One testdata table. Its schema comes from the parquet footer on the
+    driver (:func:`footer_schema`), so building a query launches no
+    schema-inference job; other paths fall back to plain inference."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def ts_ns_col(df: DataFrame, col: str = "ts") -> Column:

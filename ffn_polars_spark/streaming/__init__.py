@@ -40,6 +40,7 @@ from pyspark.sql.types import (
 )
 
 from ffn_polars_spark.core import ns_to_timestamp
+from ffn_polars_spark.sources import footer_schema
 
 __all__ = [
     "read_tick_stream",
@@ -64,10 +65,13 @@ def read_tick_stream(
 
     ``ts_col`` may be epoch-ns LongType (the engine's tick time axis) or a
     timestamp; an ``event_time`` TimestampType column is derived for
-    watermarking either way.
+    watermarking either way. Without ``schema``, a one-file directory's
+    schema comes from its parquet footer on the driver
+    (:func:`~ffn_polars_spark.sources.footer_schema`); anything else runs
+    the batch reader's inference job.
     """
     if schema is None:
-        schema = spark.read.parquet(path).schema
+        schema = footer_schema(spark, path) or spark.read.parquet(path).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -67,6 +68,13 @@ PROPERTY_SMOKE = {
 }
 
 
+def _battery_gated(item) -> bool:
+    return (
+        "test_properties" in item.nodeid
+        and item.name.split("[")[0] not in PROPERTY_SMOKE
+    )
+
+
 def pytest_collection_modifyitems(config, items):
     if FULL_BATTERY:
         return
@@ -75,9 +83,17 @@ def pytest_collection_modifyitems(config, items):
         "the smoke subset runs by default"
     )
     for item in items:
-        if "test_properties" in item.nodeid:
-            if item.name.split("[")[0] not in PROPERTY_SMOKE:
-                item.add_marker(skip)
+        if _battery_gated(item):
+            item.add_marker(skip)
+
+
+def pytest_report_collectionfinish(config, start_path, items):
+    """Say how much of the property battery the gate left out, so a run
+    never shrinks silently."""
+    gated = sum(map(_battery_gated, items))
+    if FULL_BATTERY:
+        return f"full battery: the {gated} opt-in property tests run too"
+    return f"smoke mode: {gated} property tests skipped (FFN_FULL_BATTERY=1 runs all)"
 
 
 def aae(actual, expected, places=3):
@@ -87,3 +103,17 @@ def aae(actual, expected, places=3):
     assert round(actual, places) == round(expected, places), (
         f"expected {expected}, got {actual} (places={places})"
     )
+
+
+def jobs_in_group(spark, fn):
+    """Number of Spark jobs ``fn()`` launches, counted under a fresh job
+    group through the status tracker."""
+    sc = spark.sparkContext
+    group = f"ffn-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

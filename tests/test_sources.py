@@ -1,14 +1,137 @@
-"""Source/sink helpers: partitioned writes prune at scan time, bucketed
-tables join without exchanges."""
+"""Source/sink helpers: footer-derived table schemas match inference
+without its job, partitioned writes prune at scan time, bucketed tables
+join without exchanges."""
 
+import glob
 import os
 
-from tests.conftest import TESTDATA
+import pytest
+from tests.conftest import TESTDATA, jobs_in_group
 
 from pyspark.sql import functions as F
 
 from ffn_polars_spark.plans import count_exchanges, explain_str
-from ffn_polars_spark.sources import read_table, ts_ns_col, write_bucketed, write_table
+from ffn_polars_spark.sources import (
+    TESTDATA_TABLES,
+    footer_schema,
+    read_table,
+    ts_ns_col,
+    write_bucketed,
+    write_table,
+)
+
+
+def _sf_dirs(root):
+    return sorted(d for d in glob.glob(os.path.join(root, "sf*")) if os.path.isdir(d))
+
+
+def _assert_tables_match_inference(spark, sf_dir):
+    for name in TESTDATA_TABLES:
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        assert os.path.exists(path), path
+        assert footer_schema(spark, path) == spark.read.parquet(path).schema, path
+
+
+def test_footer_schema_matches_inference_every_sf(spark):
+    """Every testdata table at every scale factor: the driver-side footer
+    schema equals the schema the inference job returns (under the
+    ``nanosAsLong`` the session sets)."""
+    sf_dirs = _sf_dirs(TESTDATA)
+    if not sf_dirs:
+        pytest.skip(f"no sf* testdata under {TESTDATA}")
+    for sf_dir in sf_dirs:
+        _assert_tables_match_inference(spark, sf_dir)
+
+
+@pytest.mark.parametrize("seed", [3, 11])
+def test_footer_schema_matches_inference_generated(spark, tmp_path, seed):
+    from tools.gen_testdata import generate
+
+    out = str(tmp_path / "sf0.001")
+    generate(out, 0.001, seed=seed)
+    _assert_tables_match_inference(spark, out)
+
+
+def test_footer_schema_matches_inference_spark_written(spark, tmp_path):
+    """A Spark writer stores its own schema in the footer; types parquet
+    cannot say alone (timestamp_ntz, map, nested nullability) come back
+    from it, exactly as inference reads them."""
+    path = str(tmp_path / "typed.parquet")
+    spark.sql(
+        """SELECT CAST(id AS DECIMAL(12, 2)) AS amount,
+                  TIMESTAMP '2024-01-02 03:04:05' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts,
+                  TIMESTAMP_NTZ '2024-01-02 03:04:05' AS ts_ntz,
+                  array(CAST(id AS FLOAT), CAST(NULL AS FLOAT)) AS vec,
+                  named_struct('k', CAST(id AS INT), 's', CAST(id AS STRING)) AS rec,
+                  map('a', id, 'b', CAST(NULL AS BIGINT)) AS m
+           FROM range(5)"""
+    ).coalesce(1).write.parquet(path)
+    expected = spark.read.parquet(path).schema
+    assert footer_schema(spark, path) == expected
+    types = {f.name: f.dataType.simpleString() for f in expected.fields}
+    assert types == {
+        "amount": "decimal(12,2)",
+        "ts": "timestamp",
+        "ts_ntz": "timestamp_ntz",
+        "vec": "array<float>",
+        "rec": "struct<k:int,s:string>",
+        "m": "map<string,bigint>",
+    }
+    assert read_table(spark, str(tmp_path), "typed").schema == expected
+
+
+def _failure(exc):
+    """What identifies a read failure: the Python type, plus the error
+    condition, or for a failed inference job the Java root cause."""
+    if hasattr(exc, "getCondition"):
+        return type(exc), exc.getCondition()
+    cause = exc.java_exception
+    while cause.getCause() is not None:
+        cause = cause.getCause()
+    return type(exc), cause.getClass().getName(), cause.getMessage()
+
+
+def _same_failure(spark, tmp_path, name):
+    path = os.path.join(str(tmp_path), f"{name}.parquet")
+    with pytest.raises(Exception) as plain:
+        spark.read.parquet(path)
+    with pytest.raises(Exception) as ours:
+        read_table(spark, str(tmp_path), name)
+    assert _failure(ours.value) == _failure(plain.value)
+
+
+def test_read_table_falls_back_to_inference(spark, tmp_path):
+    """Whatever the footer path does not take — a multi-file directory, a
+    file that is not parquet, a corrupt footer, a missing path — reads or
+    fails exactly as plain inference does."""
+    multi = str(tmp_path / "multi.parquet")
+    spark.range(10).selectExpr("id", "CAST(id AS STRING) AS s").repartition(2).write.parquet(multi)
+    assert footer_schema(spark, multi) is None
+    assert read_table(spark, str(tmp_path), "multi").schema == spark.read.parquet(multi).schema
+
+    (tmp_path / "text.parquet").write_text("not parquet at all\n" * 10)
+    assert footer_schema(spark, str(tmp_path / "text.parquet")) is None
+    _same_failure(spark, tmp_path, "text")
+
+    # a parquet-shaped tail around a footer that does not decode
+    (tmp_path / "corrupt.parquet").write_bytes(
+        b"PAR1" + b"\xff" * 16 + (16).to_bytes(4, "little") + b"PAR1"
+    )
+    assert footer_schema(spark, str(tmp_path / "corrupt.parquet")) is None
+    _same_failure(spark, tmp_path, "corrupt")
+
+    assert footer_schema(spark, str(tmp_path / "missing.parquet")) is None
+    _same_failure(spark, tmp_path, "missing")
+
+
+def test_read_table_launches_no_job(spark):
+    sf_dir = (_sf_dirs(TESTDATA) or [None])[0]
+    if sf_dir is None:
+        pytest.skip(f"no sf* testdata under {TESTDATA}")
+    path = os.path.join(sf_dir, "lineitem.parquet")
+    # the probe sees the inference job plain reads launch
+    assert jobs_in_group(spark, lambda: spark.read.parquet(path).schema) >= 1
+    assert jobs_in_group(spark, lambda: read_table(spark, sf_dir, "lineitem").schema) == 0
 
 
 def test_tick_ingestion_contract_all_sf(spark):

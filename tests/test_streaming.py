@@ -5,6 +5,7 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from tests.conftest import jobs_in_group
 
 from ffn_polars_spark.streaming import (
     read_tick_stream,
@@ -629,3 +630,18 @@ def test_streaming_preagg_interval_join_same_key_name(spark, tick_dir):
     assert {r.ticker for r in out} <= {"A", "B", "C"}
     # contemporaneous bar joins itself: every left bar has a same-start match
     assert any(r.l_bar_start == r.r_bar_start for r in out)
+
+
+def test_read_tick_stream_one_file_dir_skips_inference(spark, tmp_path):
+    """A one-file directory (the catalog's stream stage shape) takes its
+    schema from the parquet footer: the batch reader's schema, no job."""
+    d = str(tmp_path / "one")
+    spark.createDataFrame(
+        [("A", i * SEC, 100.0 + i, 1.0) for i in range(10)],
+        ["ticker", "ts", "price", "volume"],
+    ).coalesce(1).write.parquet(d)
+    streams = []
+    assert jobs_in_group(
+        spark, lambda: streams.append(read_tick_stream(spark, d, ts_col="ts"))
+    ) == 0
+    assert streams[0].drop("event_time").schema == spark.read.parquet(d).schema
