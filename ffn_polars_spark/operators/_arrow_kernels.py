@@ -183,8 +183,9 @@ def make_bucket_udf(planes_per_table):
 
     All tables' hyperplanes stack into one (T*P, dim) matrix, so a batch of
     vectors is bucketed with a single BLAS matmul — the JVM alternative is
-    T*P interpreted dot-product HOFs per row. Sign convention matches
-    similarity.simhash_bucket: bit j set iff dot(v, plane_j) >= 0.
+    T*P interpreted dot-product HOFs per row. Sign convention: bit j of a
+    table's bucket id is set iff dot(v, plane_j) >= 0 (a zero dot counts as
+    positive).
     """
     T = len(planes_per_table)
     P = len(planes_per_table[0])

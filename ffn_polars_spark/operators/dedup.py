@@ -5,20 +5,21 @@ Four families (BASELINE.json north star: first-class pipeline components):
 * exact            — normalize → hash → hash-partitioned groupBy. One shuffle.
 * n-gram Jaccard   — exact pairwise similarity via a shingle equi-join
                      (inverted index), never a cross join.
-* MinHash + LSH    — shingle → K minhashes → band → bucket-join; candidate
+* MinHash + LSH    — shingle → K minhashes → band → bucket groups; candidate
                      pairs optionally verified with exact Jaccard. The 100 TB
-                     path: cost is O(docs × shingles) + banded join, and every
-                     stage is a hash shuffle on a well-distributed key.
+                     path: cost is O(docs × shingles) + in-bucket pairs, and
+                     every stage is a hash shuffle on a well-distributed key.
 * SimHash          — 64-bit sign-random-projection fingerprint; Hamming-ball
                      candidate retrieval via 16-bit chunk banding.
 
 Shingle hashes are xxhash64 (JVM-side, seeded) by default, or an
 engine-portable 60-bit md5 hash (``hash_fn="md5"``, the oracle-checked
 mode); both are deterministic. MinHash/SimHash signatures run as Arrow
-pandas_udf kernels (operators/_arrow_kernels.py) under the default
-``SIGNATURE_ENGINE = "arrow"``; in md5 mode one fused kernel builds the
-shingles, hashes them and takes the minima. Exact dedup and candidate
-generation stay JVM built-ins.
+pandas_udf kernels (operators/_arrow_kernels.py); in md5 mode one fused
+kernel builds the shingles, hashes them and takes the minima. MinHash and
+SimHash candidates both come from one groupBy on the bucket key plus
+in-task pair expansion (:func:`_bucket_pairs_streamed`). Exact dedup stays
+a JVM built-in.
 """
 
 from __future__ import annotations
@@ -145,10 +146,12 @@ def _pinned(df: DataFrame, eager: bool = True) -> DataFrame:
     between 1x and 6x the eager wall-clock. count() costs one extra pass over
     the already-small pinned frame and makes the plan deterministic.
 
-    ``eager=False`` is for pins whose FIRST reader is itself a single
-    eagerly-materialized job (e.g. minhash's shingle arrays, read first by
-    the bucket pin's own count): that one job fills the cache serially, so
-    the race cannot happen and the extra count stage is pure overhead.
+    ``eager=False`` skips the count for a pin whose readers are all stages
+    of the one query that consumes it (minhash's shingle arrays: the band
+    hashes and both verify sides). Measured on that pin, the kernel still
+    runs once per document — a second reader of a partition waits on the
+    cache block's write lock instead of recomputing it — so the count would
+    only add a pass over the corpus-sized derivation.
 
     Tracked in ``_ACTIVE_PINS`` for :func:`release_pins`."""
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -545,34 +548,6 @@ def _minhash_coeffs(num_hashes: int, seed: int) -> list:
     ]
 
 
-# Signature engines. "arrow" computes the per-document permutation minima /
-# bit counts in numpy over Arrow batches; "jvm" uses array higher-order
-# functions. Spark evaluates HOF lambdas interpreted (outside whole-stage
-# codegen), so at 128 permutations x ~50 shingles the Arrow path measures
-# ~5-10x faster — this is the documented exception to the built-ins-first
-# rule. Both produce bit-identical signatures (same integer arithmetic).
-SIGNATURE_ENGINE = "arrow"
-
-# Candidate-generation strategy for dedup_minhash_lsh. "self_join" is the
-# pinned-bucket-table self-join; "group_pairs" is groupBy(band, bh) +
-# collect_list + in-task C(k,2) pair expansion (the dedup_simhash shape).
-# "auto" picks by input scale from parquet footers: the self-join's
-# codegen'd hash join on a ReusedExchange wins on tiny corpora where its
-# eager pin-count job is cheap (r13 paired A/Bs at 5k docs/0.6 MB: md5
-# min 2.08/2.21 s vs group_pairs 2.14/2.31, both pair orderings), while
-# group_pairs wins once the corpus is large enough that the extra
-# construction count pass and the two-reader cache fill dominate — paired
-# A/Bs, both pair orderings: at 50k docs/12 MB group_pairs 2.80/2.79 s vs
-# 3.71/3.57 (xxhash64) and 3.62 vs 4.08 (md5); at 500k docs/122 MB
-# 7.34/8.56 vs 9.49/9.06 — output identical pair-for-pair at every scale.
-# group_pairs is also robust to contention (no two-reader lazy-pin race).
-# The 4 MB cutoff sits between the measured 0.6 MB (self-join wins) and
-# 12 MB (group_pairs wins) points; unknown footers (in-memory frames)
-# take group_pairs — the zero-eager-job, scale-safe direction.
-CANDIDATE_STRATEGY = "auto"
-_GROUP_PAIRS_MIN_BYTES = 4 << 20
-
-
 def _minhash_arrow(coeffs: list):
     from ffn_polars_spark.operators._arrow_kernels import make_minhash_udf
 
@@ -591,36 +566,23 @@ def _md5_simhash_arrow(n: int):
     return make_md5_simhash_udf(n)
 
 
-def _signatures_from_arrays(
-    arrays: DataFrame, coeffs: list, id_col: str, engine: str = None
-) -> DataFrame:
-    """Signature columns ``__mh{k}`` from a ``_doc_shingle_arrays`` frame."""
-    engine = engine or SIGNATURE_ENGINE
+def _signatures_from_arrays(arrays: DataFrame, coeffs: list, id_col: str) -> DataFrame:
+    """Signature columns ``__mh{k}`` from a ``_doc_shingle_arrays`` frame.
+
+    The permutation minima run in numpy over Arrow batches: Spark evaluates
+    higher-order-function lambdas interpreted (outside whole-stage codegen),
+    so at 128 permutations x ~50 shingles the kernel measured ~5-10x faster
+    than an ``array_min(transform(...))`` per permutation — the documented
+    exception to the built-ins-first rule."""
     hashed = arrays.select(
         F.col("__id").alias(id_col),
         F.transform(F.col("__h64"), lambda h: F.pmod(h, F.lit(_MERSENNE))).alias("__h"),
     )
-
-    if engine == "arrow":
-        sig = _minhash_arrow(coeffs)(F.col("__h")).alias("__sig")
-        return hashed.select(id_col, sig).select(
-            id_col,
-            *[
-                F.element_at("__sig", k + 1).alias(f"__mh{k}")
-                for k in range(len(coeffs))
-            ],
-        )
-
-    def _perm(a: int, b: int):
-        # factory, not a default-arg lambda: higher-order functions infer
-        # arity from the lambda signature, so it must be exactly one arg
-        return lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(_MERSENNE))
-
-    sigs = [
-        F.array_min(F.transform(F.col("__h"), _perm(a, b))).alias(f"__mh{k}")
-        for k, (a, b) in enumerate(coeffs)
-    ]
-    return hashed.select(id_col, *sigs)
+    sig = _minhash_arrow(coeffs)(F.col("__h")).alias("__sig")
+    return hashed.select(id_col, sig).select(
+        id_col,
+        *[F.element_at("__sig", k + 1).alias(f"__mh{k}") for k in range(len(coeffs))],
+    )
 
 
 def _bucket_pairs_streamed(grouped: DataFrame, ids_col: str, emit) -> DataFrame:
@@ -665,19 +627,20 @@ def dedup_minhash_lsh(
 ) -> DataFrame:
     """MinHash-LSH near-duplicate pairs.
 
-    Signature → ``bands`` band-hashes (rows = num_hashes/bands) → bucket join
-    on (band_id, band_hash) → distinct candidate pairs → (optionally) exact
-    Jaccard verification on candidates only. Defaults are 64/16 (r=4, S-curve
-    midpoint ≈ 0.50): half the signature compute of 128/32 at the same band
-    width, with near-identical recall above ~0.7 similarity (the dedup
-    regime); pass 128/32 when hunting pairs near 0.4.
+    Signature → ``bands`` band-hashes (rows = num_hashes/bands) → one
+    groupBy on (band_id, band_hash) with in-bucket pair expansion → distinct
+    candidate pairs → (optionally) exact Jaccard verification on candidates
+    only. Defaults are 64/16 (r=4, S-curve midpoint ≈ 0.50): half the
+    signature compute of 128/32 at the same band width, with near-identical
+    recall above ~0.7 similarity (the dedup regime); pass 128/32 when
+    hunting pairs near 0.4.
 
     ``max_bucket`` (default None = uncapped, bit-identical to the oracle
-    twin) drops band buckets holding more than that many docs before the
-    self-join — the same hot-key valve as winnow's ``max_fp_df``. A
+    twin) drops band buckets holding more than that many docs before they
+    are collected — the same hot-key valve as winnow's ``max_fp_df``. A
     DEGENERATE bucket (e.g. a boilerplate/empty-text signature shared by
     k docs) emits C(k,2) pairs: at 100 TB one million-doc bucket is 5×10¹¹
-    candidates from a single key, all landing on one join task. Docs in a
+    candidates from a single key, all landing on one task. Docs in a
     dropped bucket can still pair through their other ``bands − 1``
     buckets, so for true near-dups (most bands collide) the recall cost is
     ~0; set it around 10³–10⁴ when running web-scale corpora with
@@ -704,23 +667,22 @@ def dedup_minhash_lsh(
     rows = num_hashes // bands
     df = _spread(df, id_col)
     # One pinned pass builds the shingle + hash arrays; signatures, the
-    # bucket self-join, and verification all derive from it.
+    # bucket groups, and verification all derive from it.
     # Pin ONLY (__id, __h64): signatures permute the hashes and the exact
     # verify intersects them, so the shingle STRINGS never need to leave
     # the projection — pinning them stored corpus-width text (~7x the
     # memory; the sf100 pin GC-thrashed an 8 GB heap) for no consumer.
-    # eager=False: the bucket pin's count below is this frame's first reader
-    # and is itself a single job — it fills this cache serially on the way
-    # to the band hashes, so the eager count's extra stage (measured 5.0 s
-    # of task-time at sf0.1, the old slowest-headline fat) buys nothing.
-    # The verify joins read the then-warm cache. Heap-gated (r12): the
-    # arrays are longs-only (~8 B/shingle ≈ 2x the on-disk text bytes in
-    # cache), but still token-scale — past the 30%-heap cap the verify
-    # joins re-derive instead of GC-thrashing, exactly the
+    # eager=False: every reader of this pin is a stage of the returned
+    # query, so construction launches no job; the cache fills once per
+    # document when that query runs (see _pinned). An eager count would
+    # add a full pass (measured 5.0 s of task-time at sf0.1). Heap-gated
+    # (r12): the arrays are longs-only (~8 B/shingle ≈ 2x the on-disk text
+    # bytes in cache), but still token-scale — past the 30%-heap cap the
+    # verify joins re-derive instead of GC-thrashing, exactly the
     # _pinned_if_fits trade.
     est = _token_scale_est(df)
     coeffs = _minhash_coeffs(num_hashes, seed)
-    if hash_fn == "md5" and SIGNATURE_ENGINE == "arrow":
+    if hash_fn == "md5":
         # Fused Arrow path: shingle build + md5 + permutation minima in ONE
         # numpy/hashlib kernel over the token arrays. The split JVM chain
         # evaluates concat_ws + md5 + conv inside transform() lambdas, which
@@ -767,86 +729,43 @@ def dedup_minhash_lsh(
         )
         for b in range(bands)
     ]
-    # Candidate pairs: two strategies emitting the same distinct
-    # (id_a < id_b) set — see CANDIDATE_STRATEGY above for the measured
-    # crossover and why unknown-size inputs take the group_pairs side.
-    strategy = CANDIDATE_STRATEGY
-    if strategy == "auto":
-        from ffn_polars_spark.operators._scanmeta import scan_bytes
-
-        sb = scan_bytes(df)
-        strategy = (
-            "self_join"
-            if sb is not None and sb < _GROUP_PAIRS_MIN_BYTES
-            else "group_pairs"
-        )
     bucket_rows = sig.select(
         F.col(id_col).alias("__id"),
         F.explode(F.array(*band_structs)).alias("__b"),
     ).select(
         "__id", F.col("__b.band").alias("__band"), F.col("__b.bh").alias("__bh")
     )
-    if strategy == "group_pairs":
-        # One hash exchange on (band, bh) collects each bucket's ids; pairs
-        # are generated inside the reduce task from the id-sorted list (the
-        # dedup_simhash shape). Single reader of the signature frame -> no
-        # bucket pin, no eager count job.
-        if max_bucket is not None:
-            # r14 hot-bucket valve placement: count-and-filter BEFORE the
-            # collect_list, via a window keyed like the groupBy (same hash
-            # exchange — guide §2.4). The r13 shape filtered AFTER the
-            # aggregate, so a degenerate bucket's full id-list still
-            # materialized in one unspillable ObjectHashAggregate buffer
-            # (1e9-doc boilerplate bucket = 8+ GB in one allocation →
-            # executor OOM); the window's row buffer spills to disk, and
-            # hot buckets are dropped before anything collects them.
-            from pyspark.sql.window import Window
+    # Candidate pairs: one hash exchange on (band, bh) collects each bucket's
+    # ids; pairs are generated inside the reduce task from the id-sorted list
+    # (the dedup_simhash shape). The signature frame has a single reader, so
+    # there is no bucket pin and no construction-time job.
+    if max_bucket is not None:
+        # r14 hot-bucket valve placement: count-and-filter BEFORE the
+        # collect_list, via a window keyed like the groupBy (same hash
+        # exchange — guide §2.4). The r13 shape filtered AFTER the
+        # aggregate, so a degenerate bucket's full id-list still
+        # materialized in one unspillable ObjectHashAggregate buffer
+        # (1e9-doc boilerplate bucket = 8+ GB in one allocation →
+        # executor OOM); the window's row buffer spills to disk, and
+        # hot buckets are dropped before anything collects them.
+        from pyspark.sql.window import Window
 
-            w_b = Window.partitionBy("__band", "__bh")
-            bucket_rows = (
-                bucket_rows.withColumn("__bn", F.count(F.lit(1)).over(w_b))
-                .where(F.col("__bn") <= int(max_bucket))
-                .drop("__bn")
-            )
-        grouped = bucket_rows.groupBy("__band", "__bh").agg(
-            F.collect_list("__id").alias("__ids")
+        w_b = Window.partitionBy("__band", "__bh")
+        bucket_rows = (
+            bucket_rows.withColumn("__bn", F.count(F.lit(1)).over(w_b))
+            .where(F.col("__bn") <= int(max_bucket))
+            .drop("__bn")
         )
-        cands = _bucket_pairs_streamed(
-            grouped.where(F.size("__ids") >= 2).select(
-                F.array_sort("__ids").alias("__ids")
-            ),
-            "__ids",
-            lambda a, b: [a.alias("id_a"), b.alias("id_b")],
-        ).distinct()
-    else:
-        # Pin the bucket table: both sides of the self-join (and nothing
-        # else) read it, and it is tiny relative to the corpus (docs x
-        # bands rows of three longs).
-        buckets = _pinned(bucket_rows)
-        if max_bucket is not None:
-            # hot-bucket valve: a keyed window over the PINNED bucket table
-            # (never the corpus), so the count costs one bucket-sized
-            # exchange
-            from pyspark.sql.window import Window
-
-            w_b = Window.partitionBy("__band", "__bh")
-            buckets = (
-                buckets.withColumn("__bn", F.count(F.lit(1)).over(w_b))
-                .where(F.col("__bn") <= int(max_bucket))
-                .drop("__bn")
-            )
-
-        l, r = buckets.alias("l"), buckets.alias("r")
-        cands = (
-            l.join(
-                r,
-                (F.col("l.__band") == F.col("r.__band"))
-                & (F.col("l.__bh") == F.col("r.__bh"))
-                & (F.col("l.__id") < F.col("r.__id")),
-            )
-            .select(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
-            .distinct()
-        )
+    grouped = bucket_rows.groupBy("__band", "__bh").agg(
+        F.collect_list("__id").alias("__ids")
+    )
+    cands = _bucket_pairs_streamed(
+        grouped.where(F.size("__ids") >= 2).select(
+            F.array_sort("__ids").alias("__ids")
+        ),
+        "__ids",
+        lambda a, b: [a.alias("id_a"), b.alias("id_b")],
+    ).distinct()
     if verify == "none":
         return cands
 
@@ -885,37 +804,21 @@ def simhash_signatures(
 
     Per-document like minhash, so it's a single projection over the in-row
     hash array: bit j's counter is ``2 * count(hashes with bit j set) -
-    |hashes|``; the fingerprint is reassembled with shifts. Engine choice as
-    in ``_signatures_from_arrays`` (Arrow/numpy by default, pure-JVM HOF
-    fallback; identical bits). In md5 mode the shingle build + hash + bit
-    counts fuse into one Arrow kernel (see dedup_minhash_lsh — same
-    interpreted-HOF cost, same bit-identical fusion).
+    |hashes|``; the fingerprint is reassembled with shifts. The bit counts
+    run in an Arrow/numpy kernel, as in ``_signatures_from_arrays``. In md5
+    mode the shingle build + hash + bit counts fuse into one Arrow kernel
+    (see dedup_minhash_lsh — same interpreted-HOF cost, same bit-identical
+    fusion).
     """
-    if hash_fn == "md5" and SIGNATURE_ENGINE == "arrow":
+    if hash_fn == "md5":
         return _tokens_frame(df, text_col, id_col, n).select(
             F.col("__id").alias(id_col),
             _md5_simhash_arrow(n)(F.col("__toks")).alias("simhash"),
         )
     arrays = _doc_shingle_arrays(df, text_col, id_col, n, hash_fn)
-    hashed = arrays.select(
-        F.col("__id").alias(id_col), F.col("__h64").alias("__h"), F.size("__h64").alias("__n")
-    )
-
-    if SIGNATURE_ENGINE == "arrow":
-        return hashed.select(id_col, _simhash_arrow()(F.col("__h")).alias("simhash"))
-
-    def _bit_test(j: int):
-        return lambda h: F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1
-
-    sig = None
-    for j in range(64):
-        ones = F.size(F.filter(F.col("__h"), _bit_test(j)))
-        bit = F.when(ones * 2 > F.col("__n"), F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        term = F.shiftleft(bit, j)
-        sig = term if sig is None else sig.bitwiseXOR(term)
-    return hashed.select(id_col, sig.alias("simhash"))
+    return arrays.select(
+        F.col("__id").alias(id_col), F.col("__h64").alias("__h")
+    ).select(id_col, _simhash_arrow()(F.col("__h")).alias("simhash"))
 
 
 def _simhash_arrow():

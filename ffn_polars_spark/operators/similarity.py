@@ -354,12 +354,9 @@ def embedding_cosine_pairs(
     # only — a string id would make the in-kernel id_a < id_b mask an
     # object-dtype comparison at pair cardinality, the cost this path
     # exists to avoid.
-    from ffn_polars_spark.operators.dedup import SIGNATURE_ENGINE
-
     id_t = df.schema[id_col].dataType.simpleString()
     if (
-        SIGNATURE_ENGINE == "arrow"
-        and n_rows is not None
+        n_rows is not None
         and n_rows * (n_rows - 1) // 2 >= 10_000_000
         and id_t in ("tinyint", "smallint", "int", "bigint")
         and _fits_driver_corpus_budget(df, vec_col, n_rows)
@@ -520,40 +517,14 @@ def _bucketize(
 
     All tables bucket in a single Arrow-batched matmul (one kernel call per
     batch) — interpreted per-plane dot HOFs were the dominant cost of the LSH
-    operators. Falls back to the JVM expression when the dedup module's
-    SIGNATURE_ENGINE is set to "jvm".
+    operators.
     """
-    from ffn_polars_spark.operators.dedup import SIGNATURE_ENGINE
+    from ffn_polars_spark.operators._arrow_kernels import make_bucket_udf
 
-    if SIGNATURE_ENGINE == "arrow":
-        from ffn_polars_spark.operators._arrow_kernels import make_bucket_udf
-
-        bk = make_bucket_udf(planes_per_table)
-        return df.select(
-            ident, vcol, F.posexplode(bk(F.col(vcol))).alias("__tbl", "__bkt")
-        )
-    structs = [
-        F.struct(
-            F.lit(t).alias("tbl"),
-            simhash_bucket(F.col(vcol), planes_per_table[t]).alias("b"),
-        )
-        for t in range(len(planes_per_table))
-    ]
+    bk = make_bucket_udf(planes_per_table)
     return df.select(
-        ident, vcol, F.explode(F.array(*structs)).alias("__b")
-    ).select(ident, vcol, F.col("__b.tbl").alias("__tbl"), F.col("__b.b").alias("__bkt"))
-
-
-def simhash_bucket(vec: Column, hyperplanes: List[List[float]]) -> Column:
-    """Sign-random-projection bucket id for a vector (one long)."""
-    bucket = F.lit(0).cast("long")
-    for j, plane in enumerate(hyperplanes):
-        arr = F.array(*[F.lit(float(v)) for v in plane])
-        bit = F.when(dot(vec, arr) >= 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = bucket.bitwiseXOR(F.shiftleft(bit, j))
-    return bucket
+        ident, vcol, F.posexplode(bk(F.col(vcol))).alias("__tbl", "__bkt")
+    )
 
 
 def lsh_tables_for_recall(
@@ -713,8 +684,6 @@ def ann_topk(
     n_i = n_q = None
     if max_pairs and not allow_bruteforce:
         n_i, n_q = _guard_pair_budget(items, id_col, queries, qid, max_pairs)
-    from ffn_polars_spark.operators.dedup import SIGNATURE_ENGINE
-
     # Arrow fast path for LARGE pair counts: with a driver-manageable query
     # side, one BLAS matmul per item batch scores every (item, query) pair
     # and emits only the batch-local top-k per query — the window then ranks
@@ -731,8 +700,7 @@ def ann_topk(
     # disabled the guard probe (max_pairs=0 / allow_bruteforce) keep the
     # JVM path — no hidden counting jobs.
     if (
-        SIGNATURE_ENGINE == "arrow"
-        and n_q is not None
+        n_q is not None
         and 0 < n_q <= 10_000
         and n_i is not None
         and n_i * n_q >= 50_000_000

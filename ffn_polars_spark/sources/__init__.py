@@ -261,29 +261,6 @@ def write_table(
     w.save(path)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_by,
-    num_buckets: int = 32,
-    sort_by=None,
-    mode: str = "overwrite",
-) -> None:
-    """Write a bucketed (and optionally sorted) managed table.
-
-    Bucketing pre-shuffles on the join/agg key at write time: two tables
-    bucketed the same way join with ZERO exchanges, and per-key windows skip
-    their sort when ``sort_by`` matches. This is the co-located-join story
-    for keys too big to broadcast.
-    """
-    bucket_cols = [bucket_by] if isinstance(bucket_by, str) else list(bucket_by)
-    w = df.write.mode(mode).bucketBy(int(num_buckets), *bucket_cols)
-    if sort_by:
-        sort_cols = [sort_by] if isinstance(sort_by, str) else list(sort_by)
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)
-
-
 def write_jsonl(
     df: DataFrame,
     path: str,

@@ -12,6 +12,7 @@ from ffn_polars_spark.operators.dedup import (
     dedup_simhash,
     ngram_jaccard_pairs,
 )
+from tests.conftest import jobs_in_group
 
 WORDS = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima".split()
 
@@ -260,93 +261,58 @@ def test_executor_heap_bytes_parses_spark_memory_grammar():
     assert _executor_heap_bytes(_Stub(None)) == 8 << 30
 
 
-def test_minhash_construction_count_budget_per_strategy(spark, corpus, monkeypatch):
-    """Construction-time eager-action budget, per candidate strategy:
-
-    - group_pairs (the auto choice for in-memory/large inputs) must build
-      its plan with ZERO eager materialization actions — no bucket pin, no
-      count job (the single-reader restructure's whole point).
-    - self_join (the auto choice for footer-proven tiny inputs) must
-      trigger exactly ONE (the bucket pin's count). The shingle-array pin
-      is lazy — its cache fills serially inside that same action, so a
-      second count pass over the corpus-sized derivation (the old
-      slowest-headline fat: ~5 s of task-time at sf0.1) is a regression.
-    """
-    # Spark 4 splits the API: the runtime frames are
-    # pyspark.sql.classic.dataframe.DataFrame, which overrides count()
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    import ffn_polars_spark.operators.dedup as dedup_mod
-    from ffn_polars_spark.operators.dedup import dedup_minhash_lsh, release_pins
-
-    orig = DataFrame.count
-    for strategy, budget in (("group_pairs", 0), ("self_join", 1)):
-        release_pins()
-        calls = []
-
-        def counting(self):
-            calls.append(1)
-            return orig(self)
-
-        monkeypatch.setattr(dedup_mod, "CANDIDATE_STRATEGY", strategy)
-        monkeypatch.setattr(DataFrame, "count", counting)
-        out = dedup_minhash_lsh(corpus, threshold=0.5, hash_fn="md5")
-        assert len(calls) == budget, (
-            f"{strategy}: expected {budget} construction counts, got {len(calls)}"
-        )
-        monkeypatch.undo()
-        # the plan still executes correctly (lazily-pinned arrays / no pin)
-        assert out.count() > 0
-    release_pins()
-
-
-def test_minhash_candidate_strategy_auto_and_identity(spark, corpus, tmp_path, monkeypatch):
-    """The auto strategy switch: footer-proven tiny parquet inputs take the
-    pinned-bucket self-join, in-memory (unknown-size) frames take
-    groupBy-pairs — and both strategies emit the IDENTICAL pair set (the
-    r13 A/Bs verified this up to 500k docs; this pins it in CI)."""
-    import ffn_polars_spark.operators.dedup as dedup_mod
-    from ffn_polars_spark.operators.dedup import dedup_minhash_lsh, release_pins
-
-    outs = {}
-    for strategy in ("self_join", "group_pairs"):
-        monkeypatch.setattr(dedup_mod, "CANDIDATE_STRATEGY", strategy)
-        release_pins()
-        outs[strategy] = dedup_minhash_lsh(
-            corpus, threshold=0.5, hash_fn="md5"
-        ).collect()
-    monkeypatch.undo()
-    release_pins()
-    key = lambda r: (r["id_a"], r["id_b"])
-    assert sorted(outs["self_join"], key=key) == sorted(
-        outs["group_pairs"], key=key
-    )
-    assert len(outs["self_join"]) > 0
-
-    # auto routing: in-memory frame -> group_pairs (scan_bytes is None);
-    # tiny parquet -> self_join (footer bytes below the cutoff). Observed
-    # via the construction-count budget (1 = pinned self-join, 0 = GB).
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    orig = DataFrame.count
+def _corpus_and_parquet_copy(spark, corpus, tmp_path):
+    """The in-memory corpus and a footer-proven tiny parquet copy of it."""
     path = str(tmp_path / "docs.parquet")
     corpus.write.mode("overwrite").parquet(path)
-    on_disk = spark.read.parquet(path)
-    for frame, expected in ((corpus, 0), (on_disk, 1)):
+    return corpus, spark.read.parquet(path)
+
+
+def test_minhash_construction_count_budget_per_strategy(spark, corpus, tmp_path):
+    """Building dedup_minhash_lsh launches no Spark job, on an in-memory
+    frame and on a tiny parquet copy alike: the shingle-array pin is lazy,
+    and candidates come from one groupBy on the bucket key, so there is no
+    bucket pin to count. A construction-time pass over the corpus-sized
+    derivation (the old slowest-headline fat: ~5 s of task-time at sf0.1)
+    is a regression. There is one candidate strategy, so the budget is 0
+    for every input."""
+    from ffn_polars_spark.operators.dedup import release_pins
+
+    for frame in _corpus_and_parquet_copy(spark, corpus, tmp_path):
         release_pins()
-        calls = []
+        built = []
+        n_jobs = jobs_in_group(
+            spark,
+            lambda: built.append(
+                dedup_minhash_lsh(frame, threshold=0.5, hash_fn="md5")
+            ),
+        )
+        assert n_jobs == 0, f"construction launched {n_jobs} jobs"
+        # the plan still executes correctly (lazily-pinned arrays)
+        assert built[0].count() > 0
+    release_pins()
 
-        def counting(self):
-            calls.append(1)
-            return orig(self)
 
-        monkeypatch.setattr(DataFrame, "count", counting)
-        dedup_minhash_lsh(frame, threshold=0.5, hash_fn="md5")
-        monkeypatch.undo()
-        assert len(calls) == expected, (
-            f"auto routing: expected {expected} counts, got {len(calls)}"
+def test_minhash_candidate_strategy_auto_and_identity(spark, corpus, tmp_path):
+    """The in-memory frame and a tiny parquet copy (the input that once
+    routed to a separate self-join strategy) take the same candidate path
+    and return the identical pair set, jaccard values included."""
+    from ffn_polars_spark.operators.dedup import release_pins
+
+    pairs = []
+    for frame in _corpus_and_parquet_copy(spark, corpus, tmp_path):
+        release_pins()
+        pairs.append(
+            sorted(
+                (r["id_a"], r["id_b"], r["jaccard"])
+                for r in dedup_minhash_lsh(
+                    frame, threshold=0.5, hash_fn="md5"
+                ).collect()
+            )
         )
     release_pins()
+    assert pairs[0] == pairs[1]
+    assert len(pairs[0]) > 0
 
 
 def test_minhash_max_bucket_cap(spark):
@@ -384,39 +350,40 @@ def test_minhash_max_bucket_cap(spark):
     assert (10, 11) in capped
 
 
-def test_md5_fused_kernel_matches_jvm_path(spark, corpus):
+def test_md5_fused_kernels_match_unfused_kernels(spark, corpus):
     """r13: in md5 mode the shingle build + hash + signature fuse into one
     Arrow kernel (dedup._md5_minhash_arrow / _md5_simhash_arrow). The fused
-    path must be BIT-identical to the interpreted JVM HOF chain it replaced
-    — pairs, jaccard values, and simhash fingerprints alike."""
+    signatures must be BIT-identical to the unfused chain: the JVM md5/conv
+    shingle hashes (_doc_shingle_arrays) fed to the separate minhash and
+    simhash kernels. The JVM hash projection is the independent reference
+    for the kernels' Python hashing; the DuckDB oracle checks the pipelines
+    end to end."""
     import ffn_polars_spark.operators.dedup as D
-    from ffn_polars_spark.operators.dedup import release_pins
 
+    kernel = D._md5_minhash_arrow(D._minhash_coeffs(64, 42), 3)
     fused = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dedup_minhash_lsh(corpus, threshold=0.5, hash_fn="md5").collect()
+        r["__id"]: list(r["__o"]["sig"])
+        for r in D._tokens_frame(corpus, "text", "doc_id", 3)
+        .select("__id", kernel(F.col("__toks")).alias("__o"))
+        .collect()
     }
-    release_pins()
+    unfused = {
+        r["doc_id"]: [r[f"__mh{k}"] for k in range(64)]
+        for r in D.minhash_signatures(corpus, hash_fn="md5").collect()
+    }
+    assert fused and fused == unfused
+
     sim_fused = {
         r["doc_id"]: r["simhash"]
         for r in D.simhash_signatures(corpus, hash_fn="md5").collect()
     }
-    old = D.SIGNATURE_ENGINE
-    D.SIGNATURE_ENGINE = "jvm"  # forces the un-fused HOF path
-    try:
-        jvm = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in dedup_minhash_lsh(corpus, threshold=0.5, hash_fn="md5").collect()
-        }
-        release_pins()
-        sim_jvm = {
-            r["doc_id"]: r["simhash"]
-            for r in D.simhash_signatures(corpus, hash_fn="md5").collect()
-        }
-    finally:
-        D.SIGNATURE_ENGINE = old
-    assert fused == jvm
-    assert sim_fused == sim_jvm
+    sim_unfused = {
+        r["__id"]: r["simhash"]
+        for r in D._doc_shingle_arrays(corpus, "text", "doc_id", 3, "md5")
+        .select("__id", D._simhash_arrow()(F.col("__h64")).alias("simhash"))
+        .collect()
+    }
+    assert sim_fused and sim_fused == sim_unfused
 
 
 def test_md5_fused_kernel_h64_is_raw_hash(spark, corpus):
@@ -424,7 +391,7 @@ def test_md5_fused_kernel_h64_is_raw_hash(spark, corpus):
     md5 hashes — bit-equal to the JVM _hash64(col, 'md5') projection — not
     their mod-P reductions. The exact-verify Jaccard intersects h64, so a
     mod-P h64 silently raises collision probability from ~2^-60 to ~2^-31;
-    the pair-level parity test above cannot see that on a collision-free
+    the signature parity test above cannot see that on a collision-free
     tiny corpus, so compare the arrays element-for-element here."""
     import ffn_polars_spark.operators.dedup as D
 
@@ -459,7 +426,7 @@ def test_dedup_exact_window_null_text_dropped(spark):
     assert not rows[1]["is_duplicate"]
 
 
-def test_group_pairs_hot_bucket_valve_and_streamed_pairs(spark, monkeypatch):
+def test_group_pairs_hot_bucket_valve_and_streamed_pairs(spark):
     """r14 hot-bucket memory fixes (verdict #3 / advice), pinned three ways:
 
     1. VALVE PLACEMENT: with ``max_bucket`` set, the cap filters on a
@@ -473,12 +440,11 @@ def test_group_pairs_hot_bucket_valve_and_streamed_pairs(spark, monkeypatch):
        quadratic in-row pair array anywhere in the optimized plan.
     3. SEMANTICS: the valve drops exactly the over-cap buckets (same
        observable behavior as r13), for both dedup_minhash_lsh's
-       group_pairs strategy and dedup_simhash's new ``max_bucket``.
+       candidate groups and dedup_simhash's ``max_bucket``.
     """
     import ffn_polars_spark.operators.dedup as dedup_mod
     from ffn_polars_spark.plans import explain_str
 
-    monkeypatch.setattr(dedup_mod, "CANDIDATE_STRATEGY", "group_pairs")
     # 10 identical docs: every band/chunk bucket holds all 10
     docs = spark.createDataFrame(
         [(i, "alpha bravo charlie delta echo foxtrot") for i in range(10)],

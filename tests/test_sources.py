@@ -16,7 +16,7 @@ from ffn_polars_spark.sources import (
     footer_schema,
     read_table,
     ts_ns_col,
-    write_bucketed,
+    write_bucketed_table,
     write_table,
 )
 
@@ -192,8 +192,8 @@ def test_write_bucketed_joins_without_exchange(spark):
     ev = read_table(spark, f"{TESTDATA}/sf0.001", "events").select(
         "user_id", "event_id", "value"
     )
-    write_bucketed(ev, "ev_a", bucket_by="user_id", num_buckets=8)
-    write_bucketed(ev, "ev_b", bucket_by="user_id", num_buckets=8)
+    write_bucketed_table(ev, "ev_a", "user_id", n_buckets=8)
+    write_bucketed_table(ev, "ev_b", "user_id", n_buckets=8)
     a, b = spark.table("ev_a"), spark.table("ev_b")
     j = a.groupBy("user_id").agg(F.sum("value").alias("v")).join(
         b.groupBy("user_id").agg(F.count("*").alias("n")), "user_id"

@@ -14,9 +14,14 @@ difference shows as OOM-vs-completes rather than a profiler number:
     python tools/hot_bucket_probe.py [k_docs] [max_bucket] [heap] [bands]
 
 defaults: 6_000_000 docs, cap 1000, 1g heap, 4 bands. Prints one line:
-``rows=<n> wall=<s>``; the r13 shape instead dies with
+``rows=<n> expected=<n> wall=<s> ...``; the r13 shape instead dies with
 java.lang.OutOfMemoryError / SparkOutOfMemoryError inside the
 collect_list stage.
+
+The docs are identical, so every band bucket holds all k of them: a cap
+below k drops every bucket (0 rows), and any other cap keeps every pair
+(k·(k−1)/2 rows, all at Jaccard 1.0). The probe exits nonzero when the
+row count differs from that.
 """
 
 from __future__ import annotations
@@ -52,14 +57,19 @@ def main() -> None:
         F.col("id").alias("doc_id"),
         F.lit("alpha bravo charlie delta echo foxtrot golf hotel").alias("text"),
     )
-    # in-memory frame -> auto strategy routes to group_pairs (the scale path)
     t0 = time.time()
     out = D.dedup_minhash_lsh(
         docs, threshold=0.5, bands=bands, max_bucket=cap, hash_fn="xxhash64"
     )
     n = out.count()
     D.release_pins()
-    print(f"rows={n} wall={time.time() - t0:.1f}s k={k} cap={cap} heap={heap}")
+    expected = 0 if cap < k else k * (k - 1) // 2
+    print(
+        f"rows={n} expected={expected} wall={time.time() - t0:.1f}s "
+        f"k={k} cap={cap} heap={heap}"
+    )
+    if n != expected:
+        sys.exit(f"hot_bucket_probe: got {n} rows, expected {expected}")
 
 
 if __name__ == "__main__":
