@@ -199,19 +199,20 @@ def test_connected_components_bounded_lineage(spark):
     join-tree that deepens per iteration (the classic lineage blow-up that
     kills iterative jobs at 100 TB)."""
     from ffn_polars_spark.operators.dedup import connected_components
-    from ffn_polars_spark.plans import explain_str
+    from ffn_polars_spark.plans import has_join, plan_nodes
 
     # a 12-node chain: diameter forces several propagation rounds
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], ["id_a", "id_b"]
     )
     out = connected_components(pairs)
-    plan = explain_str(out)
+    found = [n.name for n in plan_nodes(out)]
     # checkpoint truncation: the lineage root is an in-memory RDD scan, and
-    # the multi-round join/agg tree is gone from the final plan
-    assert "ExistingRDD" in plan or "LogicalRDD" in plan or "Scan" in plan
-    assert "Join" not in plan, plan
-    assert len(plan.splitlines()) < 25, plan
+    # the multi-round join/agg tree is gone from the final plan (the scan
+    # and at most its codegen wrappers remain)
+    assert "RDDScanExec" in found, found
+    assert not has_join(out), found
+    assert len(found) <= 3, found
     # and it still converges to the chain's minimum label
     assert {r["comp"] for r in out.collect()} == {0}
 
@@ -443,7 +444,10 @@ def test_group_pairs_hot_bucket_valve_and_streamed_pairs(spark):
        candidate groups and dedup_simhash's ``max_bucket``.
     """
     import ffn_polars_spark.operators.dedup as dedup_mod
-    from ffn_polars_spark.plans import explain_str
+    from ffn_polars_spark.plans import plan_nodes
+
+    def flatten_free(nodes) -> bool:
+        return not [n for n in nodes if "Flatten" in n.expr_classes()]
 
     # 10 identical docs: every band/chunk bucket holds all 10
     docs = spark.createDataFrame(
@@ -454,16 +458,23 @@ def test_group_pairs_hot_bucket_valve_and_streamed_pairs(spark):
         (dedup_minhash_lsh, dict(threshold=0.5, hash_fn="md5")),
         (dedup_simhash, dict(max_hamming=3, hash_fn="md5")),
     ):
-        plan = explain_str(fn(docs, max_bucket=5, **kw))
-        assert "flatten(" not in plan, f"{fn.__name__}: quadratic pair array"
-        # the __bn window-count filter must sit BELOW the collect_list in
-        # the formatted details (operators are numbered bottom-up)
-        valve = plan.find("__bn")
-        collect = plan.find("collect_list")
-        assert 0 < valve < collect, f"{fn.__name__}: valve not below collect"
+        nodes = plan_nodes(fn(docs, max_bucket=5, **kw))
+        assert flatten_free(nodes), f"{fn.__name__}: quadratic pair array"
+        # the __bn window-count filter must sit BELOW the collect_list
+        # aggregate: the valve drops hot buckets before they are collected
+        collects = [
+            n for n in nodes
+            if "Aggregate" in n.name and "CollectList" in n.expr_classes()
+        ]
+        assert collects, f"{fn.__name__}: no collect_list aggregate"
+        for agg in collects:
+            assert any(
+                d.name == "FilterExec" and any("__bn" in e for e in d.exprs())
+                for d in agg.descendants()
+            ), f"{fn.__name__}: valve not below collect"
         # hamming/size filters above the aggregate must not re-introduce a
         # post-collect size(...) cap
-        assert plan.count("Window") >= 1
+        assert [n.name for n in nodes].count("WindowExec") >= 1
         # cap 5 < bucket size 10 -> every bucket dropped, zero pairs
         assert fn(docs, max_bucket=5, **kw).count() == 0
         # cap 20 -> all C(10,2) pairs survive (identical docs)
@@ -471,8 +482,8 @@ def test_group_pairs_hot_bucket_valve_and_streamed_pairs(spark):
         dedup_mod.release_pins()
     # uncapped plans must also be flatten-free (streamed pairs are
     # unconditional)
-    assert "flatten(" not in explain_str(
-        dedup_minhash_lsh(docs, threshold=0.5, hash_fn="md5")
+    assert flatten_free(
+        plan_nodes(dedup_minhash_lsh(docs, threshold=0.5, hash_fn="md5"))
     )
-    assert "flatten(" not in explain_str(dedup_simhash(docs, hash_fn="md5"))
+    assert flatten_free(plan_nodes(dedup_simhash(docs, hash_fn="md5")))
     dedup_mod.release_pins()

@@ -3,6 +3,7 @@
 from pyspark.sql import functions as F
 
 from ffn_polars_spark.operators.pipeline import clean_corpus
+from ffn_polars_spark.plans import has_join, plan_nodes
 
 
 def test_clean_corpus_decisions(spark):
@@ -31,13 +32,14 @@ def test_clean_corpus_decisions(spark):
 
 def test_clean_corpus_single_scan_plan(spark):
     docs = spark.createDataFrame([(1, "the a of and to in is")], ["doc_id", "text"])
-    plan = clean_corpus(docs)._jdf.queryExecution().optimizedPlan().toString()
+    plan = clean_corpus(docs)._jdf.queryExecution().optimizedPlan()
+    found = [n.name for n in plan_nodes(plan)]
     # canonical-id via ONE window over the fingerprint partition (r13) —
     # no aggregate, no join-back: the text features all evaluate in the
     # scan-side projection and the only keyed operation is the window
-    assert plan.count("Aggregate") == 0
-    assert plan.count("Window") == 1
-    assert "Join" not in plan
+    assert not [n for n in found if "Aggregate" in n], found
+    assert found.count("Window") == 1, found
+    assert not has_join(plan), found
 
 
 def test_cap_per_group_replays_md5_and_is_stable_under_growth(spark):

@@ -11,8 +11,15 @@ from ffn_polars_spark.operators.similarity import (
     cosine,
     embedding_cosine_pairs,
 )
+from ffn_polars_spark.plans import plan_nodes
 
 DIM = 16
+
+
+def repartitions(df):
+    """Repartition / RepartitionByExpression nodes of the optimized plan."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return [n.name for n in plan_nodes(plan) if n.name.startswith("Repartition")]
 
 
 @pytest.fixture(scope="module")
@@ -239,7 +246,8 @@ def test_guard_probes_are_limit_bounded(spark, monkeypatch):
         # analyzed (pre-optimization) plan: Catalyst's EliminateLimits rule
         # legitimately strips the limit when the input is provably smaller
         # (e.g. a Range source), so the optimized plan can't express intent
-        recorded.append(self._jdf.queryExecution().analyzed().toString())
+        analyzed = self._jdf.queryExecution().analyzed()
+        recorded.append([n.name for n in plan_nodes(analyzed)])
         return orig(self)
 
     monkeypatch.setattr(dfmod.DataFrame, "count", counting)
@@ -304,7 +312,8 @@ def test_count_at_most_large_cap_stays_probe_bounded(spark, monkeypatch):
     orig = dfmod.DataFrame.count
 
     def counting(self):
-        recorded.append(self._jdf.queryExecution().analyzed().toString())
+        analyzed = self._jdf.queryExecution().analyzed()
+        recorded.append([n.name for n in plan_nodes(analyzed)])
         return orig(self)
 
     monkeypatch.setattr(dfmod.DataFrame, "count", counting)
@@ -968,7 +977,7 @@ def test_semantic_count_cache_and_tiny_spread_skip(spark, monkeypatch):
     assert len(counts) == n_probe_first, "semantic cache missed: re-probed"
 
     # tiny job (400 x 3 = 1200 pairs): no round-robin repartition in the plan
-    assert "Repartition" not in got2._jdf.queryExecution().optimizedPlan().toString()
+    assert not repartitions(got2)
     monkeypatch.undo()
     rows = {r["query_id"] for r in got2.collect()}
     assert rows == {0, 1, 2}
@@ -982,4 +991,4 @@ def test_semantic_count_cache_and_tiny_spread_skip(spark, monkeypatch):
         [(1000 + i, [1.0, float(i)]) for i in range(100)], ["vec_id", "embedding"]
     )
     got3 = S.ann_topk(big_items, big_q, k=2)  # 300*100 = 30k > 25k
-    assert "Repartition" in got3._jdf.queryExecution().optimizedPlan().toString()
+    assert repartitions(got3)

@@ -57,10 +57,10 @@ def test_bottomk_exact_k_and_partition_independent(spark, ids):
 
 
 def test_bottomk_plan_is_take_ordered(spark, ids):
-    from ffn_polars_spark.plans import explain_str
+    from ffn_polars_spark.plans import plan_nodes
 
-    plan = explain_str(bottomk_sample(ids, 10, id_col="id"))
-    assert "TakeOrderedAndProject" in plan
+    plan = plan_nodes(bottomk_sample(ids, 10, id_col="id"))
+    assert "TakeOrderedAndProjectExec" in [n.name for n in plan]
 
 
 def test_vocab_topk_order_and_ties(spark):

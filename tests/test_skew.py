@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ffn_polars_spark.operators.skew import salted_agg, salted_join
+from ffn_polars_spark.plans import plan_nodes
 from ffn_polars_spark.sources import read_table
 
 from tests.conftest import TESTDATA
@@ -140,8 +141,12 @@ def test_aqe_splits_skewed_join(spark):
         # (a write creates a separate execution; this one would stay
         # isFinalPlan=false and show no runtime re-plan)
         assert len(joined.collect()) == 120_000
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "skew=true" in plan, f"AQE skew split did not engage:\n{plan[:2000]}"
+        joins = [n for n in plan_nodes(joined) if "Join" in n.name]
+        assert any(
+            n.name in ("SortMergeJoinExec", "ShuffledHashJoinExec")
+            and n.jvm.isSkewJoin()
+            for n in joins
+        ), f"AQE skew split did not engage: {joins}"
     finally:
         for k, v in old.items():
             if v is None:

@@ -3,7 +3,7 @@
 import numpy as np
 import pandas as pd
 
-from ffn_polars_spark.plans import count_exchanges, explain_str
+from ffn_polars_spark.plans import count_exchanges, has_join, plan_nodes
 from ffn_polars_spark.queries import QUERY_FNS
 from tests.conftest import TESTDATA
 
@@ -99,11 +99,9 @@ def test_bollinger_matches_pandas_rolling(spark):
 
 def test_bollinger_plan_single_window_no_join(spark):
     df = QUERY_FNS["bollinger"](spark, SF)
-    plan = explain_str(df)
-    assert "Join" not in plan
-    import re
-
-    assert len(re.findall(r"\(\d+\) Window", plan)) == 1
+    found = [n.name for n in plan_nodes(df)]
+    assert not has_join(df)
+    assert found.count("WindowExec") == 1
     assert count_exchanges(df) <= 2
 
 
@@ -168,11 +166,9 @@ def test_lead_lag_corr_detects_shift(spark):
 
 def test_lead_lag_plan_single_window_no_join(spark):
     df = QUERY_FNS["lead_lag_corr"](spark, SF)
-    plan = explain_str(df)
-    assert "Join" not in plan
-    import re
-
-    assert len(re.findall(r"\(\d+\) Window", plan)) <= 2  # returns + offsets
+    found = [n.name for n in plan_nodes(df)]
+    assert not has_join(df)
+    assert found.count("WindowExec") <= 2  # returns + offsets
 
 
 def test_rolling_sharpe_matches_pandas(spark):
@@ -220,12 +216,11 @@ def test_topk_per_group_windowgrouplimit_plan(spark):
         )[:3]
         assert got == want, g
     # the rank filter must compile to the map-side group limit
-    plan = explain_str(out)
-    assert "WindowGroupLimit" in plan
+    assert "WindowGroupLimitExec" in [n.name for n in plan_nodes(out)]
 
     # catalog entry too
     dfq = QUERY_FNS["topk_per_group"](spark, SF)
-    assert "WindowGroupLimit" in explain_str(dfq)
+    assert "WindowGroupLimitExec" in [n.name for n in plan_nodes(dfq)]
 
 
 def test_half_life_ou_recovery(spark):

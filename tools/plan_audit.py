@@ -7,10 +7,13 @@ common-subexpression-eliminates inside lambda bodies nor collapses
 projections whose aliases are referenced more than once — clean_corpus
 carried 15 copies of the token split, language_id 8, ann_topk_ivf
 evaluated its cell-assign UDF (with an O(d²) argument) twice.  This tool
-makes that class *auditable*: for every catalog query it counts, in the
-executed-plan string, the occurrences of each expensive-expression marker
-and prints the queries whose counts exceed a threshold, with the distinct
-source columns involved.
+makes that class *auditable*: for every catalog query it walks the physical
+plan (``plans.plan_nodes``), counts the occurrences of each
+expensive-expression marker in the nodes' own expressions, the Python
+evaluation nodes, and the scans of each file location, and prints the
+queries whose counts reach a threshold.  The walk stops at cached
+relations: a ``_pinned`` frame's plan ran when the pin filled, and
+execution reads the cache.
 
 Usage:
     python tools/plan_audit.py [SF_DIR] [--threshold N] [--only a,b,c]
@@ -25,48 +28,30 @@ fixed shapes; this script is the discovery end of that loop.
 
 from __future__ import annotations
 
-import re
+import os
 import sys
+from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# marker -> compiled pattern. Each match is one occurrence of an expensive
-# interpreted evaluation site in the plan.
+# marker -> expression classes. Each expression node of one of these classes
+# in a plan node's own expressions (``Node.expr_classes``) is one site; a
+# file scan's data filters count too, as a flag for the Filter they repeat.
 MARKERS = {
-    "split": re.compile(r"split\("),
-    "regexp": re.compile(r"regexp_(?:replace|extract|extract_all)\("),
-    "hof_fold": re.compile(r"aggregate\(transform\("),
-    "transform": re.compile(r"(?<![_a-z])transform\("),
-    "python_udf": re.compile(r"ArrowEvalPython|BatchEvalPython"),
+    "split": ("StringSplit",),
+    "regexp": ("RegExpReplace", "RegExpExtract", "RegExpExtractAll"),
+    "transform": ("ArrayTransform",),
 }
+PYTHON_NODES = ("ArrowEvalPythonExec", "BatchEvalPythonExec")
 
 SKIP_PREFIXES = ("streaming_",)  # streams need a sink to plan; skip
 
 
-def _strip_cached_subtrees(plan: str) -> str:
-    """Drop InMemoryRelation cached-child plans from the tree text.
-
-    A ``_pinned`` frame prints its ORIGINAL child plan under the
-    InMemoryRelation node even though execution reads the cache — counting
-    markers there reports expressions that never re-evaluate (bm25's
-    pinned tf subtree reads as 5 phantom splits). Lines indented deeper
-    than the most recent InMemoryRelation line belong to its cached plan.
-    """
-    out, skip_indent = [], None
-    for line in plan.splitlines():
-        indent = len(line) - len(line.lstrip(" :+-"))
-        if skip_indent is not None and indent > skip_indent:
-            continue
-        skip_indent = None
-        if "InMemoryRelation" in line:
-            skip_indent = indent
-            continue
-        out.append(line)
-    return "\n".join(out)
-
-
 def audit(spark, sf_dir: str, names, threshold: int):
     import __spark_entry__ as se
+
+    from ffn_polars_spark.operators.dedup import release_pins
+    from ffn_polars_spark.plans import plan_nodes
 
     qs = se.queries()
     flagged = []
@@ -76,26 +61,34 @@ def audit(spark, sf_dir: str, names, threshold: int):
         if name.startswith(SKIP_PREFIXES):
             continue
         try:
-            plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+            nodes = plan_nodes(fn(spark, sf_dir), cached=False)
         except Exception as exc:  # pragma: no cover - diagnostic tool
             print(f"SKIP {name}: {type(exc).__name__}", file=sys.stderr)
             continue
-        live = _strip_cached_subtrees(plan)
-        counts = {m: len(p.findall(live)) for m, p in MARKERS.items()}
-        # rescan detector: the same source file scanned repeatedly in the
+        classes = [c for n in nodes for c in n.expr_classes()]
+        counts = {m: sum(c in cs for c in classes) for m, cs in MARKERS.items()}
+        # a HOF fold over a per-element transform: the ArrayAggregate whose
+        # first child (next in pre-order) is an ArrayTransform
+        counts["hof_fold"] = sum(
+            a == "ArrayAggregate" and b == "ArrayTransform"
+            for a, b in zip(classes, classes[1:])
+        )
+        counts["python_udf"] = sum(n.name in PYTHON_NODES for n in nodes)
+        # rescan detector: the same file location scanned repeatedly in the
         # LIVE plan — a multi-pass shape and a pin candidate when the
         # passes re-derive expensive columns (median/MAD's two passes are
         # legitimate; five scans of documents.parquet rarely are)
-        scans = re.findall(r"InMemoryFileIndex\(1 paths\)\[([^\]]+)\]", live)
+        scans = Counter(
+            n.jvm.relation().location().rootPaths().mkString(",")
+            for n in nodes
+            if n.name == "FileSourceScanExec"
+        )
         if scans:
-            top = max((scans.count(s) for s in set(scans)))
-            counts["rescan"] = top
+            counts["rescan"] = max(scans.values())
         hot = {m: c for m, c in counts.items() if c >= threshold}
         if hot:
             flagged.append((name, hot))
         # release any pins the query creation materialized
-        from ffn_polars_spark.operators.dedup import release_pins
-
         release_pins()
     return flagged
 

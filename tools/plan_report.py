@@ -2,7 +2,12 @@
 
 For each queries() entry: shuffle-exchange count, broadcast joins, pushed
 filters, and read schemas — the evidence that filters reach scans, columns
-prune, and shuffles are bounded. Run: python tools/plan_report.py
+prune, and shuffles are bounded. All four are read from the plan tree by
+``ffn_polars_spark.plans``. Run: python tools/plan_report.py [SF_DIR]
+
+Exits 1 when any query's plan could not be read (an ``error:`` row), so a
+Spark upgrade that breaks the plan walker fails instead of filling the
+table with errors.
 """
 
 from __future__ import annotations
@@ -30,20 +35,24 @@ NOTES = [
     "when the vocabulary fits) and joins the big frame once. Raw exchange "
     "count is not the cost model: exchanges are weighted by the bytes that "
     "cross them.",
-    "**abc_analysis (5)**: r11 removed the grand-total aggregate + "
+    "**abc_analysis (3)**: r11 removed the grand-total aggregate + "
     "crossJoin(broadcast) — the total falls out of ranged_cumsum's own "
-    "offsets pass (`return_totals=True`). The remaining five: the per-key "
-    "aggregate (data-sized, necessary), ranged_cumsum's range repartition + "
-    "partition-totals aggregate (key-cardinality-sized), and AQE reads.",
+    "offsets pass (`return_totals=True`). The remaining three: the per-key "
+    "aggregate (data-sized, necessary), ranged_cumsum's range repartition "
+    "and its per-partition window's exchange on the partition id (both "
+    "key-cardinality-sized).",
     "**r11 derived-branch sweep**: topk_churn 18→3 (five self-join branches "
     "each re-deriving the data-sized per-period aggregate → one collect_set "
     "+ lag over the periods-sized frame), mutual_information 11→3 (marginal "
     "entropies from nij/ni-weighted window terms over the joint histogram — "
     "no marginal re-aggregation), label_stats 7→2 (total+entropy via windows "
-    "over the label-cardinality frame), heaps_law 13→11 (grand totals from "
-    "ranged_cumsum's offsets pass), pmi_collocations 11→7 and chi_square 8→7 "
+    "over the label-cardinality frame), heaps_law (grand totals from "
+    "ranged_cumsum's offsets pass), pmi_collocations and chi_square 8→7 "
     "(the shared count table PINNED — vocabulary/grid-sized, the tfidf "
-    "measured-pin precedent — instead of 3 extra corpus scans).",
+    "measured-pin precedent — instead of 3 extra corpus scans). The r11 "
+    "counts came from explain text, which also counted the Initial Plan "
+    "copy of every pinned plan (heaps_law 13→11, pmi_collocations 11→7); "
+    "counted once per plan, heaps_law has 6 and pmi_collocations 5.",
     "**r12 chi_square**: the r11 pin was itself retired — the identity "
     "χ² = n·(Σ O²/(r·c)) − n over observed cells needs no zero-cell grid "
     "completion, so the marginals become two KEYED windows over the "
@@ -66,8 +75,8 @@ NOTES = [
     "crossJoin with ranged_cumsum's driver-side grand totals "
     "(`return_totals=True`), attached as literals to the pair rows so the "
     "empty/single-value degenerate semantics are bit-identical.",
-    "**zipf_slope (~8) / seasonal_outliers (~10) / winnow_overlap_pairs "
-    "(~8)**: audited r11 — zipf is one vocab aggregate + the ranged_cumsum "
+    "**zipf_slope (5) / seasonal_outliers (7) / winnow_overlap_pairs "
+    "(5)**: audited r11 — zipf is one vocab aggregate + the ranged_cumsum "
     "internals + one moment aggregate (nothing re-derived); the other two "
     "are two-operator compositions (deseasonalize→screen, "
     "fingerprint→self-join) whose stages each shuffle on a different "
@@ -99,6 +108,8 @@ def main() -> None:
         "| Query | Shuffles | Broadcast joins | Pushed filters | Scan columns |",
         "|---|---|---|---|---|",
     ]
+    header = len(lines)
+    errors = 0
     for name, fn in sorted(QUERY_FNS.items()):
         if name in SKIP:
             continue
@@ -112,14 +123,18 @@ def main() -> None:
             ) or "—"
             lines.append(f"| {name} | {ex} | {bc} | {pf} | {cols} |")
         except Exception as e:  # pragma: no cover
+            errors += 1
             lines.append(f"| {name} | — | — | error: {str(e)[:60]} | — |")
+    rows = len(lines) - header
     if NOTES:
         lines += ["", "## Notes on high-exchange entries", ""]
         lines += [f"- {n}" for n in NOTES]
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
-    print(f"wrote PLANS.md ({len(lines) - 7} queries)")
+    print(f"wrote PLANS.md ({rows} queries, {errors} errors)")
     spark.stop()
+    if errors:
+        sys.exit(1)
 
 
 if __name__ == "__main__":
