@@ -10,9 +10,11 @@ from __future__ import annotations
 
 import json
 import os
+import warnings
 from typing import Optional
 
 from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType
@@ -30,6 +32,17 @@ TESTDATA_TABLES = (
     "embeddings",
 )
 
+# Entries in Spark's generated-class cache (``spark.sql.codegen.cache.maxEntries``,
+# default 100, a static conf). A whole benchmark run compiles 133 distinct
+# classes on tick_eod and 141-145 on corpus_stream; at 100 the cache is an
+# LRU that the cyclic query mix evicts before every reuse, so each warm
+# query compiles again. Guava splits the capacity over 4 segments, so the
+# size keeps room for uneven hashing and a larger query mix (docs/tuning.md).
+CODEGEN_CACHE_ENTRIES = 1000
+
+# Spark's error conditions for a conf that the session refuses to change.
+_UNMODIFIABLE_CONF = ("CANNOT_MODIFY_CONFIG", "CANNOT_MODIFY_STATIC_CONFIG")
+
 
 def configure(spark: SparkSession) -> SparkSession:
     """Runtime confs the engine depends on; safe to apply to an externally
@@ -40,14 +53,25 @@ def configure(spark: SparkSession) -> SparkSession:
       exactly the engine's tick time axis (FIXTURES.md).
     * UTC session timezone: calendar functions on naive timestamps must agree
       with the (UTC-based) oracle.
+    * AQE and Arrow are performance settings: a session that refuses to
+      change one keeps its own value, with a warning naming the conf.
+
+    Static confs (``get_spark``'s call-site capture and generated-code cache
+    size) cannot be set here; a session built elsewhere passes them at launch.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    except Exception:
-        pass
+    for key in ("spark.sql.adaptive.enabled", "spark.sql.execution.arrow.pyspark.enabled"):
+        try:
+            spark.conf.set(key, "true")
+        except AnalysisException as e:
+            if e.getCondition() not in _UNMODIFIABLE_CONF:
+                raise
+            warnings.warn(
+                f"configure: the session does not allow setting {key}; "
+                f"it keeps {key}={spark.conf.get(key, None)} ({e.getCondition()})",
+                stacklevel=2,
+            )
     return spark
 
 
@@ -85,6 +109,9 @@ def get_spark(app_name: str = "ffn-polars-spark", cpus: Optional[int] = None) ->
         # A static conf, so configure() cannot set it on a session built
         # elsewhere.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Compile each query shape's generated classes once per session
+        # (CODEGEN_CACHE_ENTRIES). Static as well.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )
     return configure(session)

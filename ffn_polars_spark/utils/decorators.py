@@ -1,8 +1,9 @@
 """Output auto-aliasing.
 
-Port of the reference's ``auto_alias`` (/root/reference/ffn_polars/utils/
-decorators.py:6-42): the output column is named ``{input}_{suffix}`` where
-``input`` is the root name of the first argument. A previously auto-added
+Port of ``auto_alias`` from ffn-polars (``ffn_polars/utils/decorators.py``,
+MIT License; attribution in the repository's NOTICE file): the output
+column is named ``{input}_{suffix}`` where ``input`` is the root name of
+the first argument. A previously auto-added
 known suffix is stripped first (so ``AAPL_returns`` piped into a
 ``price_index`` op becomes ``AAPL_price_index``, not
 ``AAPL_returns_price_index``), and an already-present target suffix is not

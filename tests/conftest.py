@@ -15,6 +15,8 @@ TESTDATA = os.environ.get("FFN_TESTDATA_DIR", "/root/testdata")
 
 @pytest.fixture(scope="session")
 def spark():
+    from ffn_polars_spark.sources import CODEGEN_CACHE_ENTRIES
+
     session = (
         SparkSession.builder.master("local[4]")
         .appName("ffn-polars-spark-tests")
@@ -24,6 +26,8 @@ def spark():
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # the generated-class cache size get_spark sets
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )
     yield session

@@ -1,18 +1,21 @@
 """Source/sink helpers: footer-derived table schemas match inference
 without its job, partitioned writes prune at scan time, bucketed tables
-join without exchanges."""
+join without exchanges, and ``configure`` says which confs it could not set."""
 
 import glob
 import os
+from types import SimpleNamespace
 
 import pytest
 from tests.conftest import TESTDATA, jobs_in_group
 
+from pyspark.errors import AnalysisException, IllegalArgumentException
 from pyspark.sql import functions as F
 
 from ffn_polars_spark.plans import count_exchanges, partition_filters
 from ffn_polars_spark.sources import (
     TESTDATA_TABLES,
+    configure,
     footer_schema,
     read_table,
     ts_ns_col,
@@ -132,6 +135,45 @@ def test_read_table_launches_no_job(spark):
     # the probe sees the inference job plain reads launch
     assert jobs_in_group(spark, lambda: spark.read.parquet(path).schema) >= 1
     assert jobs_in_group(spark, lambda: read_table(spark, sf_dir, "lineitem").schema) == 0
+
+
+class _RefusingConf:
+    """A session's conf that fails to set one key with ``error``."""
+
+    def __init__(self, conf, refused, error):
+        self._conf, self._refused, self._error = conf, refused, error
+
+    def set(self, key, value):
+        if key == self._refused:
+            raise self._error
+        self._conf.set(key, value)
+
+    def get(self, key, default=None):
+        return self._conf.get(key, default)
+
+
+def test_configure_warns_naming_a_conf_it_cannot_set(spark):
+    # the error a session raises for a conf it does not let you change
+    with pytest.raises(AnalysisException) as refused:
+        spark.conf.set("spark.sql.codegen.cache.maxEntries", "1")
+    assert refused.value.getCondition() == "CANNOT_MODIFY_STATIC_CONFIG"
+    key = "spark.sql.adaptive.enabled"
+    session = SimpleNamespace(conf=_RefusingConf(spark.conf, key, refused.value))
+    with pytest.warns(UserWarning) as caught:
+        assert configure(session) is session
+    assert [str(w.message) for w in caught] == [
+        f"configure: the session does not allow setting {key}; "
+        f"it keeps {key}=true (CANNOT_MODIFY_STATIC_CONFIG)"
+    ]
+
+
+def test_configure_raises_other_conf_errors(spark):
+    with pytest.raises(IllegalArgumentException) as bad_value:
+        spark.conf.set("spark.sql.adaptive.enabled", "5")
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    session = SimpleNamespace(conf=_RefusingConf(spark.conf, key, bad_value.value))
+    with pytest.raises(IllegalArgumentException):
+        configure(session)
 
 
 def test_tick_ingestion_contract_all_sf(spark):
