@@ -472,6 +472,13 @@ def half_life(
     )
 
 
+# Relative size below which pairs_spread treats the spread's sd as rounding
+# noise. Each spread is off by a few ulps (~1e-16) of the inputs' scale, and
+# the fitted β adds summation error that grows with the row count (about
+# √n ulps, n at worst); at 1M rows even the worst case stays below the bound.
+PAIRS_SD_NOISE = 1e-9
+
+
 @register(namespace="tick", kind="df", context="dataframe", alias="pairs_spread")
 def pairs_spread(
     df: DataFrame,
@@ -491,6 +498,11 @@ def pairs_spread(
     Two closed-form moment aggregates (one per pass) broadcast-join back
     onto the rows — the series itself never reshuffles. Returns the input
     ordering columns plus ``(spread, z)``.
+
+    ``z`` is NULL when the spread's sample sd is rounding noise: at most
+    ``PAIRS_SD_NOISE`` times the inputs' scale ``max|a| + |β|·max|b|``.
+    Exactly collinear legs leave a spread of a few ulps per row, and a
+    z-score of that noise is noise too.
     """
     gcols = [by] if isinstance(by, str) else list(by or [])
     ocols = [order_by] if isinstance(order_by, str) else list(order_by)
@@ -503,6 +515,8 @@ def pairs_spread(
         ),
         F.avg(a).alias("__ma"),
         F.avg(b).alias("__mb"),
+        F.max(F.abs(a)).alias("__amax"),
+        F.max(F.abs(b)).alias("__bmax"),
     )
     j1 = (
         df.join(F.broadcast(fit), gcols)
@@ -512,13 +526,15 @@ def pairs_spread(
     spread = a - (
         F.col("__ma") - F.col("__beta") * F.col("__mb")
     ) - F.col("__beta") * b
+    scale = F.col("__amax") + F.abs(F.col("__beta")) * F.col("__bmax")
     withs = j1.select(
-        *gcols, *ocols, spread.alias("spread")
+        *gcols, *ocols, spread.alias("spread"), scale.alias("__scale")
     )
     g2 = withs.groupBy(*gcols) if gcols else withs.groupBy()
     sd = g2.agg(
         F.avg("spread").alias("__ms"),
         F.stddev_samp("spread").alias("__sd"),
+        (F.max("__scale") * F.lit(PAIRS_SD_NOISE)).alias("__tol"),
     )
     j2 = (
         withs.join(F.broadcast(sd), gcols)
@@ -530,7 +546,7 @@ def pairs_spread(
         *ocols,
         "spread",
         F.when(
-            F.col("__sd") > 0,
+            F.col("__sd") > F.col("__tol"),
             (F.col("spread") - F.col("__ms")) / F.col("__sd"),
         ).alias("z"),
     )

@@ -72,7 +72,9 @@ def _scan_files(
     allow_reducing: bool = False,
     stop_at_exchange: bool = False,
 ):
-    """Local parquet files under ``df``'s plan, or None.
+    """``(files, cap)``: the local parquet files under ``df``'s plan and the
+    smallest partition count a coalesce on the walk leaves (None when the
+    walk meets no coalesce), or None.
 
     Walks the ANALYZED plan (already computed eagerly by PySpark on schema
     access; optimizedPlan() runs the full rule stack — measured 0.4 s per
@@ -87,6 +89,9 @@ def _scan_files(
     already repartitioned over a single-row-group file has REAL parallelism
     equal to the shuffle partition count, and treating the node as
     transparent would make spread_scan add a redundant second shuffle.
+    A coalesce (a ``Repartition`` without shuffle, as ``read_table`` puts
+    on tiny tables) moves no rows between partitions: the walk goes through
+    it and reports its partition count as ``cap``.
     """
     try:
         allowed = (
@@ -94,11 +99,13 @@ def _scan_files(
             if allow_reducing
             else _COUNT_PRESERVING
         )
+        cap = None
         node = df._jdf.queryExecution().analyzed()
-        while node.getClass().getSimpleName() in allowed:
-            if stop_at_exchange and (
-                node.getClass().getSimpleName() in _EXCHANGE_NODES
-            ):
+        while (kind := node.getClass().getSimpleName()) in allowed:
+            if kind == "Repartition" and not node.shuffle():
+                n = node.numPartitions()
+                cap = n if cap is None else min(cap, n)
+            elif stop_at_exchange and kind in _EXCHANGE_NODES:
                 return None
             children = node.children()
             if children.size() != 1:
@@ -115,7 +122,7 @@ def _scan_files(
             return None
         from urllib.parse import unquote, urlparse
 
-        return [unquote(urlparse(f).path) for f in files]
+        return [unquote(urlparse(f).path) for f in files], cap
     except Exception:
         return None
 
@@ -125,13 +132,13 @@ def bare_scan_row_count(df: DataFrame, allow_reducing: bool = False):
     with ``allow_reducing=True`` an UPPER bound across Filter/Limit/Sample
     (sufficient to prove a pair budget passes, never to fail it). None when
     the plan shape or file layout makes footers unusable."""
-    files = _scan_files(df, allow_reducing)
-    if files is None:
+    scan = _scan_files(df, allow_reducing)
+    if scan is None:
         return None
     try:
         import pyarrow.parquet as pq
 
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in scan[0])
     except Exception:
         return None
 
@@ -140,29 +147,32 @@ def scan_row_groups(df: DataFrame):
     """Total parquet row groups across a (possibly filtered) scan's files —
     the true ceiling on scan-stage parallelism — or None when unknown.
     Returns None below any exchange-introducing node (Repartition*/Sort/
-    Deduplicate): after a shuffle the row-group bound no longer applies."""
-    files = _scan_files(df, allow_reducing=True, stop_at_exchange=True)
-    if files is None:
+    Deduplicate): after a shuffle the row-group bound no longer applies.
+    A coalesce above the scan caps the answer at its partition count."""
+    scan = _scan_files(df, allow_reducing=True, stop_at_exchange=True)
+    if scan is None:
         return None
+    files, cap = scan
     try:
         import pyarrow.parquet as pq
 
-        return sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
+        rg = sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
     except Exception:
         return None
+    return rg if cap is None else min(rg, cap)
 
 
 def scan_bytes(df: DataFrame):
     """Total on-disk bytes of a (possibly filtered) scan's parquet files —
     an UPPER bound on what the scan reads — or None when unknown. Used to
     size derived-frame estimates (pin-or-recompute decisions)."""
-    files = _scan_files(df, allow_reducing=True)
-    if files is None:
+    scan = _scan_files(df, allow_reducing=True)
+    if scan is None:
         return None
     try:
         import os
 
-        return sum(os.path.getsize(f) for f in files)
+        return sum(os.path.getsize(f) for f in scan[0])
     except Exception:
         return None
 

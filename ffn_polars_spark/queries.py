@@ -610,7 +610,6 @@ def q_prob_mom(spark, sf_dir):
     algorithm in pure DuckDB SQL (recursive-CTE Lentz iteration)."""
     from ffn_polars_spark.functions.eod_ratios import calc_prob_mom
 
-    configure(spark)
     r = rets(spark, sf_dir).where(F.col("r").isNotNull() & F.col("rb").isNotNull())
     out = calc_prob_mom(r, "r", "rb", by=["event_type"])
     return out.select("event_type", r6(F.col("r_prob_mom")).alias("r_prob_mom"))
@@ -1673,7 +1672,6 @@ def q_resample_returns(spark, sf_dir):
     replayed bit-identically by the oracle via md5(trial:j:seed)."""
     from ffn_polars_spark.operators.resample import resample_returns_hash
 
-    configure(spark)
     return resample_returns_hash(
         _boot(spark, sf_dir),
         {"mean_r": r6(F.avg("r"))},
@@ -1721,7 +1719,6 @@ def q_resample_returns_poisson(spark, sf_dir):
     against the oracle's identical replay."""
     from ffn_polars_spark.operators.resample import resample_returns_poisson
 
-    configure(spark)
     return resample_returns_poisson(
         _boot(spark, sf_dir),
         {"mean_r": r6(F.avg("r")), "std_r": r6(F.stddev_samp("r"))},
@@ -2139,7 +2136,6 @@ def q_dedup_minhash(spark, sf_dir):
     additionally pinned in tests/test_dedup.py."""
     from ffn_polars_spark.operators.dedup import dedup_minhash_lsh
 
-    configure(spark)
     docs = read_table(spark, sf_dir, "documents")
     return dedup_minhash_lsh(docs, threshold=0.5, hash_fn="md5")
 
@@ -2299,7 +2295,6 @@ def q_ann_topk_lsh(spark, sf_dir):
     additionally pinned in tests/test_similarity.py."""
     from ffn_polars_spark.operators.similarity import ann_topk_lsh
 
-    configure(spark)
     emb = read_table(spark, sf_dir, "embeddings")
     return ann_topk_lsh(emb, emb.where(F.col("vec_id") < 5), k=10, dim=_EMB_DIM)
 
@@ -2313,7 +2308,6 @@ def q_ann_topk_ivf(spark, sf_dir):
     come from; its recall is pinned in tests/test_similarity.py."""
     from ffn_polars_spark.operators.similarity import ann_topk_ivf
 
-    configure(spark)
     emb = read_table(spark, sf_dir, "embeddings")
     return ann_topk_ivf(
         emb,
@@ -3065,7 +3059,6 @@ def q_sim_market_day(spark, sf_dir):
     ``simulate_quotes_exact`` separately pins bit-exact numpy parity."""
     from ffn_polars_spark.sim import simulate_market
 
-    configure(spark)
     quotes, trades = simulate_market(
         spark, "SIM", days=1, quote_ticks_per_day=5_000,
         trade_volume_per_day=100_000, sort=False, hash_fn="md5",
@@ -3136,7 +3129,6 @@ def q_streaming_time_bars(spark, sf_dir):
         streaming_time_bars,
     )
 
-    configure(spark)
     stage = _stage_stream_dir(sf_dir, "events", "ffn_stream")
     stream = read_tick_stream(spark, stage, ts_col="ts").withColumn(
         "price", F.lit(100.0) + F.col("value") / F.lit(10.0)
@@ -3181,7 +3173,6 @@ def q_streaming_dedup(spark, sf_dir):
         streaming_dedup_exact,
     )
 
-    configure(spark)
     stage = _stage_stream_dir(sf_dir, "documents", "ffn_docstream")
     docs = spark.read.parquet(stage)
     stream = read_tick_stream(
@@ -3214,7 +3205,6 @@ def q_streaming_vwap(spark, sf_dir):
         streaming_vwap,
     )
 
-    configure(spark)
     stage = _stage_stream_dir(sf_dir, "events", "ffn_stream")
     stream = (
         read_tick_stream(spark, stage, ts_col="ts")
@@ -3259,7 +3249,6 @@ def q_streaming_histogram(spark, sf_dir):
         streaming_histogram,
     )
 
-    configure(spark)
     stage = _stage_stream_dir(sf_dir, "events", "ffn_stream")
     stream = read_tick_stream(spark, stage, ts_col="ts").withColumn(
         "price", F.lit(100.0) + F.col("value") / F.lit(10.0)
@@ -3296,7 +3285,6 @@ def q_streaming_interval_join(spark, sf_dir):
         streaming_interval_join,
     )
 
-    configure(spark)
     stage = _stage_stream_dir(sf_dir, "events", "ffn_stream")
     purch = (
         read_tick_stream(spark, stage, ts_col="ts")
@@ -3371,7 +3359,6 @@ def q_streaming_preagg_interval_join(spark, sf_dir):
         streaming_preagg_interval_join,
     )
 
-    configure(spark)
     stage = _stage_stream_dir(sf_dir, "events", "ffn_stream")
     price = F.lit(100.0) + F.col("value") / F.lit(10.0)
     purch = (
@@ -3437,7 +3424,6 @@ def q_streaming_session_stats(spark, sf_dir):
         streaming_session_stats,
     )
 
-    configure(spark)
     stage = _stage_stream_dir(sf_dir, "events", "ffn_stream")
     stream = read_tick_stream(spark, stage, ts_col="ts")
     out = streaming_session_stats(
@@ -3471,7 +3457,6 @@ def q_streaming_running_vwap(spark, sf_dir):
         stateful_running_vwap,
     )
 
-    configure(spark)
     stage = _stage_stream_dir(sf_dir, "events", "ffn_stream")
     stream = (
         read_tick_stream(spark, stage, ts_col="ts")
@@ -3509,7 +3494,6 @@ def q_streaming_realized_vol(spark, sf_dir):
         stateful_realized_volatility,
     )
 
-    configure(spark)
     stage = _stage_stream_dir(sf_dir, "events", "ffn_stream")
     stream = (
         read_tick_stream(spark, stage, ts_col="ts")
@@ -3563,7 +3547,6 @@ def q_streaming_zscore_alerts(spark, sf_dir):
         stateful_zscore_alerts,
     )
 
-    configure(spark)
     stage = _stage_stream_dir(sf_dir, "events", "ffn_stream")
     stream = (
         read_tick_stream(spark, stage, ts_col="ts")
@@ -4525,7 +4508,6 @@ def q_streaming_topk(spark, sf_dir):
         streaming_topk,
     )
 
-    configure(spark)
     stage = _stage_stream_dir(sf_dir, "events", "ffn_stream")
     stream = read_tick_stream(spark, stage, ts_col="ts")
     out = streaming_topk(stream, ["user_id"], k=10)
@@ -6190,17 +6172,20 @@ fit AS (
   SELECT event_type,
          CASE WHEN var_pop(pb) > 0
               THEN covar_pop(price, pb) / var_pop(pb) END AS beta,
-         avg(price) AS ma, avg(pb) AS mb
+         avg(price) AS ma, avg(pb) AS mb,
+         max(abs(price)) AS amax, max(abs(pb)) AS bmax
   FROM p GROUP BY event_type),
 sp AS (
   SELECT t.event_type, t.ts_ns, t.event_id,
-         t.price - (f.ma - f.beta * f.mb) - f.beta * t.pb AS spread
+         t.price - (f.ma - f.beta * f.mb) - f.beta * t.pb AS spread,
+         f.amax + abs(f.beta) * f.bmax AS scale
   FROM p t JOIN fit f USING (event_type)),
 sd AS (
-  SELECT event_type, avg(spread) AS ms, stddev_samp(spread) AS sd
+  SELECT event_type, avg(spread) AS ms, stddev_samp(spread) AS sd,
+         max(scale) * 1e-9 AS tol
   FROM sp GROUP BY event_type)
 SELECT s.event_type, s.ts_ns, s.event_id, {R("s.spread")} AS spread,
-       {R("CASE WHEN d.sd > 0 THEN (s.spread - d.ms) / d.sd END")} AS z
+       {R("CASE WHEN d.sd > d.tol THEN (s.spread - d.ms) / d.sd END")} AS z
 FROM sp s JOIN sd d USING (event_type)""",
 )
 def q_pairs_spread(spark, sf_dir):
@@ -7611,7 +7596,6 @@ def q_streaming_cusum(spark, sf_dir):
         stateful_cusum,
     )
 
-    configure(spark)
     stage = _stage_stream_dir(sf_dir, "events", "ffn_stream")
     stream = (
         read_tick_stream(spark, stage, ts_col="ts")
@@ -8537,7 +8521,6 @@ def q_streaming_psi(spark, sf_dir):
         stateful_psi,
     )
 
-    configure(spark)
     stage = _stage_stream_dir(sf_dir, "events", "ffn_stream")
     stream = read_tick_stream(spark, stage, ts_col="ts")
     out = stateful_psi(
@@ -10125,7 +10108,6 @@ def q_streaming_kmv_distinct(spark, sf_dir):
         stateful_kmv_distinct,
     )
 
-    configure(spark)
     stage = _stage_stream_dir(sf_dir, "events", "ffn_stream")
     stream = read_tick_stream(spark, stage, ts_col="ts").withColumn(
         "__h", uniform(F.col("user_id"), "skmv", 0, hash_fn="md5")

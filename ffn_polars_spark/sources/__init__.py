@@ -11,7 +11,7 @@ from __future__ import annotations
 import json
 import os
 import warnings
-from typing import Optional
+from typing import Optional, Tuple
 
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
@@ -39,6 +39,14 @@ TESTDATA_TABLES = (
 # query compiles again. Guava splits the capacity over 4 segments, so the
 # size keeps room for uneven hashing and a larger query mix (docs/tuning.md).
 CODEGEN_CACHE_ENTRIES = 1000
+
+# Largest one-file table ``read_table`` returns as a single partition. Up to
+# it, one task running a window or aggregate beats the exchange, the extra
+# job and the task launches of the distributed plan; above it, the lost
+# parallelism costs more. The largest measured events row count at which no
+# tick query ran slower in one partition, at 4 cores; at 200k rows 7 of the
+# 10 lose (docs/tuning.md, "Tiny inputs run as one partition").
+SINGLE_PARTITION_MAX_ROWS = 175_000
 
 # Spark's error conditions for a conf that the session refuses to change.
 _UNMODIFIABLE_CONF = ("CANNOT_MODIFY_CONFIG", "CANNOT_MODIFY_STATIC_CONFIG")
@@ -159,6 +167,45 @@ def _footer_bytes(file: str) -> Optional[bytes]:
         return f.read(n)
 
 
+def _read_footer(spark: SparkSession, path: str) -> Optional[Tuple[StructType, int]]:
+    """``(schema, row count)`` of the one local parquet file behind ``path``,
+    read from its footer on the driver, or None (see :func:`footer_schema`)."""
+    jvm = getattr(spark, "_jvm", None)
+    if jvm is None:
+        return None
+    try:
+        file = _single_data_file(path)
+        raw = _footer_bytes(file) if file else None
+    except OSError:
+        return None
+    if raw is None:
+        return None
+    try:
+        # the thrift FileMetaData, row groups skipped: num_rows is a
+        # file-level field
+        thrift = getattr(jvm, "org.apache.parquet.format.Util").readFileMetaData(
+            getattr(jvm, "java.io.ByteArrayInputStream")(raw), True
+        )
+        meta = getattr(
+            jvm, "org.apache.parquet.format.converter.ParquetMetadataConverter"
+        )().fromParquetMetadata(thrift)
+        footer = getattr(jvm, "org.apache.parquet.hadoop.Footer")(
+            getattr(jvm, "org.apache.hadoop.fs.Path")(file), meta
+        )
+        parquet = "org.apache.spark.sql.execution.datasources.parquet."
+        to_spark = getattr(jvm, parquet + "ParquetToSparkSchemaConverter")(
+            spark._jsparkSession.sessionState().conf()
+        )
+        jschema = getattr(jvm, parquet + "ParquetFileFormat").readSchemaFromFooter(
+            footer, to_spark
+        )
+        rows = thrift.getNum_rows()
+    except Py4JJavaError:
+        return None
+    # the relation reads every data column as nullable
+    return StructType.fromJson(json.loads(jschema.asNullable().json())), rows
+
+
 def footer_schema(spark: SparkSession, path: str) -> Optional[StructType]:
     """``spark.read.parquet(path).schema`` without the inference job.
 
@@ -175,48 +222,29 @@ def footer_schema(spark: SparkSession, path: str) -> Optional[StructType]:
     to inference, which raises its own error where the path is unusable.
     Nothing is cached: every call reads the footer.
     """
-    jvm = getattr(spark, "_jvm", None)
-    if jvm is None:
-        return None
-    try:
-        file = _single_data_file(path)
-        raw = _footer_bytes(file) if file else None
-    except OSError:
-        return None
-    if raw is None:
-        return None
-    try:
-        converter = getattr(
-            jvm, "org.apache.parquet.format.converter.ParquetMetadataConverter"
-        )
-        meta = converter().readParquetMetadata(
-            getattr(jvm, "java.io.ByteArrayInputStream")(raw),
-            converter.SKIP_ROW_GROUPS,
-        )
-        footer = getattr(jvm, "org.apache.parquet.hadoop.Footer")(
-            getattr(jvm, "org.apache.hadoop.fs.Path")(file), meta
-        )
-        parquet = "org.apache.spark.sql.execution.datasources.parquet."
-        to_spark = getattr(jvm, parquet + "ParquetToSparkSchemaConverter")(
-            spark._jsparkSession.sessionState().conf()
-        )
-        jschema = getattr(jvm, parquet + "ParquetFileFormat").readSchemaFromFooter(
-            footer, to_spark
-        )
-    except Py4JJavaError:
-        return None
-    # the relation reads every data column as nullable
-    return StructType.fromJson(json.loads(jschema.asNullable().json()))
+    footer = _read_footer(spark, path)
+    return None if footer is None else footer[0]
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """One testdata table. Its schema comes from the parquet footer on the
-    driver (:func:`footer_schema`), so building a query launches no
-    schema-inference job; other paths fall back to plain inference."""
+    """One testdata table. Its schema and row count come from the parquet
+    footer on the driver (:func:`footer_schema`), so building a query
+    launches no schema-inference job; other paths fall back to plain
+    inference.
+
+    A one-file table of at most ``SINGLE_PARTITION_MAX_ROWS`` rows comes
+    back as one partition (``coalesce(1)``, no shuffle): one partition
+    satisfies every clustered distribution, so a window or aggregate over
+    it plans no exchange and the query runs as one job. Multi-file, remote
+    and partitioned tables keep the scan's own partitioning.
+    """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    schema = footer_schema(spark, path)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(path)
+    footer = _read_footer(spark, path)
+    if footer is None:
+        return spark.read.parquet(path)
+    schema, rows = footer
+    df = spark.read.schema(schema).parquet(path)
+    return df.coalesce(1) if rows <= SINGLE_PARTITION_MAX_ROWS else df
 
 
 def ts_ns_col(df: DataFrame, col: str = "ts") -> Column:

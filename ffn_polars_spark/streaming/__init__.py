@@ -442,7 +442,13 @@ def stateful_running_vwap(
 def run_available_now(result: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Drain a bounded stream with an available-now trigger into a memory
     sink; return the sink table. Harness for tests and the correctness gate
-    (production writes go to parquet/Kafka sinks in append mode instead)."""
+    (production writes go to parquet/Kafka sinks in append mode instead).
+
+    The memory sink registers a temp view under the query's name. The
+    returned frame is resolved against it and the view is dropped, so the
+    session's catalog does not grow by one sink per call; the sink's rows
+    live as long as the returned frame."""
+    spark = result.sparkSession
     name = "s" + uuid.uuid4().hex[:12]
     q = (
         result.writeStream.format("memory")
@@ -451,8 +457,12 @@ def run_available_now(result: DataFrame, output_mode: str = "complete") -> DataF
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
-    return result.sparkSession.table(name)
+    try:
+        q.awaitTermination()
+        # spark.table analyzes eagerly: the frame holds the sink, not the name
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 _RVOL_STATE_SCHEMA = StructType(

@@ -3,7 +3,13 @@ at scale, asserted on the catalog's own queries at sf0.001.
 
 Every gate reads the plan tree through ``plans.plan_nodes``: node classes,
 ancestor/descendant relations and a node's own expressions — never explain
-text."""
+text.
+
+``read_table`` returns tables of at most ``SINGLE_PARTITION_MAX_ROWS`` rows
+as one partition, which plans no exchange at all. Every sf0.001 table is
+that small, so the module sets the threshold to 0: the gates pin the
+distributed shape the same queries plan on inputs above it. (The tiny
+shape has its own test in tests/test_sources.py.)"""
 
 import pytest
 
@@ -27,6 +33,14 @@ SF = f"{TESTDATA}/sf0.001"
 pytestmark = pytest.mark.skipif(
     not __import__("os").path.exists(SF), reason="testdata not present"
 )
+
+
+@pytest.fixture(autouse=True)
+def distributed_reads(monkeypatch):
+    """Every table read as it is above the single-partition threshold."""
+    from ffn_polars_spark import sources
+
+    monkeypatch.setattr(sources, "SINGLE_PARTITION_MAX_ROWS", 0)
 
 JOINS_WITHOUT_KEYS = ("CartesianProductExec", "BroadcastNestedLoopJoinExec")
 SHUFFLED_JOINS = ("SortMergeJoinExec", "ShuffledHashJoinExec")

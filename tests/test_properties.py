@@ -5,7 +5,7 @@ golden values."""
 import math
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -5835,13 +5835,17 @@ def test_corpus_overlap_exact_regime_property(spark, a, b):
         max_size=20,
     )
 )
+# exactly collinear legs: the spread is rounding noise (its sd ~1e-16, or 0)
+@example(rows=[(0.0, 1.0), (5.0, 3.0), (5.0, 3.0)])
+@example(rows=[(0.0, 1.0), (5.0, 0.0), (5.0, 0.0)])
 @SET
 def test_pairs_spread_numpy_property(spark, rows):
     """pairs_spread matches the numpy OLS-hedge walk: spread residuals
-    and in-sample z-scores, NULLs on degenerate variance."""
+    and in-sample z-scores, NULLs on degenerate variance — a spread sd
+    within PAIRS_SD_NOISE of the inputs' scale counts as degenerate."""
     import numpy as np
 
-    from ffn_polars_spark.functions.tick_price import pairs_spread
+    from ffn_polars_spark.functions.tick_price import PAIRS_SD_NOISE, pairs_spread
 
     data = [(i, a, b) for i, (a, b) in enumerate(rows)]
     df = spark.createDataFrame(data, "i long, a double, b double")
@@ -5856,9 +5860,10 @@ def test_pairs_spread_numpy_property(spark, rows):
         spreads = av - alpha - beta * bv
         ms = float(spreads.mean())
         sd = float(spreads.std(ddof=1)) if len(rows) >= 2 else 0.0
+        tol = PAIRS_SD_NOISE * (float(np.abs(av).max()) + abs(beta) * float(np.abs(bv).max()))
         for i, (a, b) in enumerate(rows):
             assert got[i]["spread"] == pytest.approx(spreads[i], rel=1e-9, abs=1e-9)
-            if sd > 0:
+            if sd > tol:
                 assert got[i]["z"] == pytest.approx(
                     (spreads[i] - ms) / sd, rel=1e-7, abs=1e-9
                 )

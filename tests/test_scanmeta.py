@@ -73,6 +73,38 @@ def test_scan_row_groups_stops_at_exchange(multi):
     assert scan_row_groups(multi.repartition(4)) is None
 
 
+def test_scan_row_groups_through_coalesce(multi):
+    # a coalesce moves no rows between partitions: the walk goes through
+    # it, and its partition count caps the row-group bound
+    assert scan_row_groups(multi.coalesce(1)) == 1
+    assert scan_row_groups(multi.coalesce(4)) == 4
+    assert scan_row_groups(multi.coalesce(16)) == 6
+    assert scan_row_groups(multi.coalesce(4).repartition(4, "id")) is None
+    assert bare_scan_row_count(multi.coalesce(1)) == 240
+
+
+def test_spread_scan_spreads_single_partition_read(spark, tmp_path, monkeypatch):
+    """read_table's one-partition shape of a small table keeps the footer
+    answer, so spread_scan decides without an RDD and still spreads."""
+    from ffn_polars_spark.operators._scanmeta import spread_scan
+    from ffn_polars_spark.plans import count_exchanges
+    from ffn_polars_spark.sources import read_table
+
+    pq.write_table(
+        pa.table({"id": list(range(2000))}),
+        str(tmp_path / "t.parquet"),
+        row_group_size=500,
+    )
+    df = read_table(spark, str(tmp_path), "t")
+    assert scan_row_groups(df) == 1
+    assert count_exchanges(df) == 0
+    monkeypatch.setattr(
+        type(df), "rdd", property(lambda self: pytest.fail("rdd probed"))
+    )
+    spread = spread_scan(df, "id")
+    assert count_exchanges(spread) == 1
+
+
 def test_spread_scan_skips_already_repartitioned(spark, tmp_path):
     from ffn_polars_spark.operators._scanmeta import (
         effective_scan_parallelism,

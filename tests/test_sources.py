@@ -4,6 +4,7 @@ join without exchanges, and ``configure`` says which confs it could not set."""
 
 import glob
 import os
+import sys
 from types import SimpleNamespace
 
 import pytest
@@ -135,6 +136,66 @@ def test_read_table_launches_no_job(spark):
     # the probe sees the inference job plain reads launch
     assert jobs_in_group(spark, lambda: spark.read.parquet(path).schema) >= 1
     assert jobs_in_group(spark, lambda: read_table(spark, sf_dir, "lineitem").schema) == 0
+
+
+def _tick_eod_queries():
+    """The tick_eod benchmark mix, read from perfbench/workloads.py."""
+    import importlib.util
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_workloads", os.path.join(root, "perfbench", "workloads.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    sys.modules[spec.name] = mod  # the module's dataclass looks itself up
+    spec.loader.exec_module(mod)
+    return mod.WORKLOADS["tick_eod"].queries
+
+
+@pytest.mark.parametrize("name", _tick_eod_queries())
+def test_tiny_tick_query_plans_no_exchange_and_runs_one_job(spark, name):
+    """Below SINGLE_PARTITION_MAX_ROWS a table is one partition, which
+    satisfies every clustered distribution: each tick_eod query plans no
+    exchange and runs as exactly one job."""
+    from ffn_polars_spark.queries import QUERY_FNS
+
+    sf_dir = os.path.join(TESTDATA, "sf0.001")
+    if not os.path.isdir(sf_dir):
+        pytest.skip(f"{sf_dir} not present")
+    df = QUERY_FNS[name](spark, sf_dir)
+    assert count_exchanges(df) == 0
+    assert jobs_in_group(
+        spark, lambda: df.write.format("noop").mode("overwrite").save()
+    ) == 1
+
+
+def _partitions(df) -> int:
+    return df.rdd.getNumPartitions()
+
+
+def test_read_table_single_partition_policy(spark, tmp_path, monkeypatch):
+    """One partition at or below the threshold (from the footer's row
+    count); the scan's own splits above it, and for a multi-file table."""
+    from ffn_polars_spark import sources
+
+    spark.range(0, 50_000, numPartitions=1).selectExpr(
+        "id", "id * 2 AS v"
+    ).write.parquet(str(tmp_path / "one.parquet"))
+    spark.range(0, 50_000, numPartitions=3).write.parquet(
+        str(tmp_path / "multi.parquet")
+    )
+    # many scan splits for a small file, so "one partition" is visible
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "64k")
+    try:
+        monkeypatch.setattr(sources, "SINGLE_PARTITION_MAX_ROWS", 50_000)
+        assert _partitions(read_table(spark, str(tmp_path), "one")) == 1
+        assert _partitions(read_table(spark, str(tmp_path), "multi")) > 1
+        monkeypatch.setattr(sources, "SINGLE_PARTITION_MAX_ROWS", 49_999)
+        above = read_table(spark, str(tmp_path), "one")
+        assert _partitions(above) > 1
+        assert above.count() == 50_000
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
 
 
 class _RefusingConf:

@@ -645,3 +645,24 @@ def test_read_tick_stream_one_file_dir_skips_inference(spark, tmp_path):
         spark, lambda: streams.append(read_tick_stream(spark, d, ts_col="ts"))
     ) == 0
     assert streams[0].drop("event_time").schema == spark.read.parquet(d).schema
+
+
+def test_run_available_now_drops_its_sink_view(spark, tick_dir):
+    """Each drain's memory sink registers a temp view; the harness drops it
+    once the returned frame is resolved, so 50 drains leave the session's
+    temp-view count where it was, and every returned frame (and a frame
+    derived from it) still reads its rows."""
+    def temp_views():
+        return sum(t.isTemporary for t in spark.catalog.listTables())
+
+    before = temp_views()
+    stream = read_tick_stream(spark, tick_dir, ts_col="ts")
+    counts = stream.groupBy("ticker").count()
+    frames = [run_available_now(counts) for _ in range(50)]
+    assert temp_views() == before
+    for f in frames:
+        assert sorted((r.ticker, r["count"]) for r in f.collect()) == [
+            ("A", 300),
+            ("B", 300),
+        ]
+    assert frames[0].where(F.col("ticker") == "A").count() == 1

@@ -2,6 +2,7 @@
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from ffn_polars_spark.plans import count_exchanges, has_join, plan_nodes
 from ffn_polars_spark.queries import QUERY_FNS
@@ -311,6 +312,28 @@ def test_pairs_spread_recovers_hedge(spark):
     assert abs(beta - 2.0) < 0.01
     assert np.allclose(z, (want - want.mean()) / want.std(ddof=1), atol=1e-9)
     assert abs(z.mean()) < 1e-9 and abs(z.std(ddof=1) - 1) < 1e-9
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        [(0.0, 1.0), (5.0, 3.0), (5.0, 3.0)],  # spread sd ~1e-16
+        [(0.0, 1.0), (5.0, 0.0), (5.0, 0.0)],  # spread sd exactly 0 in numpy
+    ],
+)
+def test_pairs_spread_collinear_legs_null_z(spark, rows):
+    """Exactly collinear legs leave a spread of rounding noise: every
+    spread is ~0 and z is NULL, not a z-score of the noise."""
+    from ffn_polars_spark.functions.tick_price import pairs_spread
+
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(rows)], "i long, a double, b double"
+    )
+    out = pairs_spread(df, "a", "b", order_by="i").collect()
+    assert len(out) == len(rows)
+    for r in out:
+        assert abs(r["spread"]) < 1e-12
+        assert r["z"] is None
 
 
 def test_imbalance_bars_block_scan_matches_sequential_walk(spark):

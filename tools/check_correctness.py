@@ -18,6 +18,12 @@ Fetch path deliberately mirrors the driver's pandas/arrow-style fetch:
 Rows are extracted per-column (``iloc[:, i].tolist()``) so a mixed
 int64/float64 frame never upcasts its int columns the way ``.values`` would.
 
+Every entry runs in two shapes, each printing its own summary line: the
+default one, where ``read_table`` returns tables of at most
+``sources.SINGLE_PARTITION_MAX_ROWS`` rows as one partition (every table
+of an sf0.01 snapshot), and the distributed one, with that threshold at 0.
+The exit status is 1 when any entry fails in either shape.
+
 Usage: python tools/check_correctness.py [sf_dir] [name_filter ...]
 """
 
@@ -165,8 +171,38 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
     import __spark_entry__ as se
+    from ffn_polars_spark import sources
 
     qs, oracles = se.queries(), se.oracle_sql()
+    default_max = sources.SINGLE_PARTITION_MAX_ROWS
+    # Every table of a small snapshot is below the single-partition
+    # threshold, so the default shape alone never runs the distributed
+    # plans; the second shape reads every table as if above it.
+    shapes = (
+        ("default", default_max),
+        ("distributed", 0),
+    )
+    totals = []
+    for shape, max_rows in shapes:
+        sources.SINGLE_PARTITION_MAX_ROWS = max_rows
+        print(f"\n== shape {shape}: SINGLE_PARTITION_MAX_ROWS={max_rows}")
+        t0 = time.time()
+        counts = check_entries(spark, con, qs, oracles, sf_dir, name_filter, first_n)
+        totals.append((shape, counts, time.time() - t0))
+    sources.SINGLE_PARTITION_MAX_ROWS = default_max
+    print()
+    for shape, (n_pass, n_rowsonly, n_fail, fails), secs in totals:
+        print(
+            f"== {shape}: {n_pass} exact-pass, {n_rowsonly} rows-only, "
+            f"{n_fail} FAIL ({secs:.0f}s)" + (f": {fails}" if fails else "")
+        )
+    spark.stop()
+    sys.exit(1 if any(counts[2] for _, counts, _ in totals) else 0)
+
+
+def check_entries(spark, con, qs, oracles, sf_dir, name_filter, first_n):
+    """Run the selected entries against their oracles; return
+    ``(n_pass, n_rowsonly, n_fail, failed names)``."""
     n_pass = n_fail = n_rowsonly = 0
     fails = []
     for pos, (name, fn) in enumerate(qs.items()):
@@ -231,12 +267,7 @@ def main():
             n_fail += 1
             fails.append(name)
             print(f"FAIL {name}: " + "; ".join(msgs))
-    print(
-        f"\n== {n_pass} exact-pass, {n_rowsonly} rows-only, {n_fail} FAIL"
-        + (f": {fails}" if fails else "")
-    )
-    spark.stop()
-    sys.exit(1 if n_fail else 0)
+    return n_pass, n_rowsonly, n_fail, fails
 
 
 if __name__ == "__main__":

@@ -12,12 +12,12 @@ import inspect
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ffn_polars_spark import registry  # noqa: E402
 
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "docs", "api", "operators.md")
+OUT = os.path.join(ROOT, "docs", "api", "operators.md")
 
 
 def first_paragraph(doc: str) -> str:
@@ -63,7 +63,7 @@ def render() -> str:
             fn = by_ns[ns][fname]
             target = inspect.unwrap(fn)
             try:
-                src = os.path.relpath(inspect.getsourcefile(target), "/root/repo")
+                src = os.path.relpath(inspect.getsourcefile(target), ROOT)
                 line = inspect.getsourcelines(target)[1]
                 loc = f"`{src}:{line}`"
             except (TypeError, OSError):
