@@ -169,10 +169,6 @@ def test_tiny_tick_query_plans_no_exchange_and_runs_one_job(spark, name):
     ) == 1
 
 
-def _partitions(df) -> int:
-    return df.rdd.getNumPartitions()
-
-
 def test_read_table_single_partition_policy(spark, tmp_path, monkeypatch):
     """One partition at or below the threshold (from the footer's row
     count); the scan's own splits above it, and for a multi-file table."""
@@ -188,11 +184,11 @@ def test_read_table_single_partition_policy(spark, tmp_path, monkeypatch):
     spark.conf.set("spark.sql.files.maxPartitionBytes", "64k")
     try:
         monkeypatch.setattr(sources, "SINGLE_PARTITION_MAX_ROWS", 50_000)
-        assert _partitions(read_table(spark, str(tmp_path), "one")) == 1
-        assert _partitions(read_table(spark, str(tmp_path), "multi")) > 1
+        assert read_table(spark, str(tmp_path), "one").rdd.getNumPartitions() == 1
+        assert read_table(spark, str(tmp_path), "multi").rdd.getNumPartitions() > 1
         monkeypatch.setattr(sources, "SINGLE_PARTITION_MAX_ROWS", 49_999)
         above = read_table(spark, str(tmp_path), "one")
-        assert _partitions(above) > 1
+        assert above.rdd.getNumPartitions() > 1
         assert above.count() == 50_000
     finally:
         spark.conf.unset("spark.sql.files.maxPartitionBytes")

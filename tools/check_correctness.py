@@ -174,12 +174,8 @@ def main():
     from ffn_polars_spark import sources
 
     qs, oracles = se.queries(), se.oracle_sql()
-    default_max = sources.SINGLE_PARTITION_MAX_ROWS
-    # Every table of a small snapshot is below the single-partition
-    # threshold, so the default shape alone never runs the distributed
-    # plans; the second shape reads every table as if above it.
     shapes = (
-        ("default", default_max),
+        ("default", sources.SINGLE_PARTITION_MAX_ROWS),
         ("distributed", 0),
     )
     totals = []
@@ -189,7 +185,6 @@ def main():
         t0 = time.time()
         counts = check_entries(spark, con, qs, oracles, sf_dir, name_filter, first_n)
         totals.append((shape, counts, time.time() - t0))
-    sources.SINGLE_PARTITION_MAX_ROWS = default_max
     print()
     for shape, (n_pass, n_rowsonly, n_fail, fails), secs in totals:
         print(
