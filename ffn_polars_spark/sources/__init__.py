@@ -40,6 +40,12 @@ TESTDATA_TABLES = (
 # size keeps room for uneven hashing and a larger query mix (docs/tuning.md).
 CODEGEN_CACHE_ENTRIES = 1000
 
+# The Python worker daemon (``spark.python.daemon.module``, a static conf):
+# PySpark's own daemon, but a task's ``importlib.invalidate_caches()`` no
+# longer re-reads the directory of an unchanged pyspark.zip, which costs
+# 0.2-0.3 s per Python task on CPython 3.10-3.12 (docs/tuning.md).
+PYTHON_DAEMON_MODULE = "ffn_polars_spark._pydaemon"
+
 # Largest one-file table ``read_table`` returns as a single partition. Up to
 # it, one task running a window or aggregate beats the exchange, the extra
 # job and the task launches of the distributed plan; above it, the lost
@@ -64,8 +70,9 @@ def configure(spark: SparkSession) -> SparkSession:
     * AQE and Arrow are performance settings: a session that refuses to
       change one keeps its own value, with a warning naming the conf.
 
-    Static confs (``get_spark``'s call-site capture and generated-code cache
-    size) cannot be set here; a session built elsewhere passes them at launch.
+    Static confs (``get_spark``'s call-site capture, generated-code cache
+    size and Python worker daemon) cannot be set here; a session built
+    elsewhere passes them at launch.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -120,6 +127,8 @@ def get_spark(app_name: str = "ffn-polars-spark", cpus: Optional[int] = None) ->
         # Compile each query shape's generated classes once per session
         # (CODEGEN_CACHE_ENTRIES). Static as well.
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # Python tasks stop re-reading pyspark.zip (PYTHON_DAEMON_MODULE).
+        .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
         .getOrCreate()
     )
     return configure(session)

@@ -15,7 +15,7 @@ TESTDATA = os.environ.get("FFN_TESTDATA_DIR", "/root/testdata")
 
 @pytest.fixture(scope="session")
 def spark():
-    from ffn_polars_spark.sources import CODEGEN_CACHE_ENTRIES
+    from ffn_polars_spark.sources import CODEGEN_CACHE_ENTRIES, PYTHON_DAEMON_MODULE
 
     session = (
         SparkSession.builder.master("local[4]")
@@ -26,8 +26,9 @@ def spark():
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        # the generated-class cache size get_spark sets
+        # the generated-class cache size and Python worker daemon get_spark sets
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
         .getOrCreate()
     )
     yield session

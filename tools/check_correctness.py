@@ -22,7 +22,9 @@ Every entry runs in two shapes, each printing its own summary line: the
 default one, where ``read_table`` returns tables of at most
 ``sources.SINGLE_PARTITION_MAX_ROWS`` rows as one partition (every table
 of an sf0.01 snapshot), and the distributed one, with that threshold at 0.
-The exit status is 1 when any entry fails in either shape.
+Each oracle runs once: its columns and row signature are kept and both
+shapes compare against them. The exit status is 1 when any entry fails in
+either shape.
 
 Usage: python tools/check_correctness.py [sf_dir] [name_filter ...]
 """
@@ -115,6 +117,8 @@ def main():
 
     from pyspark.sql import SparkSession
 
+    from ffn_polars_spark import sources
+
     spark = (
         SparkSession.builder.master("local[8]")
         .appName("check")
@@ -122,6 +126,8 @@ def main():
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
+        # the Python worker daemon get_spark sets
+        .config("spark.python.daemon.module", sources.PYTHON_DAEMON_MODULE)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -171,34 +177,39 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
     import __spark_entry__ as se
-    from ffn_polars_spark import sources
 
     qs, oracles = se.queries(), se.oracle_sql()
     shapes = (
         ("default", sources.SINGLE_PARTITION_MAX_ROWS),
         ("distributed", 0),
     )
+    expected = {}  # entry name -> its oracle's (columns, row signature) or error
     totals = []
     for shape, max_rows in shapes:
         sources.SINGLE_PARTITION_MAX_ROWS = max_rows
         print(f"\n== shape {shape}: SINGLE_PARTITION_MAX_ROWS={max_rows}")
         t0 = time.time()
-        counts = check_entries(spark, con, qs, oracles, sf_dir, name_filter, first_n)
+        counts = check_entries(
+            spark, con, qs, oracles, expected, sf_dir, name_filter, first_n
+        )
         totals.append((shape, counts, time.time() - t0))
     print()
-    for shape, (n_pass, n_rowsonly, n_fail, fails), secs in totals:
+    for shape, (n_pass, n_rowsonly, n_fail, fails, oracle_s), secs in totals:
         print(
             f"== {shape}: {n_pass} exact-pass, {n_rowsonly} rows-only, "
-            f"{n_fail} FAIL ({secs:.0f}s)" + (f": {fails}" if fails else "")
+            f"{n_fail} FAIL ({secs:.0f}s, {oracle_s:.0f}s of it in oracles)"
+            + (f": {fails}" if fails else "")
         )
     spark.stop()
     sys.exit(1 if any(counts[2] for _, counts, _ in totals) else 0)
 
 
-def check_entries(spark, con, qs, oracles, sf_dir, name_filter, first_n):
+def check_entries(spark, con, qs, oracles, expected, sf_dir, name_filter, first_n):
     """Run the selected entries against their oracles; return
-    ``(n_pass, n_rowsonly, n_fail, failed names)``."""
+    ``(n_pass, n_rowsonly, n_fail, failed names, seconds spent in oracles)``.
+    An oracle runs only when ``expected`` has no result for its entry yet."""
     n_pass = n_fail = n_rowsonly = 0
+    oracle_s = 0.0
     fails = []
     for pos, (name, fn) in enumerate(qs.items()):
         if first_n is not None and pos >= first_n:
@@ -219,25 +230,30 @@ def check_entries(spark, con, qs, oracles, sf_dir, name_filter, first_n):
             n_rowsonly += 1
             print(f"rows-only {name}: {len(srows)} rows  ({time.time()-t0:.1f}s)")
             continue
-        try:
-            opdf = con.execute(oracles[name]).fetch_df()
-            ocols, orows = rows_from_pandas(opdf)
-        except Exception as e:
-            print(f"FAIL {name}: oracle error: {e}")
+        if name not in expected:
+            t1 = time.time()
+            try:
+                ocols, orows = rows_from_pandas(con.execute(oracles[name]).fetch_df())
+                expected[name] = (ocols, table_sig(ocols, orows))
+            except Exception as e:
+                expected[name] = e
+            oracle_s += time.time() - t1
+        if isinstance(expected[name], Exception):
+            print(f"FAIL {name}: oracle error: {expected[name]}")
             n_fail += 1
             fails.append(name)
             continue
+        ocols, l2 = expected[name]
         ok = True
         msgs = []
         if sorted(scols) != sorted(ocols):
             ok = False
             msgs.append(f"schema {sorted(scols)} vs {sorted(ocols)}")
-        if len(srows) != len(orows):
+        if len(srows) != len(l2):
             ok = False
-            msgs.append(f"rows {len(srows)} vs {len(orows)}")
+            msgs.append(f"rows {len(srows)} vs {len(l2)}")
         if ok:
             l1 = table_sig(scols, srows)
-            l2 = table_sig(ocols, orows)
             if l1 != l2:
                 ok = False
                 diff = next(
@@ -262,7 +278,7 @@ def check_entries(spark, con, qs, oracles, sf_dir, name_filter, first_n):
             n_fail += 1
             fails.append(name)
             print(f"FAIL {name}: " + "; ".join(msgs))
-    return n_pass, n_rowsonly, n_fail, fails
+    return n_pass, n_rowsonly, n_fail, fails, oracle_s
 
 
 if __name__ == "__main__":
