@@ -20,7 +20,8 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DAEMON = os.path.join(ROOT, "ffn_polars_spark", "_pydaemon.py")
 
 # Loads the daemon module by file path (no package import, so any CPython
-# can run it) and drives one zip through import, no-op reset and rewrite.
+# can run it) and drives one zip through import, no-op reset and rewrite,
+# then adds a second zip to sys.path.
 SWAP = r"""
 import importlib, importlib.util, json, os, sys, zipfile, zipimport
 daemon, tmp = sys.argv[1:3]
@@ -33,8 +34,8 @@ out = {
 }
 
 archive = os.path.join(tmp, "mods.zip")
-def write(*names):  # rewrites the archive in place: same inode
-    with zipfile.ZipFile(archive, "w") as z:
+def write(*names, path=archive):  # rewrites the archive in place: same inode
+    with zipfile.ZipFile(path, "w") as z:
         for n in names:
             z.writestr(n + ".py", f"NAME = {n!r}\n")
 
@@ -55,6 +56,13 @@ write("first_mod", "second_mod")
 out["changed_reads"] = reset()
 import second_mod
 out["second"] = second_mod.NAME
+# a pyFile added after the first task
+added = os.path.join(tmp, "added.zip")
+write("third_mod", path=added)
+sys.path.insert(0, added)
+reset()
+import third_mod
+out["third"] = third_mod.NAME
 print("SWAP " + json.dumps(out))
 """
 
@@ -77,8 +85,8 @@ def test_reset_rereads_only_a_changed_zip(python, tmp_path):
     lines = [l for l in proc.stdout.splitlines() if l.startswith("SWAP ")]
     assert proc.returncode == 0 and lines, proc.stderr[-3000:]
     out = json.loads(lines[-1][len("SWAP "):])
-    # a rewritten archive's new module imports
-    assert out["second"] == "second_mod"
+    # a rewritten archive's new module imports, and so does a new archive's
+    assert (out["second"], out["third"]) == ("second_mod", "third_mod"), out
     if out["minor"] >= 13:
         # 3.13's reset only drops a cache entry; nothing to swap
         assert not out["swapped"], out
