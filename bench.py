@@ -26,26 +26,34 @@ noise indicator: median >> min means the run was taken during an episode.
 A scan + pandas_udf warmup runs untimed first so the Python-worker spawn
 (~5s) never lands in any timed region.
 
-Canary (round-12): a FIXED inline scan+agg over lineitem — independent of
-every catalog entry, its plan can never change with engine edits — runs
-interleaved alongside the headline set. ``canary_s`` (its min) measures
-the BOX, not the code: round-over-round, a headline total that moved with
-the canary is environment noise; one that moved against a flat canary is
-a real regression. ``value_canary_normalized`` = value *
-(CANARY_BASELINE_S / canary_s) is the mechanically comparable total
-(see BASELINE.md "Canary normalization").
+Canary: perfbench's ``clock.Canary`` (~0.024 s of fixed single-threaded
+numpy, SHA-256 and Python work that calls no code of the package) runs
+before every timed query. It shares nothing with the session, so only the
+machine moves it. ``canary_s``/``canary_median_s`` are its min and median;
+``value_canary_normalized`` = value * ``Canary.machine_scale()``, that is
+value * ``CANARY_REF_S`` (reported as ``canary_baseline_s``) / median
+canary, is the mechanically comparable total (see BASELINE.md "Canary
+normalization").
+
+Stage attribution: after the timed passes, one untimed pass runs each query
+under its own job group; the UI REST API is read once that pass has
+settled, and ``queries_task_ms`` sums the executor task time of every
+completed stage of every job in the query's group (build and exec).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
+import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from ffn_polars_spark.sources import get_spark
+from perfbench.clock import CANARY_REF_S, Canary
 
 HEADLINE = [
     "pricing_summary",
@@ -67,59 +75,47 @@ HEADLINE = [
     "clean_corpus",
 ]
 
-
-# Quiet-box canary cost, pinned from a clean min-of-5 at sf0.1 on the
-# reference box (round 12). If the hardware or Spark version changes, re-pin
-# and note it in BASELINE.md; do NOT re-pin to absorb a code regression —
-# the canary is catalog-independent, so code changes cannot move it.
-CANARY_BASELINE_S = 0.247  # min-of-5 at sf0.1, quiet box, round 12
+_GROUP = "ffn-bench-stages:"
 
 
-def _canary(spark, sf_dir):
-    """Fixed scan+agg whose plan never changes: full lineitem scan, four
-    numeric aggregates. No catalog code involved — measures the box."""
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    return df.agg(
-        F.sum("l_extendedprice").alias("s1"),
-        F.sum("l_quantity").alias("s2"),
-        F.avg("l_discount").alias("a1"),
-        F.count(F.lit(1)).alias("n"),
-    )
+def _ui_get(sc, path: str):
+    port = sc.uiWebUrl.rsplit(":", 1)[1]
+    url = f"http://127.0.0.1:{port}/api/v1/applications/{sc.applicationId}{path}"
+    with urllib.request.urlopen(url, timeout=30) as r:
+        return json.loads(r.read().decode())
 
 
-def _fetch_stages(web_url: str, app_id: str):
-    """COMPLETE stages from the UI REST API as {stageId: summary-dict}."""
-    import urllib.request
-
-    with urllib.request.urlopen(
-        f"{web_url}/api/v1/applications/{app_id}/stages?status=complete", timeout=10
-    ) as r:
-        stages = json.loads(r.read().decode())
-    return {s["stageId"]: s for s in stages}
-
-
-def _stage_breakdown(spark, fn, sf_dir, web_url: str, app_id: str):
-    """One instrumented run of ``fn``: returns the run's new stages, heaviest
-    first, so a future bench regression is localizable to a stage without a
-    rerun. executorRunTime is summed task time (CPU-parallel), so it can
-    exceed the wall-clock query time."""
-    before = set(_fetch_stages(web_url, app_id))
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    after = _fetch_stages(web_url, app_id)
-    new = [s for sid, s in after.items() if sid not in before]
-    new.sort(key=lambda s: s.get("executorRunTime", 0), reverse=True)
-    return [
-        {
-            "stage": s["stageId"],
-            "name": s.get("name", "")[:100],
-            "run_ms": s.get("executorRunTime", 0),
-            "tasks": s.get("numCompleteTasks", 0),
-            "shuffle_write_mb": round(s.get("shuffleWriteBytes", 0) / 1e6, 2),
-        }
-        for s in new  # callers slice for display; task-time sums need all
-    ]
+def _stages_by_query(sc) -> dict:
+    """{query: its jobs' completed stages, heaviest first}, read once the UI
+    listener has caught up with the driver: no job running and the same job
+    count on two reads 0.5 s apart."""
+    last = None
+    for _ in range(60):
+        jobs = _ui_get(sc, "/jobs")
+        state = (len(jobs), sum(j["status"] == "RUNNING" for j in jobs))
+        if state == last and state[1] == 0:
+            break
+        last = state
+        time.sleep(0.5)
+    stages = {s["stageId"]: s for s in _ui_get(sc, "/stages?status=complete")}
+    out: dict = {}
+    for job in jobs:
+        group = job.get("jobGroup") or ""
+        if not group.startswith(_GROUP):
+            continue
+        for sid in job["stageIds"]:
+            st = stages.pop(sid, None)  # a stage counts once
+            if st is not None:
+                out.setdefault(group[len(_GROUP):], []).append({
+                    "stage": sid,
+                    "name": st.get("name", "")[:100],
+                    "run_ms": st.get("executorRunTime", 0),
+                    "tasks": st.get("numCompleteTasks", 0),
+                    "shuffle_write_mb": round(st.get("shuffleWriteBytes", 0) / 1e6, 2),
+                })
+    for v in out.values():
+        v.sort(key=lambda s: s["run_ms"], reverse=True)
+    return out
 
 
 def main() -> None:
@@ -160,15 +156,13 @@ def main() -> None:
     # (round 3 lost every number to a single AnalysisException on the first
     # query).  An erroring query is skipped for the rest of the run and
     # reported under "errors".
-    canary_samples: list = []
+    canary = Canary()
     for _ in range(n_runs):
-        t0 = time.time()
-        _canary(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        canary_samples.append(time.time() - t0)
         for name in HEADLINE:
             if name in errors:
                 continue
             fn = QUERY_FNS[name]
+            canary.measure()
             t0 = time.time()
             try:
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -178,39 +172,33 @@ def main() -> None:
                 continue
             samples[name].append(time.time() - t0)
 
-    def median(xs):
-        s = sorted(xs)
-        n = len(s)
-        return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2.0
-
-    med = {name: round(median(v), 3) for name, v in samples.items() if v}
+    med = {name: round(statistics.median(v), 3) for name, v in samples.items() if v}
     mins = {name: round(min(v), 3) for name, v in samples.items() if v}
 
-    # Per-stage breakdown for the 3 most expensive queries (one extra
-    # untimed run each, outside every timed region): localizes a future
-    # regression to a stage without a rerun. r14: the same instrumented
-    # pass now covers EVERY query, summing executor task-time per query
-    # (task_ms) — the scaling disambiguator: a query whose low-core/high-
-    # core WALL ratio is ≈1 while its task-time is unchanged is at the
-    # scheduling-latency floor (per-task overhead >> per-row cost at this
-    # SF), not serial; a genuinely serial query would show task-time ≈
-    # wall at every core count.
-    stage_metrics = {}
-    task_ms = {}
-    web_url = spark.sparkContext.uiWebUrl
-    if web_url:
-        app_id = spark.sparkContext.applicationId
-        top3 = set(sorted(mins, key=mins.get, reverse=True)[:3])
-        for name in mins:
-            try:
-                stages = _stage_breakdown(
-                    spark, QUERY_FNS[name], sf_dir, web_url, app_id
-                )
-                task_ms[name] = sum(s["run_ms"] for s in stages)
-                if name in top3:
-                    stage_metrics[name] = stages[:5]
-            except Exception:  # noqa: BLE001 — metrics must never break bench
-                pass
+    # One extra untimed run of every query, each under its own job group,
+    # outside every timed region. task_ms sums executor task time per query
+    # (CPU-parallel, so it can exceed wall) — the scaling disambiguator: a
+    # query whose low-core/high-core WALL ratio is ≈1 while its task-time is
+    # unchanged is at the scheduling-latency floor (per-task overhead >>
+    # per-row cost at this SF), not serial; a genuinely serial query would
+    # show task-time ≈ wall at every core count. The 3 most expensive
+    # queries also print their 5 heaviest stages, which localizes a future
+    # regression to a stage without a rerun.
+    stage_metrics, task_ms = {}, {}
+    sc = spark.sparkContext
+    if sc.uiWebUrl:
+        try:
+            for name in mins:
+                sc.setJobGroup(_GROUP + name, name)
+                QUERY_FNS[name](spark, sf_dir).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+            stages = _stages_by_query(sc)
+        except Exception:  # noqa: BLE001 — metrics must never break bench
+            stages = {}
+        task_ms = {n: sum(s["run_ms"] for s in stages[n]) for n in mins if n in stages}
+        top3 = sorted(mins, key=mins.get, reverse=True)[:3]
+        stage_metrics = {n: stages[n][:5] for n in top3 if n in stages}
 
     # Diagnostics print on their OWN lines BEFORE the headline object: the
     # driver parses only the final stdout line and its tail capture is
@@ -221,31 +209,23 @@ def main() -> None:
         print(json.dumps({"stage_metrics": stage_metrics}))
     if task_ms:
         # own compact line directly before the headline so the driver's
-        # ~2000-char tail capture keeps it: per-query summed executor
-        # task-time (CPU-parallel; can exceed wall) from the instrumented
-        # pass — reads a flat wall ratio at a lower core count as "floor"
-        # vs "serial" without a rerun.
+        # ~2000-char tail capture keeps it
         print(json.dumps({"queries_task_ms": task_ms}))
 
-    canary_s = round(min(canary_samples), 3)
+    total = sum(mins.values())
     out = {
         "metric": "headline_queries_total_wall_clock",
-        "value": round(sum(mins.values()), 3),
+        "value": round(total, 3),
         "unit": "sec",
         "queries": mins,
         "sf": sf,
         "queries_median": med,
         "runs": n_runs,
-        "canary_s": canary_s,
-        "canary_median_s": round(median(canary_samples), 3),
+        "canary_s": round(min(canary.samples), 4),
+        "canary_median_s": round(statistics.median(canary.samples), 4),
+        "canary_baseline_s": CANARY_REF_S,
+        "value_canary_normalized": round(total * canary.machine_scale(), 3),
     }
-    # canary_s can round to 0.0 on a tiny SF dir — never let the
-    # normalization ZeroDivisionError kill the whole bench record
-    if CANARY_BASELINE_S and canary_s > 0:
-        out["canary_baseline_s"] = CANARY_BASELINE_S
-        out["value_canary_normalized"] = round(
-            sum(mins.values()) * CANARY_BASELINE_S / canary_s, 3
-        )
     if errors:
         # A partial total is silently incomparable across rounds (it sums a
         # smaller query set and looks *better*); flag it explicitly.

@@ -6,8 +6,6 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 # Testdata root: the canonical driver-generated tables, overridable so CI
 # and external users can point at tools/gen_testdata.py output.
 TESTDATA = os.environ.get("FFN_TESTDATA_DIR", "/root/testdata")
@@ -15,23 +13,9 @@ TESTDATA = os.environ.get("FFN_TESTDATA_DIR", "/root/testdata")
 
 @pytest.fixture(scope="session")
 def spark():
-    from ffn_polars_spark.sources import CODEGEN_CACHE_ENTRIES, PYTHON_DAEMON_MODULE
+    from ffn_polars_spark.sources import get_spark
 
-    session = (
-        SparkSession.builder.master("local[4]")
-        .appName("ffn-polars-spark-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        # the generated-class cache size and Python worker daemon get_spark sets
-        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
-        .getOrCreate()
-    )
-    yield session
+    return get_spark("ffn-polars-spark-tests", cpus=4)
 
 
 @pytest.fixture(scope="session")

@@ -181,7 +181,9 @@ def test_read_table_single_partition_policy(spark, tmp_path, monkeypatch):
         str(tmp_path / "multi.parquet")
     )
     # many scan splits for a small file, so "one partition" is visible
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "64k")
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64k")
     try:
         monkeypatch.setattr(sources, "SINGLE_PARTITION_MAX_ROWS", 50_000)
         assert read_table(spark, str(tmp_path), "one").rdd.getNumPartitions() == 1
@@ -191,7 +193,21 @@ def test_read_table_single_partition_policy(spark, tmp_path, monkeypatch):
         assert above.rdd.getNumPartitions() > 1
         assert above.count() == 50_000
     finally:
-        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        spark.conf.set(key, old)
+
+
+def test_test_session_is_a_get_spark_session(spark):
+    """The tests run the session users and the benchmark get: the fixture
+    carries ``get_spark``'s static and local-tuning confs."""
+    from ffn_polars_spark import sources
+
+    expected = {
+        "spark.python.daemon.module": sources.PYTHON_DAEMON_MODULE,
+        "spark.sql.codegen.cache.maxEntries": str(sources.CODEGEN_CACHE_ENTRIES),
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
+        "spark.sql.files.maxPartitionBytes": "16MB",
+    }
+    assert {k: spark.conf.get(k, None) for k in expected} == expected
 
 
 class _RefusingConf:

@@ -115,21 +115,9 @@ def main():
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     name_filter = argv[1:]
 
-    from pyspark.sql import SparkSession
-
     from ffn_polars_spark import sources
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("check")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        # the Python worker daemon get_spark sets
-        .config("spark.python.daemon.module", sources.PYTHON_DAEMON_MODULE)
-        .getOrCreate()
-    )
+    spark = sources.get_spark("check", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     # Untimed session warmup (same as bench.py): JVM codegen + the Python

@@ -39,16 +39,12 @@ def main() -> None:
     heap = sys.argv[3] if len(sys.argv) > 3 else "1g"
     bands = int(sys.argv[4]) if len(sys.argv) > 4 else 4
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("hot-bucket-probe")
-        .config("spark.driver.memory", heap)
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    from ffn_polars_spark.sources import get_spark
+
+    os.environ["SPARK_DRIVER_MEMORY"] = heap
+    spark = get_spark("hot-bucket-probe", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     import ffn_polars_spark.operators.dedup as D
