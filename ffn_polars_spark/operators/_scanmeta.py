@@ -18,8 +18,8 @@ These helpers answer, from file footers (driver-side metadata only, no jobs):
   bound across Filter/Limit with ``allow_reducing`` (the ANN scale guards).
 - :func:`scan_row_groups` — total row groups across the scan's files: the
   TRUE upper bound on scan-stage parallelism.
-- :func:`effective_scan_parallelism` — min(split count, row groups); what a
-  spread decision must compare against the core count.
+- :func:`spread_scan` — the one spread guard: repartition when min(split
+  count, row groups) is below half the cluster's slots.
 
 Everything returns None when uncertain (non-parquet, remote files, a plan
 node the walk doesn't know) — callers fall back to their job-based paths.
@@ -28,6 +28,8 @@ node the walk doesn't know) — callers fall back to their job-based paths.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+from ffn_polars_spark.core import _default_block_count
 
 # Row-count-preserving logical nodes: a plan made only of these above a
 # parquet relation has exactly the relation's row count, so the count can be
@@ -177,48 +179,19 @@ def scan_bytes(df: DataFrame):
         return None
 
 
-def effective_scan_parallelism(df: DataFrame) -> int:
-    """How many tasks can actually carry rows of ``df``'s scan.
-
-    ``df.rdd.getNumPartitions()`` counts byte-range splits; row groups cap
-    how many of those splits receive any rows. For non-scan plans (post-
-    shuffle frames) row groups are unknowable and the partition count is
-    already real, so it is returned as-is. Streaming frames have no RDD to
-    count — report the cluster's slot count (micro-batch sources parallelize
-    by their own partitioning; never a reason to inject a shuffle)."""
-    try:
-        sc = df.sparkSession.sparkContext
-    except Exception:
-        # Spark Connect session: no client-side SparkContext/RDD access.
-        # Report the shuffle-partition conf as the parallelism proxy —
-        # the callers use this to decide whether to ADD a shuffle, and
-        # without partition introspection a no-op is the safe answer.
-        conf = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        try:
-            return max(1, int(conf))
-        except (TypeError, ValueError):
-            # some deployments set this conf to the string "auto"
-            # (auto-optimized shuffle) — the safe-fallback path itself
-            # must not raise; degrade to the stock default
-            return 200
-    if df.isStreaming:
-        return sc.defaultParallelism
-    parts = df.rdd.getNumPartitions()
-    rg = scan_row_groups(df)
-    return min(parts, rg) if rg else parts
-
-
-def spread_scan(df: DataFrame, key: str) -> DataFrame:
-    """Repartition by ``key`` when the scan's EFFECTIVE parallelism is below
-    half the cluster's slots — the guard every CPU-heavy per-row projection
-    (shingle/minhash building, tokenize-and-score text pipelines) puts
-    between itself and the raw scan.
+def spread_scan(df: DataFrame, key: str | None = None) -> DataFrame:
+    """Repartition when the scan's EFFECTIVE parallelism — min(byte splits,
+    parquet row groups) — is below half the cluster's slots: the guard every
+    CPU-heavy per-row projection (shingle/minhash building, tokenize-and-score
+    text pipelines, vector math) puts between itself and the raw scan. By
+    ``key`` when given, round-robin when ``key`` is None.
 
     At real scale, inputs written with sane row-group sizes make this a
     no-op (condition false, no shuffle). Single-row-group files — the
     pyarrow/pandas writer default — would otherwise serialize the whole
     projection onto one core regardless of cluster size; one shuffle of the
-    input is strictly cheaper than a parallelism-1 pipeline.
+    input is strictly cheaper than a parallelism-1 pipeline. A one-slot
+    cluster passes through: a shuffle there adds no parallelism.
 
     Streaming frames pass through untouched: ``df.rdd`` raises on a
     streaming plan, the footer walk cannot see a streaming source, and the
@@ -235,18 +208,19 @@ def spread_scan(df: DataFrame, key: str) -> DataFrame:
         # unconditional shuffle (tests/test_connect.py smokes this path).
         return df
     target = sc.defaultParallelism
+    if target < 2:
+        return df
     threshold = max(2, target // 2)
     # footer short-circuit: when row groups alone already bound parallelism
     # below the threshold, skip df.rdd.getNumPartitions() entirely (it
     # converts the plan to an RDD — the most expensive driver-side step
     # here, and its answer cannot raise a row-group-bounded minimum)
     rg = scan_row_groups(df)
-    if rg is not None and rg < threshold:
-        return df.repartition(target, key)
-    parts = df.rdd.getNumPartitions()
-    if (min(parts, rg) if rg else parts) < threshold:
-        return df.repartition(target, key)
-    return df
+    if rg is None or rg >= threshold:
+        parts = df.rdd.getNumPartitions()
+        if (min(parts, rg) if rg else parts) >= threshold:
+            return df
+    return df.repartition(target) if key is None else df.repartition(target, key)
 
 
 def sampled_key_cardinality(df: DataFrame, keys, sample_rows: int = 100_000):
@@ -308,6 +282,6 @@ def use_blocked_sequence_plan(
         n = int(rows_hint)
     if n is None or n < rows_per_key:
         return False
-    cores = df.sparkSession.sparkContext.defaultParallelism
+    cores = _default_block_count(df.sparkSession)
     k = sampled_key_cardinality(df, keys)
     return k is not None and k <= max(8, cores) and n / max(k, 1) >= rows_per_key

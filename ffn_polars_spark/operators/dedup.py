@@ -30,27 +30,8 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ffn_polars_spark.operators._scanmeta import spread_scan
 from ffn_polars_spark.registry import register
-
-
-def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Repartition by ``key`` when the scan's EFFECTIVE parallelism is below
-    half the cluster's slots.
-
-    Per-document hashing is CPU-bound; a corpus whose files cannot feed
-    enough tasks would otherwise pin the whole projection to that many
-    cores. "Effective" is the operative word (r9): the byte-split count
-    this guard once compared is a lie on single-ROW-GROUP parquet files
-    (the pyarrow/pandas writer default) — a 124 MB file reports ~30 scan
-    partitions while one task reads every row, because a row group is
-    parquet's atomic read unit. Measured on dedup_minhash_lsh at 500k
-    docs: 29 tasks at 0.7 s, one at 61 s — the whole pipeline was
-    single-threaded behind a healthy-looking partition count. At real
-    scale, inputs with sane row-group sizes make this a no-op.
-    """
-    from ffn_polars_spark.operators._scanmeta import spread_scan
-
-    return spread_scan(df, key)
 
 
 # Frames pinned by _pinned since the last release_pins() call. Operators
@@ -380,7 +361,7 @@ def ngram_jaccard_pairs(
     """
     # pinned: the index feeds three branches (sizes + both self-join sides);
     # without it each branch re-runs the tokenize/shingle projection
-    sh = _doc_shingles(_spread(df, id_col), text_col, id_col, n)
+    sh = _doc_shingles(spread_scan(df, id_col), text_col, id_col, n)
     if max_shingle_df is not None:
         hot = sh.groupBy("__sh").agg(F.count(F.lit(1)).alias("__df")).where(
             F.col("__df") > max_shingle_df
@@ -440,7 +421,7 @@ def decontaminate(
     """
     # token-scale STRING shingles: heap-gate like scrub_spans' span pin
     sh = _pinned_if_fits(
-        _doc_shingles(_spread(df, id_col), text_col, id_col, n),
+        _doc_shingles(spread_scan(df, id_col), text_col, id_col, n),
         _token_scale_est(df),
     )
     hold_sh = (
@@ -665,7 +646,7 @@ def dedup_minhash_lsh(
     if verify not in ("exact", "none"):
         raise ValueError(f"verify must be 'exact', 'band', or 'none'; got {verify!r}")
     rows = num_hashes // bands
-    df = _spread(df, id_col)
+    df = spread_scan(df, id_col)
     # One pinned pass builds the shingle + hash arrays; signatures, the
     # bucket groups, and verification all derive from it.
     # Pin ONLY (__id, __h64): signatures permute the hashes and the exact
@@ -859,7 +840,7 @@ def dedup_simhash(
     # self-join emitted. The signature frame now has a SINGLE reader, so the
     # eager `_pinned(sig)` — one construction-time count job over the full
     # corpus-signature derivation at every scale — is gone.
-    sig = simhash_signatures(_spread(df, id_col), n, text_col, id_col, hash_fn)
+    sig = simhash_signatures(spread_scan(df, id_col), n, text_col, id_col, hash_fn)
     chunks = sig.select(
         F.col(id_col).alias("__id"),
         F.col("simhash"),
@@ -1081,7 +1062,7 @@ def containment_pairs(
     co-occurrence, not |docs|². Returns ``(id_a, id_b, containment_a,
     containment_b)``.
     """
-    sh = _doc_shingles(_spread(df, id_col), text_col, id_col, n)
+    sh = _doc_shingles(spread_scan(df, id_col), text_col, id_col, n)
     if max_shingle_df is not None:
         hot = sh.groupBy("__sh").agg(F.count(F.lit(1)).alias("__df")).where(
             F.col("__df") > max_shingle_df
@@ -1245,7 +1226,7 @@ def shingle_novelty(
     """
     # token-scale STRING shingles: heap-gate like scrub_spans' span pin
     sh = _pinned_if_fits(
-        _doc_shingles(_spread(df, id_col), text_col, id_col, n),
+        _doc_shingles(spread_scan(df, id_col), text_col, id_col, n),
         _token_scale_est(df),
     )
     first = sh.groupBy("__sh").agg(F.min("__id").alias("__first"))

@@ -23,6 +23,7 @@ from typing import Callable, Dict, List, Optional, Union
 from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 
+from ffn_polars_spark.core import _default_block_count
 from ffn_polars_spark.registry import register
 
 # Cumulative probabilities of Poisson(1): P(X <= k) for k = 0..9. The tail
@@ -142,7 +143,7 @@ def bootstrap_replicate(
     # stage runs single-threaded (measured 26s vs 0.9s at sf0.1).  The extra
     # exchange moves only the un-exploded input: 1/num_trials of the stage's
     # output volume, negligible at any scale.
-    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    df = df.repartition(_default_block_count(df.sparkSession))
     if key_col is not None:
         n_blocks = (num_trials + _TRIALS_PER_HASH - 1) // _TRIALS_PER_HASH
         blocked = (
@@ -288,7 +289,7 @@ def resample_returns_hash(
         # the index assignment upstream is a single-partition window — spread
         # before the per-draw hash so it parallelizes (same rationale as the
         # repartition in bootstrap_replicate)
-        .repartition(spark.sparkContext.defaultParallelism)
+        .repartition(_default_block_count(spark))
         .crossJoin(trials)
         .select("trial", draw_idx.alias("__idx"))
     )

@@ -17,6 +17,7 @@ from typing import List, Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ffn_polars_spark.operators._scanmeta import bare_scan_row_count, spread_scan
 from ffn_polars_spark.registry import register
 
 # Bounded-probe budget for scale guards: probes up to this many rows run as a
@@ -70,19 +71,12 @@ def _sem_cache_put(h, df: DataFrame, n: int) -> None:
         _SEM_COUNT_CACHE.clear()
     _SEM_COUNT_CACHE[h] = (df, n)
 
-# Footer-based scan metadata (shared with the dedup/text spread guards);
-# re-exported under the historical name — the scale-guard tests and callers
-# in this module predate the shared module.
-from ffn_polars_spark.operators._scanmeta import (  # noqa: E402
-    bare_scan_row_count as _bare_scan_row_count,
-)
-
 
 def _count_at_most(df: DataFrame, col: str, cap: int) -> int:
     """min-ish(n_rows, cap+1) — footers, then bounded probe, then exact count.
 
     Bare parquet scans (the catalog-shaped common case) are answered from
-    parquet footers via :func:`_bare_scan_row_count` — exact, driver-side,
+    parquet footers via :func:`bare_scan_row_count` — exact, driver-side,
     zero Spark jobs. Otherwise a ``limit(min(cap, _PROBE_CAP)+1).count()``
     probe runs, whose cost is O(_PROBE_CAP) regardless of input size. Three
     probe outcomes:
@@ -102,7 +96,7 @@ def _count_at_most(df: DataFrame, col: str, cap: int) -> int:
         n = None
     if n is not None:
         return n
-    n = _bare_scan_row_count(df)
+    n = bare_scan_row_count(df)
     if n is not None:
         try:
             _COUNT_CACHE[df] = n
@@ -160,8 +154,8 @@ def _guard_pair_budget(
     an overestimate is the safe direction.
     """
     if max_pairs > 0:
-        ub_q = _bare_scan_row_count(queries, allow_reducing=True)
-        ub_i = _bare_scan_row_count(items, allow_reducing=True)
+        ub_q = bare_scan_row_count(queries, allow_reducing=True)
+        ub_i = bare_scan_row_count(items, allow_reducing=True)
         if ub_q is not None and ub_i is not None and ub_q * ub_i <= max_pairs:
             return (ub_i, ub_q)
     K0 = 65_536
@@ -270,32 +264,6 @@ def unit(a: Column) -> Column:
     )
 
 
-def _spread_vecs(df: DataFrame) -> DataFrame:
-    """Repartition under-parallelized inputs so the CPU-bound vector math
-    uses every core (no-op when the input already feeds enough tasks).
-
-    Compares EFFECTIVE scan parallelism — min(byte splits, parquet row
-    groups) — not the byte-split count, which lies on single-row-group
-    files (a row group is the atomic read unit; see _scanmeta.spread_scan,
-    the r9 find that serialized the text/dedup pipelines onto one core).
-    Round-robin rather than keyed: no downstream operator here relies on a
-    key-partitioned layout."""
-    from ffn_polars_spark.operators._scanmeta import effective_scan_parallelism
-
-    try:
-        target = df.sparkSession.sparkContext.defaultParallelism
-    except Exception:
-        # Spark Connect: no client-side SparkContext, and without partition
-        # introspection the under-parallelized-scan condition cannot be
-        # detected — pass through rather than add an unconditional shuffle
-        # (same contract as _scanmeta.spread_scan; smoked by
-        # tests/test_connect.py).
-        return df
-    if effective_scan_parallelism(df) < max(2, target // 2):
-        return df.repartition(target)
-    return df
-
-
 def _tiny_or_spread(items: DataFrame, cap: int = 8_000) -> DataFrame:
     """ann_topk's tiny-skip generalized to the bucketed ANN item sides
     (r13): when the parquet footers PROVE the item table is at most ``cap``
@@ -304,12 +272,10 @@ def _tiny_or_spread(items: DataFrame, cap: int = 8_000) -> DataFrame:
     AQE-round cost (~0.14 s measured). Footer counts are upper bounds, so
     an unknown or large count errs toward spreading — the safe direction
     at scale."""
-    from ffn_polars_spark.operators._scanmeta import bare_scan_row_count
-
     n_i = bare_scan_row_count(items, allow_reducing=True)
     if n_i is not None and 0 < n_i <= cap:
         return items
-    return _spread_vecs(items)
+    return spread_scan(items)
 
 
 @register(namespace="eod", kind="df", context="dataframe", alias="embedding_cosine_pairs")
@@ -362,9 +328,9 @@ def embedding_cosine_pairs(
         and _fits_driver_corpus_budget(df, vec_col, n_rows)
     ):
         return _cosine_pairs_arrow(
-            _spread_vecs(df), float(threshold), vec_col, id_col, id_t
+            spread_scan(df), float(threshold), vec_col, id_col, id_t
         )
-    normed = _spread_vecs(df).select(
+    normed = spread_scan(df).select(
         F.col(id_col).alias("__id"), unit(F.col(vec_col)).alias("__u")
     )
     left = normed.select(F.col("__id").alias("id_a"), F.col("__u").alias("__ua"))
@@ -586,7 +552,7 @@ def dedup_embedding_lsh(
     far safer at every setting. Pass ``planes``/``tables`` explicitly to
     pin any fixed banding (the pre-r9 behavior was planes=12, tables=4)."""
     if planes is None:
-        n = _bare_scan_row_count(df)
+        n = bare_scan_row_count(df)
         if n is None:
             n = _count_at_most(df, id_col, 1 << 24)
         import math
@@ -613,7 +579,7 @@ def dedup_embedding_lsh(
     # O(d) fold per EMITTED PAIR (measured 118 µs/pair; 253 s at 200k
     # vectors). est ≈ 3x the on-disk column bytes (float32 -> unit doubles).
     tagged = _pinned_if_fits(
-        _spread_vecs(df).select(
+        spread_scan(df).select(
             F.col(id_col).alias("__id"), unit(F.col(vec_col)).alias("__v")
         ),
         (lambda b: 3 * b if b is not None else None)(scan_bytes(df)),
@@ -706,7 +672,7 @@ def ann_topk(
         and n_i * n_q >= 50_000_000
     ):
         scored = _ann_score_topk_arrow(
-            _spread_vecs(items), queries, k, vec_col, id_col, qid
+            spread_scan(items), queries, k, vec_col, id_col, qid
         )
     else:
         q = F.broadcast(
@@ -731,7 +697,7 @@ def ann_topk(
                 cap_q = 25_000 // n_i
                 if cap_q > 0:
                     tiny = _count_at_most(queries, qid, cap_q) <= cap_q
-        it_src = items if tiny else _spread_vecs(items)
+        it_src = items if tiny else spread_scan(items)
         it = it_src.select(
             F.col(id_col).alias("item_id"), unit(F.col(vec_col)).alias("__iu")
         )

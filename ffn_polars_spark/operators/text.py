@@ -16,6 +16,7 @@ from typing import Dict, List, Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ffn_polars_spark.operators._scanmeta import spread_scan
 from ffn_polars_spark.registry import register
 
 # Tiny per-language stopword marker sets for the n-gram/stopword language-ID
@@ -29,23 +30,6 @@ LANG_MARKERS: Dict[str, List[str]] = {
 }
 
 EN_STOPWORDS = LANG_MARKERS["en"]
-
-
-def _spread_docs(df: DataFrame, key: str) -> DataFrame:
-    """Conditional repartition guarding every CPU-heavy per-document
-    pipeline in this module against under-parallelized scans.
-
-    Tokenize/regex scoring is pure CPU per row; a corpus whose files
-    cannot feed enough tasks (single-ROW-GROUP parquet — the pyarrow/
-    pandas writer default — reports many byte-split partitions while ONE
-    task reads every row) would run the whole pipeline on one core.
-    Delegates to operators/_scanmeta.spread_scan: no-op whenever the
-    scan's effective parallelism (min of splits and row groups) already
-    covers half the cluster's slots — at real scale with sane row-group
-    sizes this never shuffles."""
-    from ffn_polars_spark.operators._scanmeta import spread_scan
-
-    return spread_scan(df, key)
 
 
 def tokens(text: Column) -> Column:
@@ -113,7 +97,7 @@ def text_quality(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     runtime common-subexpression elimination), and inlining ``tokens()``
     into each of them re-ran the regex split per feature — measured 1.8x
     slower on a 500k-doc corpus."""
-    df = _spread_docs(df, id_col)
+    df = spread_scan(df, id_col)
     t = F.col(text_col)
     staged = df.select(F.col(id_col), t.alias("__txt"), tokens(t).alias("__toks"))
     txt, toks = F.col("__txt"), F.col("__toks")
@@ -195,7 +179,7 @@ def language_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     (the `best` struct is referenced twice and holds four interpreted
     filters — inlining ``tokens()`` evaluated the split 8×).
     """
-    df = _spread_docs(df, id_col)
+    df = spread_scan(df, id_col)
     staged = df.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
     best = language_vote(F.lit(""), toks=F.col("__toks"))
     return staged.select(
@@ -211,7 +195,7 @@ def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     lowercased text. The normalize-then-hash shape is the standard exact-dedup
     key at corpus scale (hash is computed map-side; dedup is then one
     hash-partitioned groupBy)."""
-    df = _spread_docs(df, id_col)
+    df = spread_scan(df, id_col)
     norm = F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " ")
     return df.select(
         F.col(id_col),
@@ -256,7 +240,7 @@ def winnow_fingerprints(
 
     Returns ``(id, fp)`` rows, distinct per document.
     """
-    df = _spread_docs(df, id_col)
+    df = spread_scan(df, id_col)
     from ffn_polars_spark.operators._arrow_kernels import make_winnow_udf
 
     norm = F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " ")
@@ -304,11 +288,10 @@ def winnow_overlap_pairs(
     """
     from ffn_polars_spark.operators.dedup import (
         _pinned_if_fits,
-        _spread,
         _token_scale_est,
     )
 
-    fps = winnow_fingerprints(_spread(df, id_col), k, window, text_col, id_col)
+    fps = winnow_fingerprints(spread_scan(df, id_col), k, window, text_col, id_col)
     if max_fp_df is not None:
         hot = (
             fps.groupBy("fp")
@@ -377,7 +360,7 @@ def pii_scrub(
 
     Returns ``(id, clean_text, n_<name> per pattern, n_redactions)``.
     """
-    df = _spread_docs(df, id_col)
+    df = spread_scan(df, id_col)
     pats = patterns or PII_PATTERNS
     cur: Column = F.col(text_col)
     counts = []
@@ -408,7 +391,7 @@ def corpus_stats(
     standard first report over a new crawl snapshot: what is in it, from
     where, how long.
     """
-    df = _spread_docs(df, text_col)
+    df = spread_scan(df, text_col)
     t = F.col(text_col)
     nt = token_count(t).cast("double")
     base = df.select(*group_cols, nt.alias("__nt"), char_count(t).alias("__nc"))
@@ -444,7 +427,7 @@ def repetition_stats(
     crosses twice. Per-doc gram cardinality bounds the explode at ~2×tokens,
     so the shape holds at any corpus size.
     """
-    df = _spread_docs(df, id_col)
+    df = spread_scan(df, id_col)
     from ffn_polars_spark.operators.dedup import shingles_from_tokens
 
     base = df.select(
@@ -515,7 +498,7 @@ def vocab_topk(
 
     Returns ``(token, freq)``.
     """
-    df = _spread_docs(df, text_col)
+    df = spread_scan(df, text_col)
     toks = df.select(F.explode(tokens(F.col(text_col))).alias("token")).where(
         F.col("token") != ""
     )
@@ -577,7 +560,7 @@ def duplicate_spans(
     # even longs-only); past the cap the two consumers re-derive instead.
     est = scan_bytes(df)
     est = 3 * est if est is not None else None
-    df = _spread_docs(df, id_col)
+    df = spread_scan(df, id_col)
     base = df.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
     # the hash transform stays INSIDE the Generate's projection (round-6
     # rule: interpreted array builds belong in the explode itself)
@@ -651,7 +634,7 @@ def scrub_spans(
     """
     from pyspark.sql.window import Window
 
-    df = _spread_docs(df, id_col)
+    df = spread_scan(df, id_col)
     w = int(width)
     words = df.select(
         F.col(id_col),
@@ -740,7 +723,7 @@ def tfidf_topterms(
     5.8 s at sf1. The pinned frame is distinct (doc, term) pairs, far
     smaller than the token stream.
     """
-    df = _spread_docs(df, id_col)
+    df = spread_scan(df, id_col)
     from pyspark.sql.window import Window
 
     from ffn_polars_spark.operators.dedup import _pinned
@@ -803,7 +786,7 @@ def unigram_logprob(
 
     Returns ``(doc_id, n_tokens, neg_logprob)``.
     """
-    df = _spread_docs(df, id_col)
+    df = spread_scan(df, id_col)
     toks = df.select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("token")
     ).where(F.col("token") != "")
@@ -850,7 +833,7 @@ def corpus_rollup(
 
     Returns ``(*group_cols, gid, n_docs, n_tokens, avg_chars)``.
     """
-    df = _spread_docs(df, text_col)
+    df = spread_scan(df, text_col)
     gcols = list(group_cols)
     return (
         df.rollup(*gcols)
@@ -892,7 +875,7 @@ def chunk_documents(
 
     Returns ``(doc_id, chunk_id, chunk_text, chunk_tokens)``.
     """
-    df = _spread_docs(df, id_col)
+    df = spread_scan(df, id_col)
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be smaller than chunk_tokens")
     stride = int(chunk_tokens) - int(overlap)
@@ -923,7 +906,7 @@ def doc_bigram_pairs(
     per-doc lag window — the measured-fastest pair build (see
     bigram_logprob's docstring for why the in-row variants lose).
     Returns ``(id, prev, token)``, one row per bigram occurrence."""
-    df = _spread_docs(df, id_col)
+    df = spread_scan(df, id_col)
     from pyspark.sql.window import Window
 
     toks = df.select(
@@ -1082,7 +1065,7 @@ def zipf_slope(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     Returns one row: ``(zipf_slope, zipf_intercept, r2, vocab_size)``.
     """
-    df = _spread_docs(df, text_col)
+    df = spread_scan(df, text_col)
     from ffn_polars_spark.core import ranged_cumsum
 
     vocab = (
@@ -1142,7 +1125,7 @@ def doc_entropy(
     Returns ``(id, entropy, n_units, n_distinct)``; empty documents are
     absent (no units to measure).
     """
-    df = _spread_docs(df, id_col)
+    df = spread_scan(df, id_col)
     if unit == "word":
         parts = F.explode(tokens(F.col(text_col)))
     elif unit == "char":
@@ -1251,7 +1234,7 @@ def oov_rate(
     broadcasts the k-row vocabulary. Returns
     ``(by, n_tokens, oov_tokens, oov_rate)``.
     """
-    df = _spread_docs(df, text_col)
+    df = spread_scan(df, text_col)
     toks = df.select(
         F.col(by), F.explode(tokens(F.col(text_col))).alias("token")
     ).where(F.col("token") != "")
@@ -1290,7 +1273,7 @@ def sentence_stats(
     it inline re-ran the sentence+word tokenization per reference.
     Returns ``(id, n_sentences, avg_sentence_words, max_sentence_words)``.
     """
-    df = _spread_docs(df, id_col)
+    df = spread_scan(df, id_col)
     wp_all = F.transform(
         F.split(F.col(text_col), r"[.!?]+"),
         lambda s: F.size(
@@ -1333,7 +1316,7 @@ def strip_markup(
     identically across regex engines (verified against DuckDB's RE2).
     Returns the input columns plus ``out_col``.
     """
-    df = _spread_docs(df, text_col)
+    df = spread_scan(df, text_col)
     c = F.col(text_col)
     c = F.regexp_replace(c, r"<[^>]*>", " ")
     # &amp; decodes LAST so "&amp;lt;" yields the literal "&lt;", not "<"
@@ -1362,7 +1345,7 @@ def luhn_validate(
     Adds ``luhn_valid`` (NULL for candidates with non-digit characters
     or fewer than 2 digits).
     """
-    df = _spread_docs(df, candidate_col)
+    df = spread_scan(df, candidate_col)
     c = F.col(candidate_col)
     n = F.length(c)
     digits_ok = c.rlike("^[0-9]{2,}$")
@@ -1404,7 +1387,7 @@ def doc_perplexity(
     vocabulary side shuffles at vocab cardinality; AQE broadcasts small
     vocabularies), one per-doc aggregate. Empty documents get NULL.
     Returns ``(id, n_tokens, cross_entropy, perplexity)``."""
-    df = _spread_docs(df, id_col)
+    df = spread_scan(df, id_col)
     from ffn_polars_spark.operators.dedup import _pinned
 
     toks = df.select(
@@ -1466,7 +1449,7 @@ def flesch_readability(
     no sentences. Returns ``(id, n_words, n_sentences, n_syllables,
     flesch)``.
     """
-    df = _spread_docs(df, id_col)
+    df = spread_scan(df, id_col)
     text = F.col(text_col)
     words = F.size(F.filter(F.split(text, r"\s+"), lambda t: t != F.lit("")))
     sentences = F.size(
@@ -1521,7 +1504,7 @@ def heaps_law(
     closed-form moment aggregate over the doc-cardinality frame.
     Returns one row: ``(beta, k, n_docs, total_tokens, vocab)``.
     """
-    df = _spread_docs(df, id_col)
+    df = spread_scan(df, id_col)
     from ffn_polars_spark.core import ranged_cumsum
 
     toks = F.filter(tokens(F.col(text_col)), lambda t: t != F.lit(""))

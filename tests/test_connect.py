@@ -14,16 +14,15 @@ otherwise, so the suite is a deployment-environment gate, not a CI one.
 
 Known NON-Connect surfaces, deliberately not smoked here: the _scanmeta
 footer helpers and plan gates read ``df._jdf.queryExecution()`` (classic
-only — they already degrade to None/job-based fallbacks), and the
-``sparkContext``-based parallelism probes (spread_scan /
-effective_scan_parallelism) fall back to pass-through / the
-shuffle-partition conf under Connect (guards added with this module).
-r13 extends the guard set to the last two unguarded sparkContext
-dereferences — similarity's ``_spread_vecs`` (pass-through) and the
-blocked-sequence family's ``_order_blocked`` (shuffle-partition conf,
-tolerant of non-numeric values like "auto") — and smokes one
-representative op per family below. The operators below exercise the
-pure DataFrame/Column path.
+only — they already degrade to None/job-based fallbacks). The cluster's
+slot count is read in two places only: the spread guard
+(``_scanmeta.spread_scan``, used by the dedup, text and similarity
+families) passes through under Connect, and ``core._default_block_count``
+(the blocked-sequence family, ``use_blocked_sequence_plan`` and the
+resample spreads) falls back to the shuffle-partition conf, tolerant of
+non-numeric values like "auto". One representative op per family is
+smoked below. The operators below exercise the pure DataFrame/Column
+path.
 """
 
 from __future__ import annotations
@@ -149,9 +148,9 @@ def test_arrow_kernel_family(cspark):
 
 
 def test_similarity_family_spread_guard(cspark):
-    """r13 guard: _spread_vecs dereferences sparkContext only behind
-    try/except — under Connect it passes through and ann_topk still
-    returns exact top-k."""
+    """spread_scan dereferences sparkContext only behind try/except —
+    under Connect it passes through and ann_topk still returns exact
+    top-k."""
     from ffn_polars_spark.operators.similarity import ann_topk
 
     items = cspark.createDataFrame(

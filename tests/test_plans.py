@@ -747,12 +747,7 @@ def test_spread_scan_noop_on_healthy_scan(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ffn_polars_spark.operators._scanmeta import (
-        effective_scan_parallelism,
-        spread_scan,
-    )
-
-    from ffn_polars_spark.operators._scanmeta import scan_row_groups
+    from ffn_polars_spark.operators._scanmeta import scan_row_groups, spread_scan
 
     target = spark.sparkContext.defaultParallelism
     n = 10_000
@@ -767,15 +762,16 @@ def test_spread_scan_noop_on_healthy_scan(spark, tmp_path):
     pq.write_table(tbl, lumpy, row_group_size=n)  # one row group
     l = spark.read.parquet(lumpy)
     assert scan_row_groups(l) == 1
-    assert effective_scan_parallelism(l) == 1  # regardless of byte splits
-    assert count_exchanges(spread_scan(l, "doc_id")) == 1
+    for key in ("doc_id", None):  # keyed and round-robin
+        # one row group spreads regardless of byte splits
+        assert count_exchanges(spread_scan(l, key)) == 1
 
     # non-scan frames have no footer signal: effective = real partition
     # count, and an already-parallel frame is returned untouched (the
     # at-scale no-op contract)
     wide = spark.range(0, n, numPartitions=target)
-    assert effective_scan_parallelism(wide) == target
-    assert spread_scan(wide, "id") is wide
+    for key in ("id", None):
+        assert spread_scan(wide, key) is wide
 
 
 def test_blocked_keyed_lag_plan_shape(spark, tmp_path):

@@ -144,3 +144,25 @@ def test_resample_returns_hash_exact_n_of_n(spark, krdf):
         idxs = [draw(row["trial"], j, 5) for j in range(n)]
         expect = statistics.mean(RETURNS[i] for i in idxs)
         assert row["mean_r"] == pytest.approx(expect, rel=1e-12)
+
+
+def test_resample_builds_without_spark_context(spark, krdf, monkeypatch):
+    """Both resample spreads size their repartition from the shared slot
+    count, whose shuffle-partition fallback serves a session with no
+    client-side SparkContext (Spark Connect): building must not raise."""
+    from pyspark.sql import SparkSession
+
+    from ffn_polars_spark.operators.resample import resample_returns_hash
+
+    def no_context(self):
+        raise RuntimeError("SparkContext is not available in Spark Connect")
+
+    monkeypatch.setattr(SparkSession, "sparkContext", property(no_context))
+    reps = bootstrap_replicate(krdf, num_trials=3, seed=1, key_col="rid")
+    hashed = resample_returns_hash(
+        krdf, {"n_draws": F.count("*")}, key_col="rid", num_trials=3, seed=1
+    )
+    monkeypatch.undo()
+    want = bootstrap_replicate(krdf, num_trials=3, seed=1, key_col="rid")
+    assert sorted(reps.collect()) == sorted(want.collect())
+    assert [r["n_draws"] for r in hashed.collect()] == [len(RETURNS)] * 3

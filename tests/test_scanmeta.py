@@ -106,41 +106,48 @@ def test_spread_scan_spreads_single_partition_read(spark, tmp_path, monkeypatch)
 
 
 def test_spread_scan_skips_already_repartitioned(spark, tmp_path):
-    from ffn_polars_spark.operators._scanmeta import (
-        effective_scan_parallelism,
-        spread_scan,
-    )
+    from ffn_polars_spark.operators._scanmeta import spread_scan
+    from ffn_polars_spark.plans import count_exchanges
 
     # single-row-group file: the raw scan's effective parallelism is 1
     f = str(tmp_path / "one.parquet")
     pq.write_table(pa.table({"id": list(range(2000))}), f, row_group_size=2000)
     df = spark.read.parquet(f)
     assert scan_row_groups(df) == 1
-    assert effective_scan_parallelism(df) == 1
-    spread = spread_scan(df, "id")
-    assert spread is not df  # raw scan DOES get the spread shuffle
-
-    # ...but a frame the user already repartitioned has REAL parallelism
-    # equal to its shuffle partition count: no redundant second shuffle.
     pre = df.repartition(4, "id")
-    assert effective_scan_parallelism(pre) == 4
-    assert spread_scan(pre, "id") is pre
+    for key in ("id", None):  # keyed and round-robin
+        # raw scan DOES get the spread shuffle
+        assert count_exchanges(spread_scan(df, key)) == 1
+        # ...but a frame the user already repartitioned has REAL
+        # parallelism equal to its shuffle partition count: no redundant
+        # second shuffle.
+        assert spread_scan(pre, key) is pre
+
+
+def test_spread_scan_one_slot_passthrough(spark, tmp_path, monkeypatch):
+    """On a one-slot cluster a shuffle cannot add parallelism: even a
+    one-row-group scan passes through untouched."""
+    from pyspark import SparkContext
+
+    from ffn_polars_spark.operators._scanmeta import spread_scan
+
+    f = str(tmp_path / "one.parquet")
+    pq.write_table(pa.table({"id": list(range(2000))}), f, row_group_size=2000)
+    df = spark.read.parquet(f)
+    assert scan_row_groups(df) == 1
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda self: 1))
+    for key in ("id", None):
+        assert spread_scan(df, key) is df
 
 
 def test_spread_scan_streaming_passthrough(spark):
-    from ffn_polars_spark.operators._scanmeta import (
-        effective_scan_parallelism,
-        spread_scan,
-    )
+    from ffn_polars_spark.operators._scanmeta import spread_scan
 
     sdf = spark.readStream.format("rate").load()
     assert sdf.isStreaming
-    # df.rdd raises on streaming plans — the helpers must not touch it
+    # df.rdd raises on streaming plans — the guard must not touch it
     assert spread_scan(sdf, "value") is sdf
-    assert (
-        effective_scan_parallelism(sdf)
-        == spark.sparkContext.defaultParallelism
-    )
+    assert spread_scan(sdf) is sdf
 
 
 def test_streaming_text_operator_composes(spark):
@@ -306,20 +313,25 @@ class _ConnectLikeFrame:
 @pytest.mark.parametrize(
     "conf_value, want", [("8", 8), ("auto", 200), (None, 200), ("0", 1)]
 )
-def test_effective_scan_parallelism_connect_conf_fallback(conf_value, want):
-    """ADVICE r12: the Connect fallback itself must not raise when the
-    shuffle-partitions conf is non-numeric — degrade to the stock 200."""
-    from ffn_polars_spark.operators._scanmeta import effective_scan_parallelism
-
-    assert effective_scan_parallelism(_ConnectLikeFrame(conf_value)) == want
-
-
-def test_order_blocked_connect_conf_fallback():
-    """_order_blocked's block-count fallback under a Connect-like session
-    (no sparkContext, conf = "auto") must not raise — any positive count
-    is value-identical, so it degrades to the stock 200."""
+def test_order_blocked_connect_conf_fallback(conf_value, want):
+    """The slot-count fallback under a Connect-like session (no
+    sparkContext) must not raise when the shuffle-partitions conf is
+    non-numeric: any positive count is value-identical for the blocked
+    sequence primitives, so it degrades to the stock 200."""
     from ffn_polars_spark.core import _default_block_count
 
-    assert _default_block_count(_ConnectLikeSession("auto")) == 200
-    assert _default_block_count(_ConnectLikeSession("16")) == 16
-    assert _default_block_count(_ConnectLikeSession(None)) == 200
+    assert _default_block_count(_ConnectLikeSession(conf_value)) == want
+
+
+def test_use_blocked_sequence_plan_connect_session():
+    """Past the row threshold the policy reads the slot count; under a
+    Connect-like session that read falls back to the conf, and the key
+    sample (no classic DataFrame to run it on) keeps the window plan."""
+    from ffn_polars_spark.operators._scanmeta import use_blocked_sequence_plan
+
+    assert (
+        use_blocked_sequence_plan(
+            _ConnectLikeFrame("8"), ["k"], rows_hint=10_000_000_000
+        )
+        is False
+    )

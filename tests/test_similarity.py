@@ -722,30 +722,30 @@ def test_cosine_pairs_driver_budget_gate(spark):
     assert not _fits_driver_corpus_budget(empty, "embedding", 10)
 
 
-def test_bare_scan_row_count_footer_path(spark, tmp_path):
+def testbare_scan_row_count_footer_path(spark, tmp_path):
     """Parquet footer counting: exact on bare scans (count-preserving nodes
     only), an upper bound over Filter/Limit with allow_reducing, and None —
     falling back to the probe — for anything that can grow rows or for
     non-parquet sources."""
     from pyspark.sql import functions as F
 
-    from ffn_polars_spark.operators.similarity import _bare_scan_row_count
+    from ffn_polars_spark.operators._scanmeta import bare_scan_row_count
 
     d = str(tmp_path / "t.parquet")
     spark.range(137).selectExpr("id AS vec_id").write.parquet(d)
     df = spark.read.parquet(d)
 
-    assert _bare_scan_row_count(df) == 137
-    assert _bare_scan_row_count(df.select(F.col("vec_id").alias("x"))) == 137
+    assert bare_scan_row_count(df) == 137
+    assert bare_scan_row_count(df.select(F.col("vec_id").alias("x"))) == 137
     # filter/limit: None without allow_reducing, footer UPPER bound with it
     filt = df.where("vec_id < 5")
-    assert _bare_scan_row_count(filt) is None
-    assert _bare_scan_row_count(filt, allow_reducing=True) == 137
-    assert _bare_scan_row_count(df.limit(3), allow_reducing=True) == 137
+    assert bare_scan_row_count(filt) is None
+    assert bare_scan_row_count(filt, allow_reducing=True) == 137
+    assert bare_scan_row_count(df.limit(3), allow_reducing=True) == 137
     # row-increasing / non-file shapes: never answered from footers
-    assert _bare_scan_row_count(df.join(filt, "vec_id"), allow_reducing=True) is None
-    assert _bare_scan_row_count(df.groupBy().count(), allow_reducing=True) is None
-    assert _bare_scan_row_count(spark.range(10), allow_reducing=True) is None
+    assert bare_scan_row_count(df.join(filt, "vec_id"), allow_reducing=True) is None
+    assert bare_scan_row_count(df.groupBy().count(), allow_reducing=True) is None
+    assert bare_scan_row_count(spark.range(10), allow_reducing=True) is None
 
 
 def test_guard_pair_budget_zero_jobs_on_parquet_scans(spark, tmp_path, monkeypatch):
@@ -944,7 +944,7 @@ def test_dedup_embedding_lsh_registry_binding():
 def test_semantic_count_cache_and_tiny_spread_skip(spark, monkeypatch):
     """r13 guard-cost trim: (1) an identical logical plan rebuilt from
     FRESH objects hits the semantic count cache — no second probe job;
-    (2) a provably-tiny pair job (<= 25k) skips the _spread_vecs
+    (2) a provably-tiny pair job (<= 25k) skips the spread_scan
     repartition; a large one still spreads."""
     import pyspark.sql.classic.dataframe as dfmod
 
