@@ -310,17 +310,18 @@ class _ConnectLikeFrame:
         self.sparkSession = _ConnectLikeSession(conf_value)
 
 
-@pytest.mark.parametrize(
-    "conf_value, want", [("8", 8), ("auto", 200), (None, 200), ("0", 1)]
-)
-def test_order_blocked_connect_conf_fallback(conf_value, want):
-    """The slot-count fallback under a Connect-like session (no
-    sparkContext) must not raise when the shuffle-partitions conf is
-    non-numeric: any positive count is value-identical for the blocked
-    sequence primitives, so it degrades to the stock 200."""
+def test_order_blocked_connect_conf_fallback():
+    """_order_blocked's block-count fallback under a Connect-like session
+    (no sparkContext) must not raise when the shuffle-partitions conf is
+    non-numeric ("auto") or unset — any positive count is value-identical,
+    so it degrades to the stock 200."""
     from ffn_polars_spark.core import _default_block_count
 
-    assert _default_block_count(_ConnectLikeSession(conf_value)) == want
+    assert _default_block_count(_ConnectLikeSession("auto")) == 200
+    assert _default_block_count(_ConnectLikeSession("16")) == 16
+    assert _default_block_count(_ConnectLikeSession(None)) == 200
+    assert _default_block_count(_ConnectLikeSession("8")) == 8
+    assert _default_block_count(_ConnectLikeSession("0")) == 1
 
 
 def test_use_blocked_sequence_plan_connect_session():

@@ -722,7 +722,7 @@ def test_cosine_pairs_driver_budget_gate(spark):
     assert not _fits_driver_corpus_budget(empty, "embedding", 10)
 
 
-def testbare_scan_row_count_footer_path(spark, tmp_path):
+def test_bare_scan_row_count_footer_path(spark, tmp_path):
     """Parquet footer counting: exact on bare scans (count-preserving nodes
     only), an upper bound over Filter/Limit with allow_reducing, and None —
     falling back to the probe — for anything that can grow rows or for
