@@ -16,10 +16,15 @@ Shingle hashes are xxhash64 (JVM-side, seeded) by default, or an
 engine-portable 60-bit md5 hash (``hash_fn="md5"``, the oracle-checked
 mode); both are deterministic. MinHash/SimHash signatures run as Arrow
 pandas_udf kernels (operators/_arrow_kernels.py); in md5 mode one fused
-kernel builds the shingles, hashes them and takes the minima. MinHash and
-SimHash candidates both come from one groupBy on the bucket key plus
-in-task pair expansion (:func:`_bucket_pairs_streamed`). Exact dedup stays
-a JVM built-in.
+kernel builds the shingles, hashes them and takes the minima.
+
+The pairwise operators have two plan shapes, each built by one function:
+MinHash and SimHash candidates come from :func:`_bucket_pairs` (one
+groupBy on the bucket key, streamed in-task pair expansion, the optional
+``max_bucket`` valve); n-gram Jaccard, containment and winnowing
+(text.py) score the inverted-index self-join of :func:`_overlap_counts`.
+:func:`_drop_hot_keys` is their one hot-key cut. Exact dedup stays a JVM
+built-in.
 """
 
 from __future__ import annotations
@@ -308,10 +313,23 @@ def dedup_exact(
     )
 
 
+def _tokens_frame(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """(__id, __toks) with the <n-token documents dropped — the shared front
+    of every shingle pipeline. The predicate re-states the split rather than
+    referencing ``__toks`` so it can run against the scan without forcing
+    the token array below the spread exchange (see _doc_shingle_arrays)."""
+    return df.where(
+        F.size(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")) >= F.lit(n)
+    ).select(
+        F.col(id_col).alias("__id"),
+        F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("__toks"),
+    )
+
+
 def _doc_shingles(
     df: DataFrame, text_col: str, id_col: str, n: int
 ) -> DataFrame:
-    """(id, shingle) inverted-index rows, distinct per document.
+    """(__id, __sh) inverted-index rows, distinct per document.
 
     Built by exploding the per-document ``array_distinct`` shingle array —
     dedup happens in-row, so no ``distinct()`` shuffle: the only exchange in
@@ -325,16 +343,65 @@ def _doc_shingles(
     per-output-row re-evaluation family as the winnow/text_quality HOF
     traps; pinned by tests/test_plans.py).
     """
-    split = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    toks = df.where(F.size(split) >= F.lit(n)).select(
-        F.col(id_col).alias("__id"), split.alias("__toks")
-    )
-    return toks.select(
+    return _tokens_frame(df, text_col, id_col, n).select(
         "__id",
         F.explode(
             F.array_distinct(shingles_from_tokens(F.col("__toks"), n))
         ).alias("__sh"),
     )
+
+
+def _drop_hot_keys(df: DataFrame, key: str, cap: Optional[int]) -> DataFrame:
+    """Drop the rows whose ``key`` occurs in more than ``cap`` rows (no-op
+    when ``cap`` is None): the hot-key cut of every self-join on a key. A
+    key in d rows contributes d²/2 join rows, so one stopword shingle or
+    boilerplate fingerprint in 10M documents is 5·10¹³ rows. The hot-key
+    frame is small by construction (the frequency tail), so AQE broadcasts
+    it into the left-anti join."""
+    if cap is None:
+        return df
+    hot = (
+        df.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("__df"))
+        .where(F.col("__df") > int(cap))
+        .select(key)
+    )
+    return df.join(hot, key, "left_anti")
+
+
+def _shingle_index(
+    df: DataFrame, text_col: str, id_col: str, n: int, max_df: Optional[int] = None
+) -> DataFrame:
+    """The pinned (__id, __sh) shingle index of ``df``, after the hot-key
+    cut. Its consumers read it from several branches (sizes, both self-join
+    sides, a join back), which would otherwise each re-run the tokenize and
+    shingle projection; the rows are token-scale STRING shingles, so the
+    pin is heap-gated like scrub_spans' span pin."""
+    sh = _doc_shingles(spread_scan(df, id_col), text_col, id_col, n)
+    return _pinned_if_fits(_drop_hot_keys(sh, "__sh", max_df), _token_scale_est(df))
+
+
+def _overlap_counts(rows: DataFrame, key: str, id_col: str) -> DataFrame:
+    """``(id_a, id_b, __inter, __sza, __szb)`` over a distinct (id, key)
+    frame: the number of keys each id pair (id_a < id_b) shares and both
+    ids' key counts. An equi-join on ``key``, so ids that share no key
+    never meet and the join is bounded by co-occurrence, not |ids|². Pairs
+    sharing nothing are absent. ``rows`` is read three times; pin it."""
+    sizes = rows.groupBy(id_col).agg(F.count(F.lit(1)).alias("__sz"))
+    side = lambda s, c: F.col(f"{s}.{c}")  # noqa: E731
+    inter = (
+        rows.alias("a")
+        .join(
+            rows.alias("b"),
+            (side("a", key) == side("b", key)) & (side("a", id_col) < side("b", id_col)),
+        )
+        .groupBy(side("a", id_col).alias("id_a"), side("b", id_col).alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("__inter"))
+    )
+    sz = lambda name, out: sizes.select(  # noqa: E731
+        F.col(id_col).alias(name), F.col("__sz").alias(out)
+    )
+    return inter.join(sz("id_a", "__sza"), "id_a").join(sz("id_b", "__szb"), "id_b")
 
 
 @register(namespace="eod", kind="df", context="dataframe", alias="ngram_jaccard_pairs")
@@ -359,28 +426,9 @@ def ngram_jaccard_pairs(
     shingle exceeds the cutoff and a slight underestimate otherwise — the
     conservative direction for dedup.
     """
-    # pinned: the index feeds three branches (sizes + both self-join sides);
-    # without it each branch re-runs the tokenize/shingle projection
-    sh = _doc_shingles(spread_scan(df, id_col), text_col, id_col, n)
-    if max_shingle_df is not None:
-        hot = sh.groupBy("__sh").agg(F.count(F.lit(1)).alias("__df")).where(
-            F.col("__df") > max_shingle_df
-        ).select("__sh")
-        # anti-join, not broadcast(hot) blindly: hot-shingle count is small by
-        # construction (corpus-frequency tail), so AQE broadcasts it anyway
-        sh = sh.join(hot, "__sh", "left_anti")
-    # token-scale STRING shingles: heap-gate like scrub_spans' span pin
-    sh = _pinned_if_fits(sh, _token_scale_est(df))
-    sizes = sh.groupBy("__id").agg(F.count(F.lit(1)).alias("__sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.__sh") == F.col("b.__sh")) & (F.col("a.__id") < F.col("b.__id")))
-        .groupBy(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("__inter"))
-    )
+    sh = _shingle_index(df, text_col, id_col, n, max_shingle_df)
     return (
-        inter.join(sizes.withColumnRenamed("__id", "id_a").withColumnRenamed("__sz", "__sza"), "id_a")
-        .join(sizes.withColumnRenamed("__id", "id_b").withColumnRenamed("__sz", "__szb"), "id_b")
+        _overlap_counts(sh, "__sh", "__id")
         .select(
             "id_a",
             "id_b",
@@ -419,11 +467,7 @@ def decontaminate(
     exchange is the per-document hit/size aggregate.  Both branches read the
     same pinned shingle frame, so tokenization runs once.
     """
-    # token-scale STRING shingles: heap-gate like scrub_spans' span pin
-    sh = _pinned_if_fits(
-        _doc_shingles(spread_scan(df, id_col), text_col, id_col, n),
-        _token_scale_est(df),
-    )
+    sh = _shingle_index(df, text_col, id_col, n)
     hold_sh = (
         _doc_shingles(holdout, holdout_text_col or text_col, id_col, n)
         .select("__sh")
@@ -453,19 +497,6 @@ def decontaminate(
                 "contaminated"
             ),
         )
-    )
-
-
-def _tokens_frame(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    """(__id, __toks) with the <n-token documents dropped — the shared front
-    of every shingle pipeline. The predicate re-states the split rather than
-    referencing ``__toks`` so it can run against the scan without forcing
-    the token array below the spread exchange (see _doc_shingle_arrays)."""
-    return df.where(
-        F.size(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")) >= F.lit(n)
-    ).select(
-        F.col(id_col).alias("__id"),
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("__toks"),
     )
 
 
@@ -566,30 +597,48 @@ def _signatures_from_arrays(arrays: DataFrame, coeffs: list, id_col: str) -> Dat
     )
 
 
-def _bucket_pairs_streamed(grouped: DataFrame, ids_col: str, emit) -> DataFrame:
-    """All C(k,2) in-bucket pairs from a sorted array column, generated
-    STREAMINGLY: ``posexplode`` anchors each left element, then a per-row
-    ``slice`` of the array's suffix feeds a second explode. In-row memory
-    stays O(k) (the bucket array plus one suffix slice), where the r13
-    ``flatten(transform(transform(...)))`` built the full k²/2 pair-struct
-    array inside ONE row before exploding it — on a degenerate boilerplate
-    bucket (the skew LSH produces at corpus scale) that single allocation
-    hits the 2 GiB array limit / executor heap long before the pair STREAM
-    itself is a problem. The emitted pair sequence is identical (i < j in
-    array order); only the materialization granularity changes.
+def _bucket_pairs(
+    rows: DataFrame, keys: list, item: Column, emit, max_bucket: Optional[int]
+) -> DataFrame:
+    """Distinct in-bucket pairs: one hash exchange on the bucket ``keys``
+    collects each bucket's ``item`` values, and the pairs are generated
+    inside the reduce task from the sorted list (a < b in sort order).
+    ``emit(a, b)`` maps a left/right item pair to the output columns.
 
-    ``emit(a, b)`` maps the left/right array elements to output columns.
+    ``max_bucket`` drops buckets holding more than that many rows BEFORE
+    the ``collect_list``, by a window count keyed like the groupBy (same
+    hash exchange, guide §2.4). Filtering ``size`` after the aggregate
+    would first materialize a degenerate bucket's whole list in one
+    unspillable aggregation buffer (a 1e9-doc boilerplate bucket is 8+ GB
+    in one allocation); the window's row buffer spills to disk.
+
+    Pairs stream: ``posexplode`` anchors each left element and a per-row
+    ``slice`` of the list's suffix feeds a second explode, so in-row memory
+    stays O(k). A ``flatten(transform(transform(...)))`` pair array would
+    build all k²/2 pairs inside ONE row and hit the 2 GiB array limit on a
+    degenerate bucket long before the pair stream itself is a problem.
     """
-    lefts = grouped.select(
-        F.col(ids_col), F.posexplode(F.col(ids_col)).alias("__i", "__a")
+    if max_bucket is not None:
+        from pyspark.sql.window import Window
+
+        rows = (
+            rows.withColumn("__bn", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+            .where(F.col("__bn") <= int(max_bucket))
+            .drop("__bn")
+        )
+    ids = F.col("__ids")
+    grouped = (
+        rows.groupBy(*keys)
+        .agg(F.collect_list(item).alias("__ids"))
+        .where(F.size(ids) >= 2)
+        .select(F.array_sort(ids).alias("__ids"))
     )
+    lefts = grouped.select(ids, F.posexplode(ids).alias("__i", "__a"))
     pairs = lefts.select(
         F.col("__a"),
-        F.explode(
-            F.slice(F.col(ids_col), F.col("__i") + F.lit(2), F.size(F.col(ids_col)))
-        ).alias("__b"),
+        F.explode(F.slice(ids, F.col("__i") + F.lit(2), F.size(ids))).alias("__b"),
     )
-    return pairs.select(*emit(F.col("__a"), F.col("__b")))
+    return pairs.select(*emit(F.col("__a"), F.col("__b"))).distinct()
 
 
 @register(namespace="eod", kind="df", context="dataframe", alias="dedup_minhash_lsh")
@@ -716,37 +765,15 @@ def dedup_minhash_lsh(
     ).select(
         "__id", F.col("__b.band").alias("__band"), F.col("__b.bh").alias("__bh")
     )
-    # Candidate pairs: one hash exchange on (band, bh) collects each bucket's
-    # ids; pairs are generated inside the reduce task from the id-sorted list
-    # (the dedup_simhash shape). The signature frame has a single reader, so
-    # there is no bucket pin and no construction-time job.
-    if max_bucket is not None:
-        # r14 hot-bucket valve placement: count-and-filter BEFORE the
-        # collect_list, via a window keyed like the groupBy (same hash
-        # exchange — guide §2.4). The r13 shape filtered AFTER the
-        # aggregate, so a degenerate bucket's full id-list still
-        # materialized in one unspillable ObjectHashAggregate buffer
-        # (1e9-doc boilerplate bucket = 8+ GB in one allocation →
-        # executor OOM); the window's row buffer spills to disk, and
-        # hot buckets are dropped before anything collects them.
-        from pyspark.sql.window import Window
-
-        w_b = Window.partitionBy("__band", "__bh")
-        bucket_rows = (
-            bucket_rows.withColumn("__bn", F.count(F.lit(1)).over(w_b))
-            .where(F.col("__bn") <= int(max_bucket))
-            .drop("__bn")
-        )
-    grouped = bucket_rows.groupBy("__band", "__bh").agg(
-        F.collect_list("__id").alias("__ids")
-    )
-    cands = _bucket_pairs_streamed(
-        grouped.where(F.size("__ids") >= 2).select(
-            F.array_sort("__ids").alias("__ids")
-        ),
-        "__ids",
+    # The signature frame has a single reader (the bucket groupBy), so there
+    # is no bucket pin and no construction-time job.
+    cands = _bucket_pairs(
+        bucket_rows,
+        ["__band", "__bh"],
+        F.col("__id"),
         lambda a, b: [a.alias("id_a"), b.alias("id_b")],
-    ).distinct()
+        max_bucket,
+    )
     if verify == "none":
         return cands
 
@@ -832,14 +859,10 @@ def dedup_simhash(
     recall for true near-dups (which agree on most chunks) is ~unchanged.
     Set around 10³–10⁴ for web-scale corpora.
     """
-    # r13: candidates via groupBy + in-bucket pair generation, exactly the
-    # dedup_minhash_lsh restructure (see there for the full rationale): one
-    # hash exchange on (chunk, val) collects each bucket's (id, simhash)
-    # structs, and pairs + hamming are generated inside the reduce task from
-    # the id-sorted list — the same (id_a < id_b, hamming) triples the chunk
-    # self-join emitted. The signature frame now has a SINGLE reader, so the
-    # eager `_pinned(sig)` — one construction-time count job over the full
-    # corpus-signature derivation at every scale — is gone.
+    # Buckets collect (id, simhash) structs, so each pair's hamming comes
+    # from the bucket list itself; sorting the structs sorts by id. The
+    # signature frame has a single reader, so there is no signature pin and
+    # no construction-time job.
     sig = simhash_signatures(spread_scan(df, id_col), n, text_col, id_col, hash_fn)
     chunks = sig.select(
         F.col(id_col).alias("__id"),
@@ -859,39 +882,19 @@ def dedup_simhash(
         ).alias("__c"),
     ).select("__id", "simhash", F.col("__c.chunk").alias("__chunk"), F.col("__c.val").alias("__val"))
 
-    if max_bucket is not None:
-        # r14 hot-bucket valve: count-and-filter BEFORE collect_list on the
-        # same (chunk, val) key — shares the groupBy's exchange, the window
-        # buffer spills where the aggregate buffer cannot (see the
-        # dedup_minhash_lsh group_pairs valve).
-        from pyspark.sql.window import Window
-
-        w_b = Window.partitionBy("__chunk", "__val")
-        chunks = (
-            chunks.withColumn("__bn", F.count(F.lit(1)).over(w_b))
-            .where(F.col("__bn") <= int(max_bucket))
-            .drop("__bn")
-        )
-    grouped = chunks.groupBy("__chunk", "__val").agg(
-        F.collect_list(F.struct(F.col("__id"), F.col("simhash"))).alias("__ds")
-    )
-    return (
-        _bucket_pairs_streamed(
-            grouped.where(F.size("__ds") >= 2).select(
-                F.array_sort("__ds").alias("__ds")
-            ),
-            "__ds",
-            lambda a, b: [
-                a.getField("__id").alias("id_a"),
-                b.getField("__id").alias("id_b"),
-                F.bit_count(
-                    a.getField("simhash").bitwiseXOR(b.getField("simhash"))
-                ).alias("hamming"),
-            ],
-        )
-        .distinct()
-        .where(F.col("hamming") <= max_hamming)
-    )
+    return _bucket_pairs(
+        chunks,
+        ["__chunk", "__val"],
+        F.struct(F.col("__id"), F.col("simhash")),
+        lambda a, b: [
+            a.getField("__id").alias("id_a"),
+            b.getField("__id").alias("id_b"),
+            F.bit_count(
+                a.getField("simhash").bitwiseXOR(b.getField("simhash"))
+            ).alias("hamming"),
+        ],
+        max_bucket,
+    ).where(F.col("hamming") <= max_hamming)
 
 
 @register(namespace="eod", kind="df", context="dataframe", alias="connected_components")
@@ -1062,34 +1065,16 @@ def containment_pairs(
     co-occurrence, not |docs|². Returns ``(id_a, id_b, containment_a,
     containment_b)``.
     """
-    sh = _doc_shingles(spread_scan(df, id_col), text_col, id_col, n)
-    if max_shingle_df is not None:
-        hot = sh.groupBy("__sh").agg(F.count(F.lit(1)).alias("__df")).where(
-            F.col("__df") > max_shingle_df
-        ).select("__sh")
-        sh = sh.join(hot, "__sh", "left_anti")
-    # token-scale STRING shingles: heap-gate like scrub_spans' span pin
-    sh = _pinned_if_fits(sh, _token_scale_est(df))
-    sizes = sh.groupBy("__id").agg(F.count(F.lit(1)).alias("__sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.__sh") == F.col("b.__sh")) & (F.col("a.__id") < F.col("b.__id")))
-        .groupBy(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("__inter"))
-    )
-    out = (
-        inter.join(sizes.withColumnRenamed("__id", "id_a").withColumnRenamed("__sz", "__sza"), "id_a")
-        .join(sizes.withColumnRenamed("__id", "id_b").withColumnRenamed("__sz", "__szb"), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(F.col("__inter") / F.col("__sza").cast("double"), 6).alias(
-                "containment_a"
-            ),
-            F.round(F.col("__inter") / F.col("__szb").cast("double"), 6).alias(
-                "containment_b"
-            ),
-        )
+    sh = _shingle_index(df, text_col, id_col, n, max_shingle_df)
+    out = _overlap_counts(sh, "__sh", "__id").select(
+        "id_a",
+        "id_b",
+        F.round(F.col("__inter") / F.col("__sza").cast("double"), 6).alias(
+            "containment_a"
+        ),
+        F.round(F.col("__inter") / F.col("__szb").cast("double"), 6).alias(
+            "containment_b"
+        ),
     )
     return out.where(
         (F.col("containment_a") >= threshold)
@@ -1131,14 +1116,7 @@ def fuzzy_match_pairs(
         F.col(id_col).alias("__id"),
         F.col(text_col).alias("__txt"),
     )
-    if max_block is not None:
-        hot = (
-            slim.groupBy("__blk")
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .where(F.col("__c") > int(max_block))
-            .select("__blk")
-        )
-        slim = slim.join(hot, "__blk", "left_anti")
+    slim = _drop_hot_keys(slim, "__blk", max_block)
     a, b = slim.alias("a"), slim.alias("b")
     pairs = a.join(
         b,
@@ -1224,11 +1202,7 @@ def shingle_novelty(
     per-shingle minimum). Returns ``(id, n_shingles, n_novel,
     novelty)``; documents with no shingles are absent.
     """
-    # token-scale STRING shingles: heap-gate like scrub_spans' span pin
-    sh = _pinned_if_fits(
-        _doc_shingles(spread_scan(df, id_col), text_col, id_col, n),
-        _token_scale_est(df),
-    )
+    sh = _shingle_index(df, text_col, id_col, n)
     first = sh.groupBy("__sh").agg(F.min("__id").alias("__first"))
     joined = sh.join(first, "__sh")
     agg = joined.groupBy("__id").agg(

@@ -287,47 +287,27 @@ def winnow_overlap_pairs(
     only for small corpora / exact-baseline verification.
     """
     from ffn_polars_spark.operators.dedup import (
+        _drop_hot_keys,
+        _overlap_counts,
         _pinned_if_fits,
         _token_scale_est,
     )
 
     fps = winnow_fingerprints(spread_scan(df, id_col), k, window, text_col, id_col)
-    if max_fp_df is not None:
-        hot = (
-            fps.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .where(F.col("__df") > max_fp_df)
-            .select("fp")
-        )
-        fps = fps.join(hot, "fp", "left_anti")
     # pinned (heap-gated, r12): feeds three branches (sizes + both
     # self-join sides), but the fingerprint rows are token-scale
     # (~1 per window position) — past the 30%-heap cap the branches
     # re-derive instead of GC-thrashing
-    fps = _pinned_if_fits(fps, _token_scale_est(df))
-    sizes = fps.groupBy(id_col).agg(F.count(F.lit(1)).alias("__sz"))
-    a, b = fps.alias("a"), fps.alias("b")
-    pair_id = lambda side: F.col(f"{side}.{id_col}")  # noqa: E731
-    inter = (
-        a.join(b, (F.col("a.fp") == F.col("b.fp")) & (pair_id("a") < pair_id("b")))
-        .groupBy(pair_id("a").alias("id_a"), pair_id("b").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .where(F.col("shared") >= F.lit(min_shared))
-    )
-    sz = lambda name: sizes.select(  # noqa: E731
-        F.col(id_col).alias(name), F.col("__sz").alias(f"__{name}_sz")
-    )
+    fps = _pinned_if_fits(_drop_hot_keys(fps, "fp", max_fp_df), _token_scale_est(df))
     return (
-        inter.join(sz("id_a"), "id_a")
-        .join(sz("id_b"), "id_b")
+        _overlap_counts(fps, "fp", id_col)
+        .where(F.col("__inter") >= F.lit(min_shared))
         .select(
             "id_a",
             "id_b",
-            "shared",
+            F.col("__inter").alias("shared"),
             F.round(
-                F.col("shared")
-                / F.least("__id_a_sz", "__id_b_sz").cast("double"),
-                6,
+                F.col("__inter") / F.least("__sza", "__szb").cast("double"), 6
             ).alias("containment"),
         )
     )

@@ -2140,18 +2140,14 @@ def q_dedup_minhash(spark, sf_dir):
     return dedup_minhash_lsh(docs, threshold=0.5, hash_fn="md5")
 
 
+@query("dedup_simhash", _simhash_oracle_sql(max_hamming=12))
 def q_dedup_simhash(spark, sf_dir):
     """SimHash Hamming-ball pairs with the portable md5 base hash (exact
     SQL oracle; see q_dedup_minhash)."""
     from ffn_polars_spark.operators.dedup import dedup_simhash
 
-    configure(spark)
     docs = read_table(spark, sf_dir, "documents")
     return dedup_simhash(docs, max_hamming=12, hash_fn="md5")
-
-
-QUERY_FNS["dedup_simhash"] = q_dedup_simhash
-ORACLE_SQL["dedup_simhash"] = _simhash_oracle_sql(max_hamming=12)
 
 
 @query(

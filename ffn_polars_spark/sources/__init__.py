@@ -99,6 +99,13 @@ def get_spark(app_name: str = "ffn-polars-spark", cpus: Optional[int] = None) ->
     shuffle partitions sized to the parallelism.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # The worker daemon (PYTHON_DAEMON_MODULE) starts as `python -m`, so its
+    # interpreter must find this package before any task adds a path: the
+    # JVM, launched below, passes its PYTHONPATH on to the daemon.
+    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in map(os.path.abspath, paths):
+        os.environ["PYTHONPATH"] = os.pathsep.join([root] + paths)
     session = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

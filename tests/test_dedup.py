@@ -7,11 +7,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from ffn_polars_spark.operators.dedup import (
+    containment_pairs,
     dedup_exact,
     dedup_minhash_lsh,
     dedup_simhash,
     ngram_jaccard_pairs,
 )
+from ffn_polars_spark.operators.text import winnow_overlap_pairs
 from tests.conftest import jobs_in_group
 
 WORDS = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima".split()
@@ -146,30 +148,44 @@ def test_minhash_band_verify_mode(spark, corpus):
         dedup_minhash_lsh(corpus, verify="bogus")
 
 
-def test_ngram_hot_shingle_cutoff_identity(spark, corpus):
-    # with a cutoff no shingle reaches, results are bit-identical
-    base = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(corpus, threshold=0.6).collect()
-    }
-    cut = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(
-            corpus, threshold=0.6, max_shingle_df=10_000
-        ).collect()
-    }
-    assert base == cut
+# The hot-key cut of the three inverted-index operators: (operator, its cap
+# parameter, its score arguments). winnow caps at 1024 by default.
+HOT_KEY_CUTS = [
+    (ngram_jaccard_pairs, "max_shingle_df", dict(threshold=0.1)),
+    (containment_pairs, "max_shingle_df", dict(threshold=0.1)),
+    (winnow_overlap_pairs, "max_fp_df", dict()),
+]
+HOT_KEY_IDS = [fn.__name__ for fn, _, _ in HOT_KEY_CUTS]
 
 
-def test_ngram_hot_shingle_cutoff_drops_hot(spark):
-    # every doc shares the hot prefix; with the cutoff the shared shingles
-    # are dropped, so the all-pairs blowup from them disappears
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("fn, cap, kw", HOT_KEY_CUTS, ids=HOT_KEY_IDS)
+def test_hot_key_cutoff_identity(spark, corpus, fn, cap, kw):
+    # with a cutoff no key reaches, results are bit-identical to uncapped
+    base = _sorted_rows(fn(corpus, **kw, **{cap: None}))
+    assert base
+    assert _sorted_rows(fn(corpus, **kw, **{cap: 10_000})) == base
+
+
+@pytest.mark.parametrize("fn, cap, kw", HOT_KEY_CUTS, ids=HOT_KEY_IDS)
+def test_hot_key_cutoff_drops_hot(spark, fn, cap, kw):
+    # every doc shares the hot prefix; the tails are seeded random
+    # consonant words, each tail starting with its own letter, and share no
+    # pair's worth of shingles or fingerprints. With the cutoff the shared
+    # keys are dropped, so the all-pairs blowup from them disappears
     hot = "the quick brown fox jumps"
-    docs = [(i, f"{hot} unique{i} word{i} tail{i} end{i}") for i in range(20)]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    with_hot = ngram_jaccard_pairs(df, threshold=0.1).count()
-    without = ngram_jaccard_pairs(df, threshold=0.1, max_shingle_df=5).count()
-    assert with_hot > 0 and without == 0
+    rng = random.Random(5)
+    tail = lambda i: chr(ord("a") + i) + "".join(  # noqa: E731
+        rng.choice("bcdfghjklmnpqrstvwxz") if j % 6 else " " for j in range(1, 30)
+    )
+    df = spark.createDataFrame(
+        [(i, f"{hot} {tail(i)}") for i in range(20)], ["doc_id", "text"]
+    )
+    assert fn(df, **kw, **{cap: None}).count() > 0
+    assert fn(df, **kw, **{cap: 5}).count() == 0
 
 
 def test_release_pins(spark, corpus):

@@ -143,3 +143,40 @@ def test_get_spark_workers_reread_no_unchanged_zip():
     assert [reads for _, reads in first + second] == [0, 0], (first, second)
     # and the second query ran in the first one's worker
     assert [pid for pid, _ in first] == [pid for pid, _ in second], (first, second)
+
+
+# A pandas_udf under get_spark, with the package importable only through
+# the driver's sys.path: not installed, not on PYTHONPATH, not in the cwd.
+FROM_SYS_PATH = r"""
+import sys
+sys.path.insert(0, sys.argv[1])
+from ffn_polars_spark.sources import get_spark
+from pyspark.sql import functions as F
+
+spark = get_spark("pydaemon-path-test", cpus=1)
+spark.sparkContext.setLogLevel("ERROR")
+
+@F.pandas_udf("long")
+def plus_one(x):
+    return x + 1
+
+total = spark.range(10).select(plus_one("id").alias("v")).agg(F.sum("v")).first()[0]
+spark.stop()
+print(f"TOTAL {total}")
+"""
+
+
+def test_get_spark_workers_import_package_from_driver_path(tmp_path):
+    """The worker daemon starts as ``python -m ffn_polars_spark._pydaemon``,
+    before any task can add a path, so get_spark must hand the package's
+    directory to it; without that every Python task fails with an
+    EOFException on the daemon's port."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", FROM_SYS_PATH, ROOT],
+        capture_output=True, text=True, env=env, cwd=str(tmp_path), timeout=600,
+    )
+    lines = [l for l in proc.stdout.splitlines() if l.startswith("TOTAL ")]
+    assert proc.returncode == 0 and lines, proc.stderr[-3000:]
+    assert lines[-1] == "TOTAL 55"
