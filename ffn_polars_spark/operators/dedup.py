@@ -29,7 +29,7 @@ built-in.
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Optional, Sequence
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame

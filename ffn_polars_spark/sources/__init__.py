@@ -8,13 +8,22 @@ helpers for all I/O.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
 import json
 import os
+import shlex
+import shutil
+import subprocess
 import warnings
+from glob import escape, glob
 from typing import Optional, Tuple
 
-from py4j.protocol import Py4JJavaError
+from py4j.protocol import Py4JError, Py4JJavaError
+from pyspark import SparkContext
 from pyspark.errors import AnalysisException
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType
@@ -57,6 +66,30 @@ SINGLE_PARTITION_MAX_ROWS = 175_000
 # Spark's error conditions for a conf that the session refuses to change.
 _UNMODIFIABLE_CONF = ("CANNOT_MODIFY_CONFIG", "CANNOT_MODIFY_STATIC_CONFIG")
 
+# Where ``get_spark`` records how its driver JVM used the class archive:
+# ``load <path>``, ``dump <path>`` or ``off: <reason>``. The JVM loads
+# ~17,000 classes for a session's first job, 1,228 of them from the JDK's
+# own archive; a dynamic AppCDS archive of the rest, written when the first
+# session's JVM exits, nearly halves the start-up (docs/tuning.md, "Driver
+# JVM class archive").
+JVM_CLASS_ARCHIVE_CONF = "spark.ffn.jvmClassArchive"
+# The first bytes of a dynamic CDS archive (JDK 13+); a JVM killed while
+# writing one leaves them zero.
+_DYNAMIC_ARCHIVE_MAGIC = (0xF00BABA8).to_bytes(4, "little")
+# CDS warnings go to the JVM's stdout, which is this process's stdout.
+_CDS_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
+# Writing the archive takes ~15 s of the exiting JVM on 4 vCPUs.
+_DUMP_WAIT_S = 120
+# Environment that spark-submit adds to the driver's classpath. The JVM
+# archives no class from a non-empty classpath directory (it exits with
+# code 2 instead), and an archive taken with one classpath is refused
+# under another.
+_CLASSPATH_ENV = ("SPARK_CLASSPATH", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+_DRIVER_SUBMIT_ARGS = (
+    "--driver-java-options", "--driver-class-path",
+    "spark.driver.extraJavaOptions", "spark.driver.extraClassPath",
+)
+
 
 def configure(spark: SparkSession) -> SparkSession:
     """Runtime confs the engine depends on; safe to apply to an externally
@@ -90,6 +123,130 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _archive_key(java: str, spark_home: str, conf_dir: str) -> str:
+    """Hash of what the archive was taken from: the java binary, Spark's
+    jars and the classpath's conf directory. A changed install gets a new
+    archive, where the JVM would refuse the old one at every start."""
+    java = os.path.realpath(java)
+    h = hashlib.sha256(
+        f"{java} {os.stat(java).st_mtime_ns} {os.path.realpath(spark_home)} {conf_dir}".encode()
+    )
+    for e in sorted(os.scandir(os.path.join(spark_home, "jars")), key=lambda e: e.name):
+        st = e.stat()
+        h.update(f"\0{e.name} {st.st_size} {st.st_mtime_ns}".encode())
+    return h.hexdigest()[:16]
+
+
+def _beside(archive: str, suffix: str) -> str:
+    """A file next to ``archive``: ``<key>.size``, the size it was written
+    with, or ``<key>.<pid>.part``, where the JVM of process ``pid`` writes
+    it before that process renames it."""
+    return archive[: -len(".jsa")] + suffix
+
+
+def _whole_archive(archive: str) -> bool:
+    """Whether ``archive`` is whole: it starts with the archive magic and
+    has the size recorded beside it when it was moved into place. A JVM
+    ignores an archive with a zeroed header, but one that maps a truncated
+    archive dies of SIGBUS."""
+    try:
+        with open(archive, "rb") as f:
+            magic = f.read(4)
+            size = f.seek(0, os.SEEK_END)
+        with open(_beside(archive, ".size")) as f:
+            return magic == _DYNAMIC_ARCHIVE_MAGIC and int(f.read()) == size
+    except (OSError, ValueError):
+        return False
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _class_archive(spark_home: str) -> Tuple[str, Optional[str], Optional[str]]:
+    """How a driver JVM about to launch uses the class archive:
+    ``(record, driver Java options, SPARK_CONF_DIR for the launch)``, the
+    last two None when it runs without one (``JVM_CLASS_ARCHIVE_CONF``)."""
+    if os.name != "posix":
+        return "off: not a POSIX system", None, None
+    submit = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
+    for arg in _DRIVER_SUBMIT_ARGS:
+        if arg in submit:
+            return f"off: PYSPARK_SUBMIT_ARGS sets {arg}", None, None
+    for var in _CLASSPATH_ENV:
+        if os.environ.get(var):
+            return f"off: {var} adds to the driver classpath", None, None
+    # spark-submit puts the conf directory first on the classpath; Spark
+    # reads none of the *.template files a distribution ships there, so an
+    # empty directory stands in for it at the launch
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    if os.path.isdir(conf_dir) and not all(n.endswith(".template") for n in os.listdir(conf_dir)):
+        return f"off: {conf_dir} holds more than templates (a classpath directory)", None, None
+    java_home = os.environ.get("JAVA_HOME")  # spark-class's choice of java
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    if not java or not os.path.isfile(java):
+        return "off: no java binary found", None, None
+    cache = os.environ.get("XDG_CACHE_HOME", "")
+    if not os.path.isabs(cache):
+        cache = os.path.join(os.path.expanduser("~"), ".cache")
+    cache = os.path.join(cache, "ffn_polars_spark", "jvm")
+    empty_conf = os.path.join(cache, "conf")
+    try:
+        os.makedirs(empty_conf, exist_ok=True)
+        archive = os.path.join(cache, _archive_key(java, spark_home, empty_conf) + ".jsa")
+        if _whole_archive(archive):
+            # quoted: spark-submit splits the options as a shell would
+            option = shlex.quote(f"-XX:SharedArchiveFile={archive}")
+            return f"load {archive}", f"{_CDS_QUIET} {option}", empty_conf
+        for part in glob(escape(_beside(archive, "")) + ".*.part"):
+            pid = int(part.split(".")[-2])
+            if _alive(pid):
+                return f"off: process {pid} is writing {archive}", None, None
+            os.remove(part)
+        if not os.access(cache, os.W_OK):
+            return f"off: {cache} is not writable", None, None
+    except (OSError, ValueError) as e:
+        return f"off: {e}", None, None
+    option = shlex.quote(f"-XX:ArchiveClassesAtExit={_beside(archive, f'.{os.getpid()}.part')}")
+    return f"dump {archive}", f"{_CDS_QUIET} {option}", empty_conf
+
+
+def _stop_jvm_at_exit(proc: subprocess.Popen, archive: Optional[str]) -> None:
+    """Close the driver JVM's stdin, on which it exits, and wait for it, so
+    that it does not outlive this process. The archive its exit wrote is
+    then moved to ``archive``, and only whole, so that no JVM maps one
+    still being written."""
+    if proc.poll() is None:
+        sc = SparkContext._active_spark_context
+        # stopped first, its accumulator server does not report the JVM's exit
+        if sc is not None:
+            with contextlib.suppress(Py4JError):
+                sc.stop()
+        try:
+            proc.stdin.close()
+            proc.wait(timeout=_DUMP_WAIT_S)
+        except (OSError, subprocess.TimeoutExpired):
+            return
+    if archive is None:
+        return
+    part = _beside(archive, f".{os.getpid()}.part")
+    try:
+        if proc.returncode != 0:
+            os.remove(part)
+            return
+        with open(_beside(archive, ".size"), "w") as f:
+            f.write(str(os.path.getsize(part)))
+        os.replace(part, archive)
+    except OSError:
+        pass
+
+
 def get_spark(app_name: str = "ffn-polars-spark", cpus: Optional[int] = None) -> SparkSession:
     """Local session tuned for the test/bench environment.
 
@@ -97,6 +254,12 @@ def get_spark(app_name: str = "ffn-polars-spark", cpus: Optional[int] = None) ->
     matter at scale are set the same way here: AQE on (runtime re-plan, skew
     join handling), Arrow on (every pandas_udf boundary is Arrow-batched),
     shuffle partitions sized to the parallelism.
+
+    A driver JVM that this call launches loads its classes from a class
+    archive in ``$XDG_CACHE_HOME/ffn_polars_spark/jvm``, which the first
+    such JVM writes as it exits; ``spark.ffn.jvmClassArchive`` records how
+    (``JVM_CLASS_ARCHIVE_CONF``). The JVM exits, and is waited for, when
+    this process does.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     # The worker daemon (PYTHON_DAEMON_MODULE) starts as `python -m`, so its
@@ -106,7 +269,17 @@ def get_spark(app_name: str = "ffn-polars-spark", cpus: Optional[int] = None) ->
     paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
     if root not in map(os.path.abspath, paths):
         os.environ["PYTHONPATH"] = os.pathsep.join([root] + paths)
-    session = (
+    gateway = SparkContext._gateway
+    launch = gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+    if launch:
+        record, java_options, conf_dir = _class_archive(_find_spark_home())
+    else:
+        # an earlier call of this process launched the JVM, or someone else did
+        record = (gateway.__dict__.get("ffn_class_archive") if gateway else None) or (
+            "off: the driver JVM was already running"
+        )
+        java_options = conf_dir = None
+    builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
@@ -136,8 +309,25 @@ def get_spark(app_name: str = "ffn-polars-spark", cpus: Optional[int] = None) ->
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Python tasks stop re-reading pyspark.zip (PYTHON_DAEMON_MODULE).
         .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
-        .getOrCreate()
+        .config(JVM_CLASS_ARCHIVE_CONF, record)
     )
+    if java_options:
+        builder = builder.config("spark.driver.extraJavaOptions", java_options)
+    saved_conf_dir = os.environ.get("SPARK_CONF_DIR")
+    if conf_dir:
+        os.environ["SPARK_CONF_DIR"] = conf_dir
+    try:
+        session = builder.getOrCreate()
+    finally:
+        if saved_conf_dir is None:
+            os.environ.pop("SPARK_CONF_DIR", None)
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved_conf_dir
+    if launch:
+        gateway = SparkContext._gateway
+        gateway.ffn_class_archive = record
+        dump = record[len("dump "):] if record.startswith("dump ") else None
+        atexit.register(_stop_jvm_at_exit, gateway.proc, dump)
     return configure(session)
 
 

@@ -40,10 +40,12 @@ FULL_BATTERY = os.environ.get("FFN_FULL_BATTERY", "") not in ("", "0")
 
 # One representative per invariant family: eod identities, risk, rounding
 # determinism, blocked-sequence plans, asof, dedup graph + pairs, sketch,
-# rolling, sessionization, streaming-stateful parity, text-pipeline walk.
+# rolling, sessionization, streaming-stateful parity, text-pipeline walk;
+# and the moments panel, whose pinned example is the constant-returns case.
 PROPERTY_SMOKE = {
     "test_price_index_of_returns_is_rebase",
     "test_drawdown_nonpositive_and_max_dd_is_min",
+    "test_jensen_kelly_moments_property",
     "test_round6_ops_are_partition_invariant",
     "test_blocked_lag_parity_property",
     "test_asof_join_parity_property",

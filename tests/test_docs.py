@@ -42,3 +42,30 @@ def test_docs_pages_exist():
         "mkdocs.yml",
     ):
         assert os.path.exists(os.path.join(ROOT, page)), page
+
+
+def test_public_function_type_hints_resolve():
+    """Every public function's annotations name what its module imports:
+    ``typing.get_type_hints`` (documentation tools, IDEs) raises NameError
+    on one that does not. Imports the package only; no Spark session."""
+    import importlib
+    import inspect
+    import pkgutil
+    import typing
+
+    import ffn_polars_spark
+
+    checked, broken = 0, []
+    for info in pkgutil.walk_packages(ffn_polars_spark.__path__, "ffn_polars_spark."):
+        if any(part.startswith("_") for part in info.name.split(".")):
+            continue
+        module = importlib.import_module(info.name)
+        for name, fn in vars(module).items():
+            if name.startswith("_") or not inspect.isfunction(fn) or fn.__module__ != info.name:
+                continue
+            checked += 1
+            try:
+                typing.get_type_hints(fn)
+            except Exception as e:
+                broken.append(f"{info.name}.{name}: {e!r}")
+    assert checked > 100 and not broken, (checked, broken)

@@ -3483,11 +3483,16 @@ def test_calibration_ece_binning_property(spark, rows, bins):
         max_size=25,
     )
 )
+# constant returns: numpy's two-pass variance of [0.05] * 3 is 7.2e-35,
+# Spark's is exactly 0, and kelly_fraction is NULL
+@example(rows=[(0.05, None)] * 3)
 @SET
 def test_jensen_kelly_moments_property(spark, rows):
     """jensen_alpha's beta/alpha/treynor and kelly_fraction match numpy
     population/sample moments under NULL-pair alignment; constant
-    benchmarks and zero variances yield the documented NULLs."""
+    benchmarks and zero variances yield the documented NULLs. Equal values
+    have zero variance, which the reference takes as exactly 0 (numpy's
+    two-pass variance can leave a rounding residue)."""
     import numpy as np
 
     import ffn_polars_spark as ffn
@@ -3500,7 +3505,7 @@ def test_jensen_kelly_moments_property(spark, rows):
     if ok:
         ra = np.array([a for a, _ in ok])
         bb = np.array([c for _, c in ok])
-        vb = float(np.var(bb))  # population
+        vb = 0.0 if len(set(bb)) == 1 else float(np.var(bb))  # population
         if vb > 0:
             beta = float(((ra - ra.mean()) * (bb - bb.mean())).mean()) / vb
             assert got["beta"] == pytest.approx(beta, rel=1e-9, abs=1e-12)
@@ -3524,7 +3529,7 @@ def test_jensen_kelly_moments_property(spark, rows):
     kf = df.agg(ffn.eod.kelly_fraction("r").alias("k")).collect()[0]
     rs = [a for a, _ in rows if a is not None]
     if len(rs) >= 2:
-        var = float(np.var(np.array(rs), ddof=1))
+        var = 0.0 if len(set(rs)) == 1 else float(np.var(np.array(rs), ddof=1))
         if var > 0:
             assert kf["k"] == pytest.approx(
                 float(np.mean(rs)) / var, rel=1e-9, abs=1e-12
