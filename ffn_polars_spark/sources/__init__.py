@@ -67,18 +67,22 @@ SINGLE_PARTITION_MAX_ROWS = 175_000
 _UNMODIFIABLE_CONF = ("CANNOT_MODIFY_CONFIG", "CANNOT_MODIFY_STATIC_CONFIG")
 
 # Where ``get_spark`` records how its driver JVM used the class archive:
-# ``load <path>``, ``dump <path>`` or ``off: <reason>``. The JVM loads
-# ~17,000 classes for a session's first job, 1,228 of them from the JDK's
-# own archive; a dynamic AppCDS archive of the rest, written when the first
-# session's JVM exits, nearly halves the start-up (docs/tuning.md, "Driver
-# JVM class archive").
+# ``load <path>`` (the JVM mapped it), ``dump <path>`` (this process writes
+# it when it exits) or ``off: <reason>``. The JVM loads ~17,000 classes for
+# a session's first job, 1,228 of them from the JDK's own archive; a
+# dynamic AppCDS archive of the rest nearly halves the start-up
+# (docs/tuning.md, "Driver JVM class archive").
 JVM_CLASS_ARCHIVE_CONF = "spark.ffn.jvmClassArchive"
 # The first bytes of a dynamic CDS archive (JDK 13+); a JVM killed while
 # writing one leaves them zero.
 _DYNAMIC_ARCHIVE_MAGIC = (0xF00BABA8).to_bytes(4, "little")
 # CDS warnings go to the JVM's stdout, which is this process's stdout.
 _CDS_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
-# Writing the archive takes ~15 s of the exiting JVM on 4 vCPUs.
+# The program that loads a session's classes in the JVM that archives them,
+# and the main class that ends the session JVM's options.
+_LOAD_CLASSES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "LoadClasses.java")
+_SPARK_SUBMIT_MAIN = "org.apache.spark.deploy.SparkSubmit"
+# Loading the classes and writing the archive take that JVM 20-45 s on 4 vCPUs.
 _DUMP_WAIT_S = 120
 # Environment that spark-submit adds to the driver's classpath. The JVM
 # archives no class from a non-empty classpath directory (it exits with
@@ -139,8 +143,9 @@ def _archive_key(java: str, spark_home: str, conf_dir: str) -> str:
 
 def _beside(archive: str, suffix: str) -> str:
     """A file next to ``archive``: ``<key>.size``, the size it was written
-    with, or ``<key>.<pid>.part``, where the JVM of process ``pid`` writes
-    it before that process renames it."""
+    with, or a file of process ``pid``, which writes the archive:
+    ``<key>.<pid>.classlist``, the classes its driver JVM loaded, and
+    ``<key>.<pid>.part``, the archive before ``pid`` renames it."""
     return archive[: -len(".jsa")] + suffix
 
 
@@ -172,9 +177,13 @@ def _alive(pid: int) -> bool:
 def _class_archive(spark_home: str) -> Tuple[str, Optional[str], Optional[str]]:
     """How a driver JVM about to launch uses the class archive:
     ``(record, driver Java options, SPARK_CONF_DIR for the launch)``, the
-    last two None when it runs without one (``JVM_CLASS_ARCHIVE_CONF``)."""
-    if os.name != "posix":
-        return "off: not a POSIX system", None, None
+    last two None when it runs without one (``JVM_CLASS_ARCHIVE_CONF``).
+    Without an archive, the JVM lists the classes it loads, and this
+    process writes the archive from the list when it exits
+    (``_stop_jvm_at_exit``): a JVM that writes one as it exits itself
+    starts ~4 s slower."""
+    if not os.path.exists("/proc/self/maps"):
+        return "off: no /proc to show the files the JVM maps", None, None
     submit = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
     for arg in _DRIVER_SUBMIT_ARGS:
         if arg in submit:
@@ -204,24 +213,95 @@ def _class_archive(spark_home: str) -> Tuple[str, Optional[str], Optional[str]]:
             # quoted: spark-submit splits the options as a shell would
             option = shlex.quote(f"-XX:SharedArchiveFile={archive}")
             return f"load {archive}", f"{_CDS_QUIET} {option}", empty_conf
-        for part in glob(escape(_beside(archive, "")) + ".*.part"):
-            pid = int(part.split(".")[-2])
+        for mine in glob(escape(_beside(archive, "")) + ".*.*"):
+            pid = int(mine.split(".")[-2])
             if _alive(pid):
                 return f"off: process {pid} is writing {archive}", None, None
-            os.remove(part)
+            os.remove(mine)
         if not os.access(cache, os.W_OK):
             return f"off: {cache} is not writable", None, None
     except (OSError, ValueError) as e:
         return f"off: {e}", None, None
-    option = shlex.quote(f"-XX:ArchiveClassesAtExit={_beside(archive, f'.{os.getpid()}.part')}")
+    javac = os.path.join(os.path.dirname(os.path.realpath(java)), "javac")
+    if not os.path.isfile(javac):
+        return f"off: no {javac} to run {os.path.basename(_LOAD_CLASSES)}", None, None
+    option = shlex.quote(f"-XX:DumpLoadedClassList={_beside(archive, f'.{os.getpid()}.classlist')}")
     return f"dump {archive}", f"{_CDS_QUIET} {option}", empty_conf
 
 
-def _stop_jvm_at_exit(proc: subprocess.Popen, archive: Optional[str]) -> None:
+def _launched_class_archive(record: str, pid: int) -> Tuple[str, Optional[list]]:
+    """The record of the driver JVM ``pid`` once it has started, from the
+    files it maps, and the command that writes the archive when the record
+    is ``dump``. The JVM may refuse an archive silently (``-Xshare:off`` in
+    ``JAVA_TOOL_OPTIONS``, say), and writes one only on top of the JDK's."""
+    mode, _, archive = record.partition(" ")
+    if mode not in ("load", "dump"):
+        return record, None
+    classlist = _beside(archive, f".{os.getpid()}.classlist")
+    try:
+        with open(f"/proc/{pid}/maps") as f:  # the path, spaces and all, is the 6th field
+            mapped = {ln.split(None, 5)[5] for ln in f.read().splitlines() if ln.endswith(".jsa")}
+        with open(f"/proc/{pid}/cmdline") as f:
+            argv = f.read().split("\0")[:-1]
+        main = argv.index(_SPARK_SUBMIT_MAIN)
+    except (OSError, ValueError) as e:
+        record = f"off: {e}"
+    else:
+        if mode == "load":
+            return (record if archive in mapped else f"off: the JVM did not map {archive}"), None
+        if mapped:
+            # the session JVM's own options, so that its next launch accepts the archive
+            options = [a for a in argv[1:main] if not a.startswith("-XX:DumpLoadedClassList=")]
+            part = _beside(archive, f".{os.getpid()}.part")
+            return record, [argv[0], *options, f"-XX:ArchiveClassesAtExit={part}", _LOAD_CLASSES, classlist]
+        record = "off: the JVM maps no CDS archive to write one on top of"
+    with contextlib.suppress(OSError):
+        os.remove(classlist)
+    return record, None
+
+
+def _write_class_archive(archive: str, writer: list) -> None:
+    """Run ``writer``, a JVM that loads the classes of this process's
+    session and archives them as it exits, then move the archive into place,
+    and only whole: a JVM that maps a truncated archive dies of SIGBUS. The
+    archives of other keys (an install since changed) go with it."""
+    mine = [_beside(archive, f".{os.getpid()}.{s}") for s in ("classlist", "part")]
+    try:
+        done = subprocess.run(
+            writer, stdin=subprocess.DEVNULL, stdout=subprocess.DEVNULL,
+            stderr=subprocess.DEVNULL, timeout=_DUMP_WAIT_S,
+        ).returncode == 0
+        if done:
+            with open(_beside(archive, ".size"), "w") as f:
+                f.write(str(os.path.getsize(mine[1])))
+            os.replace(mine[1], archive)
+            _drop_other_archives(archive)
+    except (OSError, subprocess.TimeoutExpired):
+        pass
+    for path in mine:
+        with contextlib.suppress(OSError):
+            os.remove(path)
+
+
+def _drop_other_archives(archive: str) -> None:
+    """Remove the cache directory's other archives and the files beside
+    them, but not the files of a live writer."""
+    cache, name = os.path.split(archive)
+    keep = {name, os.path.basename(_beside(archive, ".size"))}
+    for entry in os.scandir(cache):
+        parts = entry.name.split(".")
+        if entry.name in keep or parts[-1] not in ("jsa", "size", "classlist", "part"):
+            continue
+        if len(parts) == 3 and parts[1].isdigit() and _alive(int(parts[1])):
+            continue
+        with contextlib.suppress(OSError):
+            os.remove(entry.path)
+
+
+def _stop_jvm_at_exit(proc: subprocess.Popen, record: str, writer: Optional[list]) -> None:
     """Close the driver JVM's stdin, on which it exits, and wait for it, so
-    that it does not outlive this process. The archive its exit wrote is
-    then moved to ``archive``, and only whole, so that no JVM maps one
-    still being written."""
+    that it does not outlive this process; then, for a ``dump`` record,
+    write the archive from the classes the JVM loaded."""
     if proc.poll() is None:
         sc = SparkContext._active_spark_context
         # stopped first, its accumulator server does not report the JVM's exit
@@ -233,18 +313,8 @@ def _stop_jvm_at_exit(proc: subprocess.Popen, archive: Optional[str]) -> None:
             proc.wait(timeout=_DUMP_WAIT_S)
         except (OSError, subprocess.TimeoutExpired):
             return
-    if archive is None:
-        return
-    part = _beside(archive, f".{os.getpid()}.part")
-    try:
-        if proc.returncode != 0:
-            os.remove(part)
-            return
-        with open(_beside(archive, ".size"), "w") as f:
-            f.write(str(os.path.getsize(part)))
-        os.replace(part, archive)
-    except OSError:
-        pass
+    if writer is not None:
+        _write_class_archive(record[len("dump "):], writer)
 
 
 def get_spark(app_name: str = "ffn-polars-spark", cpus: Optional[int] = None) -> SparkSession:
@@ -257,9 +327,9 @@ def get_spark(app_name: str = "ffn-polars-spark", cpus: Optional[int] = None) ->
 
     A driver JVM that this call launches loads its classes from a class
     archive in ``$XDG_CACHE_HOME/ffn_polars_spark/jvm``, which the first
-    such JVM writes as it exits; ``spark.ffn.jvmClassArchive`` records how
-    (``JVM_CLASS_ARCHIVE_CONF``). The JVM exits, and is waited for, when
-    this process does.
+    process without one writes as it exits; ``spark.ffn.jvmClassArchive``
+    records how (``JVM_CLASS_ARCHIVE_CONF``). The JVM exits, and is waited
+    for, when this process does.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     # The worker daemon (PYTHON_DAEMON_MODULE) starts as `python -m`, so its
@@ -309,7 +379,6 @@ def get_spark(app_name: str = "ffn-polars-spark", cpus: Optional[int] = None) ->
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Python tasks stop re-reading pyspark.zip (PYTHON_DAEMON_MODULE).
         .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
-        .config(JVM_CLASS_ARCHIVE_CONF, record)
     )
     if java_options:
         builder = builder.config("spark.driver.extraJavaOptions", java_options)
@@ -325,9 +394,10 @@ def get_spark(app_name: str = "ffn-polars-spark", cpus: Optional[int] = None) ->
             os.environ["SPARK_CONF_DIR"] = saved_conf_dir
     if launch:
         gateway = SparkContext._gateway
+        record, writer = _launched_class_archive(record, gateway.proc.pid)
         gateway.ffn_class_archive = record
-        dump = record[len("dump "):] if record.startswith("dump ") else None
-        atexit.register(_stop_jvm_at_exit, gateway.proc, dump)
+        atexit.register(_stop_jvm_at_exit, gateway.proc, record, writer)
+    session.conf.set(JVM_CLASS_ARCHIVE_CONF, record)
     return configure(session)
 
 

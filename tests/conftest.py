@@ -11,6 +11,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 TESTDATA = os.environ.get("FFN_TESTDATA_DIR", "/root/testdata")
 
 
+def pytest_configure(config):
+    """The driver JVM class archive of the suite's sessions, subprocesses
+    included, lives in pytest's cache directory, not in the user's
+    (``sources.JVM_CLASS_ARCHIVE_CONF``); ``--cache-clear`` resets it."""
+    cache = os.path.join(str(config.rootpath), ".pytest_cache", "d", "xdg-cache")
+    os.makedirs(cache, exist_ok=True)
+    os.environ["XDG_CACHE_HOME"] = cache
+
+
 @pytest.fixture(scope="session")
 def spark():
     from ffn_polars_spark.sources import get_spark

@@ -1,11 +1,12 @@
 """The driver JVM's class archive.
 
 ``get_spark`` starts its driver JVM from a dynamic AppCDS archive that the
-first session's JVM writes as it exits (``sources.JVM_CLASS_ARCHIVE_CONF``).
-Every check runs sessions in subprocesses with their own
-``XDG_CACHE_HOME``: the archive is chosen before the JVM launches and
-written after it exits. In every case the JVM writes nothing to stdout,
-and it has exited when its Python process has.
+first process without one writes as it exits, from the classes its
+session's JVM loaded (``sources.JVM_CLASS_ARCHIVE_CONF``). Every check runs
+sessions in subprocesses with their own ``XDG_CACHE_HOME``: the archive is
+chosen before the JVM launches and written after it exits. In every case
+the JVM writes nothing to stdout, and it has exited when its Python
+process has.
 """
 
 import json
@@ -43,11 +44,11 @@ pytestmark = pytest.mark.skipif(
 )
 
 
-def session(cache, conf_dir=None):
+def session(cache, conf_dir=None, **environ):
     """One get_spark session in a subprocess, which returns without
     stopping it: ``(record, the archive paths its JVM mapped, the value of
     spark.ffn.confDirProbe)``."""
-    env = dict(os.environ, XDG_CACHE_HOME=str(cache), SPARK_DRIVER_MEMORY="1g")
+    env = dict(os.environ, XDG_CACHE_HOME=str(cache), SPARK_DRIVER_MEMORY="1g", **environ)
     env.pop("SPARK_CONF_DIR", None)
     if conf_dir is not None:
         env["SPARK_CONF_DIR"] = str(conf_dir)
@@ -65,22 +66,49 @@ def session(cache, conf_dir=None):
     return out["record"], out["mapped"], out["probe"]
 
 
+# An archive of another key, as an earlier install left it, and the part
+# file of a writer that died.
+STALE = ("0123456789abcdef.jsa", "0123456789abcdef.size", "0123456789abcdef.999999999.part")
+
+
 @pytest.fixture(scope="module")
 def written(tmp_path_factory):
-    """A cache whose archive the first session wrote: ``(cache, archive)``.
-    Its path holds a space, which the driver Java options must quote."""
+    """A cache whose archive the first session wrote, in a directory that
+    held the ``STALE`` files before: ``(cache, archive, files of the
+    directory after the first session)``. The path holds a space, which the
+    driver Java options must quote."""
     cache = tmp_path_factory.mktemp("jvm cache")
+    jvm = cache / "ffn_polars_spark" / "jvm"
+    jvm.mkdir(parents=True)
+    for name in STALE:
+        (jvm / name).write_bytes(b"stale")
     mode, archive = session(cache)[0].split(" ", 1)
     assert mode == "dump"
     assert _whole_archive(archive), "the first session wrote no archive"
-    return cache, archive
+    return cache, archive, sorted(os.listdir(jvm))
 
 
 def test_second_session_maps_the_archive(written):
-    cache, archive = written
+    cache, archive, _ = written
     record, mapped, _ = session(cache)
     assert record == f"load {archive}"
     assert archive in mapped
+
+
+def test_new_archive_replaces_stale_ones(written):
+    """A changed install (a new key) leaves one archive, not two."""
+    _, archive, files = written
+    key = os.path.basename(archive)[: -len(".jsa")]
+    assert files == sorted(["conf", f"{key}.jsa", f"{key}.size"])
+
+
+def test_refused_archive_is_recorded_off(written):
+    """The record names what the JVM did: under ``-Xshare:off`` it maps no
+    archive, and the session says so and still works."""
+    cache, archive, _ = written
+    record, mapped, _ = session(cache, JAVA_TOOL_OPTIONS="-Xshare:off")
+    assert record == f"off: the JVM did not map {archive}"
+    assert not mapped
 
 
 @pytest.mark.parametrize("damage", ["zeroed-header", "truncated"])
@@ -89,7 +117,7 @@ def test_damaged_archive_is_written_again(written, damage):
     archive; a truncated one would crash it with SIGBUS. Either is written
     again, and the session works. The archive is damaged in place (its key
     covers the cache's path) and whole again after the test."""
-    cache, archive = written
+    cache, archive, _ = written
     os.chmod(archive, 0o644)
     size = os.path.getsize(archive)
     with open(archive, "r+b") as f:
