@@ -570,9 +570,10 @@ def imbalance_bars(
     close, volume, imbalance, n_ticks)``.
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql import Window
     from pyspark.sql import types as T
+
+    from ffn_polars_spark.operators.recursive import _scan_by_key
 
     by = list(by or [])
     w = Window.partitionBy(*by).orderBy(ts_col)
@@ -590,13 +591,9 @@ def imbalance_bars(
         F.col(volume_col).cast("double").alias("__v"),
         (sign * F.col(volume_col).cast("double")).alias("__flow"),
     )
-    schema = T.StructType(
-        [staged.schema[c] for c in staged.columns]
-        + [T.StructField("__bar", T.LongType())]
-    )
     thr = float(threshold)
 
-    def assign(pdf: pd.DataFrame) -> pd.DataFrame:
+    def assign(pdf):
         # Vectorized reset walk: cum-since-boundary == P - P[boundary]
         # (prefix sums), so each bar's close is the first index whose
         # |P - base| reaches the threshold — found with blocked numpy
@@ -611,7 +608,6 @@ def imbalance_bars(
         # last ulp. The operator and its SQL oracle share this prefix-sum
         # formulation so they agree with each other; quantize flows before
         # calling if replaying a sequential-walk implementation matters.
-        pdf = pdf.sort_values("__ts", kind="mergesort")
         P = np.cumsum(pdf["__flow"].to_numpy(dtype=np.float64))
         n = len(P)
         bars = np.empty(n, dtype=np.int64)
@@ -630,12 +626,9 @@ def imbalance_bars(
             bar += 1
             base = P[j]
             start = j + 1
-        out = pdf.copy()
-        out["__bar"] = bars
-        return out
+        return (bars,)
 
-    grouped = staged.groupBy(*by) if by else staged.groupBy(F.lit(1).alias("__g"))
-    assigned = grouped.applyInPandas(assign, schema)
+    assigned = _scan_by_key(staged, by, "__ts", [("__bar", T.LongType())], assign)
     g = assigned.groupBy(*(by + ["__bar"]))
     return g.agg(
         F.min("__ts").alias("bar_start_ts"),

@@ -9,7 +9,11 @@ A recurrence ``y_t = α·x_t + (1-α)·y_{t-1}`` is inherently sequential in
 is scanned once inside an Arrow-batched ``applyInPandas`` worker while
 thousands of keys process in parallel. That is the right 100 TB shape for
 per-instrument/per-user series (bounded rows per key, unbounded keys) — the
-same contract as the stateful streaming operators. The closed-form
+same contract as the stateful streaming operators. Every such scan here and
+in functions/tick_bars.imbalance_bars runs through one driver,
+:func:`_scan_by_key`, which owns the grouping, the per-key sort, the output
+schema and the ``applyInPandas`` call; an operator supplies only its
+recurrence, an inline loop over arrays. The closed-form
 ``Σ α(1-α)^(t-i)x_i`` rewrite would stay JVM-side but needs ``(1-α)^(-i)``
 powers that overflow past a few thousand rows; the sequential scan is exact
 at any length.
@@ -27,7 +31,7 @@ The loop is a per-key constant, not a scale term (keys distribute).
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import Callable, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -36,6 +40,34 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ffn_polars_spark.registry import register
+
+
+def _scan_by_key(
+    df: DataFrame,
+    by: List[str],
+    order_col: str,
+    fields: List[Tuple[str, T.DataType]],
+    scan: Callable[[pd.DataFrame], Sequence[np.ndarray]],
+) -> DataFrame:
+    """The one per-key ``applyInPandas`` driver of the sequential scans.
+
+    Each key's rows (every row in one group when ``by`` is empty) are
+    mergesorted by ``order_col`` and handed to ``scan``, which returns one
+    array per ``(name, type)`` in ``fields``; the result is the input
+    columns plus those new columns. ``scan`` owns only the recurrence,
+    written as an inline loop over arrays.
+    """
+    schema = T.StructType(
+        list(df.schema.fields) + [T.StructField(n, t) for n, t in fields]
+    )
+    names = [n for n, _ in fields]
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(order_col, kind="mergesort")
+        return pdf.assign(**dict(zip(names, scan(pdf))))
+
+    grouped = df.groupBy(*by) if by else df.groupBy(F.lit(1).alias("__g"))
+    return grouped.applyInPandas(run, schema)
 
 
 @register(namespace="eod", kind="df", context="dataframe", alias="ewma")
@@ -64,25 +96,17 @@ def ewma(
     by = list(by or [])
     a = float(alpha)
     b = 1.0 - a
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out, T.DoubleType())]
-    )
 
-    def scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_by, kind="mergesort")
+    def scan(pdf: pd.DataFrame):
         x = pdf[value_col].to_numpy(dtype=np.float64)
         y = np.empty_like(x)
         prev = np.nan
         for i in range(len(x)):
             prev = x[i] if i == 0 else a * x[i] + b * prev
             y[i] = prev
-        res = pdf.copy()
-        res[out] = y
-        return res
+        return (y,)
 
-    grouped = df.groupBy(*by) if by else df.groupBy(F.lit(1).alias("__g"))
-    result = grouped.applyInPandas(scan, schema)
-    return result
+    return _scan_by_key(df, by, order_by, [(out, T.DoubleType())], scan)
 
 
 @register(namespace="eod", kind="df", context="dataframe", alias="ewm_volatility")
@@ -103,24 +127,17 @@ def ewm_volatility(
     by = list(by or [])
     a = float(alpha)
     b = 1.0 - a
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out, T.DoubleType())]
-    )
 
-    def scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_by, kind="mergesort")
+    def scan(pdf: pd.DataFrame):
         x = pdf[value_col].to_numpy(dtype=np.float64)
         y = np.empty_like(x)
         var = np.nan
         for i in range(len(x)):
             var = x[i] * x[i] if i == 0 else b * var + a * (x[i] * x[i])
             y[i] = np.sqrt(var)
-        res = pdf.copy()
-        res[out] = y
-        return res
+        return (y,)
 
-    grouped = df.groupBy(*by) if by else df.groupBy(F.lit(1).alias("__g"))
-    return grouped.applyInPandas(scan, schema)
+    return _scan_by_key(df, by, order_by, [(out, T.DoubleType())], scan)
 
 
 @register(namespace="eod", kind="df", context="dataframe", alias="macd")
@@ -149,13 +166,8 @@ def macd(
     a_f, a_s = 2.0 / (fast + 1.0), 2.0 / (slow + 1.0)
     a_g = 2.0 / (signal + 1.0)
     b_f, b_s, b_g = 1.0 - a_f, 1.0 - a_s, 1.0 - a_g
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(c, T.DoubleType()) for c in out_cols]
-    )
 
-    def scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_by, kind="mergesort")
+    def scan(pdf: pd.DataFrame):
         x = pdf[value_col].to_numpy(dtype=np.float64)
         m = np.empty_like(x)
         s = np.empty_like(x)
@@ -170,13 +182,11 @@ def macd(
                 sig = a_g * (ef - es) + b_g * sig
             m[i] = ef - es
             s[i] = sig
-        res = pdf.copy()
-        res["macd"], res["macd_signal"] = m, s
-        res["macd_hist"] = m - s
-        return res
+        return m, s, m - s
 
-    grouped = df.groupBy(*by) if by else df.groupBy(F.lit(1).alias("__g"))
-    return grouped.applyInPandas(scan, schema)
+    return _scan_by_key(
+        df, by, order_by, [(c, T.DoubleType()) for c in out_cols], scan
+    )
 
 
 @register(namespace="eod", kind="df", context="dataframe", alias="rsi")
@@ -203,12 +213,8 @@ def rsi(
     by = list(by or [])
     a = 1.0 / float(n)
     b = 1.0 - a
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out, T.DoubleType())]
-    )
 
-    def scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_by, kind="mergesort")
+    def scan(pdf: pd.DataFrame):
         x = pdf[value_col].to_numpy(dtype=np.float64)
         y = np.full_like(x, np.nan)
         ag = al = np.nan
@@ -225,12 +231,9 @@ def rsi(
                 y[i] = 100.0 - 100.0 / (1.0 + ag / al)
             elif ag > 0.0:
                 y[i] = 100.0
-        res = pdf.copy()
-        res[out] = y
-        return res
+        return (y,)
 
-    grouped = df.groupBy(*by) if by else df.groupBy(F.lit(1).alias("__g"))
-    return grouped.applyInPandas(scan, schema)
+    return _scan_by_key(df, by, order_by, [(out, T.DoubleType())], scan)
 
 
 @register(namespace="eod", kind="df", context="dataframe", alias="cusum_changepoints")
@@ -268,19 +271,9 @@ def cusum_changepoints(
         F.col(ts_col).alias("__ts"),
         F.col(value_col).cast("double").alias("__x"),
     )
-    schema = T.StructType(
-        [staged.schema[c] for c in staged.columns]
-        + [
-            T.StructField("__sp", T.DoubleType()),
-            T.StructField("__sn", T.DoubleType()),
-            T.StructField("__alarm", T.BooleanType()),
-            T.StructField("__seg", T.LongType()),
-        ]
-    )
     tgt, thr, dft = float(target), float(threshold), float(drift)
 
-    def walk(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__ts", kind="mergesort")
+    def walk(pdf: pd.DataFrame):
         x = pdf["__x"].to_numpy(dtype=np.float64)
         n = len(x)
         sp = np.empty(n); sn = np.empty(n)
@@ -295,12 +288,15 @@ def cusum_changepoints(
             if a:
                 cp, cn = 0.0, 0.0
                 s += 1
-        out = pdf.copy()
-        out["__sp"], out["__sn"], out["__alarm"], out["__seg"] = sp, sn, alarm, seg
-        return out
+        return sp, sn, alarm, seg
 
-    grouped = staged.groupBy(*by) if by else staged.groupBy(F.lit(1).alias("__g"))
-    assigned = grouped.applyInPandas(walk, schema)
+    fields = [
+        ("__sp", T.DoubleType()),
+        ("__sn", T.DoubleType()),
+        ("__alarm", T.BooleanType()),
+        ("__seg", T.LongType()),
+    ]
+    assigned = _scan_by_key(staged, by, "__ts", fields, walk)
     return assigned.select(
         *by,
         F.col("__ts").alias(ts_col),
@@ -335,14 +331,9 @@ def debounce(
     """
     by = list(by or [])
     staged = df.select(*by, F.col(ts_col).alias("__ts"))
-    schema = T.StructType(
-        [staged.schema[c] for c in staged.columns]
-        + [T.StructField("__kept", T.BooleanType())]
-    )
     cd = int(cooldown)
 
-    def walk(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__ts", kind="mergesort")
+    def walk(pdf: pd.DataFrame):
         ts = pdf["__ts"].to_numpy()
         kept = np.empty(len(ts), dtype=bool)
         last = None
@@ -352,12 +343,9 @@ def debounce(
                 last = t
             else:
                 kept[i] = False
-        out = pdf.copy()
-        out["__kept"] = kept
-        return out
+        return (kept,)
 
-    grouped = staged.groupBy(*by) if by else staged.groupBy(F.lit(1).alias("__g"))
-    assigned = grouped.applyInPandas(walk, schema)
+    assigned = _scan_by_key(staged, by, "__ts", [("__kept", T.BooleanType())], walk)
     return assigned.select(
         *by, F.col("__ts").alias(ts_col), F.col("__kept").alias("kept")
     )

@@ -3,18 +3,27 @@
 The reference is batch-only (SURVEY.md §2.12), but a Spark-native engine gets
 streaming nearly for free: the same declarative aggregations run under
 ``readStream`` with watermarks bounding state. This module provides streaming
-twins of the core tick operators:
+twins of the core tick, corpus and monitoring operators:
 
 * :func:`read_tick_stream` — file-source stream over a parquet tick directory.
-* :func:`streaming_time_bars` — watermarked windowed OHLCV bars.
-* :func:`streaming_vwap` — watermarked windowed VWAP.
-* :func:`streaming_session_stats` — ``F.session_window`` gap sessionization
-  (the streaming twin of operators/sessions.py).
-* :func:`stateful_running_vwap` — ``applyInPandasWithState`` custom stateful
-  operator (running per-key VWAP across micro-batches) — the pattern for
-  operators whose state outlives any window.
 * :func:`run_available_now` — drain a bounded stream to a memory sink and
   return the result table (test/driver harness).
+* Watermarked windowed aggregations: :func:`streaming_time_bars` (OHLCV
+  bars), :func:`streaming_vwap`, :func:`streaming_histogram`, and
+  :func:`streaming_session_stats` (``F.session_window`` gap sessions, the
+  streaming twin of operators/sessions.py).
+* Stream-stream joins: :func:`streaming_interval_join` and
+  :func:`streaming_preagg_interval_join` (bars first, then the join).
+* :func:`streaming_dedup_exact` (first-seen dedup within the watermark) and
+  :func:`streaming_topk` (complete-mode heavy hitters).
+* Per-key state that outlives any window, via ``applyInPandasWithState``:
+  :func:`stateful_running_vwap`, :func:`stateful_psi` and
+  :func:`stateful_kmv_distinct` fold order-free;
+  :func:`stateful_realized_volatility`, :func:`stateful_zscore_alerts` and
+  :func:`stateful_cusum` fold each batch in event-time order. All six run
+  through one driver, ``_fold_by_key``, which owns the state schema, the
+  TTL eviction, the in-batch ordering and the output row; an operator
+  supplies only its fold.
 
 Design notes for scale: every aggregation keys on (window x partition key) so
 state is bounded by ``delay_threshold``; append output mode + watermark is
@@ -24,7 +33,7 @@ the production path (complete mode exists only for the bounded test drain).
 from __future__ import annotations
 
 import uuid
-from typing import Iterable, List, Optional
+from typing import Callable, Iterable, List, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -44,13 +53,21 @@ from ffn_polars_spark.sources import footer_schema
 
 __all__ = [
     "read_tick_stream",
+    "run_available_now",
     "streaming_time_bars",
     "streaming_vwap",
+    "streaming_histogram",
     "streaming_session_stats",
+    "streaming_interval_join",
+    "streaming_preagg_interval_join",
     "streaming_dedup_exact",
+    "streaming_topk",
     "stateful_running_vwap",
     "stateful_realized_volatility",
-    "run_available_now",
+    "stateful_zscore_alerts",
+    "stateful_cusum",
+    "stateful_psi",
+    "stateful_kmv_distinct",
 ]
 
 
@@ -366,18 +383,72 @@ def streaming_dedup_exact(
     return fp.dropDuplicatesWithinWatermark(["fingerprint"])
 
 
-_VWAP_STATE_SCHEMA = StructType(
-    [StructField("pv", DoubleType()), StructField("v", DoubleType())]
-)
+def _fold_by_key(
+    stream: DataFrame,
+    key: str,
+    state: list,
+    init: tuple,
+    fold: Callable[[tuple, pd.DataFrame], tuple],
+    emit: Callable[[tuple], tuple],
+    result: list,
+    idle_timeout_ms: Optional[int],
+    ts: Optional[str] = None,
+) -> DataFrame:
+    """The one ``applyInPandasWithState`` driver of the stateful operators.
 
+    Per key and micro-batch: restore the carry (``init`` for a new key),
+    ``carry = fold(carry, pdf)`` over the batch's non-empty rows, store it,
+    and emit one update-mode row ``(key, *emit(carry))``. ``state`` and
+    ``result`` are ``(name, type)`` lists: the carry's fields, and the
+    output fields after the string ``key`` column.
 
-def _vwap_output_schema(key: str) -> StructType:
-    return StructType(
-        [
-            StructField(key, StringType()),
-            StructField("cum_volume", DoubleType()),
-            StructField("running_vwap", DoubleType()),
-        ]
+    With ``ts`` the fold is sequential: the batch's Arrow chunks are
+    concatenated, stable-sorted by ``ts`` once and folded once. A large
+    group arrives as several chunks in arbitrary order, and sorting each
+    chunk on its own would fold across a seam where chunk 2 holds earlier
+    timestamps than chunk 1. Without ``ts`` the fold is order-free and
+    runs chunk by chunk.
+
+    ``idle_timeout_ms`` is the processing-time TTL: a key idle longer is
+    evicted and restarts from ``init``; ``None`` keeps state for the
+    query's lifetime.
+    """
+    names = [n for n, _ in result]
+
+    def update(key_tuple, pdf_iter: Iterable[pd.DataFrame], gs: GroupState):
+        if idle_timeout_ms is not None and gs.hasTimedOut:
+            gs.remove()
+            return
+        carry = gs.get if gs.exists else init
+        if ts is None:
+            for pdf in pdf_iter:
+                if len(pdf):
+                    carry = fold(carry, pdf)
+        else:
+            chunks = [pdf for pdf in pdf_iter if len(pdf)]
+            if chunks:
+                batch = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
+                carry = fold(carry, batch.sort_values(ts, kind="stable"))
+        gs.update(carry)
+        if idle_timeout_ms is not None:
+            gs.setTimeoutDuration(idle_timeout_ms)
+        row = {key: [key_tuple[0]]}
+        row.update((n, [v]) for n, v in zip(names, emit(carry)))
+        yield pd.DataFrame(row)
+
+    return stream.groupBy(key).applyInPandasWithState(
+        update,
+        outputStructType=StructType(
+            [StructField(key, StringType())]
+            + [StructField(n, t) for n, t in result]
+        ),
+        stateStructType=StructType([StructField(n, t) for n, t in state]),
+        outputMode="update",
+        timeoutConf=(
+            GroupStateTimeout.ProcessingTimeTimeout
+            if idle_timeout_ms is not None
+            else GroupStateTimeout.NoTimeout
+        ),
     )
 
 
@@ -404,38 +475,21 @@ def stateful_running_vwap(
     event, turning lifetime state into a bounded working set.
     """
 
-    def update(key_tuple, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        if idle_timeout_ms is not None and state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            pv, v = state.get
-        else:
-            pv, v = 0.0, 0.0
-        for pdf in pdf_iter:
-            pv += float((pdf[price] * pdf[volume]).sum())
-            v += float(pdf[volume].sum())
-        state.update((pv, v))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(
-            {
-                key: [key_tuple[0]],
-                "cum_volume": [v],
-                "running_vwap": [pv / v if v else None],
-            }
-        )
+    def fold(carry, pdf):
+        pv, v = carry
+        pv += float((pdf[price] * pdf[volume]).sum())
+        v += float(pdf[volume].sum())
+        return pv, v
 
-    return stream.groupBy(key).applyInPandasWithState(
-        update,
-        outputStructType=_vwap_output_schema(key),
-        stateStructType=_VWAP_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _fold_by_key(
+        stream,
+        key,
+        state=[("pv", DoubleType()), ("v", DoubleType())],
+        init=(0.0, 0.0),
+        fold=fold,
+        emit=lambda c: (c[1], c[0] / c[1] if c[1] else None),
+        result=[("cum_volume", DoubleType()), ("running_vwap", DoubleType())],
+        idle_timeout_ms=idle_timeout_ms,
     )
 
 
@@ -465,26 +519,6 @@ def run_available_now(result: DataFrame, output_mode: str = "complete") -> DataF
         spark.catalog.dropTempView(name)
 
 
-_RVOL_STATE_SCHEMA = StructType(
-    [
-        StructField("last_ts", LongType()),
-        StructField("last_log_price", DoubleType()),
-        StructField("sum_sq", DoubleType()),
-        StructField("n_returns", LongType()),
-    ]
-)
-
-
-def _rvol_output_schema(key: str) -> StructType:
-    return StructType(
-        [
-            StructField(key, StringType()),
-            StructField("n_returns", LongType()),
-            StructField("realized_volatility", DoubleType()),
-        ]
-    )
-
-
 def stateful_realized_volatility(
     stream: DataFrame,
     key: str,
@@ -510,54 +544,35 @@ def stateful_realized_volatility(
     """
     import math
 
-    def update(key_tuple, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        if idle_timeout_ms is not None and state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            last_ts, last_lp, sum_sq, n = state.get
-        else:
-            last_ts, last_lp, sum_sq, n = None, None, 0.0, 0
-        # Concatenate BEFORE sorting: a large group arrives as several
-        # Arrow chunks in arbitrary order, and sorting each chunk
-        # separately would chain returns across a seam where chunk 2
-        # holds timestamps earlier than chunk 1 (the in-batch analogue of
-        # the cross-batch delivery contract; r12 hardening).
-        chunks = [pdf for pdf in pdf_iter if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-            batch = batch.sort_values(ts, kind="stable")
-            for t_val, p_val in zip(batch[ts], batch[price]):
-                lp = math.log(float(p_val))
-                if last_lp is not None:
-                    r = lp - last_lp
-                    sum_sq += r * r
-                    n += 1
-                last_ts, last_lp = int(t_val), lp
-        state.update((last_ts, last_lp, sum_sq, n))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
+    def fold(carry, batch):
+        last_ts, last_lp, sum_sq, n = carry
+        for t_val, p_val in zip(batch[ts], batch[price]):
+            lp = math.log(float(p_val))
+            if last_lp is not None:
+                r = lp - last_lp
+                sum_sq += r * r
+                n += 1
+            last_ts, last_lp = int(t_val), lp
+        return last_ts, last_lp, sum_sq, n
+
+    return _fold_by_key(
+        stream,
+        key,
+        state=[
+            ("last_ts", LongType()),
+            ("last_log_price", DoubleType()),
+            ("sum_sq", DoubleType()),
+            ("n_returns", LongType()),
+        ],
+        init=(None, None, 0.0, 0),
+        fold=fold,
         # no returns yet -> NULL, matching the batch twin's contract
         # (calc_realized_volatility: sum over an empty return set is NULL,
         # not 0 — property-battery find, r12)
-        yield pd.DataFrame(
-            {
-                key: [key_tuple[0]],
-                "n_returns": [n],
-                "realized_volatility": [math.sqrt(sum_sq) if n else None],
-            }
-        )
-
-    return stream.groupBy(key).applyInPandasWithState(
-        update,
-        outputStructType=_rvol_output_schema(key),
-        stateStructType=_RVOL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+        emit=lambda c: (c[3], math.sqrt(c[2]) if c[3] else None),
+        result=[("n_returns", LongType()), ("realized_volatility", DoubleType())],
+        idle_timeout_ms=idle_timeout_ms,
+        ts=ts,
     )
 
 
@@ -581,26 +596,6 @@ def streaming_topk(
     keys = list(key_cols)
     agg = stream.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
     return agg.orderBy(F.desc("n"), *[F.asc(c) for c in keys]).limit(int(k))
-
-
-_ZSCORE_STATE_SCHEMA = StructType(
-    [
-        StructField("n", LongType()),
-        StructField("sum_x", DoubleType()),
-        StructField("sum_sq", DoubleType()),
-        StructField("n_alerts", LongType()),
-    ]
-)
-
-
-def _zscore_output_schema(key: str) -> StructType:
-    return StructType(
-        [
-            StructField(key, StringType()),
-            StructField("n_events", LongType()),
-            StructField("n_alerts", LongType()),
-        ]
-    )
 
 
 def stateful_zscore_alerts(
@@ -631,96 +626,47 @@ def stateful_zscore_alerts(
     mode.
     """
 
-    def update(key_tuple, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        if idle_timeout_ms is not None and state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            n, sum_x, sum_sq, n_alerts = state.get
-        else:
-            n, sum_x, sum_sq, n_alerts = 0, 0.0, 0.0, 0
-        import numpy as np
+    import numpy as np
 
-        # concat-then-sort: see stateful_realized_volatility — per-chunk
-        # sorting breaks the in-batch time order when a group spans
-        # multiple Arrow chunks (r12 hardening)
-        chunks = [pdf for pdf in pdf_iter if len(pdf)]
-        for pdf in (
-            [pd.concat(chunks) if len(chunks) > 1 else chunks[0]]
-            if chunks
-            else []
-        ):
-            pdf = pdf.sort_values(ts, kind="stable")
-            x = pdf[value].to_numpy(dtype=np.float64)
-            if not len(x):
-                continue
-            cs = sum_x + np.cumsum(x)
-            csq = sum_sq + np.cumsum(x * x)
-            prior_n = n + np.arange(len(x), dtype=np.int64)
-            prior_sum = np.concatenate(([sum_x], cs[:-1]))
-            prior_sq = np.concatenate(([sum_sq], csq[:-1]))
-            ok = prior_n >= int(min_obs)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                m = np.where(prior_n > 0, prior_sum / prior_n, np.nan)
-                var = np.where(
-                    prior_n > 1,
-                    (prior_sq - prior_sum * prior_sum / np.where(prior_n > 0, prior_n, 1))
-                    / np.where(prior_n > 1, prior_n - 1, 1),
-                    np.nan,
-                )
-                alert = (
-                    ok
-                    & (var > 0)
-                    & (np.abs(x - m) > float(threshold) * np.sqrt(var))
-                )
-            n_alerts += int(alert.sum())
-            n += len(x)
-            sum_x = float(cs[-1])
-            sum_sq = float(csq[-1])
-        state.update((n, sum_x, sum_sq, n_alerts))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(
-            {
-                key: [key_tuple[0]],
-                "n_events": [n],
-                "n_alerts": [n_alerts],
-            }
-        )
+    def fold(carry, batch):
+        n, sum_x, sum_sq, n_alerts = carry
+        x = batch[value].to_numpy(dtype=np.float64)
+        cs = sum_x + np.cumsum(x)
+        csq = sum_sq + np.cumsum(x * x)
+        prior_n = n + np.arange(len(x), dtype=np.int64)
+        prior_sum = np.concatenate(([sum_x], cs[:-1]))
+        prior_sq = np.concatenate(([sum_sq], csq[:-1]))
+        ok = prior_n >= int(min_obs)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            m = np.where(prior_n > 0, prior_sum / prior_n, np.nan)
+            var = np.where(
+                prior_n > 1,
+                (prior_sq - prior_sum * prior_sum / np.where(prior_n > 0, prior_n, 1))
+                / np.where(prior_n > 1, prior_n - 1, 1),
+                np.nan,
+            )
+            alert = (
+                ok
+                & (var > 0)
+                & (np.abs(x - m) > float(threshold) * np.sqrt(var))
+            )
+        return n + len(x), float(cs[-1]), float(csq[-1]), n_alerts + int(alert.sum())
 
-    return stream.groupBy(key).applyInPandasWithState(
-        update,
-        outputStructType=_zscore_output_schema(key),
-        stateStructType=_ZSCORE_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
-
-
-_CUSUM_STATE_SCHEMA = StructType(
-    [
-        StructField("sp", DoubleType()),
-        StructField("sn", DoubleType()),
-        StructField("seg", LongType()),
-        StructField("n", LongType()),
-        StructField("n_alarms", LongType()),
-    ]
-)
-
-
-def _cusum_output_schema(key: str) -> StructType:
-    return StructType(
-        [
-            StructField(key, StringType()),
-            StructField("n_events", LongType()),
-            StructField("n_alarms", LongType()),
-            StructField("cusum_pos", DoubleType()),
-            StructField("cusum_neg", DoubleType()),
-        ]
+    return _fold_by_key(
+        stream,
+        key,
+        state=[
+            ("n", LongType()),
+            ("sum_x", DoubleType()),
+            ("sum_sq", DoubleType()),
+            ("n_alerts", LongType()),
+        ],
+        init=(0, 0.0, 0.0, 0),
+        fold=fold,
+        emit=lambda c: (c[0], c[3]),
+        result=[("n_events", LongType()), ("n_alerts", LongType())],
+        idle_timeout_ms=idle_timeout_ms,
+        ts=ts,
     )
 
 
@@ -748,79 +694,44 @@ def stateful_cusum(
     for open-ended key domains. Emits ``(key, n_events, n_alarms,
     cusum_pos, cusum_neg)`` in update mode.
     """
+    import numpy as np
+
     tgt, thr, dft = float(target), float(threshold), float(drift)
 
-    def update(key_tuple, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        if idle_timeout_ms is not None and state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            sp, sn, seg, n, n_alarms = state.get
-        else:
-            sp, sn, seg, n, n_alarms = 0.0, 0.0, 1, 0, 0
-        import numpy as np
+    def fold(carry, batch):
+        sp, sn, seg, n, n_alarms = carry
+        x = batch[value].to_numpy(dtype=np.float64)
+        for xi in x:
+            e = xi - tgt
+            sp = max(0.0, sp + e - dft)
+            sn = max(0.0, sn - e - dft)
+            if sp > thr or sn > thr:
+                n_alarms += 1
+                seg += 1
+                sp, sn = 0.0, 0.0
+        return sp, sn, seg, n + len(x), n_alarms
 
-        # concat-then-sort: see stateful_realized_volatility — per-chunk
-        # sorting breaks the in-batch time order when a group spans
-        # multiple Arrow chunks (r12 hardening)
-        chunks = [pdf for pdf in pdf_iter if len(pdf)]
-        for pdf in (
-            [pd.concat(chunks) if len(chunks) > 1 else chunks[0]]
-            if chunks
-            else []
-        ):
-            pdf = pdf.sort_values(ts, kind="stable")
-            x = pdf[value].to_numpy(dtype=np.float64)
-            for xi in x:
-                e = xi - tgt
-                sp = max(0.0, sp + e - dft)
-                sn = max(0.0, sn - e - dft)
-                if sp > thr or sn > thr:
-                    n_alarms += 1
-                    seg += 1
-                    sp, sn = 0.0, 0.0
-            n += len(x)
-        state.update((sp, sn, seg, n, n_alarms))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(
-            {
-                key: [key_tuple[0]],
-                "n_events": [n],
-                "n_alarms": [n_alarms],
-                "cusum_pos": [sp],
-                "cusum_neg": [sn],
-            }
-        )
-
-    return stream.groupBy(key).applyInPandasWithState(
-        update,
-        outputStructType=_cusum_output_schema(key),
-        stateStructType=_CUSUM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
-
-
-_PSI_STATE_SCHEMA = StructType(
-    [
-        StructField("counts", ArrayType(LongType())),
-        StructField("n", LongType()),
-    ]
-)
-
-
-def _psi_output_schema(key: str) -> StructType:
-    return StructType(
-        [
-            StructField(key, StringType()),
-            StructField("n_events", LongType()),
-            StructField("psi", DoubleType()),
-        ]
+    return _fold_by_key(
+        stream,
+        key,
+        state=[
+            ("sp", DoubleType()),
+            ("sn", DoubleType()),
+            ("seg", LongType()),
+            ("n", LongType()),
+            ("n_alarms", LongType()),
+        ],
+        init=(0.0, 0.0, 1, 0, 0),
+        fold=fold,
+        emit=lambda c: (c[3], c[4], c[0], c[1]),
+        result=[
+            ("n_events", LongType()),
+            ("n_alarms", LongType()),
+            ("cusum_pos", DoubleType()),
+            ("cusum_neg", DoubleType()),
+        ],
+        idle_timeout_ms=idle_timeout_ms,
+        ts=ts,
     )
 
 
@@ -853,66 +764,32 @@ def stateful_psi(
     nbins = len(ref)
     flo, fw, feps = float(lo), float(width), float(eps)
 
-    def update(key_tuple, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        if idle_timeout_ms is not None and state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            counts_list, n = state.get
-            counts = np.asarray(counts_list, dtype=np.int64)
-        else:
-            counts, n = np.zeros(nbins, dtype=np.int64), 0
-        for pdf in pdf_iter:
-            x = pdf[value].to_numpy(dtype=np.float64)
-            if not len(x):
-                continue
-            b = np.clip(
-                np.floor((x - flo) / fw).astype(np.int64), 0, nbins - 1
-            )
-            counts += np.bincount(b, minlength=nbins)
-            n += len(x)
-        state.update(([int(c) for c in counts], n))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
+    def fold(carry, pdf):
+        counts, n = carry
+        x = pdf[value].to_numpy(dtype=np.float64)
+        b = np.clip(np.floor((x - flo) / fw).astype(np.int64), 0, nbins - 1)
+        counts = np.asarray(counts, dtype=np.int64) + np.bincount(b, minlength=nbins)
+        return [int(c) for c in counts], n + len(x)
+
+    def emit(carry):
+        counts, n = carry
         if n > 0:
-            p_obs = np.maximum(counts / float(n), feps)
+            p_obs = np.maximum(np.asarray(counts, dtype=np.int64) / float(n), feps)
             p_ref = np.maximum(ref, feps)
             psi = float(np.sum((p_obs - p_ref) * np.log(p_obs / p_ref)))
         else:
             psi = 0.0
-        yield pd.DataFrame(
-            {key: [key_tuple[0]], "n_events": [n], "psi": [psi]}
-        )
+        return n, psi
 
-    return stream.groupBy(key).applyInPandasWithState(
-        update,
-        outputStructType=_psi_output_schema(key),
-        stateStructType=_PSI_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
-
-
-_KMV_STATE_SCHEMA = StructType(
-    [
-        StructField("ks", ArrayType(DoubleType())),
-        StructField("n_events", LongType()),
-    ]
-)
-
-
-def _kmv_output_schema(key: str) -> StructType:
-    return StructType(
-        [
-            StructField(key, StringType()),
-            StructField("n_events", LongType()),
-            StructField("n_seen", LongType()),
-            StructField("kmv_estimate", DoubleType()),
-        ]
+    return _fold_by_key(
+        stream,
+        key,
+        state=[("counts", ArrayType(LongType())), ("n", LongType())],
+        init=([0] * nbins, 0),
+        fold=fold,
+        emit=emit,
+        result=[("n_events", LongType()), ("psi", DoubleType())],
+        idle_timeout_ms=idle_timeout_ms,
     )
 
 
@@ -944,43 +821,29 @@ def stateful_kmv_distinct(
 
     kk = int(k)
 
-    def update(key_tuple, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
-        if idle_timeout_ms is not None and state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            ks_list, n_events = state.get
-            ks = np.asarray(ks_list, dtype=np.float64)
-        else:
-            ks, n_events = np.empty(0, dtype=np.float64), 0
-        for pdf in pdf_iter:
-            h = pdf[hash_col].to_numpy(dtype=np.float64)
-            if not len(h):
-                continue
-            ks = np.unique(np.concatenate([ks, h]))[:kk]
-            n_events += len(h)
-        state.update(([float(x) for x in ks], n_events))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
+    def fold(carry, pdf):
+        ks, n_events = carry
+        h = pdf[hash_col].to_numpy(dtype=np.float64)
+        ks = np.unique(np.concatenate([np.asarray(ks, dtype=np.float64), h]))[:kk]
+        return [float(x) for x in ks], n_events + len(h)
+
+    def emit(carry):
+        ks, n_events = carry
         n_seen = len(ks)
         est = float(n_seen) if n_seen < kk else (kk - 1.0) / float(ks[-1])
-        yield pd.DataFrame(
-            {
-                key: [key_tuple[0]],
-                "n_events": [n_events],
-                "n_seen": [n_seen],
-                "kmv_estimate": [est],
-            }
-        )
+        return n_events, n_seen, est
 
-    return stream.groupBy(key).applyInPandasWithState(
-        update,
-        outputStructType=_kmv_output_schema(key),
-        stateStructType=_KMV_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _fold_by_key(
+        stream,
+        key,
+        state=[("ks", ArrayType(DoubleType())), ("n_events", LongType())],
+        init=([], 0),
+        fold=fold,
+        emit=emit,
+        result=[
+            ("n_events", LongType()),
+            ("n_seen", LongType()),
+            ("kmv_estimate", DoubleType()),
+        ],
+        idle_timeout_ms=idle_timeout_ms,
     )

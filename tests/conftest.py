@@ -49,8 +49,10 @@ FULL_BATTERY = os.environ.get("FFN_FULL_BATTERY", "") not in ("", "0")
 
 # One representative per invariant family: eod identities, risk, rounding
 # determinism, blocked-sequence plans, asof, dedup graph + pairs, sketch,
-# rolling, sessionization, streaming-stateful parity, text-pipeline walk;
-# and the moments panel, whose pinned example is the constant-returns case.
+# rolling, sessionization, streaming-stateful parity (one order-free and one
+# sequential fold, the two branches of the stateful driver), text-pipeline
+# walk; and the moments panel, whose pinned example is the constant-returns
+# case.
 PROPERTY_SMOKE = {
     "test_price_index_of_returns_is_rebase",
     "test_drawdown_nonpositive_and_max_dd_is_min",
@@ -64,6 +66,7 @@ PROPERTY_SMOKE = {
     "test_rolling_ops_pandas_property",
     "test_session_stats_parity_property",
     "test_stateful_running_vwap_matches_batch_property",
+    "test_stateful_cusum_matches_sequential_property",
     "test_scrub_spans_exactsubstr_walk_property",
 }
 

@@ -7,10 +7,14 @@ import pytest
 from pyspark.sql import functions as F
 from tests.conftest import jobs_in_group
 
+import ffn_polars_spark.streaming as streaming
 from ffn_polars_spark.streaming import (
     read_tick_stream,
     run_available_now,
+    stateful_cusum,
+    stateful_realized_volatility,
     stateful_running_vwap,
+    stateful_zscore_alerts,
     streaming_session_stats,
     streaming_time_bars,
     streaming_vwap,
@@ -264,12 +268,32 @@ def test_stateful_rvol_chains_across_microbatches(spark, tmp_path_factory):
         assert abs(final["realized_volatility"] - math.sqrt(sum(r * r for r in rets))) < 1e-9
 
 
-def test_stateful_vwap_idle_timeout_evicts_state(spark, tmp_path):
+@pytest.mark.parametrize(
+    "op, count_col",
+    [
+        (
+            lambda s: stateful_running_vwap(
+                s, "ticker", "price", "volume", idle_timeout_ms=1_500
+            ),
+            "cum_volume",
+        ),
+        (
+            lambda s: stateful_cusum(
+                s, "ticker", "ts", "price", target=100.0, threshold=50.0,
+                idle_timeout_ms=1_500,
+            ),
+            "n_events",
+        ),
+    ],
+    ids=["running_vwap", "cusum"],
+)
+def test_stateful_idle_timeout_evicts_state(spark, tmp_path, op, count_col):
     """With idle_timeout_ms set, a key idle past the TTL is evicted
     (ProcessingTimeTimeout) and restarts from ZERO on its next event —
-    the bounded-working-set contract for open-ended key domains. Without
-    eviction the second file's update would show the lifetime cumulative
-    volume; with it, only the second file's."""
+    the bounded-working-set contract for open-ended key domains, checked
+    on an order-free and on a sequential fold. Every row has volume 1, so
+    both count columns read the rows folded so far: the second file's
+    update must show only its own 3 rows, not the lifetime 5."""
     import time
     import uuid as _uuid
 
@@ -281,13 +305,11 @@ def test_stateful_vwap_idle_timeout_evicts_state(spark, tmp_path):
             1
         ).write.mode("append").parquet(d)
 
-    # file 1: A has volume 10 total
-    write_file([("A", i * SEC, 100.0, 5.0) for i in range(2)])
+    # file 1: 2 rows of A
+    write_file([("A", i * SEC, 100.0, 1.0) for i in range(2)])
 
     stream = read_tick_stream(spark, d, ts_col="ts")
-    out = stateful_running_vwap(
-        stream, "ticker", "price", "volume", idle_timeout_ms=1_500
-    )
+    out = op(stream)
     name = "ttl" + _uuid.uuid4().hex[:8]
     q = (
         out.writeStream.format("memory")
@@ -296,38 +318,133 @@ def test_stateful_vwap_idle_timeout_evicts_state(spark, tmp_path):
         .trigger(processingTime="300 milliseconds")
         .start()
     )
+
+    def counts():
+        return {
+            r[count_col] for r in spark.table(name).collect() if r["ticker"] == "A"
+        }
+
     try:
         deadline = time.time() + 20
-        # wait for file 1's update (cum_volume 10) to land
-        while time.time() < deadline:
-            if any(
-                r["cum_volume"] == 10.0
-                for r in spark.table(name).collect()
-                if r["ticker"] == "A"
-            ):
-                break
+        # wait for file 1's update (2 rows) to land
+        while time.time() < deadline and 2 not in counts():
             time.sleep(0.2)
         # idle well past the 1.5 s TTL: ProcessingTimeTimeout runs a batch
         # every trigger even without data, firing the eviction
         time.sleep(4.0)
-        # file 2: A has volume 4 total — must restart from zero
-        write_file([("A", (100 + i) * SEC, 100.0, 2.0) for i in range(2)])
-        while time.time() < deadline:
-            vols = {
-                r["cum_volume"]
-                for r in spark.table(name).collect()
-                if r["ticker"] == "A"
-            }
-            if 4.0 in vols:
-                break
+        # file 2: 3 rows of A — must restart from zero
+        write_file([("A", (100 + i) * SEC, 100.0, 1.0) for i in range(3)])
+        while time.time() < deadline and 3 not in counts():
             time.sleep(0.2)
     finally:
         q.stop()
 
-    vols = {r["cum_volume"] for r in spark.table(name).collect() if r["ticker"] == "A"}
-    assert 10.0 in vols, f"file-1 update missing: {vols}"
-    assert 4.0 in vols, f"state was not evicted (no reset update): {vols}"
-    assert 14.0 not in vols, f"state survived the idle TTL: {vols}"
+    seen = counts()
+    assert 2 in seen, f"file-1 update missing: {seen}"
+    assert 3 in seen, f"state was not evicted (no reset update): {seen}"
+    assert 5 not in seen, f"state survived the idle TTL: {seen}"
+
+
+def _replay_rvol(rows):
+    import math
+
+    lps = [math.log(p) for _, p in rows]
+    sum_sq = 0.0
+    for i in range(1, len(lps)):
+        r = lps[i] - lps[i - 1]
+        sum_sq += r * r
+    n = len(lps) - 1
+    return n, math.sqrt(sum_sq) if n else None
+
+
+def _replay_zscore(rows, threshold=1.5, min_obs=3):
+    import math
+
+    n, sum_x, sum_sq, n_alerts = 0, 0.0, 0.0, 0
+    for _, x in rows:
+        if n >= min_obs:
+            m = sum_x / n
+            var = (sum_sq - sum_x * sum_x / n) / (n - 1)
+            if var > 0 and abs(x - m) > threshold * math.sqrt(var):
+                n_alerts += 1
+        n, sum_x, sum_sq = n + 1, sum_x + x, sum_sq + x * x
+    return n, n_alerts
+
+
+def _replay_cusum(rows, target=100.0, threshold=6.0):
+    sp = sn = 0.0
+    n_alarms = 0
+    for _, x in rows:
+        e = x - target
+        sp, sn = max(0.0, sp + e), max(0.0, sn - e)
+        if sp > threshold or sn > threshold:
+            n_alarms += 1
+            sp, sn = 0.0, 0.0
+    return len(rows), n_alarms, sp, sn
+
+
+@pytest.mark.parametrize(
+    "op, cols, replay",
+    [
+        (
+            lambda s: stateful_realized_volatility(s, "ticker", "ts", "price"),
+            ("n_returns", "realized_volatility"),
+            _replay_rvol,
+        ),
+        (
+            lambda s: stateful_zscore_alerts(
+                s, "ticker", "ts", "price", threshold=1.5, min_obs=3
+            ),
+            ("n_events", "n_alerts"),
+            _replay_zscore,
+        ),
+        (
+            lambda s: stateful_cusum(
+                s, "ticker", "ts", "price", target=100.0, threshold=6.0
+            ),
+            ("n_events", "n_alarms", "cusum_pos", "cusum_neg"),
+            _replay_cusum,
+        ),
+    ],
+    ids=["realized_volatility", "zscore_alerts", "cusum"],
+)
+def test_sequential_fold_orders_rows_across_arrow_chunks(
+    spark, tmp_path, op, cols, replay
+):
+    """A sequential stateful fold sees a key's rows in event-time order even
+    when one micro-batch hands them over as several Arrow chunks in the
+    wrong order: a one-file tape written newest-first, drained in one batch
+    at 3 rows per Arrow chunk, must match a sequential replay. Sorting each
+    chunk on its own would fold the chunks newest-first."""
+    import numpy as np
+
+    rng = np.random.RandomState(13)
+    rows = []
+    for key, shift in (("A", 8.0), ("B", -8.0)):
+        x = 100.0 + np.round(rng.normal(0.0, 2.0, 20), 2)
+        x[10:] += shift  # a level shift halfway: order-dependent alarms
+        rows += [(key, i * SEC, float(v)) for i, v in enumerate(x)]
+    d = str(tmp_path / "reversed")
+    spark.createDataFrame(rows[::-1], ["ticker", "ts", "price"]).coalesce(
+        1
+    ).write.parquet(d)
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        out = run_available_now(
+            op(read_tick_stream(spark, d, ts_col="ts")), output_mode="update"
+        ).collect()
+    finally:
+        spark.conf.set(conf, old)
+
+    got = {r["ticker"]: tuple(r[c] for c in cols) for r in out}
+    want = {
+        k: replay(sorted((t, p) for kk, t, p in rows if kk == k))
+        for k in ("A", "B")
+    }
+    assert got == want
 
 
 def test_streaming_histogram_matches_batch(spark, tick_dir):
@@ -666,3 +783,16 @@ def test_run_available_now_drops_its_sink_view(spark, tick_dir):
             ("B", 300),
         ]
     assert frames[0].where(F.col("ticker") == "A").count() == 1
+
+
+def test_all_names_every_public_function():
+    """``streaming.__all__`` is exactly the module's public functions."""
+    import inspect
+
+    public = {
+        name
+        for name, fn in inspect.getmembers(streaming, inspect.isfunction)
+        if fn.__module__ == streaming.__name__ and not name.startswith("_")
+    }
+    assert set(streaming.__all__) == public
+    assert len(streaming.__all__) == len(public)

@@ -11,12 +11,13 @@ a markdown table `| query | A (s) | B (s) | ratio |`.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-RUNS = int(__import__("os").environ.get("SCALE_BENCH_RUNS", "3"))
+RUNS = int(os.environ.get("SCALE_BENCH_RUNS", "3"))
 
 DEFAULT_QUERIES = [
     "dedup_canonical",

@@ -10,8 +10,10 @@ the streaming analogue of the batch families' sf10 -> sf100 data decades:
 state per operator is keys x open-windows (bars), keys (vwap/topk), or
 rate x horizon (stream-stream joins, key-count independent).
 
-Drives two queries for `duration_seconds` (default 30) at `rows_per_second`
-offered load (default 500_000) on local[32]:
+Drives eight streaming queries, each for `duration_seconds` (default 30;
+at least 90 for the two stream-stream joins) counted from its first batch
+that carries rows, at `rows_per_second` offered load (default 500_000), on
+a `get_spark()` session; among them:
 
 * streaming_time_bars — watermark-bounded windowed aggregation.
 * stateful_running_vwap — applyInPandasWithState custom stateful operator.
@@ -21,6 +23,8 @@ the completed batches and the state-store metrics of the LAST batch
 (numRowsTotal, memoryUsedBytes), plus a bounded-state check: with K tickers
 and a 1-minute bar / 30-second watermark, time-bars state must stay within a
 small multiple of K x open-windows; running-vwap state must equal K exactly.
+Exits non-zero when any query's state is over its bound, or was never
+measured because the query completed no batch.
 
 The rate source emits (timestamp, value); ticker/price/volume are derived
 arithmetically so the per-row cost matches a real tick tape's column shapes.
@@ -29,10 +33,11 @@ arithmetically so the per-row cost matches a real tick tape's column shapes.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_TICKERS = 1_000  # overridden by argv[3]
 
@@ -62,6 +67,14 @@ def drive(name: str, result_df, duration_s: float, output_mode: str = "update") 
         .start()
     )
     try:
+        # time `duration_s` from the first batch that carries rows: a query's
+        # first stateful batch can take longer than a short run, which then
+        # saw no batch and had no state to check against its bound
+        deadline = time.time() + 120
+        while time.time() < deadline and not any(
+            p.get("numInputRows", 0) > 0 for p in q.recentProgress
+        ):
+            time.sleep(0.5)
         time.sleep(duration_s)
         rates, state = [], None
         for p in q.recentProgress:
