@@ -108,7 +108,6 @@ def _stages_by_query(sc) -> dict:
             if st is not None:
                 out.setdefault(group[len(_GROUP):], []).append({
                     "stage": sid,
-                    "name": st.get("name", "")[:100],
                     "run_ms": st.get("executorRunTime", 0),
                     "tasks": st.get("numCompleteTasks", 0),
                     "shuffle_write_mb": round(st.get("shuffleWriteBytes", 0) / 1e6, 2),
@@ -182,8 +181,9 @@ def main() -> None:
     # unchanged is at the scheduling-latency floor (per-task overhead >>
     # per-row cost at this SF), not serial; a genuinely serial query would
     # show task-time ≈ wall at every core count. The 3 most expensive
-    # queries also print their 5 heaviest stages, which localizes a future
-    # regression to a stage without a rerun.
+    # queries also print their 5 heaviest stages (id, task time, tasks,
+    # shuffle write). Spark's stage names would only repeat a JVM frame
+    # (`save at <unknown>:0`), so none is printed.
     stage_metrics, task_ms = {}, {}
     sc = spark.sparkContext
     if sc.uiWebUrl:

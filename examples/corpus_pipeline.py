@@ -9,6 +9,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from ffn_polars_spark.pins import pinned_scope
 from ffn_polars_spark.sources import get_spark, read_table
 
 
@@ -20,7 +21,6 @@ def main() -> None:
     from ffn_polars_spark.operators.dedup import (
         dedup_assign_canonical,
         dedup_minhash_lsh,
-        pinned_scope,
     )
     from ffn_polars_spark.operators.pipeline import (
         clean_corpus,

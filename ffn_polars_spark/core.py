@@ -17,6 +17,8 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import Column, Window, WindowSpec
 from pyspark.sql import functions as F
 
+from ffn_polars_spark.pins import pin
+
 ColumnOrName = Union[Column, str]
 
 
@@ -223,7 +225,13 @@ def blocked_cumsum(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     d = d.withColumn("__local", F.sum(val).over(w_local))
-    totals = d.groupBy("__blk").agg(F.max("__local").alias("__tot"))
+    # block total = the LAST row's running value (struct-max on id_col —
+    # NOT max(__local), which is wrong for negative addends)
+    totals = d.groupBy("__blk").agg(
+        F.max(F.struct(F.col(id_col), F.col("__local").alias("__v")))
+        .getField("__v")
+        .alias("__tot")
+    )
     w_off = Window.orderBy("__blk").rowsBetween(Window.unboundedPreceding, -1)
     offsets = totals.select(
         "__blk", F.coalesce(F.sum("__tot").over(w_off), F.lit(0.0)).alias("__off")
@@ -235,9 +243,7 @@ def blocked_cumsum(
     )
 
 
-def ranged_cumsum(
-    df, order_cols, vals: dict, persist: bool = True, return_totals: bool = False
-):
+def ranged_cumsum(df, order_cols, vals: dict, return_totals: bool = False):
     """Cumulative sums over an arbitrary global ordering WITHOUT a
     single-partition window — the general-ordering sibling of
     :func:`blocked_cumsum` (which wants a dense monotone long id).
@@ -249,13 +255,21 @@ def ranged_cumsum(
     value is determined solely by the total order of ``order_cols`` —
     identical on any cluster shape.
 
-    ``vals`` maps output column name -> input Column to sum. The input is
-    persisted by default so the totals pass and the output share one
+    ``vals`` maps output column name -> input Column to sum. The
+    range-partitioned input is pinned (``pins.pin``, lazily: the totals
+    collect fills it) so the totals pass and the output share one
     materialization. Returns the sorted frame plus the cumulative columns
     (internal ``__pid`` dropped); with ``return_totals=True`` returns
     ``(frame, {out_name: grand_total})`` — the grand totals fall out of
     the offsets pass for free, saving callers that need them (Pareto
     shares, ECDF normalizers) a second full aggregate over the output.
+
+    One-shot across ``release_pins()``: the offsets are driver literals
+    keyed by ``__pid``, and a re-execution without the pin re-samples the
+    range boundaries. Each cumulative column raises (``ranged_cumsum: ...``)
+    when its partition's row count differs from the one the totals saw;
+    for unique order keys equal counts mean identical partitions, so a
+    re-executed frame equals the first result or fails.
     """
     order = [to_col(c) if isinstance(c, str) else c for c in order_cols]
     parts = (
@@ -263,11 +277,13 @@ def ranged_cumsum(
         .sortWithinPartitions(*order)
         .withColumn("__pid", F.spark_partition_id())
     )
-    if persist:
-        parts = parts.persist()
+    parts = pin(parts, eager=False)
     totals = (
         parts.groupBy("__pid")
-        .agg(*[F.sum(v).alias(k) for k, v in vals.items()])
+        .agg(
+            F.count(F.lit(1)).alias("__pid_rows"),
+            *[F.sum(v).alias(k) for k, v in vals.items()],
+        )
         .collect()
     )
     by_pid = {r["__pid"]: r for r in totals}
@@ -295,11 +311,23 @@ def ranged_cumsum(
             if tot is not None:
                 seen[k] = True
                 acc[k] += tot
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, 0)
+    w = Window.partitionBy("__pid").orderBy(*order)
+    # the guard's count shares the running sums' partition and order spec:
+    # one Window operator, no extra exchange or sort
+    rows = [F.lit(x) for p, r in by_pid.items() for x in (p, r["__pid_rows"])]
+    rows_then = (
+        F.element_at(F.create_map(*rows), F.col("__pid")) if rows else F.lit(None)
     )
+    repartitioned = F.coalesce(rows_then, F.lit(0)) != F.count(F.lit(1)).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    stale = F.raise_error(
+        F.lit(
+            "ranged_cumsum: re-executed after its pin was released; the "
+            "range partitions changed, rebuild the frame"
+        )
+    )
+    w = w.rowsBetween(Window.unboundedPreceding, 0)
     out = parts
     for k, v in vals.items():
         if offsets[k]:
@@ -318,9 +346,9 @@ def ranged_cumsum(
         loc = F.sum(v).over(w)
         out = out.withColumn(
             k,
-            F.when(loc.isNull() & off.isNull(), F.lit(None)).otherwise(
-                F.coalesce(loc, F.lit(0)) + F.coalesce(off, F.lit(0))
-            ),
+            F.when(repartitioned, stale)
+            .when(loc.isNull() & off.isNull(), F.lit(None))
+            .otherwise(F.coalesce(loc, F.lit(0)) + F.coalesce(off, F.lit(0))),
         )
     out = out.drop("__pid")
     if return_totals:

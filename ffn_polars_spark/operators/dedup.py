@@ -36,179 +36,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ffn_polars_spark.operators._scanmeta import spread_scan
+from ffn_polars_spark.pins import (
+    _token_scale_est,
+    pin,
+    pin_checkpoint,
+    release_checkpoint,
+)
 from ffn_polars_spark.registry import register
-
-
-# Frames pinned by _pinned since the last release_pins() call. Operators
-# return lazy DataFrames, so they cannot unpersist their own pins (the caller
-# hasn't executed the plan yet); instead every pin is tracked here and the
-# caller — or the next operator invocation via pinned_scope() — releases
-# them once results are materialized. Without this, long sessions running
-# many dedup jobs accumulate dead cache entries.
-_ACTIVE_PINS: list = []
-
-
-def release_pins() -> int:
-    """Unpersist every frame pinned since the last release; returns the count.
-
-    Call after materializing an operator's result (collect/write). Cache-
-    backed pins (:func:`_pinned`) are safe to release early — they recompute
-    from lineage. Checkpoint-backed pins (:func:`pin_checkpoint`; the frames
-    returned by pagerank / connected_components) are **one-shot**: local
-    checkpointing truncated their lineage, so once their blocks are freed the
-    frame cannot be re-materialized — any later action on it raises. Only
-    release after every consumer has collected/written what it needs."""
-    n = len(_ACTIVE_PINS)
-    while _ACTIVE_PINS:
-        _ACTIVE_PINS.pop().unpersist()
-    return n
-
-
-class pinned_scope:
-    """``with pinned_scope(): run_and_materialize()`` — releases every frame
-    pinned inside the block on exit (pins from before the block are kept).
-
-    Materialize results *inside* the block: a checkpoint-backed frame
-    (pagerank / connected_components) that escapes the scope is unusable
-    after ``__exit__`` frees its blocks (see :func:`release_pins`)."""
-
-    def __enter__(self):
-        self._mark = len(_ACTIVE_PINS)
-        return self
-
-    def __exit__(self, *exc):
-        while len(_ACTIVE_PINS) > self._mark:
-            _ACTIVE_PINS.pop().unpersist()
-        return False
-
-
-class _CheckpointPin:
-    """Adapter so a ``localCheckpoint``-backed frame can ride
-    ``_ACTIVE_PINS``: ``DataFrame.unpersist()`` is a CacheManager no-op for
-    checkpointed frames — their data lives in a persisted RDD referenced by
-    the plan's ``LogicalRDD`` node, which this releases directly.
-
-    Releasing is **destructive**: localCheckpoint truncated the lineage, so
-    after the blocks are freed the frame cannot be recomputed — a later
-    action raises ``SparkException: Checkpoint block not found``. Treat the
-    frame as one-shot across a :func:`release_pins` boundary."""
-
-    def __init__(self, df: DataFrame):
-        self._df = df
-
-    def unpersist(self) -> None:
-        release_checkpoint(self._df)
-
-
-def release_checkpoint(df: DataFrame) -> None:
-    """RDD-level unpersist of a localCheckpointed frame (see
-    :class:`_CheckpointPin`). Safe on any frame — a plan without a
-    LogicalRDD root is left untouched."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
-def pin_checkpoint(df: DataFrame) -> DataFrame:
-    """Track a localCheckpointed frame for the next ``release_pins()``.
-
-    The frame is one-shot: it is usable until the next ``release_pins()``
-    and dead after (see :class:`_CheckpointPin`)."""
-    _ACTIVE_PINS.append(_CheckpointPin(df))
-    return df
-
-
-def _pinned(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Persist a small derived frame that several plan branches re-read
-    (signatures, shingle arrays): Spark reuses identical *exchanges* but not
-    arbitrary subtrees, so self-joins and verification would otherwise
-    recompute the full derivation per branch. MEMORY_AND_DISK keeps the 100 TB
-    path safe (spills instead of OOM).
-
-    Materialized eagerly by default: a lazy persist lets the two sides of a
-    downstream self-join race to fill the cache — both branches then run the
-    full (Arrow-kernel) derivation concurrently, which measured bimodally
-    between 1x and 6x the eager wall-clock. count() costs one extra pass over
-    the already-small pinned frame and makes the plan deterministic.
-
-    ``eager=False`` skips the count for a pin whose readers are all stages
-    of the one query that consumes it (minhash's shingle arrays: the band
-    hashes and both verify sides). Measured on that pin, the kernel still
-    runs once per document — a second reader of a partition waits on the
-    cache block's write lock instead of recomputing it — so the count would
-    only add a pass over the corpus-sized derivation.
-
-    Tracked in ``_ACTIVE_PINS`` for :func:`release_pins`."""
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if eager:
-        df.count()
-    _ACTIVE_PINS.append(df)
-    return df
-
-def _executor_heap_bytes(spark) -> int:
-    """Executor heap this session's tasks actually run under: the
-    spark.executor.memory conf when set (a real cluster), else the local
-    JVM's max heap (local mode, where driver == executor).
-
-    The conf string follows Spark's ``byteStringAsMb`` grammar: an INTEGER
-    with an optional one-letter (k/m/g/t/p) or two-letter (kb/mb/gb/tb/pb)
-    binary suffix, and a UNIT-LESS value means MiB (``"8192"`` is 8 GiB,
-    not 8192 bytes). Fractional values are rejected exactly as Spark
-    rejects them (fall through to the JVM heap, never a guess).
-    Mis-parsing here fails toward over-estimating the heap, which lets
-    :func:`_pinned_if_fits` pin frames that GC-thrash real executors — the
-    exact defect class the cap exists to prevent — so unparseable strings
-    fall through to the local JVM heap rather than guessing."""
-    try:
-        mem = spark.conf.get("spark.executor.memory", None)
-        if mem:
-            import re
-
-            m = re.fullmatch(
-                r"\s*(\d+)\s*([kmgtp]b?|b)?\s*", mem.lower()
-            )
-            if m:
-                shifts = {"b": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
-                unit = m.group(2)
-                # Spark reads a bare number as MiB (byteStringAsMb)
-                shift = shifts[unit[0]] if unit else 20
-                return int(float(m.group(1)) * (1 << shift))
-    except Exception:
-        pass
-    try:
-        return int(
-            spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
-        )
-    except Exception:
-        return 8 << 30
-
-
-def _pinned_if_fits(df: DataFrame, est_bytes, eager: bool = True) -> DataFrame:
-    """Pin unless the frame's size estimate exceeds ~30% of the executor
-    heap. A cache bigger than the storage pool doesn't just evict — the
-    COLUMNAR batch building during unroll GC-thrashes the heap (measured:
-    the token-scale span pin at 5M docs killed an 8 GB heap even with
-    longs-only columns). Past the cap, recomputing the derivation per
-    consumer branch is strictly cheaper than fighting the memory manager;
-    below it, the pin saves the per-branch re-derivation exactly as
-    :func:`_pinned` documents. ``est_bytes=None`` (unknown) pins — the
-    historical behavior. ``eager`` passes through to :func:`_pinned`."""
-    if est_bytes is not None:
-        cap = 0.3 * _executor_heap_bytes(df.sparkSession)
-        if est_bytes > cap:
-            return df
-    return _pinned(df, eager=eager)
-
-
-def _token_scale_est(df: DataFrame):
-    """Size estimate for a token-scale derived frame (shingle rows, span
-    hashes): ~3x the on-disk text bytes, the scrub_spans-measured ratio.
-    None (→ pin) when the plan has no readable parquet footers."""
-    from ffn_polars_spark.operators._scanmeta import scan_bytes
-
-    b = scan_bytes(df)
-    return 3 * b if b is not None else None
 
 
 # Mersenne prime 2^31 - 1: (a*h + b) mod P stays within long range for
@@ -378,7 +212,7 @@ def _shingle_index(
     shingle projection; the rows are token-scale STRING shingles, so the
     pin is heap-gated like scrub_spans' span pin."""
     sh = _doc_shingles(spread_scan(df, id_col), text_col, id_col, n)
-    return _pinned_if_fits(_drop_hot_keys(sh, "__sh", max_df), _token_scale_est(df))
+    return pin(_drop_hot_keys(sh, "__sh", max_df), _token_scale_est(df))
 
 
 def _overlap_counts(rows: DataFrame, key: str, id_col: str) -> DataFrame:
@@ -704,12 +538,11 @@ def dedup_minhash_lsh(
     # memory; the sf100 pin GC-thrashed an 8 GB heap) for no consumer.
     # eager=False: every reader of this pin is a stage of the returned
     # query, so construction launches no job; the cache fills once per
-    # document when that query runs (see _pinned). An eager count would
+    # document when that query runs (see pins.pin). An eager count would
     # add a full pass (measured 5.0 s of task-time at sf0.1). Heap-gated
     # (r12): the arrays are longs-only (~8 B/shingle ≈ 2x the on-disk text
     # bytes in cache), but still token-scale — past the 30%-heap cap the
-    # verify joins re-derive instead of GC-thrashing, exactly the
-    # _pinned_if_fits trade.
+    # verify joins re-derive instead of GC-thrashing.
     est = _token_scale_est(df)
     coeffs = _minhash_coeffs(num_hashes, seed)
     if hash_fn == "md5":
@@ -722,7 +555,7 @@ def dedup_minhash_lsh(
         # verify joins, sig the band hashes — still longs-only, ~num_hashes
         # extra longs per doc on top of the shingle hashes.
         kernel = _md5_minhash_arrow(coeffs, n)
-        arrays = _pinned_if_fits(
+        arrays = pin(
             _tokens_frame(df, text_col, id_col, n)
             .select("__id", kernel(F.col("__toks")).alias("__o"))
             .select(
@@ -741,7 +574,7 @@ def dedup_minhash_lsh(
             ],
         )
     else:
-        arrays = _pinned_if_fits(
+        arrays = pin(
             _doc_shingle_arrays(df, text_col, id_col, n, hash_fn).select(
                 "__id", "__h64"
             ),

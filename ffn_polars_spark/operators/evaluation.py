@@ -768,7 +768,7 @@ def chi_square(
     self-join, no pin — the r12 rewrite: the previous shape pinned the
     cells frame unconditionally, but cells are distinct(x)·distinct(y)
     per group, data-dependent, and could approach row count for
-    id-like inputs, bypassing the `_pinned_if_fits` heap gate), then
+    id-like inputs, bypassing the ``pins.pin`` heap gate), then
     one group-level aggregate. Counts are exact longs; only the final
     divisions round (the ``n·Σ − n`` cancellation costs ~1 ulp·n —
     absorbed by any sane rounding of a test statistic, and clamped at 0

@@ -26,11 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ffn_polars_spark.operators.dedup import (
-    _pinned,
-    pin_checkpoint,
-    release_checkpoint,
-)
+from ffn_polars_spark.pins import pin, pin_checkpoint, release_checkpoint
 from ffn_polars_spark.registry import register
 
 
@@ -52,14 +48,14 @@ def pagerank(
     costs one edge join + one aggregate + one dangling-mass scalar.
 
     Cache hygiene: the edge frame and the FINAL rank checkpoint ride the
-    dedup pin registry (released by ``release_pins()`` — the catalog
+    pin registry (released by ``release_pins()`` — the catalog
     wrapper calls it between queries), ``nodes`` is unpersisted as soon
     as the initial ranks materialize, and every superseded per-round
     checkpoint is unpersisted inside the loop (the next round's eager
     checkpoint has already copied the data). A long-lived session
     calling graph ops repeatedly holds at most one round of state.
     """
-    e = _pinned(
+    e = pin(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     )
     nodes = (
@@ -167,7 +163,7 @@ def triangle_count(
     from the low-degree leaves into the hub
     (tests/test_skew.py::test_triangle_wedges_degree_ordered_star).
     Costs one extra m×n join to attach degrees before orienting; the
-    oriented frame rides the dedup pin registry (released between
+    oriented frame rides the pin registry (released between
     catalog queries by ``release_pins()``). Returns ``(node, degree,
     n_triangles, clustering)`` for every node of the graph, clustering
     NULL below degree 2.
@@ -175,7 +171,7 @@ def triangle_count(
     raw = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d")).where(
         F.col(src) != F.col(dst)
     )
-    und = _pinned(
+    und = pin(
         raw.select(
             F.least("__s", "__d").alias("u"), F.greatest("__s", "__d").alias("v")
         ).distinct()
@@ -184,7 +180,7 @@ def triangle_count(
     # referenced three times (both orientation sides + the final join) —
     # unpinned it re-aggregated per reference, and its repeated subtree
     # blew the printed/optimized plan up exponentially (368 scan nodes)
-    deg = _pinned(
+    deg = pin(
         und.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
@@ -197,7 +193,7 @@ def triangle_count(
     u_first = F.struct(F.col("__du"), F.col("u")) < F.struct(
         F.col("__dv"), F.col("v")
     )
-    fwd = _pinned(
+    fwd = pin(
         und.join(du, "u")
         .join(dv, "v")
         .select(

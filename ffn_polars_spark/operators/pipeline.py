@@ -24,12 +24,12 @@ from pyspark.sql import functions as F
 
 from ffn_polars_spark.operators.dedup import normalized_text
 from ffn_polars_spark.operators.text import (
-    EN_STOPWORDS,
+    _quality_features,
     language_vote,
-    punct_ratio,
     token_count,
     tokens,
 )
+from ffn_polars_spark.pins import pin
 from ffn_polars_spark.registry import register
 
 
@@ -64,24 +64,7 @@ def clean_corpus(
     t = F.col(text_col)
     staged = df.select(F.col(id_col), t.alias("__txt"), tokens(t).alias("__toks"))
     txt, toks = F.col("__txt"), F.col("__toks")
-    n_tok = F.size(toks)
-    total_chars = F.aggregate(
-        F.transform(toks, lambda x: F.length(x).cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    mwl = F.when(n_tok > 0, total_chars / n_tok.cast("double")).otherwise(F.lit(0.0))
-    pr = punct_ratio(txt)
-    sw_matches = F.size(F.filter(toks, lambda x: x.isin(*EN_STOPWORDS)))
-    sr = F.when(n_tok > 0, sw_matches.cast("double") / n_tok.cast("double")).otherwise(
-        F.lit(0.0)
-    )
-    score = (
-        F.when((n_tok >= 5) & (n_tok <= 100000), F.lit(0.25)).otherwise(F.lit(0.0))
-        + F.when((mwl >= 2.0) & (mwl <= 12.0), F.lit(0.25)).otherwise(F.lit(0.0))
-        + F.when(pr <= 0.3, F.lit(0.25)).otherwise(F.lit(0.0))
-        + F.when(sr >= 0.05, F.lit(0.25)).otherwise(F.lit(0.0))
-    )
+    score = _quality_features(txt, toks)["quality_score"]
 
     from pyspark.sql.window import Window
 
@@ -354,7 +337,7 @@ def pack_sequences(
     Scale: the prefix sum is the blocked two-pass cumsum (no global
     single-partition window); chunk explosion is in-row (a document spans at
     most ``ceil(n/seq_len)+1`` sequences). One data-sized shuffle. The
-    (id, n_tokens) frame is ``_pinned`` (caller releases via
+    (id, n_tokens) frame is pinned (``pins.pin``; caller releases via
     ``release_pins``): the two-pass cumsum necessarily reads it twice,
     and unpinned each pass — plus the pushed ``n_tokens > 0`` filter —
     re-tokenized the corpus (6 split copies in the round-8 plan audit);
@@ -362,10 +345,9 @@ def pack_sequences(
     """
     from ffn_polars_spark.core import blocked_cumsum
     from ffn_polars_spark.operators._scanmeta import spread_scan
-    from ffn_polars_spark.operators.dedup import _pinned
 
     df = spread_scan(df, id_col)
-    t = _pinned(
+    t = pin(
         df.select(
             F.col(id_col), token_count(F.col(text_col)).cast("long").alias("n_tokens")
         ).where(F.col("n_tokens") > 0)

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ffn_polars_spark.operators.text import tokens
+from ffn_polars_spark.pins import pin
 from ffn_polars_spark.registry import register
 
 
@@ -135,7 +136,7 @@ def bm25_search(
     non-matching corpus.
 
     Round-8 audit fix (hash-identical output): the per-(doc, term) tf
-    aggregate is ``_pinned`` so the df branch reads it instead of
+    aggregate is pinned (``pins.pin``) so the df branch reads it instead of
     re-scanning and re-tokenizing the corpus (column pruning rewrites
     the second branch's inner aggregate, so exchange reuse never fires —
     the tfidf_topterms finding). The pinned frame is matching postings
@@ -149,9 +150,6 @@ def bm25_search(
 
     Returns ``(doc_id, score, n_terms)`` for docs matching ≥1 term.
     """
-    from ffn_polars_spark.operators.dedup import _pinned
-    from ffn_polars_spark.operators.text import tokens
-
     terms = [t for t in {w.lower() for w in query} if t]
     if not terms:
         raise ValueError("query must contain at least one non-empty token")
@@ -177,7 +175,7 @@ def bm25_search(
         F.avg("__len").alias("__avglen"),
     )
 
-    tf = _pinned(
+    tf = pin(
         matched.groupBy(id_col, "token").agg(
             F.count(F.lit(1)).cast("double").alias("__tf"),
             F.first("__len").alias("__len"),

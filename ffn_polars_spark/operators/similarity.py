@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ffn_polars_spark.operators._scanmeta import bare_scan_row_count, spread_scan
+from ffn_polars_spark.pins import _token_scale_est, pin
 from ffn_polars_spark.registry import register
 
 # Bounded-probe budget for scale guards: probes up to this many rows run as a
@@ -560,9 +561,6 @@ def dedup_embedding_lsh(
         planes = max(12, math.ceil(math.log2(max(int(n), 1) / 16 or 1)))
     if tables is None:
         tables = lsh_tables_for_recall(planes, threshold)
-    from ffn_polars_spark.operators._scanmeta import scan_bytes
-    from ffn_polars_spark.operators.dedup import _pinned_if_fits
-
     dim = _probe_dim(df, vec_col)
     if dim is None:  # every vector NULL -> no candidates, empty pair frame
         empty = df.where(F.lit(False))
@@ -578,11 +576,11 @@ def dedup_embedding_lsh(
     # shape carried __v THROUGH the bucket self-join, re-evaluating the
     # O(d) fold per EMITTED PAIR (measured 118 µs/pair; 253 s at 200k
     # vectors). est ≈ 3x the on-disk column bytes (float32 -> unit doubles).
-    tagged = _pinned_if_fits(
+    tagged = pin(
         spread_scan(df).select(
             F.col(id_col).alias("__id"), unit(F.col(vec_col)).alias("__v")
         ),
-        (lambda b: 3 * b if b is not None else None)(scan_bytes(df)),
+        _token_scale_est(df),
     )
     # id-only buckets: the self-join emits 16-byte id pairs, never vectors
     buckets = _bucketize(tagged, "__id", "__v", [
@@ -1194,15 +1192,13 @@ def centroid_similarity(
     Returns ``(label_a, label_b, cosine, n_a, n_b)`` for ``a < b``;
     cosine NULL if either centroid is the zero vector.
     """
-    from ffn_polars_spark.operators.dedup import _pinned
-
     # PIN both cardinality-bounded frames: the centroid table feeds BOTH
     # sides of the self-join (each side re-ran the dim-exploded corpus
     # aggregate) and the counts table feeds both the n_a and n_b joins —
     # 4 corpus passes down to 2 (r11 plan audit). labels x dim and labels
     # rows respectively: tiny.
-    cents = _pinned(embedding_centroids(df, label_col, vec_col))
-    counts = _pinned(
+    cents = pin(embedding_centroids(df, label_col, vec_col))
+    counts = pin(
         df.groupBy(F.col(label_col).alias("label")).agg(
             F.count(F.lit(1)).alias("n")
         )
@@ -1305,14 +1301,12 @@ def embedding_covariance(
             }
         )
 
-    from ffn_polars_spark.operators.dedup import _pinned
-
     partials = src.mapInPandas(part, "i INT, j INT, __sxy DOUBLE, __n LONG")
     # pin the combined moments (d²/2 + d rows): five plan branches (pairs,
     # both means joinbacks, both diagonal joinbacks) read it, and AQE's
     # pre-execution plan does not mark the exchange reused — unpinned, the
     # full moment pass over row data executes once PER BRANCH
-    combined = _pinned(
+    combined = pin(
         partials.groupBy("i", "j").agg(
             F.sum("__sxy").alias("__sxy"), F.sum("__n").alias("__n")
         )
@@ -1389,14 +1383,12 @@ def centroid_outliers(
     den = F.sqrt(F.col("__vv")) * F.sqrt(F.col("__mm"))
     cos = F.when(den > 0, F.col("__dot") / den)
     cos_q = F.floor(cos * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
-    # _pinned: the median, MAD, and fence branches each consume scored —
+    # pinned: the median, MAD, and fence branches each consume scored —
     # unpinned, each branch re-ran the whole scan → posexplode → centroid
     # join → per-vector aggregate (8 scans of the embedding table in the
     # round-8 plan audit). scored is three narrow columns at vector
     # cardinality; caller releases via release_pins.
-    from ffn_polars_spark.operators.dedup import _pinned
-
-    scored = _pinned(per.select("__id", "label", cos_q.alias("cos_sim")))
+    scored = pin(per.select("__id", "label", cos_q.alias("cos_sim")))
     med_f = scored.groupBy("label").agg(
         F.percentile("cos_sim", F.lit(0.5)).alias("med")
     )

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ffn_polars_spark.pins import pin
 from ffn_polars_spark.registry import register
 from ffn_polars_spark.sim.rand import uniform
 
@@ -376,8 +377,6 @@ def robust_outliers(
 
     Returns ``(*group_by, n, median, mad, n_outliers, outlier_frac)``.
     """
-    from ffn_polars_spark.operators.dedup import _pinned
-
     gcols = list(group_by) if group_by else []
     # Pin the (groups, value) projection: this is a THREE-pass algorithm
     # (median, MAD, counting aggregate) and AQE marks no subtree reuse
@@ -386,7 +385,7 @@ def robust_outliers(
     # pass. Neutral at sf0.1 (percentile aggregation dominates there);
     # the win appears when the upstream costs more than a 2-column cache
     # write, and the projection keeps the pin small either way.
-    df = _pinned(df.select(*(gcols + [value_col])))
+    df = pin(df.select(*(gcols + [value_col])))
     pct = (
         (lambda c: F.percentile_approx(c, F.lit(0.5), F.lit(10000)))
         if approx

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ffn_polars_spark.operators._scanmeta import spread_scan
+from ffn_polars_spark.pins import _token_scale_est, pin
 from ffn_polars_spark.registry import register
 
 # Tiny per-language stopword marker sets for the n-gram/stopword language-ID
@@ -86,6 +87,40 @@ def mean_word_length(text: Column) -> Column:
     )
 
 
+def _quality_features(txt: Column, toks: Column) -> Dict[str, Column]:
+    """text_quality's features and composite [0, 1] quality score
+    (Gopher/C4-style length + structure heuristics, 0.25 per passed check)
+    from a staged ``(text, token array)`` pair of bound attributes: the
+    token features are interpreted higher-order functions, so they must
+    read the staged array, never an inline ``tokens(text)``."""
+    n_tok = F.size(toks)
+    total_chars = F.aggregate(
+        F.transform(toks, lambda x: F.length(x).cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    mwl = F.when(n_tok > 0, total_chars / n_tok.cast("double")).otherwise(F.lit(0.0))
+    pr = punct_ratio(txt)
+    sw_matches = F.size(F.filter(toks, lambda x: x.isin(*EN_STOPWORDS)))
+    sr = F.when(n_tok > 0, sw_matches.cast("double") / n_tok.cast("double")).otherwise(
+        F.lit(0.0)
+    )
+    score = (
+        F.when((n_tok >= 5) & (n_tok <= 100000), F.lit(0.25)).otherwise(F.lit(0.0))
+        + F.when((mwl >= 2.0) & (mwl <= 12.0), F.lit(0.25)).otherwise(F.lit(0.0))
+        + F.when(pr <= 0.3, F.lit(0.25)).otherwise(F.lit(0.0))
+        + F.when(sr >= 0.05, F.lit(0.25)).otherwise(F.lit(0.0))
+    )
+    return {
+        "n_chars": F.length(txt),
+        "n_tokens": n_tok,
+        "mean_word_len": mwl,
+        "punct_ratio": pr,
+        "stopword_ratio": sr,
+        "quality_score": score,
+    }
+
+
 @register(namespace="eod", kind="df", context="dataframe", alias="text_quality")
 def text_quality(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Document quality scoring: length, token stats, punctuation and
@@ -100,37 +135,15 @@ def text_quality(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     df = spread_scan(df, id_col)
     t = F.col(text_col)
     staged = df.select(F.col(id_col), t.alias("__txt"), tokens(t).alias("__toks"))
-    txt, toks = F.col("__txt"), F.col("__toks")
-    n_tok = F.size(toks)
-    total_chars = F.aggregate(
-        F.transform(toks, lambda x: F.length(x).cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    mwl = F.when(n_tok > 0, total_chars / n_tok.cast("double")).otherwise(F.lit(0.0))
-    n_ch = F.length(txt)
-    punct = n_ch - F.length(F.regexp_replace(txt, r"[^\w\s]", ""))
-    pr = F.when(n_ch > 0, punct.cast("double") / n_ch.cast("double")).otherwise(
-        F.lit(0.0)
-    )
-    sw_matches = F.size(F.filter(toks, lambda x: x.isin(*EN_STOPWORDS)))
-    sr = F.when(n_tok > 0, sw_matches.cast("double") / n_tok.cast("double")).otherwise(
-        F.lit(0.0)
-    )
-    score = (
-        F.when((n_tok >= 5) & (n_tok <= 100000), F.lit(0.25)).otherwise(F.lit(0.0))
-        + F.when((mwl >= 2.0) & (mwl <= 12.0), F.lit(0.25)).otherwise(F.lit(0.0))
-        + F.when(pr <= 0.3, F.lit(0.25)).otherwise(F.lit(0.0))
-        + F.when(sr >= 0.05, F.lit(0.25)).otherwise(F.lit(0.0))
-    )
+    f = _quality_features(F.col("__txt"), F.col("__toks"))
     return staged.select(
         F.col(id_col),
-        n_ch.alias("n_chars"),
-        n_tok.alias("n_tokens"),
-        F.round(mwl, 6).alias("mean_word_len"),
-        F.round(pr, 6).alias("punct_ratio"),
-        F.round(sr, 6).alias("stopword_ratio"),
-        F.round(score, 6).alias("quality_score"),
+        f["n_chars"].alias("n_chars"),
+        f["n_tokens"].alias("n_tokens"),
+        *[
+            F.round(f[k], 6).alias(k)
+            for k in ("mean_word_len", "punct_ratio", "stopword_ratio", "quality_score")
+        ],
     )
 
 
@@ -286,19 +299,14 @@ def winnow_overlap_pairs(
     surviving containment scores are unchanged. Pass ``max_fp_df=None``
     only for small corpora / exact-baseline verification.
     """
-    from ffn_polars_spark.operators.dedup import (
-        _drop_hot_keys,
-        _overlap_counts,
-        _pinned_if_fits,
-        _token_scale_est,
-    )
+    from ffn_polars_spark.operators.dedup import _drop_hot_keys, _overlap_counts
 
     fps = winnow_fingerprints(spread_scan(df, id_col), k, window, text_col, id_col)
     # pinned (heap-gated, r12): feeds three branches (sizes + both
     # self-join sides), but the fingerprint rows are token-scale
     # (~1 per window position) — past the 30%-heap cap the branches
     # re-derive instead of GC-thrashing
-    fps = _pinned_if_fits(_drop_hot_keys(fps, "fp", max_fp_df), _token_scale_est(df))
+    fps = pin(_drop_hot_keys(fps, "fp", max_fp_df), _token_scale_est(df))
     return (
         _overlap_counts(fps, "fp", id_col)
         .where(F.col("__inter") >= F.lit(min_shared))
@@ -513,7 +521,7 @@ def duplicate_spans(
     both linear in corpus token count. Documents shorter than ``width``
     tokens have no spans and are absent from the output.
 
-    The distinct (doc, span-HASH) frame is PINNED (``_pinned``, caller
+    The distinct (doc, span-HASH) frame is PINNED (``pins.pin``, caller
     releases via ``release_pins``): its three consumers (the span-frequency
     groupBy, the join, and the per-doc rollup) cannot share the distinct
     exchange — column pruning gives each branch a different canonical
@@ -527,24 +535,18 @@ def duplicate_spans(
     Returns ``(id, n_spans, dup_spans, dup_frac)`` — distinct spans in the
     document, how many of them are duplicated, and the fraction.
     """
-    from ffn_polars_spark.operators._scanmeta import scan_bytes
-    from ffn_polars_spark.operators.dedup import (
-        _hash64,
-        _pinned_if_fits,
-        shingles_from_tokens,
-    )
+    from ffn_polars_spark.operators.dedup import _hash64, shingles_from_tokens
 
     # distinct (doc, span-hash) is TOKEN-scale: ~16 B per token ~= 3x the
     # on-disk text bytes. Pin only when that fits the storage pool
     # (adaptive: the unconditional pin GC-thrashed an 8 GB heap at 5M docs
     # even longs-only); past the cap the two consumers re-derive instead.
-    est = scan_bytes(df)
-    est = 3 * est if est is not None else None
+    est = _token_scale_est(df)
     df = spread_scan(df, id_col)
     base = df.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
     # the hash transform stays INSIDE the Generate's projection (round-6
     # rule: interpreted array builds belong in the explode itself)
-    spans = _pinned_if_fits(
+    spans = pin(
         base.select(
             F.col(id_col),
             F.explode(
@@ -694,7 +696,7 @@ def tfidf_topterms(
     in doc| rows — nothing after the first aggregate scales with corpus
     token count.
 
-    The (doc, term) aggregate is PINNED (``_pinned`` — MEMORY_AND_DISK,
+    The (doc, term) aggregate is PINNED (``pins.pin`` — MEMORY_AND_DISK,
     released by the caller via ``release_pins``): Catalyst cannot reuse
     the exchange between the tf and df branches because column pruning
     rewrites the df branch's inner aggregate (count pruned → different
@@ -706,8 +708,6 @@ def tfidf_topterms(
     df = spread_scan(df, id_col)
     from pyspark.sql.window import Window
 
-    from ffn_polars_spark.operators.dedup import _pinned
-
     toks = df.select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term")
     ).where(F.col("term") != "")
@@ -715,8 +715,8 @@ def tfidf_topterms(
     # dictionary-encodes in the columnar cache (term cardinality is
     # vocabulary-sized), so even the 5M-doc corpus pin fits an 8 GB heap
     # and beats the recompute path 120 s vs 148 s — unlike the
-    # high-cardinality span-hash pin, which is adaptive (_pinned_if_fits)
-    tf = _pinned(toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")))
+    # high-cardinality span-hash pin, which is heap-gated
+    tf = pin(toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
     n = df.select(F.count(F.lit(1)).alias("__n"))
     scored = (
@@ -978,9 +978,6 @@ def pmi_collocations(
 
     Returns ``(prev, token, n, pmi)``.
     """
-    from ffn_polars_spark.operators._scanmeta import scan_bytes
-    from ffn_polars_spark.operators.dedup import _pinned_if_fits
-
     pairs = doc_bigram_pairs(df, text_col, id_col)
     bc = pairs.groupBy("prev", "token").agg(F.count(F.lit(1)).alias("n"))
     # PIN the filtered bigram-count table: four branches (both marginals,
@@ -993,10 +990,8 @@ def pmi_collocations(
     # pin: est ≈ 3x the on-disk text bytes bounds the worst case (two
     # dictionary-encoded terms + a long per bigram ≈ token-scale); past
     # the cap the four consumers re-derive instead of GC-thrashing.
-    est = scan_bytes(df)
-    bc = _pinned_if_fits(
-        bc.where(F.col("n") >= F.lit(int(min_count))),
-        3 * est if est is not None else None,
+    bc = pin(
+        bc.where(F.col("n") >= F.lit(int(min_count))), _token_scale_est(df)
     )
     left = bc.groupBy("prev").agg(F.sum("n").alias("__cl"))
     right = bc.groupBy("token").agg(F.sum("n").alias("__cr"))
@@ -1055,7 +1050,7 @@ def zipf_slope(df: DataFrame, text_col: str = "text") -> DataFrame:
         .agg(F.count(F.lit(1)).alias("__f"))
     )
     # global rank = distributed cumulative count of ones in (freq desc,
-    # token) order; ranged_cumsum persists the sorted vocabulary so its
+    # token) order; ranged_cumsum pins the sorted vocabulary so its
     # offsets pass and the moment pass share one materialization
     ranked = ranged_cumsum(
         vocab,
@@ -1163,13 +1158,11 @@ def vocab_jsd(
             F.sum(F.when(F.col("__s") == b, 1).otherwise(0)).alias("__cb"),
         )
     )
-    from ffn_polars_spark.operators.dedup import _pinned
-
     # PIN the vocab-sided counts: the totals branch re-ran the corpus
     # tokenize+aggregate (r11 plan audit). Vocabulary-sized longs — the
     # tfidf measured-pin precedent; a single-partition window would hold
     # the whole vocabulary in one task, so the pin is the scale-safe form.
-    counts = _pinned(counts)
+    counts = pin(counts)
     tot = counts.agg(
         F.sum("__ca").alias("__na"), F.sum("__cb").alias("__nb")
     )
@@ -1368,8 +1361,6 @@ def doc_perplexity(
     vocabularies), one per-doc aggregate. Empty documents get NULL.
     Returns ``(id, n_tokens, cross_entropy, perplexity)``."""
     df = spread_scan(df, id_col)
-    from ffn_polars_spark.operators.dedup import _pinned
-
     toks = df.select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("__w")
     ).where(F.col("__w") != "")
@@ -1377,7 +1368,7 @@ def doc_perplexity(
     # scoring join read them, and each would otherwise re-run the
     # corpus-sized tokenize+aggregate (r11 plan audit: 3 corpus scans
     # down to 2 — the scoring join's own toks scan remains, by design).
-    vocab = _pinned(toks.groupBy("__w").agg(F.count(F.lit(1)).alias("__c")))
+    vocab = pin(toks.groupBy("__w").agg(F.count(F.lit(1)).alias("__c")))
     totals = vocab.agg(
         F.sum("__c").alias("__N"), F.count(F.lit(1)).alias("__V")
     )

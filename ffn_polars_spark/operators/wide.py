@@ -18,6 +18,7 @@ from typing import Callable, List, Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ffn_polars_spark.pins import pin
 from ffn_polars_spark.registry import register
 
 
@@ -117,12 +118,10 @@ def corr_matrix(
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("__key").orderBy("__bucket")
-    from ffn_polars_spark.operators.dedup import _pinned
-
     # PIN the bucket-returns frame: both self-join sides read it, and
     # each would otherwise re-run the data-sized bucket aggregate + lag
     # window (r11 derived-branch class). keys x buckets rows — small.
-    r = _pinned(
+    r = pin(
         b.select(
             "__key",
             "__bucket",

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 import ffn_polars_spark as ffn
 from ffn_polars_spark import Over
+from ffn_polars_spark.pins import pin, release_pins
 from ffn_polars_spark.sources import configure, read_table, ts_ns_col
 
 QUERY_FNS: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -10048,7 +10049,6 @@ def q_langid_agreement(spark, sf_dir):
     language_id heuristic's predictions and the corpus gold labels —
     chance-corrected agreement that stays honest on the gold labels
     (zh, it) the heuristic cannot emit."""
-    from ffn_polars_spark.operators.dedup import _pinned
     from ffn_polars_spark.operators.evaluation import cohens_kappa
     from ffn_polars_spark.operators.text import language_id
 
@@ -10059,7 +10059,7 @@ def q_langid_agreement(spark, sf_dir):
     # isnotnull(lang_pred) pushes the whole vote expression into the scan
     # filter, doubling it again (17 token splits in the unpinned plan).
     # The prediction frame is two columns at doc cardinality.
-    pred = _pinned(language_id(docs).select("doc_id", "lang_pred"))
+    pred = pin(language_id(docs).select("doc_id", "lang_pred"))
     lab = docs.select("doc_id", F.col("lang").alias("gold")).join(
         pred, "doc_id"
     )
@@ -11189,8 +11189,6 @@ def _with_pin_release(fn):
     after the release, so the query's own plan is unaffected."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ffn_polars_spark.operators.dedup import release_pins
-
         release_pins()
         return fn(spark, sf_dir)
 

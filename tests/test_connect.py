@@ -108,7 +108,8 @@ def test_tick_aggregate(cspark):
 def test_dedup_exact_family(cspark):
     """Pipeline family representative: dedup_exact is groupBy/window over
     md5 — no kernels, no JVM internals."""
-    from ffn_polars_spark.operators.dedup import dedup_exact, release_pins
+    from ffn_polars_spark.operators.dedup import dedup_exact
+    from ffn_polars_spark.pins import release_pins
 
     df = cspark.createDataFrame(
         [(0, "hello world"), (1, "HELLO   world"), (2, "other")],
@@ -136,7 +137,8 @@ def test_asof_join_family(cspark):
 def test_arrow_kernel_family(cspark):
     """pandas_udf kernels (the minhash path) execute through Connect's
     Arrow channel; asNondeterministic is part of the public UDF API."""
-    from ffn_polars_spark.operators.dedup import dedup_minhash_lsh, release_pins
+    from ffn_polars_spark.operators.dedup import dedup_minhash_lsh
+    from ffn_polars_spark.pins import release_pins
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     df = cspark.createDataFrame(

@@ -189,24 +189,23 @@ def test_hot_key_cutoff_drops_hot(spark, fn, cap, kw):
 
 
 def test_release_pins(spark, corpus):
-    from ffn_polars_spark.operators import dedup as D
+    from ffn_polars_spark import pins
 
-    D.release_pins()  # clean slate
+    pins.release_pins()  # clean slate
     dedup_minhash_lsh(corpus, threshold=0.6).count()
-    assert len(D._ACTIVE_PINS) > 0
-    released = D.release_pins()
-    assert released > 0 and not D._ACTIVE_PINS
+    assert len(pins._ACTIVE_PINS) > 0
+    released = pins.release_pins()
+    assert released > 0 and not pins._ACTIVE_PINS
 
 
 def test_pinned_scope(spark, corpus):
-    from ffn_polars_spark.operators import dedup as D
-    from ffn_polars_spark.operators.dedup import pinned_scope
+    from ffn_polars_spark import pins
 
-    D.release_pins()
-    with pinned_scope():
+    pins.release_pins()
+    with pins.pinned_scope():
         ngram_jaccard_pairs(corpus, threshold=0.6).count()
-        assert len(D._ACTIVE_PINS) > 0
-    assert not D._ACTIVE_PINS
+        assert len(pins._ACTIVE_PINS) > 0
+    assert not pins._ACTIVE_PINS
 
 
 def test_connected_components_bounded_lineage(spark):
@@ -237,9 +236,9 @@ def test_executor_heap_bytes_parses_spark_memory_grammar():
     """spark.executor.memory follows Spark's byteStringAsMb grammar:
     one-letter (k/m/g/t) and two-letter (kb/mb/gb/tb) binary suffixes, and a
     UNIT-LESS value means MiB ('8192' is 8 GiB, not 8192 bytes). Mis-parsing
-    over-estimates the executor heap and lets _pinned_if_fits pin frames
+    over-estimates the executor heap and lets pins.pin pin frames
     that GC-thrash real executors."""
-    from ffn_polars_spark.operators.dedup import _executor_heap_bytes
+    from ffn_polars_spark.pins import _executor_heap_bytes
 
     class _Conf:
         def __init__(self, v):
@@ -293,7 +292,7 @@ def test_minhash_construction_count_budget_per_strategy(spark, corpus, tmp_path)
     derivation (the old slowest-headline fat: ~5 s of task-time at sf0.1)
     is a regression. There is one candidate strategy, so the budget is 0
     for every input."""
-    from ffn_polars_spark.operators.dedup import release_pins
+    from ffn_polars_spark.pins import release_pins
 
     for frame in _corpus_and_parquet_copy(spark, corpus, tmp_path):
         release_pins()
@@ -314,7 +313,7 @@ def test_minhash_candidate_strategy_auto_and_identity(spark, corpus, tmp_path):
     """The in-memory frame and a tiny parquet copy (the input that once
     routed to a separate self-join strategy) take the same candidate path
     and return the identical pair set, jaccard values included."""
-    from ffn_polars_spark.operators.dedup import release_pins
+    from ffn_polars_spark.pins import release_pins
 
     pairs = []
     for frame in _corpus_and_parquet_copy(spark, corpus, tmp_path):
@@ -338,7 +337,7 @@ def test_minhash_max_bucket_cap(spark):
     (no pairs emitted), while distinct-but-near docs keep pairing through
     their other bands. Default (None) is uncapped — bit-identical to the
     oracle twin."""
-    from ffn_polars_spark.operators.dedup import release_pins
+    from ffn_polars_spark.pins import release_pins
 
     # 6 identical clones (degenerate bucket of 6 in all 16 bands) plus
     # 2 near-dup docs that share most shingles but not all bands
@@ -459,7 +458,7 @@ def test_group_pairs_hot_bucket_valve_and_streamed_pairs(spark):
        observable behavior as r13), for both dedup_minhash_lsh's
        candidate groups and dedup_simhash's ``max_bucket``.
     """
-    import ffn_polars_spark.operators.dedup as dedup_mod
+    from ffn_polars_spark.pins import release_pins
     from ffn_polars_spark.plans import plan_nodes
 
     def flatten_free(nodes) -> bool:
@@ -495,11 +494,11 @@ def test_group_pairs_hot_bucket_valve_and_streamed_pairs(spark):
         assert fn(docs, max_bucket=5, **kw).count() == 0
         # cap 20 -> all C(10,2) pairs survive (identical docs)
         assert fn(docs, max_bucket=20, **kw).count() == 45
-        dedup_mod.release_pins()
+        release_pins()
     # uncapped plans must also be flatten-free (streamed pairs are
     # unconditional)
     assert flatten_free(
         plan_nodes(dedup_minhash_lsh(docs, threshold=0.5, hash_fn="md5"))
     )
     assert flatten_free(plan_nodes(dedup_simhash(docs, hash_fn="md5")))
-    dedup_mod.release_pins()
+    release_pins()

@@ -159,6 +159,21 @@ def test_ranged_cumsum_matches_sequential(spark):
     assert got == want
 
 
+def test_blocked_cumsum_signed_values_across_block_seams(spark):
+    """A block's offset is its LAST running value, not its largest: with
+    signed addends the two differ and every later block shifts."""
+    from itertools import accumulate
+
+    from ffn_polars_spark.core import blocked_cumsum
+
+    vals = [1, 5, -4, -3, 2, -1, 7, -6, 0.5, 1.5]
+    df = spark.createDataFrame(
+        [(i, float(v)) for i, v in enumerate(vals)], "id long, v double"
+    )
+    out = blocked_cumsum(df, "id", F.col("v"), "c", block=4)
+    assert [r.c for r in out.orderBy("id").collect()] == list(accumulate(vals))
+
+
 def test_psi_drift_hand_computed_and_conventions(spark):
     import math
 

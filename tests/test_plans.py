@@ -711,7 +711,7 @@ def test_audit_sweep_pins_engaged(spark):
     # of multi-branch shapes; if a refactor drops the pin, the branches
     # silently go back to re-scanning the corpus. InMemoryTableScan in the
     # executed plan is the cheap observable that the pin engaged.
-    from ffn_polars_spark.operators.dedup import release_pins
+    from ffn_polars_spark.pins import release_pins
 
     # dedup_exact / clean_corpus left this list in r13: their canonical-id
     # resolution became min-over-window (single branch, single exchange),

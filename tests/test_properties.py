@@ -3205,7 +3205,7 @@ def test_pagerank_numpy_replay_property(spark, edges):
     """pagerank matches a plain-Python replay of the damped recurrence
     (dedup edges, dangling mass redistributed uniformly, 15 rounds)."""
     from ffn_polars_spark.operators.graph import pagerank
-    from ffn_polars_spark.operators.dedup import release_pins
+    from ffn_polars_spark.pins import release_pins
 
     df = spark.createDataFrame(edges, "src int, dst int")
     got = {r["node"]: r for r in pagerank(df, iterations=15).collect()}
@@ -3271,7 +3271,7 @@ def test_triangle_count_naive_property(spark, edges):
     from itertools import combinations
 
     from ffn_polars_spark.operators.graph import triangle_count
-    from ffn_polars_spark.operators.dedup import release_pins
+    from ffn_polars_spark.pins import release_pins
 
     df = spark.createDataFrame(edges, "src int, dst int")
     got = {r["node"]: r for r in triangle_count(df).collect()}
@@ -4205,7 +4205,7 @@ def test_bm25_search_counter_property(spark, docs, query):
     from collections import Counter
 
     from ffn_polars_spark.operators.search import bm25_search
-    from ffn_polars_spark.operators.dedup import release_pins
+    from ffn_polars_spark.pins import release_pins
 
     df = spark.createDataFrame([(i, d) for i, d in enumerate(docs)], "doc_id long, text string")
     got = {r["doc_id"]: r for r in bm25_search(df, query).collect()}
@@ -4798,7 +4798,7 @@ def test_tfidf_topterms_counter_property(spark, docs, m_top):
     from collections import Counter
 
     from ffn_polars_spark.operators.text import tfidf_topterms
-    from ffn_polars_spark.operators.dedup import release_pins
+    from ffn_polars_spark.pins import release_pins
 
     rows = [(i, d) for i, d in enumerate(docs)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -4873,7 +4873,7 @@ def test_containment_pairs_naive_property(spark, docs, threshold):
     """containment_pairs matches the naive shingle-set walk, both
     directions, rounded-then-thresholded."""
     from ffn_polars_spark.operators.dedup import containment_pairs
-    from ffn_polars_spark.operators.dedup import release_pins
+    from ffn_polars_spark.pins import release_pins
 
     rows = [(i, d) for i, d in enumerate(docs)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -4962,7 +4962,7 @@ def test_doc_perplexity_addone_property(spark, docs):
     from collections import Counter
 
     from ffn_polars_spark.operators.text import doc_perplexity
-    from ffn_polars_spark.operators.dedup import release_pins
+    from ffn_polars_spark.pins import release_pins
 
     rows = [(i, d) for i, d in enumerate(docs)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -5115,7 +5115,7 @@ def test_robust_outliers_median_mad_property(spark, vals, k):
     import numpy as np
 
     from ffn_polars_spark.operators.sketch import robust_outliers
-    from ffn_polars_spark.operators.dedup import release_pins
+    from ffn_polars_spark.pins import release_pins
 
     df = spark.createDataFrame([(v,) for v in vals], "v double")
     got = robust_outliers(df, "v", k=k).collect()[0]

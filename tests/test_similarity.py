@@ -583,7 +583,7 @@ def test_embedding_covariance_ragged_counts(spark):
     """Per-pair n must equal the number of vectors long enough for BOTH
     components (the exploded-self-join contract)."""
     from ffn_polars_spark.operators.similarity import embedding_covariance
-    from ffn_polars_spark.operators.dedup import release_pins
+    from ffn_polars_spark.pins import release_pins
 
     rows = [(1, [1.0, 2.0, 3.0]), (2, [4.0, 5.0]), (3, [6.0, 7.0, 8.0])]
     df = spark.createDataFrame(rows, "vec_id INT, embedding ARRAY<DOUBLE>")

@@ -162,7 +162,7 @@ def test_triangle_wedges_degree_ordered_star(spark):
     so the hub's forward list — and therefore the largest wedge group —
     collapses. The triangle answer is unchanged (only the clique has
     them)."""
-    from ffn_polars_spark.operators.dedup import release_pins
+    from ffn_polars_spark.pins import release_pins
     from ffn_polars_spark.operators.graph import triangle_count
 
     # hub 0 with 200 leaves (no triangles) + a 5-clique on 1000..1004
@@ -210,7 +210,7 @@ def test_graph_ops_leave_no_persisted_rdds(spark):
     catalog's release_pins(), the session holds zero persisted RDDs (the
     per-round localCheckpoints are unpersisted in-loop; edge pins and the
     final rank checkpoint ride the pin registry)."""
-    from ffn_polars_spark.operators.dedup import release_pins
+    from ffn_polars_spark.pins import release_pins
     from ffn_polars_spark.operators.graph import pagerank, triangle_count
 
     release_pins()

@@ -30,7 +30,7 @@ def main() -> None:
         names = list(HEADLINE)
 
     from ffn_polars_spark.queries import QUERY_FNS
-    from ffn_polars_spark.operators.dedup import release_pins
+    from ffn_polars_spark.pins import release_pins
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", round_dir)

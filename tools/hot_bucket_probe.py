@@ -48,6 +48,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     import ffn_polars_spark.operators.dedup as D
+    from ffn_polars_spark.pins import release_pins
 
     docs = spark.range(k).select(
         F.col("id").alias("doc_id"),
@@ -58,7 +59,7 @@ def main() -> None:
         docs, threshold=0.5, bands=bands, max_bucket=cap, hash_fn="xxhash64"
     )
     n = out.count()
-    D.release_pins()
+    release_pins()
     expected = 0 if cap < k else k * (k - 1) // 2
     print(
         f"rows={n} expected={expected} wall={time.time() - t0:.1f}s "

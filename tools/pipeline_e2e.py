@@ -41,8 +41,8 @@ def main() -> None:
         dedup_assign_canonical,
         dedup_minhash_lsh,
         decontaminate,
-        release_pins,
     )
+    from ffn_polars_spark.pins import release_pins
     from ffn_polars_spark.operators.pipeline import (
         clean_corpus,
         deterministic_split,

@@ -12,7 +12,7 @@ plan (``plans.plan_nodes``), counts the occurrences of each
 expensive-expression marker in the nodes' own expressions, the Python
 evaluation nodes, and the scans of each file location, and prints the
 queries whose counts reach a threshold.  The walk stops at cached
-relations: a ``_pinned`` frame's plan ran when the pin filled, and
+relations: a pinned (``pins.pin``) frame's plan ran when the pin filled, and
 execution reads the cache.
 
 Usage:
@@ -50,7 +50,7 @@ SKIP_PREFIXES = ("streaming_",)  # streams need a sink to plan; skip
 def audit(spark, sf_dir: str, names, threshold: int):
     import __spark_entry__ as se
 
-    from ffn_polars_spark.operators.dedup import release_pins
+    from ffn_polars_spark.pins import release_pins
     from ffn_polars_spark.plans import plan_nodes
 
     qs = se.queries()

@@ -60,7 +60,7 @@ NOTES = [
     "(the cells frame is data-dependent and could bypass the 30%-heap "
     "gate on id-like inputs — the column_overlap concern, resolved "
     "structurally). pmi_collocations' pin is now heap-gated "
-    "(_pinned_if_fits, 3× text bytes) for the min_count=1 worst case.",
+    "(pins.pin with a 3× text-bytes estimate) for the min_count=1 worst case.",
     "**corpus_overlap (~12)**: all exchanges are sketch-sized (1-row global "
     "aggregates and k-element arrays); the only data-sized work is two scans "
     "per side (HLL τ-bound + filtered KMV collect), both load-bearing.",

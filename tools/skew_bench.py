@@ -115,11 +115,8 @@ def gen(outdir: str, n_doc: int, boiler_frac: float = 0.4, seed: int = 7) -> Non
 def run(d: str, max_bucket, timeout_s: int = 900) -> None:
     from pyspark.sql import functions as F
 
-    from ffn_polars_spark.operators.dedup import (
-        dedup_exact,
-        dedup_minhash_lsh,
-        release_pins,
-    )
+    from ffn_polars_spark.operators.dedup import dedup_exact, dedup_minhash_lsh
+    from ffn_polars_spark.pins import release_pins
     from ffn_polars_spark.sources import get_spark
 
     spark = get_spark()
