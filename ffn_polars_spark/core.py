@@ -192,68 +192,26 @@ def epoch_seconds(c: ColumnOrName) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Distributed prefix sum.
+# Distributed prefix sums.
 # ---------------------------------------------------------------------------
-
-def blocked_cumsum(
-    df,
-    id_col: str,
-    val: Column,
-    out: str,
-    block: int = 1 << 20,
-):
-    """Cumulative sum of ``val`` in ``id_col`` order WITHOUT a global
-    single-partition window.
-
-    Two-pass prefix sum: rows are bucketed into fixed-size id blocks; pass 1
-    computes each block's local running sum (window partitioned by block —
-    parallel) and per-block totals (one small aggregate); pass 2 turns the
-    tiny per-block totals into block offsets (a window over ~n/block rows)
-    and broadcast-joins them back. The only data-sized shuffle is the
-    partitionBy(block) exchange; an un-keyed ``F.sum().over(Window.orderBy)``
-    would instead funnel every row through one partition — the classic
-    scale cliff this avoids.
-
-    Requires ``id_col`` to be a dense-ish monotone long (e.g. from
-    ``spark.range``); correctness only needs it to be unique and ordered.
-    """
-    blk = (F.col(id_col) / F.lit(int(block))).cast("long")
-    d = df.withColumn("__blk", blk)
-    w_local = (
-        Window.partitionBy("__blk")
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    d = d.withColumn("__local", F.sum(val).over(w_local))
-    # block total = the LAST row's running value (struct-max on id_col —
-    # NOT max(__local), which is wrong for negative addends)
-    totals = d.groupBy("__blk").agg(
-        F.max(F.struct(F.col(id_col), F.col("__local").alias("__v")))
-        .getField("__v")
-        .alias("__tot")
-    )
-    w_off = Window.orderBy("__blk").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "__blk", F.coalesce(F.sum("__tot").over(w_off), F.lit(0.0)).alias("__off")
-    )
-    return (
-        d.join(F.broadcast(offsets), "__blk")
-        .withColumn(out, F.col("__local") + F.col("__off"))
-        .drop("__blk", "__local", "__off")
-    )
-
 
 def ranged_cumsum(df, order_cols, vals: dict, return_totals: bool = False):
     """Cumulative sums over an arbitrary global ordering WITHOUT a
-    single-partition window — the general-ordering sibling of
-    :func:`blocked_cumsum` (which wants a dense monotone long id).
+    single-partition window.
 
     Range-repartition by ``order_cols``, run each cumulative sum inside
     its (sorted) partition, then add per-partition offsets derived from a
     tiny driver-side pass over partition totals (bounded by the partition
-    count, not the data). Range boundaries are sampled, but every output
-    value is determined solely by the total order of ``order_cols`` —
-    identical on any cluster shape.
+    count, not the data). Range boundaries are sampled, so where a
+    partition ends depends on the sample and the cluster. Integer and
+    decimal sums are exact in any association and therefore identical on
+    any cluster shape; float sums can differ by a few ulp between shapes.
+
+    Why this is not :func:`blocked_keyed_cumsum` with ``keys=[]``: its
+    callers order by heavy-tailed values (Zipf counts, Pareto
+    contributions, ECDF ranks over any type). Equal-width slices of such
+    an order's min/max put nearly every row in one slice; sampled range
+    boundaries split it into equal-count partitions instead.
 
     ``vals`` maps output column name -> input Column to sum. The
     range-partitioned input is pinned (``pins.pin``, lazily: the totals
@@ -366,7 +324,7 @@ def _default_block_count(session) -> int:
     fallback itself."""
     try:
         return session.sparkContext.defaultParallelism
-    except Exception:
+    except AttributeError:  # Spark Connect: no client-side SparkContext
         conf = session.conf.get("spark.sql.shuffle.partitions", "200")
         try:
             return max(1, int(conf))
@@ -374,88 +332,52 @@ def _default_block_count(session) -> int:
             return 200
 
 
-def _order_blocked(df, keys, order, num_blocks=None):
-    """Attach a contiguous-slice id ``__blk`` for the blocked sequence
-    primitives: equi-width intervals over the first order column's min/max
-    (one single-column aggregate job — a numeric order makes the window's
-    own (block, keys) hash exchange the only data-sized shuffle), falling
-    back to a range partitioning (sampling pass + extra shuffle) for
-    non-numeric orders."""
-    p = num_blocks or _default_block_count(df.sparkSession)
-    blk = None
-    o0 = F.col(order[0])
-    try:
-        dtype = dict(df.dtypes)[order[0]]
-    except Exception:
-        dtype = ""
-    if dtype in ("tinyint", "smallint", "int", "bigint", "long"):
-        mm = df.agg(F.min(o0).alias("lo"), F.max(o0).alias("hi")).first()
+def _order_code(df, col: str) -> Optional[Column]:
+    """Exact, order-preserving long encoding of order column ``col``: the
+    value itself for integer types, ``unix_micros`` for timestamps and
+    ``unix_date`` for dates. None for every other type (double, decimal,
+    string, timestamp_ntz, ...), which the blocked primitives cannot
+    slice."""
+    dtype = dict(df.dtypes).get(col)
+    if dtype in ("tinyint", "smallint", "int", "bigint"):
+        return F.col(col).cast("long")
+    if dtype == "timestamp":
+        return F.unix_micros(F.col(col))
+    if dtype == "date":
+        return F.unix_date(F.col(col)).cast("long")
+    return None
+
+
+def _order_blocked(df, order, num_blocks=None):
+    """Attach the slice id ``__blk`` of the blocked sequence primitives: a
+    function of the row's first order value alone, equal-width intervals
+    over its min/max (:func:`_order_code`; one single-column aggregate
+    job). Block ids are monotone in the order, so slices are contiguous and
+    the window's own (block, keys) exchange is the only data-sized shuffle.
+
+    One block (no bounds job) when ``num_blocks`` is 1; one block after
+    the bounds job when the span is zero, empty, or too wide for int64 —
+    correct, only serial. Raises ValueError for an order type without an
+    exact integer encoding."""
+    p = int(num_blocks or _default_block_count(df.sparkSession))
+    code = _order_code(df, order[0])
+    if code is None:
+        raise ValueError(
+            f"blocked sequence primitives need an integer, timestamp or date "
+            f"first order column; {order[0]!r} is {dict(df.dtypes).get(order[0])}"
+        )
+    blk = F.lit(0)
+    if p > 1:
+        mm = df.agg(F.min(code).alias("lo"), F.max(code).alias("hi")).first()
         lo, hi = mm["lo"], mm["hi"]
-        # (hi - lo) must fit in int64: the executor-side (o0 - lo) runs in
-        # non-ANSI long arithmetic and would WRAP silently on a wider span
-        # (e.g. order keys spanning both halves of the int64 range), giving
+        # (code - lo) runs in long arithmetic on the executors and must not
+        # overflow: keys spanning both halves of the int64 range would give
         # non-monotone block ids and a wrong stitch order. Python ints don't
-        # overflow, so check here and fall back to repartitionByRange.
-        if (
-            lo is not None
-            and hi is not None
-            and hi > lo
-            and int(hi) - int(lo) < (1 << 63)
-        ):
-            width = max(1, -(-(int(hi) - int(lo) + 1) // int(p)))
-            blk = ((o0 - F.lit(int(lo))) / F.lit(width)).cast("long")
-    if blk is not None:
-        return df.withColumn("__blk", blk)
-    return df.repartitionByRange(
-        int(p), *[F.col(c) for c in keys + order]
-    ).withColumn("__blk", F.spark_partition_id())
-
-
-def blocked_keyed_index(
-    df,
-    key_cols: Sequence[str],
-    order_cols: Sequence[str],
-    out: str = "gidx",
-    num_blocks: Optional[int] = None,
-):
-    """``row_number() OVER (PARTITION BY keys ORDER BY order)`` WITHOUT the
-    key-cardinality parallelism floor — the indexing member of the blocked
-    sequence family (:func:`blocked_keyed_lag` covers lag-1; this primitive
-    unlocks arbitrary lag-k/lead-k as an equi-join on ``(keys, out - k)``,
-    which shuffles on a HIGH-cardinality composite key and therefore keeps
-    full cluster parallelism at any key count).
-
-    Each key's sequence is sliced into contiguous order-range blocks
-    (:func:`_order_blocked`); a local row number runs per (block, keys) —
-    parallelism = blocks x keys — and per-key running slice offsets,
-    derived from a blocks x keys-row aggregate (bounded by the cluster and
-    the key count, never the data), lift local numbers to global ones.
-    Deterministic and value-identical to the plain window for order columns
-    unique per key."""
-    keys = list(key_cols)
-    order = list(order_cols)
-    rb = _order_blocked(df, keys, order, num_blocks)
-    # internal names carry a __bki_ prefix so a caller's ``out`` (any name
-    # not starting with __bki_) can never collide with a column this
-    # function drops
-    w = Window.partitionBy("__blk", *keys).orderBy(*[F.col(c) for c in order])
-    local = rb.select("*", F.row_number().over(w).alias("__bki_rn"))
-    sizes = local.groupBy("__blk", *keys).agg(F.max("__bki_rn").alias("__bki_n"))
-    wo = (
-        Window.partitionBy(*keys)
-        .orderBy("__blk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = sizes.select(
-        "__blk",
-        *keys,
-        F.coalesce(F.sum("__bki_n").over(wo), F.lit(0)).alias("__bki_off"),
-    )
-    return (
-        local.join(offsets, ["__blk", *keys])
-        .withColumn(out, (F.col("__bki_off") + F.col("__bki_rn")).cast("long"))
-        .drop("__blk", "__bki_rn", "__bki_off")
-    )
+        # overflow, so check here.
+        if lo is not None and lo < hi and hi - lo < (1 << 63):
+            width = -(-(hi - lo + 1) // p)
+            blk = ((code - F.lit(lo)) / F.lit(width)).cast("long")
+    return df.withColumn("__blk", blk)
 
 
 def blocked_keyed_cumsum(
@@ -466,24 +388,29 @@ def blocked_keyed_cumsum(
     num_blocks: Optional[int] = None,
 ):
     """``sum(val) OVER (PARTITION BY keys ORDER BY order ROWS UNBOUNDED
-    PRECEDING)`` WITHOUT the key-cardinality parallelism floor — the
-    running-sum member of the blocked sequence family
-    (:func:`blocked_keyed_lag`, :func:`blocked_keyed_index`).
+    PRECEDING)`` WITHOUT the key-cardinality parallelism floor — the one
+    running-sum stitch of the blocked sequence family (its sibling
+    :func:`blocked_keyed_lag` moves values instead of adding them).
+    ``keys=[]`` is the un-keyed prefix sum (token-budget sharding, the
+    simulator's price walk); a per-key row number is the running sum of
+    ``F.lit(1)``.
 
     Per-(block, keys) local running sums + per-key running slice-total
-    offsets (a blocks x keys-row frame, the same stitch as
-    :func:`blocked_keyed_index`). For integer-valued and decimal columns
+    offsets (a blocks x keys-row frame). Blocks come from the first order
+    column's value (:func:`_order_blocked`), so the output depends only on
+    the order and ``num_blocks``. For integer-valued and decimal columns
     the result is EXACTLY the window's; for general floating-point values
     the slice/offset association can differ from the sequential window sum
     by ~1 ulp — callers that threshold the cumsum (bar assignment) should
     treat epsilon-boundary flips as inherent to float accumulation, not a
-    plan property.
+    plan property. With one block the float sum is the window's, bit for
+    bit.
 
     ``vals`` maps output name -> column name (or Column) to sum. Returns
     the frame plus the running-sum columns (internal columns dropped)."""
     keys = list(key_cols)
     order = list(order_cols)
-    rb = _order_blocked(df, keys, order, num_blocks)
+    rb = _order_blocked(df, order, num_blocks)
     w = (
         Window.partitionBy("__blk", *keys)
         .orderBy(*[F.col(c) for c in order])
@@ -526,7 +453,11 @@ def blocked_keyed_cumsum(
             for out in vals
         ],
     )
-    out_df = local.join(offsets, ["__blk", *keys])
+    # a LEFT join keeps a row whose slice has no offsets row (a NULL block
+    # id: NULL order values, the first slice, whose offset is NULL anyway)
+    # and, unlike an inner join, infers no isnotnull filter on ``local``:
+    # the totals branch's exchange then equals this one and is reused
+    out_df = local.join(offsets, ["__blk", *keys], "left")
     for out in vals:
         loc, off = F.col(f"__loc_{out}"), F.col(f"__off_{out}")
         # the window's running sum SKIPS nulls and is NULL only while no
@@ -552,8 +483,8 @@ def blocked_keyed_lag(
     num_blocks: Optional[int] = None,
 ):
     """``F.lag(col, 1) OVER (PARTITION BY keys ORDER BY order)`` WITHOUT the
-    key-cardinality parallelism floor — the per-key-sequence sibling of
-    :func:`ranged_cumsum`.
+    key-cardinality parallelism floor — the lag member of the blocked
+    sequence family (:func:`blocked_keyed_cumsum` is the running sum).
 
     A plain per-key window caps its parallelism at the number of distinct
     keys: a 100M-row tape with 5 tickers sorts five 20M-row partitions on
@@ -572,8 +503,9 @@ def blocked_keyed_lag(
     (block, keys) hash exchange the only data-sized shuffle — the same
     exchange count as the plain window — where a range partitioning would
     add a full sampling pass plus a second shuffle (measured: 16.3 s vs
-    21.0 s window at sf100 with the sampling pass, 12-13 s without).
-    Non-numeric order columns fall back to the range-partition strategy.
+    21.0 s window at sf100 with the sampling pass, 12-13 s without). The
+    first order column must be an integer, timestamp or date
+    (:func:`_order_code`); other types raise ValueError.
 
     Value-identical to the plain window: a lag MOVES values, no arithmetic
     happens, and every row's predecessor is either in its own slice (the
@@ -590,7 +522,7 @@ def blocked_keyed_lag(
     """
     keys = list(key_cols)
     order = list(order_cols)
-    rb = _order_blocked(df, keys, order, num_blocks)
+    rb = _order_blocked(df, order, num_blocks)
     w = Window.partitionBy("__blk", *keys).orderBy(*[F.col(c) for c in order])
     local = rb.select(
         "*",

@@ -91,19 +91,19 @@ def tick_bars(
 ) -> DataFrame:
     """Bars of exactly ``ticks_per_bar`` consecutive ticks per group.
 
-    ``seq_parallelism``: the per-key row number routes through
-    ``core.blocked_keyed_index`` past ~50M sampled rows per key (policy
-    in ``_scanmeta.use_blocked_sequence_plan``); row numbering is exact
-    either way, so the bar assignment is identical."""
+    ``seq_parallelism``: past ~50M sampled rows per key the per-key row
+    number is the running count ``core.blocked_keyed_cumsum`` of
+    ``F.lit(1)`` (policy in ``_scanmeta.use_blocked_sequence_plan``); row
+    numbering is exact either way, so the bar assignment is identical."""
     by = list(by or [])
     from ffn_polars_spark.operators._scanmeta import use_blocked_sequence_plan
 
     if by and use_blocked_sequence_plan(
-        df, by, seq_parallelism, rows_hint=rows_hint
+        df, by, ts, seq_parallelism, rows_hint=rows_hint
     ):
-        from ffn_polars_spark.core import blocked_keyed_index
+        from ffn_polars_spark.core import blocked_keyed_cumsum
 
-        pre = blocked_keyed_index(df, by, [ts], out="__rn").withColumn(
+        pre = blocked_keyed_cumsum(df, by, [ts], {"__rn": F.lit(1)}).withColumn(
             "bar_id",
             ((F.col("__rn") - F.lit(1)) / F.lit(int(ticks_per_bar))).cast("long"),
         ).drop("__rn")
@@ -164,7 +164,7 @@ def _cum_minus_self(df, ts, val_col, by, seq_parallelism, op, rows_hint=None):
     from ffn_polars_spark.operators._scanmeta import use_blocked_sequence_plan
 
     if by and use_blocked_sequence_plan(
-        df, by, seq_parallelism, rows_hint=rows_hint
+        df, by, ts, seq_parallelism, rows_hint=rows_hint
     ):
         from ffn_polars_spark.core import blocked_keyed_cumsum
 

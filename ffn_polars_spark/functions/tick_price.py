@@ -88,15 +88,18 @@ def calc_realized_volatility(
     * ``"auto"`` (default): scans whose footer row count (no jobs) divided
       by a sampled key cardinality exceeds ~50M rows PER KEY — and whose
       key count sits below the cluster's slot count — route the lag
-      through :func:`core.blocked_keyed_lag` (order-range slices +
+      through :func:`core.blocked_keyed_lag` (slices of the order value +
       boundary stitch; parallelism from the cluster, not the key count).
-      Everything else keeps the window. The gate is the MEASURED
+      Everything else keeps the window, and so does an order column with
+      no exact integer encoding (double, string, timestamp_ntz). The gate is the MEASURED
       crossover in rows per key, not total size (sf100 tape, local[32],
       hot cache, min-of-runs): at 2M rows/key the blocked plan's fixed
       costs lose 2.7x; at 20M rows/key the window still wins 12.9 s vs
       16.4 s; at 100M rows/key the window's single-task sort takes
       57.0 s vs 8.2 s blocked — 7x, growing with every further decade.
-    * ``"window"`` / ``"blocked"``: force the respective plan.
+    * ``"window"`` / ``"blocked"``: force the respective plan;
+      ``"blocked"`` raises ValueError when ``order_by`` is not an integer,
+      timestamp or date column.
 
     Both plans produce the same returns (a lag moves values, no
     arithmetic); only the Σr² association order differs, within the same
@@ -109,7 +112,7 @@ def calc_realized_volatility(
         from ffn_polars_spark.operators._scanmeta import use_blocked_sequence_plan
 
         use_blocked = use_blocked_sequence_plan(
-            df, by, seq_parallelism, rows_hint=rows_hint
+            df, by, order_by, seq_parallelism, rows_hint=rows_hint
         )
     if use_blocked:
         from ffn_polars_spark.core import blocked_keyed_lag
@@ -153,8 +156,10 @@ def autocorr(
     ``seq_parallelism`` (same policy as ``calc_realized_volatility`` —
     see ``_scanmeta.use_blocked_sequence_plan``): past ~50M rows per
     sampled key, the per-key window's key-count parallelism floor routes
-    the lags through ``core.blocked_keyed_index`` instead — a floor-free
-    per-key global row index, after which ALL the lags come from ONE
+    the lags through a floor-free per-key global row index instead (the
+    running count ``core.blocked_keyed_cumsum`` of ``F.lit(1)``; the
+    first order column must be an integer, timestamp or date, as in
+    ``calc_realized_volatility``), after which ALL the lags come from ONE
     self-equi-join on the high-cardinality ``(keys, index)`` composite
     (the lag side explodes its index forward by 1..max_lag), keeping
     full cluster parallelism at any key count. Same output frame
@@ -177,12 +182,12 @@ def autocorr(
     from ffn_polars_spark.operators._scanmeta import use_blocked_sequence_plan
 
     if gcols and use_blocked_sequence_plan(
-        df, gcols, seq_parallelism, rows_hint=rows_hint
+        df, gcols, ocols[0], seq_parallelism, rows_hint=rows_hint
     ):
-        from ffn_polars_spark.core import blocked_keyed_index
+        from ffn_polars_spark.core import blocked_keyed_cumsum
 
         base = df.select(*gcols, *ocols, x.alias("__x"))
-        idx = blocked_keyed_index(base, gcols, ocols, out="__g")
+        idx = blocked_keyed_cumsum(base, gcols, ocols, {"__g": F.lit(1)})
         lags = F.array(*[F.lit(k) for k in range(1, max_lag + 1)])
         # each row offers itself as the lag-k partner of the row k ahead
         partners = idx.select(

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ffn_polars_spark.core import _default_block_count
+from ffn_polars_spark.core import _default_block_count, _order_code
 
 # Row-count-preserving logical nodes: a plan made only of these above a
 # parquet relation has exactly the relation's row count, so the count can be
@@ -201,7 +201,7 @@ def spread_scan(df: DataFrame, key: str | None = None) -> DataFrame:
         return df
     try:
         sc = df.sparkSession.sparkContext
-    except Exception:
+    except AttributeError:
         # Spark Connect: neither df.rdd nor the footer walk (df._jdf) is
         # reachable from the client, so the under-parallelized-scan
         # condition cannot be detected — pass through rather than add an
@@ -243,19 +243,27 @@ def sampled_key_cardinality(df: DataFrame, keys, sample_rows: int = 100_000):
 def use_blocked_sequence_plan(
     df: DataFrame,
     keys,
+    order: str,
     seq_parallelism: str = "auto",
     rows_per_key: int = 50_000_000,
     rows_hint=None,
 ):
     """Shared policy for the per-key sequence operators (realized
-    volatility, autocorrelation, ...): route the lag through the blocked
-    primitives (core.blocked_keyed_lag / blocked_keyed_index) only past the
-    MEASURED crossover — a sampled key cardinality below the cluster's slot
-    count AND a footer row count of >= ``rows_per_key`` rows per key
-    (sf100 tape, local[32], hot cache: the plain window wins until ~20M
-    rows/key and loses 7x at 100M rows/key). ``seq_parallelism`` is the
-    operator's knob: "auto" applies the policy, "blocked"/"window" force a
-    plan.
+    volatility, autocorrelation, threshold bars): route the sequence op
+    through the blocked primitives (core.blocked_keyed_lag /
+    blocked_keyed_cumsum) only past the MEASURED crossover — a sampled key
+    cardinality below the cluster's slot count AND a footer row count of
+    >= ``rows_per_key`` rows per key (sf100 tape, local[32], hot cache:
+    the plain window wins until ~20M rows/key and loses 7x at 100M
+    rows/key). ``seq_parallelism`` is the operator's knob: "auto" applies
+    the policy, "blocked"/"window" force a plan.
+
+    ``order`` is the first order column. The blocked primitives slice
+    each key's sequence by its value, which needs an exact integer
+    encoding (``core._order_code``: integer, timestamp, date). Past the
+    row-count gate, "auto" keeps the window plan for any other type
+    (double, string, timestamp_ntz); "blocked" raises ValueError naming
+    the type.
 
     ``rows_hint``: caller-supplied total row count, used ONLY when the
     frame is not a bare parquet scan (footer counts return None there —
@@ -270,9 +278,15 @@ def use_blocked_sequence_plan(
         if df.isStreaming:
             raise ValueError(
                 "seq_parallelism='blocked' is batch-only: the blocked plan "
-                "needs a min/max bounds job and a repartition, neither of "
-                "which is supported on a streaming DataFrame. Use "
-                "seq_parallelism='window' (or 'auto') for streaming frames."
+                "needs a min/max bounds job, which a streaming DataFrame "
+                "does not support. Use seq_parallelism='window' (or "
+                "'auto') for streaming frames."
+            )
+        if _order_code(df, order) is None:
+            raise ValueError(
+                f"seq_parallelism='blocked' needs an integer, timestamp or "
+                f"date order column; {order!r} is "
+                f"{dict(df.dtypes).get(order)}. Use seq_parallelism='window'."
             )
         return True
     if seq_parallelism != "auto" or df.isStreaming:
@@ -280,7 +294,7 @@ def use_blocked_sequence_plan(
     n = bare_scan_row_count(df, allow_reducing=True)
     if n is None and rows_hint is not None:
         n = int(rows_hint)
-    if n is None or n < rows_per_key:
+    if n is None or n < rows_per_key or _order_code(df, order) is None:
         return False
     cores = _default_block_count(df.sparkSession)
     k = sampled_key_cardinality(df, keys)

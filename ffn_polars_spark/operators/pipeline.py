@@ -282,30 +282,31 @@ def shard_by_tokens(
     budget: int = 1_000_000,
     id_col: str = "doc_id",
     text_col: str = "text",
-    block: int = 1 << 20,
 ) -> DataFrame:
     """Pack documents into token-budget shards in ``id_col`` order.
 
     ``shard_id = floor(exclusive_prefix_sum(tokens) / budget)`` — the
     deterministic sharding a pre-training pipeline uses to cut a corpus into
-    ~equal-token output files. The prefix sum is the two-pass blocked cumsum
-    (core.blocked_cumsum): rows bucket into fixed id blocks, per-block
-    running sums run in parallel, and only the tiny per-block totals pass
-    through a global window — an un-keyed ``sum().over(Window.orderBy)``
-    would funnel the full corpus through ONE partition, the classic scale
-    cliff at 100 TB.
+    ~equal-token output files. The prefix sum is the un-keyed blocked
+    cumsum (``core.blocked_keyed_cumsum`` with no keys): rows slice into
+    equal-width ``id_col`` ranges (one min/max job), per-slice running sums
+    run in parallel, and only the tiny per-slice totals pass through a
+    global window — an un-keyed ``sum().over(Window.orderBy)`` would funnel
+    the full corpus through ONE partition, the classic scale cliff at
+    100 TB. Integer token sums are exact however the rows are sliced.
+    ``id_col`` must be an integer, timestamp or date column.
 
     Returns ``(id, n_tokens, shard_id)``; exclusive prefix sum means a
     document larger than ``budget`` still lands in exactly one shard.
     """
-    from ffn_polars_spark.core import blocked_cumsum
+    from ffn_polars_spark.core import blocked_keyed_cumsum
     from ffn_polars_spark.operators._scanmeta import spread_scan
 
     df = spread_scan(df, id_col)
     t = df.select(
         F.col(id_col), token_count(F.col(text_col)).cast("long").alias("n_tokens")
     )
-    c = blocked_cumsum(t, id_col, F.col("n_tokens"), "__cum", block=block)
+    c = blocked_keyed_cumsum(t, [], [id_col], {"__cum": "n_tokens"})
     return c.select(
         F.col(id_col),
         "n_tokens",
@@ -321,7 +322,6 @@ def pack_sequences(
     seq_len: int = 2048,
     id_col: str = "doc_id",
     text_col: str = "text",
-    block: int = 1 << 20,
 ) -> DataFrame:
     """Concat-and-chunk sequence packing: lay documents end-to-end in
     ``id_col`` order and cut the token stream into fixed ``seq_len`` blocks
@@ -334,16 +334,17 @@ def pack_sequences(
     they are the full pack manifest a downstream tokenizer-writer needs,
     computed without materializing any token stream.
 
-    Scale: the prefix sum is the blocked two-pass cumsum (no global
-    single-partition window); chunk explosion is in-row (a document spans at
-    most ``ceil(n/seq_len)+1`` sequences). One data-sized shuffle. The
-    (id, n_tokens) frame is pinned (``pins.pin``; caller releases via
-    ``release_pins``): the two-pass cumsum necessarily reads it twice,
+    Scale: the prefix sum is the un-keyed blocked cumsum, as in
+    :func:`shard_by_tokens` (no global single-partition window); chunk
+    explosion is in-row (a document spans at most ``ceil(n/seq_len)+1``
+    sequences). One data-sized shuffle. The (id, n_tokens) frame is pinned
+    (``pins.pin``; caller releases via ``release_pins``): the cumsum's
+    bounds job and two passes necessarily read it three times,
     and unpinned each pass — plus the pushed ``n_tokens > 0`` filter —
     re-tokenized the corpus (6 split copies in the round-8 plan audit);
     the pinned frame is two narrow columns, nothing like corpus width.
     """
-    from ffn_polars_spark.core import blocked_cumsum
+    from ffn_polars_spark.core import blocked_keyed_cumsum
     from ffn_polars_spark.operators._scanmeta import spread_scan
 
     df = spread_scan(df, id_col)
@@ -352,7 +353,7 @@ def pack_sequences(
             F.col(id_col), token_count(F.col(text_col)).cast("long").alias("n_tokens")
         ).where(F.col("n_tokens") > 0)
     )
-    c = blocked_cumsum(t, id_col, F.col("n_tokens"), "__cum", block=block)
+    c = blocked_keyed_cumsum(t, [], [id_col], {"__cum": "n_tokens"})
     L = F.lit(int(seq_len))
     c = c.withColumn("__start", F.col("__cum").cast("long") - F.col("n_tokens"))
     c = c.withColumn(

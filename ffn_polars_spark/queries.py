@@ -2952,8 +2952,8 @@ def _sim_oracle_sql(
     Platform assumption: the md5 uniforms are bit-exact by construction, but
     the *derived* quantities route through ``log``/``cos``/``sqrt``, which
     are only ~1-ulp-accurate (not correctly rounded) in both the JVM and
-    DuckDB's libm, and ``blocked_cumsum``'s float association must match the
-    oracle's sequential window sum.  The final ``round(x, 2)`` absorbs ulp
+    DuckDB's libm, and the blocked walk's float association must match the
+    oracle's sequential window sum (one block up to 2^20 ticks).  The final ``round(x, 2)`` absorbs ulp
     noise *except* exactly at a rounding boundary, so hash-exactness holds on
     this host's JVM/libm pairing but could flip a cent on another platform —
     a tolerance-aware comparison would be the portable alternative."""

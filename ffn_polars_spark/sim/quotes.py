@@ -8,19 +8,21 @@ exchange assignment, Polygon-style quote schema.
 Spark-first design: the frame is declared over ``spark.range(n)`` so
 generation parallelizes across executors; every random column is a
 deterministic hash stream (sim/rand.py) so re-evaluation and repartitioning
-can't skew it; the price walk's cumulative sum uses the two-pass blocked
-prefix sum (core.blocked_cumsum) instead of a global single-partition window
-— at the reference's 500k ticks/day/ticker either works, at billions of rows
-only this one does. Randomness parity with numpy is *statistical*
+can't skew it; the price walk's cumulative sum uses the un-keyed blocked
+prefix sum (core.blocked_keyed_cumsum) instead of a global single-partition
+window — at the reference's 500k ticks/day/ticker either works, at billions
+of rows only this one does. Randomness parity with numpy is *statistical*
 (moments/schema/row counts), per SURVEY.md §7.3-8.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ffn_polars_spark.core import blocked_cumsum
+from ffn_polars_spark.core import blocked_keyed_cumsum
 from ffn_polars_spark.sim.common import (
     EXCHANGE_IDS,
     EXCHANGE_WEIGHTS,
@@ -76,7 +78,10 @@ def simulate_quotes(
     # mid = base + cumsum(step), rounded to cents (quotes.py:52-53).
     vol = F.when(F.col("__burst"), F.lit(0.03)).otherwise(F.lit(0.01))
     df = df.withColumn("__step", normal(rid, "px", day_seed, sd=vol))
-    df = blocked_cumsum(df, "id", F.col("__step"), "__walk")
+    # one block per 2^20 ticks, from n alone: the float walk's summation
+    # order (and so every bit of it) never depends on the cluster
+    blocks = max(1, math.ceil(n / (1 << 20)))
+    df = blocked_keyed_cumsum(df, [], ["id"], {"__walk": "__step"}, num_blocks=blocks)
     mid = F.round(F.col("__walk") + F.lit(base_price), 2)
 
     # Spread noise, 1.5x wider in bursts (quotes.py:56-59).

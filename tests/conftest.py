@@ -59,6 +59,7 @@ PROPERTY_SMOKE = {
     "test_jensen_kelly_moments_property",
     "test_round6_ops_are_partition_invariant",
     "test_blocked_lag_parity_property",
+    "test_unkeyed_blocked_cumsum_parity_property",
     "test_asof_join_parity_property",
     "test_connected_components_parity_property",
     "test_containment_pairs_naive_property",
@@ -97,6 +98,21 @@ def pytest_report_collectionfinish(config, start_path, items):
     if FULL_BATTERY:
         return f"full battery: the {gated} opt-in property tests run too"
     return f"smoke mode: {gated} property tests skipped (FFN_FULL_BATTERY=1 runs all)"
+
+
+def order_as(df, col, kind):
+    """``df`` with its integer order column ``col`` re-encoded as ``kind``:
+    "long" (unchanged), "timestamp" (``col`` ms after 2023-11-14 22:13:20
+    UTC) or "date" (``col`` days after 2000-01-01). Both encodings are
+    strictly increasing in the integer, so the row order stays the same."""
+    from pyspark.sql import functions as F
+
+    c = F.col(col)
+    if kind == "timestamp":
+        c = F.timestamp_micros(F.lit(1_700_000_000_000_000) + c * 1000)
+    elif kind == "date":
+        c = F.date_add(F.lit("2000-01-01").cast("date"), c.cast("int"))
+    return df.withColumn(col, c)
 
 
 def aae(actual, expected, places=3):

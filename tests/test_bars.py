@@ -257,3 +257,30 @@ def test_tick_bars_blocked_matches_window(spark):
     b = sorted(tick_bars(df, "ts", "price", "volume", by=["k"], ticks_per_bar=64,
                          seq_parallelism="blocked").collect())
     assert w == b
+
+
+@pytest.mark.parametrize("kind", ["long", "timestamp", "date"])
+@pytest.mark.parametrize(
+    "bars, kw",
+    [(tick_bars, {"ticks_per_bar": 100}), (volume_bars, {"volume_per_bar": 1000.0})],
+    ids=["tick_bars", "volume_bars"],
+)
+def test_tick_and_volume_bars_blocked_match_window(spark, bars, kw, kind):
+    """Forced-blocked tick and volume bars equal the window plan exactly
+    on integer, timestamp and date orders. Volumes are small integers, so
+    every running total is exact in any association."""
+    from conftest import order_as
+
+    rows = [(k, t, 100.0 + (t * 37) % 101, float((t * 13) % 50 + 1))
+            for k in ("a", "b") for t in range(2000)]
+    df = order_as(
+        spark.createDataFrame(rows, "k string, ts long, price double, volume double"),
+        "ts",
+        kind,
+    )
+    w, b = (
+        sorted(bars(df, "ts", "price", "volume", by=["k"],
+                    seq_parallelism=plan, **kw).collect())
+        for plan in ("window", "blocked")
+    )
+    assert w == b

@@ -172,14 +172,16 @@ def test_similarity_family_spread_guard(cspark):
 def test_blocked_sequence_family_order_blocked_guard(cspark):
     """r13 guard: _order_blocked sizes its blocks from the
     shuffle-partition conf under Connect (no sparkContext) and the global
-    index stays value-identical to the plain window."""
-    from ffn_polars_spark.core import blocked_keyed_index
+    index (a running count) stays value-identical to the plain window."""
+    from pyspark.sql import functions as F
+
+    from ffn_polars_spark.core import blocked_keyed_cumsum
 
     rows = [("a", t) for t in [5, 1, 9, 3]] + [("b", t) for t in [2, 8]]
     df = cspark.createDataFrame(rows, "k string, ts long")
     got = {
         (r["k"], r["ts"]): r["gidx"]
-        for r in blocked_keyed_index(df, ["k"], ["ts"]).collect()
+        for r in blocked_keyed_cumsum(df, ["k"], ["ts"], {"gidx": F.lit(1)}).collect()
     }
     assert got == {
         ("a", 1): 1, ("a", 3): 2, ("a", 5): 3, ("a", 9): 4,

@@ -822,6 +822,38 @@ def test_blocked_keyed_lag_plan_shape(spark, tmp_path):
     )
 
 
+def test_unkeyed_blocked_cumsum_plan_shape(spark, tmp_path):
+    """An integer-ordered, un-keyed blocked_keyed_cumsum takes its blocks
+    from the order value: the window's exchange on the block id is the
+    one data-sized shuffle (every other exchange has an aggregate below
+    it and ships per-block totals), and nothing is range-partitioned.
+    The totals branch re-reads the same exchange: the offsets join keeps
+    every local row (a left join), so no inferred filter makes the two
+    branches' exchanges differ, and the executed plan reuses it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ffn_polars_spark.core import blocked_keyed_cumsum
+
+    f = str(tmp_path / "ids.parquet")
+    pq.write_table(
+        pa.table({"id": list(range(1000)), "v": list(range(1000))}), f
+    )
+    out = blocked_keyed_cumsum(
+        spark.read.parquet(f), [], ["id"], {"c": "v"}, num_blocks=4
+    )
+    assert max(r.c for r in out.collect()) == 999 * 1000 // 2
+    exchanges = [n for n in plan_nodes(out) if n.name == "ShuffleExchangeExec"]
+    assert "RangePartitioning" not in [partitioning(x) for x in exchanges]
+    rows = [
+        x
+        for x in exchanges
+        if not any("Aggregate" in d.name for d in x.descendants())
+    ]
+    assert len(rows) == 1, [partitioning(x) for x in exchanges]
+    assert partitioning(rows[0]) == "HashPartitioning"
+
+
 def _arrow_eval_nodes(df):
     """The UDF expressions of every ArrowEvalPython node, one string per
     node."""

@@ -402,10 +402,10 @@ def test_round6_ops_are_partition_invariant(spark):
 
 
 # ---------------------------------------------------------------------------
-# Blocked sequence family (core.blocked_keyed_lag / _index / _cumsum):
-# window-plan parity must hold for ANY tape — random key sets, random
-# (unique-per-key) order values, NULL values, and adversarial block counts
-# (1 block, more blocks than rows).
+# Blocked sequence family (core.blocked_keyed_lag / _cumsum): window-plan
+# parity must hold for ANY tape — random key sets, random (unique-per-key)
+# order values of every sliceable type, NULL values, and adversarial block
+# counts (1 block, more blocks than rows).
 # ---------------------------------------------------------------------------
 
 tapes = st.lists(
@@ -418,9 +418,12 @@ tapes = st.lists(
     max_size=60,
 )
 blockcounts = st.integers(min_value=1, max_value=70)
+order_kinds = st.sampled_from(["long", "timestamp", "date"])
 
 
-def _tape_frame(spark, rows):
+def _tape_frame(spark, rows, kind="long"):
+    from conftest import order_as
+
     # unique order per key (the documented F.lag determinism contract)
     seen, uniq = set(), []
     for k, t, v in rows:
@@ -428,17 +431,19 @@ def _tape_frame(spark, rows):
             continue
         seen.add((k, t))
         uniq.append((k, t, None if v is None else float(v)))
-    return spark.createDataFrame(uniq, "k string, ts long, v double")
+    return order_as(
+        spark.createDataFrame(uniq, "k string, ts long, v double"), "ts", kind
+    )
 
 
-@given(rows=tapes, nb=blockcounts)
+@given(rows=tapes, nb=blockcounts, kind=order_kinds)
 @SET
-def test_blocked_lag_parity_property(spark, rows, nb):
+def test_blocked_lag_parity_property(spark, rows, nb, kind):
     from pyspark.sql import Window
 
     from ffn_polars_spark.core import blocked_keyed_lag
 
-    df = _tape_frame(spark, rows)
+    df = _tape_frame(spark, rows, kind)
     w = Window.partitionBy("k").orderBy("ts")
     want = sorted(
         (r["k"], r["ts"], r["lv"])
@@ -453,14 +458,15 @@ def test_blocked_lag_parity_property(spark, rows, nb):
     assert got == want
 
 
-@given(rows=tapes, nb=blockcounts)
+@given(rows=tapes, nb=blockcounts, kind=order_kinds)
 @SET
-def test_blocked_index_and_cumsum_parity_property(spark, rows, nb):
+def test_blocked_index_and_cumsum_parity_property(spark, rows, nb, kind):
+    """The row number (the running sum of 1) and the running sum of v."""
     from pyspark.sql import Window
 
-    from ffn_polars_spark.core import blocked_keyed_cumsum, blocked_keyed_index
+    from ffn_polars_spark.core import blocked_keyed_cumsum
 
-    df = _tape_frame(spark, rows)
+    df = _tape_frame(spark, rows, kind)
     w = Window.partitionBy("k").orderBy("ts")
     wc = w.rowsBetween(Window.unboundedPreceding, 0)
     want = sorted(
@@ -472,8 +478,9 @@ def test_blocked_index_and_cumsum_parity_property(spark, rows, nb):
             F.sum("v").over(wc).alias("cv"),
         ).collect()
     )
-    idx = blocked_keyed_index(df, ["k"], ["ts"], out="rn", num_blocks=nb)
-    cum = blocked_keyed_cumsum(idx, ["k"], ["ts"], {"cv": "v"}, num_blocks=nb)
+    cum = blocked_keyed_cumsum(
+        df, ["k"], ["ts"], {"rn": F.lit(1), "cv": "v"}, num_blocks=nb
+    )
     got = sorted(
         (r["k"], r["ts"], r["rn"], r["cv"])
         for r in cum.select("k", "ts", "rn", "cv").collect()
@@ -482,13 +489,39 @@ def test_blocked_index_and_cumsum_parity_property(spark, rows, nb):
     assert got == want
 
 
+@given(rows=tapes, nb=blockcounts, kind=order_kinds)
+@SET
+def test_unkeyed_blocked_cumsum_parity_property(spark, rows, nb, kind):
+    """``keys=[]``: the prefix sum over the whole frame equals the plain
+    un-partitioned running-sum window."""
+    from pyspark.sql import Window
+
+    from ffn_polars_spark.core import blocked_keyed_cumsum
+
+    # one sequence: unique order over the whole frame
+    df = _tape_frame(spark, [("a", t, v) for _, t, v in rows], kind)
+    w = Window.orderBy("ts").rowsBetween(Window.unboundedPreceding, 0)
+    want = [
+        (r["ts"], r["cv"])
+        for r in df.select("ts", F.sum("v").over(w).alias("cv"))
+        .orderBy("ts")
+        .collect()
+    ]
+    got = [
+        (r["ts"], r["cv"])
+        for r in blocked_keyed_cumsum(df, [], ["ts"], {"cv": "v"}, num_blocks=nb)
+        .orderBy("ts")
+        .collect()
+    ]
+    assert got == want
+
+
 def test_order_blocked_int64_span_overflow_falls_back(spark):
     """An order column spanning more than the int64 range must NOT take the
-    equi-width numeric block path: the executor-side (o0 - lo) runs in
-    non-ANSI long arithmetic and wraps silently, producing non-monotone
-    block ids and a wrong stitch order. The guard falls back to
-    repartitionByRange; block ids stay monotone in the order column and
-    the blocked lag stays value-identical to the window."""
+    equi-width block path: the executor-side (o0 - lo) would overflow long
+    arithmetic, producing non-monotone block ids and a wrong stitch order.
+    The guard falls back to one block (correct, only serial), and the
+    blocked lag stays value-identical to the window."""
     from pyspark.sql import Window
 
     from ffn_polars_spark.core import _order_blocked, blocked_keyed_lag
@@ -497,9 +530,8 @@ def test_order_blocked_int64_span_overflow_falls_back(spark):
     rows = [("a", lo, 1.0), ("a", -5, 2.0), ("a", 5, 3.0), ("a", hi, 4.0)]
     df = spark.createDataFrame(rows, "k string, ts long, v double")
 
-    ob = _order_blocked(df, ["k"], ["ts"], num_blocks=4)
-    blks = [r["__blk"] for r in ob.orderBy("ts").collect()]
-    assert blks == sorted(blks), blks  # monotone in the order column
+    ob = _order_blocked(df, ["ts"], num_blocks=4)
+    assert [r["__blk"] for r in ob.collect()] == [0] * 4
 
     w = Window.partitionBy("k").orderBy("ts")
     want = [
@@ -598,13 +630,16 @@ def test_volume_bars_blocked_exact_for_integer_volumes(spark, vols, nb):
         assert r["cv"] - float(vols[r["ts"]]) == ref[r["ts"]]
 
 
-def test_dollar_bars_decimal_route_plan_invariant(spark):
+@pytest.mark.parametrize("kind", ["long", "timestamp", "date"])
+def test_dollar_bars_decimal_route_plan_invariant(spark, kind):
     """The documented exact route for money-denominated bars: cast the
     volume (or price*volume) to DECIMAL before the bars call and the
     window and blocked plans produce IDENTICAL bars — decimal sums are
     exact in any association order, so the float boundary caveat
-    disappears."""
+    disappears. Timestamp and date orders are sliced like integers."""
     from decimal import Decimal
+
+    from conftest import order_as
 
     from ffn_polars_spark.functions.tick_bars import volume_bars
 
@@ -612,8 +647,12 @@ def test_dollar_bars_decimal_route_plan_invariant(spark):
         ("k", i, 100.0 + i, Decimal(str((i * 7919) % 1000 + 1)) / 100)
         for i in range(500)
     ]
-    df = spark.createDataFrame(
-        rows, "k string, ts long, price double, v decimal(12,2)"
+    df = order_as(
+        spark.createDataFrame(
+            rows, "k string, ts long, price double, v decimal(12,2)"
+        ),
+        "ts",
+        kind,
     )
     win = sorted(
         map(tuple, volume_bars(

@@ -150,12 +150,17 @@ def test_resample_builds_without_spark_context(spark, krdf, monkeypatch):
     """Both resample spreads size their repartition from the shared slot
     count, whose shuffle-partition fallback serves a session with no
     client-side SparkContext (Spark Connect): building must not raise."""
+    from pyspark.errors import PySparkAttributeError
     from pyspark.sql import SparkSession
 
     from ffn_polars_spark.operators.resample import resample_returns_hash
 
     def no_context(self):
-        raise RuntimeError("SparkContext is not available in Spark Connect")
+        # what a Spark Connect session raises for ``sparkContext``
+        raise PySparkAttributeError(
+            errorClass="JVM_ATTRIBUTE_NOT_SUPPORTED",
+            messageParameters={"attr_name": "sparkContext"},
+        )
 
     monkeypatch.setattr(SparkSession, "sparkContext", property(no_context))
     reps = bootstrap_replicate(krdf, num_trials=3, seed=1, key_col="rid")

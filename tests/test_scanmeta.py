@@ -192,17 +192,17 @@ def test_use_blocked_sequence_plan_no_probe_below_threshold(
 
     monkeypatch.setattr(sm, "sampled_key_cardinality", boom)
     df = multi.withColumn("k", F.col("id") % 3)
-    assert sm.use_blocked_sequence_plan(df, ["k"], "auto") is False
+    assert sm.use_blocked_sequence_plan(df, ["k"], "id", "auto") is False
     # forced modes never probe either
-    assert sm.use_blocked_sequence_plan(df, ["k"], "blocked") is True
-    assert sm.use_blocked_sequence_plan(df, ["k"], "window") is False
-    assert sm.use_blocked_sequence_plan(df, [], "blocked") is False
+    assert sm.use_blocked_sequence_plan(df, ["k"], "id", "blocked") is True
+    assert sm.use_blocked_sequence_plan(df, ["k"], "id", "window") is False
+    assert sm.use_blocked_sequence_plan(df, [], "id", "blocked") is False
 
 
 def test_use_blocked_sequence_plan_streaming_blocked_raises(spark):
     """Forcing seq_parallelism='blocked' on a streaming frame must raise a
-    clear ValueError up front — _order_blocked's bounds aggregate and
-    repartition would otherwise fail deep inside the plan with an opaque
+    clear ValueError up front — _order_blocked's bounds aggregate would
+    otherwise fail deep inside the plan with an opaque
     streaming-unsupported error."""
     import pytest as _pytest
 
@@ -210,10 +210,55 @@ def test_use_blocked_sequence_plan_streaming_blocked_raises(spark):
 
     sdf = spark.readStream.format("rate").load()
     with _pytest.raises(ValueError, match="batch-only"):
-        sm.use_blocked_sequence_plan(sdf, ["value"], "blocked")
+        sm.use_blocked_sequence_plan(sdf, ["value"], "timestamp", "blocked")
     # auto/window stay the safe no-op on streaming frames
-    assert sm.use_blocked_sequence_plan(sdf, ["value"], "auto") is False
-    assert sm.use_blocked_sequence_plan(sdf, ["value"], "window") is False
+    for mode in ("auto", "window"):
+        assert (
+            sm.use_blocked_sequence_plan(sdf, ["value"], "timestamp", mode)
+            is False
+        )
+
+
+def test_use_blocked_sequence_plan_order_types(spark, monkeypatch):
+    """The blocked plan slices each key's sequence by an exact integer
+    encoding of the order: integer, timestamp and date orders qualify.
+    Past the row-count gate, "auto" keeps the window plan for any other
+    type without sampling keys, and "blocked" raises a ValueError that
+    names the type; so does the block assignment itself."""
+    import ffn_polars_spark.operators._scanmeta as sm
+    from ffn_polars_spark.core import _order_blocked
+
+    samples = []
+    monkeypatch.setattr(
+        sm, "sampled_key_cardinality", lambda df, keys: samples.append(keys) or 1
+    )
+    t = F.timestamp_micros("id")
+    df = spark.range(3).select(
+        F.lit("a").alias("k"),
+        F.col("id").cast("int").alias("i"),
+        t.alias("t"),
+        F.date_from_unix_date(F.col("id").cast("int")).alias("d"),
+        F.col("id").cast("double").alias("x"),
+        F.col("id").cast("string").alias("s"),
+        t.cast("timestamp_ntz").alias("n"),
+    )
+    for c in ("i", "t", "d"):
+        assert sm.use_blocked_sequence_plan(df, ["k"], c, "blocked") is True
+        assert (
+            sm.use_blocked_sequence_plan(df, ["k"], c, "auto", rows_hint=10**9)
+            is True
+        )
+    sampled = len(samples)
+    for c, dtype in (("x", "double"), ("s", "string"), ("n", "timestamp_ntz")):
+        with pytest.raises(ValueError, match=dtype):
+            sm.use_blocked_sequence_plan(df, ["k"], c, "blocked")
+        with pytest.raises(ValueError, match=dtype):
+            _order_blocked(df, [c], num_blocks=2)
+        assert (
+            sm.use_blocked_sequence_plan(df, ["k"], c, "auto", rows_hint=10**9)
+            is False
+        )
+    assert len(samples) == sampled
 
 
 def test_use_blocked_sequence_plan_rows_hint_for_derived_frames(
@@ -230,15 +275,17 @@ def test_use_blocked_sequence_plan_rows_hint_for_derived_frames(
         [("a", i, float(i)) for i in range(40)], "k string, ts long, v double"
     )
     # no hint: unknown row count -> window plan (the historical behavior)
-    assert sm.use_blocked_sequence_plan(mem, ["k"], "auto") is False
+    assert sm.use_blocked_sequence_plan(mem, ["k"], "ts", "auto") is False
     # a 100M-rows/key hint routes blocked without seq_parallelism="blocked"
     assert (
-        sm.use_blocked_sequence_plan(mem, ["k"], "auto", rows_hint=100_000_000)
+        sm.use_blocked_sequence_plan(
+            mem, ["k"], "ts", "auto", rows_hint=100_000_000
+        )
         is True
     )
     # below the crossover the hint keeps the window plan
     assert (
-        sm.use_blocked_sequence_plan(mem, ["k"], "auto", rows_hint=1_000_000)
+        sm.use_blocked_sequence_plan(mem, ["k"], "ts", "auto", rows_hint=1_000_000)
         is False
     )
     # footer counts beat the hint on a bare parquet scan: a tiny file with
@@ -247,7 +294,7 @@ def test_use_blocked_sequence_plan_rows_hint_for_derived_frames(
     mem.write.mode("overwrite").parquet(p)
     scan = spark.read.parquet(p)
     assert (
-        sm.use_blocked_sequence_plan(scan, ["k"], "auto", rows_hint=10**9)
+        sm.use_blocked_sequence_plan(scan, ["k"], "ts", "auto", rows_hint=10**9)
         is False
     )
 
@@ -300,11 +347,12 @@ class _ConnectLikeSession:
 
     @property
     def sparkContext(self):
-        raise Exception("SparkContext is not available in Spark Connect")
+        raise AttributeError("SparkContext is not available in Spark Connect")
 
 
 class _ConnectLikeFrame:
     isStreaming = False
+    dtypes = [("k", "string"), ("ts", "bigint")]
 
     def __init__(self, conf_value):
         self.sparkSession = _ConnectLikeSession(conf_value)
@@ -332,7 +380,7 @@ def test_use_blocked_sequence_plan_connect_session():
 
     assert (
         use_blocked_sequence_plan(
-            _ConnectLikeFrame("8"), ["k"], rows_hint=10_000_000_000
+            _ConnectLikeFrame("8"), ["k"], "ts", rows_hint=10_000_000_000
         )
         is False
     )

@@ -38,10 +38,10 @@ def test_split_salt_rerolls_and_weights_cut(spark):
 def test_shard_by_tokens_matches_serial_prefix_sum(spark):
     rows = [(i, "w " * (3 + (i * 7) % 11)) for i in range(200)]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    # small block forces multiple cumsum blocks, exercising the offset pass
+    # the session's 4 slots give 4 cumsum blocks, exercising the offset pass
     got = {
         r["doc_id"]: (r["n_tokens"], r["shard_id"])
-        for r in shard_by_tokens(docs, budget=50, block=64).collect()
+        for r in shard_by_tokens(docs, budget=50).collect()
     }
     cum = 0
     for i in range(200):
@@ -143,7 +143,7 @@ def test_pack_sequences_matches_serial_packing(spark):
     from ffn_polars_spark.operators.pipeline import pack_sequences
 
     rows = sorted(
-        pack_sequences(docs, seq_len=L, block=8).collect(),
+        pack_sequences(docs, seq_len=L).collect(),
         key=lambda r: (r["doc_id"], r["seq_id"]),
     )
     # serial reference: concat docs in id order, chunk the stream every L

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 import ffn_polars_spark as ffn
 from ffn_polars_spark import Over
 
-from conftest import aae
+from conftest import aae, order_as
 
 NS = 1_000_000_000
 
@@ -424,13 +424,8 @@ def test_blocked_keyed_lag_multiple_columns(spark):
     assert sorted(want) == sorted(got)
 
 
-def test_realized_volatility_blocked_matches_window(spark):
-    """The forced-blocked plan agrees with the plain window plan to
-    double-rounding tolerance (association order differs; values don't)."""
-    import math
+def _rv_tape(spark):
     import random
-
-    from ffn_polars_spark.functions.tick_price import calc_realized_volatility
 
     random.seed(5)
     rows = [
@@ -438,7 +433,27 @@ def test_realized_volatility_blocked_matches_window(spark):
         for k in ("p", "q", "r")
         for t in range(2000)
     ]
-    df = spark.createDataFrame(rows, "event_type string, ts_ns long, price double")
+    return spark.createDataFrame(rows, "event_type string, ts_ns long, price double")
+
+
+def test_realized_volatility_blocked_matches_window(spark):
+    """The forced-blocked plan agrees with the plain window plan to
+    double-rounding tolerance (association order differs; values don't)."""
+    _assert_rv_blocked_matches_window(_rv_tape(spark))
+
+
+@pytest.mark.parametrize("kind", ["timestamp", "date"])
+def test_realized_volatility_blocked_matches_window_on_calendar_orders(
+    spark, kind
+):
+    """Timestamp and date orders are sliced by their exact integer
+    encodings, as integer orders are."""
+    _assert_rv_blocked_matches_window(order_as(_rv_tape(spark), "ts_ns", kind))
+
+
+def _assert_rv_blocked_matches_window(df):
+    from ffn_polars_spark.functions.tick_price import calc_realized_volatility
+
     a = {
         r["event_type"]: r["price_realized_volatility"]
         for r in calc_realized_volatility(
@@ -456,11 +471,12 @@ def test_realized_volatility_blocked_matches_window(spark):
         assert math.isclose(a[k], b[k], rel_tol=1e-12), (k, a[k], b[k])
 
 
-def test_blocked_keyed_index_matches_row_number(spark):
+def test_blocked_keyed_cumsum_row_count_matches_row_number(spark):
+    """A per-key row number is the blocked running sum of 1."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from ffn_polars_spark.core import blocked_keyed_index
+    from ffn_polars_spark.core import blocked_keyed_cumsum
 
     rows = [(k, t * 3 + hash(k) % 3) for k in ("a", "b", "c") for t in range(400)]
     df = spark.createDataFrame(rows, "k string, ts long")
@@ -471,7 +487,9 @@ def test_blocked_keyed_index_matches_row_number(spark):
     }
     got = {
         (r["k"], r["ts"]): r["gidx"]
-        for r in blocked_keyed_index(df, ["k"], ["ts"], num_blocks=7).collect()
+        for r in blocked_keyed_cumsum(
+            df, ["k"], ["ts"], {"gidx": F.lit(1)}, num_blocks=7
+        ).collect()
     }
     assert got == want
 
@@ -481,21 +499,38 @@ def test_autocorr_blocked_matches_window(spark):
     the window plan's full output frame — including NULL values excluded
     from n, short groups completing with n=0/acf NULL, and r6-rounded acf
     equality."""
-    import random
+    _assert_autocorr_blocked_matches_window(_autocorr_tape(spark))
 
-    from ffn_polars_spark.functions.tick_price import autocorr
+
+@pytest.mark.parametrize("kind", ["timestamp", "date"])
+def test_autocorr_blocked_matches_window_on_calendar_orders(spark, kind):
+    """The blocked index of a timestamp or date order numbers every row
+    as the window does: no lag pair is lost or invented. The tape is
+    large enough that a sampled range partitioning varies between the
+    index's two branches."""
+    _assert_autocorr_blocked_matches_window(
+        order_as(_autocorr_tape(spark, 5000), "ts", kind)
+    )
+
+
+def _autocorr_tape(spark, n=600):
+    import random
 
     random.seed(3)
     rows = []
     for k in ("a", "b"):
         prev = 0.0
-        for t in range(600):
+        for t in range(n):
             prev = 0.6 * prev + random.gauss(0, 1)
             v = None if t % 53 == 7 else prev
             rows.append((k, t, v))
     rows.append(("tiny", 0, 1.0))  # group shorter than max_lag
     rows.append(("tiny", 1, 2.0))
-    df = spark.createDataFrame(rows, "k string, ts long, x double")
+    return spark.createDataFrame(rows, "k string, ts long, x double")
+
+
+def _assert_autocorr_blocked_matches_window(df):
+    from ffn_polars_spark.functions.tick_price import autocorr
 
     def as_map(res):
         return {

@@ -40,7 +40,8 @@ import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-CANON = "/root/testdata/sf0.001"
+# schemas come from the sf0.001 tables (tools/gen_testdata.py output works)
+CANON = os.path.join(os.environ.get("FFN_TESTDATA_DIR", "/root/testdata"), "sf0.001")
 
 
 def build(outdir: str) -> None:
